@@ -163,14 +163,24 @@ def fold_bloom(
     row for their pid and the positions are OR'd straight into the
     existing bitset. Bit-exact same bank (same ``_params``/``_positions``;
     pinned by tests). A pid with bank row but no new keys passes its row
-    through; a pid with keys but no bank row creates one."""
+    through; a pid with keys but no bank row creates one.
+
+    The parameters are checked against one bank row before the cogroup
+    (one small job), so a mismatched fold raises even when every key
+    lands on a pid the bank has no row for."""
     m, k = _params(expected_per_partition, fp_rate)
+    row = bank.select("p", "m").first()
+    if row is not None and (row["p"] != n_partitions or row["m"] != m):
+        raise ValueError(
+            f"fold_bloom: bank built with p={row['p']}, m={row['m']}; "
+            f"folding with p={n_partitions}, m={m}"
+        )
 
     def fold(key, kpdf: pd.DataFrame, bpdf: pd.DataFrame) -> pd.DataFrame:
         if len(bpdf):
             bm = int(bpdf["m"].iloc[0])
             bp = int(bpdf["p"].iloc[0])
-            if bp != n_partitions or bm != m:
+            if bp != n_partitions or bm != m:  # a bank of mixed rows
                 raise ValueError(
                     f"fold_bloom: bank built with p={bp}, m={bm}; folding "
                     f"with p={n_partitions}, m={m}"

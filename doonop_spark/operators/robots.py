@@ -5,15 +5,18 @@ Reference semantics reproduced exactly:
 
 - robots.txt is fetched **once per (domain, robot)** and the compiled
   verifier cached (``src/robots.rs:23-33``). Spark shape: the corpus ships
-  a small ``robots`` table ``(host, robots_txt)`` that is broadcast-joined
-  onto the wave; rule compilation is cached per (robots_txt, robot) inside
-  the Arrow UDF (compile-once ≈ the reference's verifier cache).
+  a small ``robots`` table ``(host, robots_txt)``; :func:`compile_robots`
+  turns it ONCE per crawl, in one Arrow pass, into ``(host, delay,
+  rules)`` — each rule a ``(len, allow, rx)`` struct whose ``rx`` is a Java
+  regex — and ``run_crawl`` checkpoints that table. Every wave's gate then
+  broadcast-joins it and matches paths with ``regexp_like`` inside a
+  higher-order ``filter``: JVM only, no Python stage.
 - a URL **without a domain is always allowed** (F7, ``src/robots.rs:16-19``).
 - a robots **fetch error ⇒ the URL is silently skipped** — never
   dispatched, never counted (``src/workload.rs:100-109`` ``if let Ok(true)``
-  swallows Err). Table shape: a host absent from the robots table models
-  the fetch error ⇒ its URLs are dropped silently. Hosts whose robots.txt
-  is empty/permissive admit everything.
+  swallows Err). Table shape: a host absent from the robots table (or with
+  a NULL ``robots_txt``) models the fetch error ⇒ its URLs are dropped
+  silently. Hosts whose robots.txt is empty/permissive admit everything.
 - UA-group matching is RFC 9309 / Google-REP (the reference's ``cylon``
   crate): exact case-insensitive product-token equality, never substring
   ("Doonop" matches neither group "doonopbot" nor "doo"); ``*`` is the
@@ -22,7 +25,10 @@ Reference semantics reproduced exactly:
 
 ``Crawl-delay`` is parsed as well — not used by the reference, but it
 feeds the per-host politeness budgeter (north_star extension, see
-``operators/schedule.py``).
+``operators/schedule.py``) through the compiled table's ``delay``.
+
+:func:`is_allowed` / :func:`crawl_delay_of` are the pure-Python verifier;
+the JVM gate is tested against them (``tests/test_robots.py``).
 """
 
 from __future__ import annotations
@@ -33,12 +39,12 @@ from functools import lru_cache
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 __all__ = [
     "parse_robots",
     "is_allowed",
     "crawl_delay_of",
+    "compile_robots",
     "robots_gate",
     "DEFAULT_ROBOT",
 ]
@@ -57,6 +63,21 @@ def _rule_regex(pattern: str) -> re.Pattern:
     if anchored_end:
         rx += "$"
     return re.compile(rx)
+
+
+_ASCII_PUNCT = re.compile(r"[!-/:-@\[-`{-~]")
+
+
+def _java_rule_regex(pattern: str) -> str:
+    """:func:`_rule_regex` for ``java.util.regex``: ``(?d)`` (UNIX_LINES)
+    makes ``.`` and ``$`` treat only ``\\n`` as a line end, as Python ``re``
+    does; ASCII punctuation is backslash-escaped (a literal in Java for any
+    non-alphabetic character), everything else stays literal."""
+    anchored_end = pattern.endswith("$")
+    if anchored_end:
+        pattern = pattern[:-1]
+    parts = [_ASCII_PUNCT.sub(r"\\\g<0>", p) for p in pattern.split("*")]
+    return "(?d)^" + ".*".join(parts) + ("$" if anchored_end else "")
 
 
 def _parse_groups(robots_txt: str) -> list[tuple[list[str], list[tuple[bool, str]], float | None]]:
@@ -116,7 +137,7 @@ class RobotsRules:
     """Compiled per-(robots_txt, robot) verifier — the reference's
     ``RobotsVerifier`` analog (src/robots.rs:60-81)."""
 
-    __slots__ = ("rules", "crawl_delay")
+    __slots__ = ("patterns", "rules", "crawl_delay")
 
     def __init__(self, robots_txt: str, robot: str):
         # UA-group matching is RFC 9309 §2.2.1 / cylon 0.2: EXACT
@@ -135,10 +156,11 @@ class RobotsRules:
             elif "*" in agents:
                 star.append((rules, delay))
         chosen = exact or star
+        self.patterns: list[tuple[bool, str]] = [
+            rule for rules, _ in chosen for rule in rules
+        ]
         self.rules: list[tuple[bool, int, re.Pattern]] = [
-            (allow, len(p), _rule_regex(p))
-            for rules, _ in chosen
-            for allow, p in rules
+            (allow, len(p), _rule_regex(p)) for allow, p in self.patterns
         ]
         self.crawl_delay: float | None = next(
             (d for _, d in chosen if d is not None), None
@@ -182,31 +204,27 @@ def _path_expr(url):
     )
 
 
-def _n_rules_udf(robot: str):
-    @F.pandas_udf(T.IntegerType())
-    def _n_rules(robots_txt: pd.Series) -> pd.Series:
-        return pd.Series(
-            [
-                len(parse_robots(t, robot).rules) if t is not None else 0
-                for t in robots_txt
-            ],
-            dtype="int32",
-        )
+def compile_robots(robots: DataFrame, robot: str = DEFAULT_ROBOT) -> DataFrame:
+    """``(host, robots_txt)`` → ``(host, delay, rules)`` in one Arrow pass:
+    ``delay`` is the winning group's Crawl-delay, ``rules`` its path rules
+    as ``(len, allow, rx)`` structs with ``rx`` a Java regex. A NULL
+    ``robots_txt`` (fetch miss) compiles to NULL rules; a rule-free one to
+    an empty array. Lazy: callers that reuse it checkpoint it."""
 
-    return _n_rules
+    @F.pandas_udf("delay double, rules array<struct<len:int, allow:boolean, rx:string>>")
+    def _compile(txt: pd.Series) -> pd.DataFrame:
+        parsed = [None if t is None else parse_robots(t, robot) for t in txt]
+        delay = [None if r is None else r.crawl_delay for r in parsed]
+        rules = [
+            None
+            if r is None
+            else [{"len": len(p), "allow": a, "rx": _java_rule_regex(p)} for a, p in r.patterns]
+            for r in parsed
+        ]
+        return pd.DataFrame({"delay": pd.Series(delay, dtype="float64"), "rules": rules})
 
-
-def robots_have_path_rules(robots: DataFrame, robot: str = DEFAULT_ROBOT) -> bool:
-    """True iff ANY host's robots.txt carries a path rule for ``robot`` —
-    ONE scalar aggregate over the (distributed) robots table, computed
-    once per crawl so :func:`robots_gate` can drop the per-row Python
-    verdict from every wave's plan when the whole table is rule-free
-    (the common pure-Crawl-delay politeness setup). Never materializes
-    per-host data on the driver."""
-    row = robots.select(
-        F.max(_n_rules_udf(robot)(F.col("robots_txt"))).alias("m")
-    ).first()
-    return bool(row["m"] or 0)
+    c = _compile(F.col("robots_txt"))
+    return robots.select("host", c["delay"].alias("delay"), c["rules"].alias("rules"))
 
 
 def robots_gate(
@@ -216,72 +234,30 @@ def robots_gate(
     use_robots: bool = False,
     host_col: str = "host",
     url_col: str = "url",
-    has_path_rules: bool | None = None,
 ) -> DataFrame:
     """F6/F7 — admission gate over a scheduled wave.
 
-    ``robots`` is a tiny per-host table ``(host, robots_txt)`` →
-    broadcast hash join (no shuffle of the wave). Disallowed and
-    fetch-missed rows are dropped *silently* (reference semantics);
-    hostless URLs always pass (F7).
-
-    ``has_path_rules``: pass False (from :func:`robots_have_path_rules`,
-    computed once per crawl) when NO host carries a path rule for this
-    robot — the gate then stays entirely in whole-stage codegen (host
-    known + robots row present ⇒ allowed); None/True keeps the per-row
-    verdict, with rule-free hosts' rows crossing the Arrow boundary as
-    NULLs only.
+    ``robots`` is a tiny per-host table, compiled (:func:`compile_robots`)
+    or raw ``(host, robots_txt)`` (compiled here), broadcast-joined onto
+    the wave. A row passes when its host is NULL (F7), or when its host
+    has rules and the longest rule matching its path — ``array_max`` over
+    the matching ``(len, allow, rx)`` structs — is an Allow (tie ⇒ Allow,
+    no match ⇒ allowed). A host without rules (no robots row, or a NULL
+    ``robots_txt``) is a fetch miss: its rows drop silently. Over a
+    compiled, checkpointed table the gate is JVM only.
     """
     if not use_robots or robots is None:
         return wave
+    if "rules" not in robots.columns:
+        robots = compile_robots(robots, robot)
 
-    if has_path_rules is False:
-        # rule-free table: admission = "a robots row exists" (fetch-miss
-        # rows drop, hostless rows pass) — pure JVM, no Arrow stage.
-        r = F.broadcast(
-            robots.select(F.col("host").alias("__rhost"), "robots_txt")
-        )
-        joined = wave.join(r, wave[host_col] == r["__rhost"], "left")
-        gate = F.col(host_col).isNull() | F.col("robots_txt").isNotNull()
-        return joined.filter(gate).drop("__rhost", "robots_txt")
-
-    # Pre-classify each host ONCE on the tiny broadcast side: the number
-    # of path rules the winning UA group carries for THIS robot. A host
-    # with zero rules (empty robots.txt, or only Crawl-delay) admits every
-    # path, so its wave rows never need the per-row Python verdict — the
-    # gate stays whole-stage-codegen for them (guide §4.1: built-ins over
-    # UDFs). Rows that DO need path matching reach the pandas UDF with
-    # real inputs; everything else crosses the Arrow boundary as NULLs
-    # (a When AROUND a pandas UDF still evaluates it over the whole
-    # batch, so the skip must happen in the UDF's INPUT — same gating
-    # shape as functions/text.normalize_text_expr).
-    _n_rules = _n_rules_udf(robot)
     r = F.broadcast(
-        robots.select(
-            F.col("host").alias("__rhost"),
-            "robots_txt",
-            _n_rules(F.col("robots_txt")).alias("__nrules"),
-        )
+        robots.select(F.col("host").alias("__rhost"), F.col("rules").alias("__rules"))
     )
     joined = wave.join(r, wave[host_col] == r["__rhost"], "left")
-
-    @F.pandas_udf(T.BooleanType())
-    def _allowed(robots_txt: pd.Series, path: pd.Series) -> pd.Series:
-        return pd.Series(
-            [is_allowed(t, p, robot) for t, p in zip(robots_txt, path)],
-            dtype="boolean",
-        )
-
-    needs_py = F.col("robots_txt").isNotNull() & (F.col("__nrules") > 0)
-    gate = (
-        F.when(F.col(host_col).isNull(), F.lit(True))
-        .when(F.col("robots_txt").isNull(), F.lit(False))  # fetch-miss: skip
-        .when(F.col("__nrules") == 0, F.lit(True))  # no rules: all allowed
-        .otherwise(
-            _allowed(
-                F.when(needs_py, F.col("robots_txt")),
-                F.when(needs_py, _path_expr(F.col(url_col))),
-            )
-        )
+    path = _path_expr(F.col(url_col))
+    longest = F.array_max(F.filter("__rules", lambda x: F.regexp_like(path, x["rx"])))
+    gate = F.col(host_col).isNull() | (
+        F.col("__rules").isNotNull() & F.coalesce(longest["allow"], F.lit(True))
     )
-    return joined.filter(gate).drop("__rhost", "robots_txt", "__nrules")
+    return joined.filter(gate).drop("__rhost", "__rules")

@@ -28,7 +28,6 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from doonop_spark.plans.job import RetryPolicy
 
@@ -43,6 +42,18 @@ __all__ = [
 ]
 
 _log = __import__("logging").getLogger(__name__)
+
+# the default budget when none is configured: no host can reach it
+_UNBOUNDED = 2**31 - 1
+
+
+def _host_budget(default_budget: int | None):
+    """A joined row's budget: its host's ``__budget`` row, else the default
+    (0 is a real budget, only None is unbounded)."""
+    return F.coalesce(
+        F.col("__budget"),
+        F.lit(_UNBOUNDED if default_budget is None else default_budget),
+    )
 
 
 def resolve_politeness_impl(
@@ -105,7 +116,7 @@ def _budget_window(cand: DataFrame, order, per_host_budget, default_budget) -> D
             )
         )
         cand = cand.join(b, cand["host"] == b["__bhost"], "left").drop("__bhost")
-        budget = F.coalesce(F.col("__budget"), F.lit(default_budget or 2**31 - 1))
+        budget = _host_budget(default_budget)
     else:
         budget = F.lit(default_budget)
     return cand.filter((F.col("__rn") <= budget) | F.col("host").isNull()).drop(
@@ -140,7 +151,7 @@ def _budget_window_two_phase(
             )
         )
         cand = cand.join(b, cand["host"] == F.col("__bhost"), "left").drop("__bhost")
-        budget = F.coalesce(F.col("__budget"), F.lit(default_budget or 2**31 - 1))
+        budget = _host_budget(default_budget)
     else:
         budget = F.lit(default_budget)
     salt = F.pmod(F.col("url_hash"), F.lit(shards))
@@ -170,7 +181,7 @@ def _budget_pandas(
     verdict #4): a driver dict would be O(#hosts) driver memory at
     100 TB; the broadcast join keeps the budget lookup distributed and
     bounded per executor."""
-    default = default_budget if default_budget is not None else 2**31 - 1
+    default = _UNBOUNDED if default_budget is None else default_budget
     retry_first = policy == RetryPolicy.FIRST
     schema = cand.schema
 
@@ -253,7 +264,7 @@ def budget_keep_flags(
         )
     )
     joined = cand.join(b, cand["host"] == F.col("__bhost"), "left").drop("__bhost")
-    budget = F.coalesce(F.col("__budget"), F.lit(default_budget or 2**31 - 1))
+    budget = _host_budget(default_budget)
 
     if default_can_bind:
         windowed = joined
@@ -346,31 +357,20 @@ def select_wave(
 def politeness_budget(
     robots: DataFrame | None,
     wave_seconds: float,
-    robot: str,
 ) -> DataFrame | None:
     """Per-host wave budget from robots Crawl-delay: a host allowing one
     request per ``delay`` seconds gets ``max(1, wave_seconds/delay)`` slots
     per wave (north_star politeness extension; the reference only has the
-    global engine bound + robots allow/deny)."""
+    global engine bound + robots allow/deny). ``robots`` is the compiled
+    table (:func:`doonop_spark.operators.robots.compile_robots`), whose
+    ``delay`` is already parsed — this is a pure JVM projection. A delay
+    so small that the budget overflows an int is unbounded."""
     if robots is None:
         return None
-    from doonop_spark.operators.robots import crawl_delay_of
-
-    @F.pandas_udf(T.DoubleType())
-    def _delay(txt: pd.Series) -> pd.Series:
-        return pd.Series(
-            [crawl_delay_of(t, robot) for t in txt], dtype="float64"
-        )
-
-    return (
-        robots.select("host", _delay(F.col("robots_txt")).alias("delay"))
-        .filter(F.col("delay").isNotNull() & (F.col("delay") > 0))
-        .select(
-            "host",
-            F.greatest(
-                F.lit(1), F.floor(F.lit(wave_seconds) / F.col("delay"))
-            ).cast("int").alias("budget"),
-        )
+    slots = F.floor(F.lit(wave_seconds) / F.col("delay"))
+    return robots.filter(F.col("delay").isNotNull() & (F.col("delay") > 0)).select(
+        "host",
+        F.greatest(F.lit(1), F.least(slots, F.lit(_UNBOUNDED))).cast("int").alias("budget"),
     )
 
 

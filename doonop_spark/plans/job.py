@@ -209,9 +209,10 @@ class CrawlJob:
     # (default): the engine computes the bank size from its parameters and
     # picks broadcast ≤ 256 MB, copartition above.
     bloom_probe_mode: str = "auto"
-    # fold accumulated seen deltas into the bloom bank every K waves; in
-    # between, bloom-cleared rows are exact-checked against the ≤K-frame
-    # uncovered tail (correct AND amortizes the bank update)
+    # fold accumulated seen deltas into the bloom bank every K waves, and
+    # on every seen-compaction wave (which drops the parts the tail reads);
+    # in between, bloom-cleared rows are exact-checked against the
+    # ≤K-frame uncovered tail (correct AND amortizes the bank update)
     bloom_fold_every: int = 4
     # compact the seen-delta chain every K waves: the anti-join otherwise
     # scans one delta frame per past wave (O(waves²) over a long crawl)

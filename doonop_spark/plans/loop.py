@@ -60,7 +60,7 @@ from doonop_spark.operators.bloom import (
 )
 from doonop_spark.operators.dedup import SEEN_COLS, anti_join_seen, dedup_within_batch
 from doonop_spark.operators.filters import apply_link_filters
-from doonop_spark.operators.robots import robots_gate, robots_have_path_rules
+from doonop_spark.operators.robots import compile_robots, robots_gate
 from doonop_spark.operators.schedule import (
     budget_keep_flags,
     policy_order,
@@ -320,23 +320,24 @@ def run_crawl(
             }
         )
 
-    budgets = (
-        politeness_budget(robots, job.wave_seconds, job.robot)
-        if (robots is not None and job.use_robots)
-        else None
-    )
-    if budgets is not None:
-        # tiny static table re-broadcast every wave: checkpoint once so
-        # the Crawl-delay parse UDF doesn't re-run per wave
-        budgets = budgets.localCheckpoint(eager=True)
-    # one scalar aggregate per crawl: a rule-free robots table (pure
-    # Crawl-delay politeness) lets every wave's TWO robots gates stay
-    # whole-stage codegen instead of running an Arrow stage each
-    robots_rules = (
-        robots_have_path_rules(robots, job.robot)
-        if (robots is not None and job.use_robots)
-        else None
-    )
+    budgets = None
+    if robots is not None and job.use_robots:
+        # robots.txt is parsed ONCE per crawl (the reference's per-(domain,
+        # robot) verifier cache, src/robots.rs:23-33): one Arrow pass
+        # compiles it to Java regexes, checkpointed so both of every
+        # wave's gates and the Crawl-delay budgets stay in the JVM
+        robots = compile_robots(robots, job.robot).localCheckpoint(eager=True)
+        budgets = politeness_budget(robots, job.wave_seconds)
+    faults = None
+    if fault_schedule is not None:
+        # static like the robots table: checkpointed once instead of
+        # re-reading its source (Python tasks for a driver-built frame)
+        # for the broadcast of every wave's fetch
+        faults = fault_schedule.select(
+            F.col("url").alias("__furl"),
+            F.col("attempt").alias("__fattempt"),
+            F.col("fault").alias("__fault"),
+        ).localCheckpoint(eager=True)
     parity_seq = job.engines is not None and job.engines <= 64
 
     # ---- corpus cache (guide §5: reuse × recompute-cost) -------------------
@@ -591,10 +592,7 @@ def run_crawl(
             break  # nothing dispatchable: job_counter == 0 (src/workload.rs:178)
         waves_run += 1
 
-        gated = robots_gate(
-            wave, robots, job.robot, job.use_robots,
-            has_path_rules=robots_rules,
-        )
+        gated = robots_gate(wave, robots, job.robot, job.use_robots)
         # X1 salting is opt-in (salt_target_rows=0 default): every fetch
         # path below already balances the extract stage via its own
         # url-keyed shuffle / corpus-partition streaming, so salting here
@@ -609,15 +607,11 @@ def run_crawl(
             """fault injection + status + fused extraction over a wave⋈corpus
             frame (E1-E4 + P1/P2/P4)."""
             attempt = F.col("retry_count") + 1
-            if fault_schedule is not None:
-                fs = fault_schedule.select(
-                    F.col("url").alias("__furl"),
-                    F.col("attempt").alias("__fattempt"),
-                    F.col("fault").alias("__fault"),
-                )
+            if faults is not None:
                 joined = joined.join(
-                    F.broadcast(fs),
-                    (joined["url"] == fs["__furl"]) & (attempt == fs["__fattempt"]),
+                    F.broadcast(faults),
+                    (joined["url"] == faults["__furl"])
+                    & (attempt == faults["__fattempt"]),
                     "left",
                 ).drop("__furl", "__fattempt")
             else:
@@ -867,7 +861,6 @@ def run_crawl(
             robots,
             job.robot,
             job.use_robots,
-            has_path_rules=robots_rules,
         )
 
         # seq: monotone enqueue counter continuing the reference's append
@@ -958,6 +951,7 @@ def run_crawl(
             job.seen_compact_every > 0
             and (iteration + 1) % job.seen_compact_every == 0
         )
+        seen_part = None
         if compact_now:
             full_seen = seen.unionByName(seen_new).dropDuplicates(SEEN_COLS)
             io.append(full_seen, "seen", iteration)
@@ -966,14 +960,19 @@ def run_crawl(
             # already-checkpointed new_links frame, so re-reading it later
             # costs a column prune over cached blocks, not a job; durable
             # backends write regardless (resume safety)
-            io.append(seen_new, "seen", iteration, eager=False)
+            seen_part = io.append(seen_new, "seen", iteration, eager=False)
         if use_bloom:
             # the delta joins the uncovered tail now; every fold_every
             # waves the accumulated tail is folded into the bank with ONE
             # build+merge (never a rebuild from the full seen set) — the
-            # two applyInPandas stages amortize across waves
-            bloom_pending.append(new_links.select(*SEEN_COLS))
-            if len(bloom_pending) >= max(job.bloom_fold_every, 1):
+            # two applyInPandas stages amortize across waves. The tail
+            # reads the appended seen parts: a durable store keeps only
+            # the two newest new_links snapshots. A compaction wave drops
+            # those parts, so it folds first. Its own part is all of seen,
+            # so its new_links delta stands in, as for a TableIO whose
+            # append returns no part.
+            bloom_pending.append(seen_new if seen_part is None else seen_part)
+            if compact_now or len(bloom_pending) >= max(job.bloom_fold_every, 1):
                 tail = bloom_pending[0]
                 for f in bloom_pending[1:]:
                     tail = tail.unionByName(f)

@@ -42,10 +42,13 @@ class TableIO:
     def materialize(self, df: DataFrame, name: str, iteration: int) -> DataFrame:
         raise NotImplementedError
 
-    def append(self, df: DataFrame, name: str, iteration: int, eager: bool = True) -> None:
+    def append(self, df: DataFrame, name: str, iteration: int, eager: bool = True) -> DataFrame:
         """``eager=False`` permits a lazy append for tables only read after
         the loop ends (results/metrics) — the in-memory backend then skips
-        the per-wave checkpoint job; durable backends always write."""
+        the per-wave checkpoint job; durable backends always write.
+
+        Returns the appended part as the store holds it — readable until
+        the part is dropped, with no Spark job to open it."""
         raise NotImplementedError
 
     def read_appended(self, spark: SparkSession, name: str) -> DataFrame | None:
@@ -89,13 +92,13 @@ class MemoryTableIO(TableIO):
         self._live[name] = out
         return out
 
-    def append(self, df: DataFrame, name: str, iteration: int, eager: bool = True) -> None:
+    def append(self, df: DataFrame, name: str, iteration: int, eager: bool = True) -> DataFrame:
         # a lazy append must still be valid after its upstream _live entry
         # is replaced: it holds its own reference to the checkpointed RDDs
         # it derives from, which keeps their blocks alive
-        self._appended.setdefault(name, []).append(
-            (iteration, df.localCheckpoint(eager=True) if eager else df)
-        )
+        part = df.localCheckpoint(eager=True) if eager else df
+        self._appended.setdefault(name, []).append((iteration, part))
+        return part
 
     def read_appended(self, spark: SparkSession, name: str) -> DataFrame | None:
         frames = [f for _, f in self._appended.get(name, [])]
@@ -121,6 +124,12 @@ class MemoryTableIO(TableIO):
         return self._live[name]
 
 
+def _read_back(df: DataFrame, path: str) -> DataFrame:
+    """``df`` as written to ``path``; the known schema saves the job that
+    parquet schema inference would launch."""
+    return df.sparkSession.read.schema(df.schema).parquet(path)
+
+
 class SnapshotTableIO(TableIO):
     """Parquet snapshot-directory backend with exact resume."""
 
@@ -136,7 +145,7 @@ class SnapshotTableIO(TableIO):
         if os.path.exists(path):
             shutil.rmtree(path)  # partial write from a killed run
         df.write.mode("overwrite").parquet(path)
-        out = df.sparkSession.read.parquet(path)
+        out = _read_back(df, path)
         # snapshots older than the previous wave are dead weight; keep two
         # (current + previous) so a crash mid-write never loses state.
         base = os.path.join(self.root, name)
@@ -148,9 +157,10 @@ class SnapshotTableIO(TableIO):
             shutil.rmtree(os.path.join(base, stale), ignore_errors=True)
         return out
 
-    def append(self, df: DataFrame, name: str, iteration: int, eager: bool = True) -> None:
+    def append(self, df: DataFrame, name: str, iteration: int, eager: bool = True) -> DataFrame:
         path = os.path.join(self.root, name, f"part_iter={iteration}")
         df.write.mode("overwrite").parquet(path)  # durable: always written
+        return _read_back(df, path)
 
     def read_appended(self, spark: SparkSession, name: str) -> DataFrame | None:
         base = os.path.join(self.root, name)

@@ -242,3 +242,25 @@ def test_fold_bloom_bitwise_equals_merge_of_build(spark):
         ).collect()
     }
     assert got == want
+
+
+def test_fold_bloom_param_mismatch_raises_on_empty_pids(spark):
+    """A fold whose p/m differ from the bank's raises even when every new
+    key lands on a pid the bank has no row for (no per-pid row to compare
+    against inside the cogroup)."""
+    from doonop_spark.operators.bloom import fold_bloom
+
+    bank = build_bloom(
+        spark.createDataFrame([(i * 4,) for i in range(50)], "url_hash long"),
+        n_partitions=4,
+        expected_per_partition=256,
+    )
+    delta = spark.createDataFrame([(i * 4 + 1,) for i in range(50)], "url_hash long")
+    assert {r.pid for r in bank.select("pid").collect()} == {0}
+    with pytest.raises(ValueError, match="fold_bloom: bank built with p=4"):
+        fold_bloom(bank, delta, n_partitions=4, expected_per_partition=512).collect()
+    with pytest.raises(ValueError, match="fold_bloom: bank built with p=4"):
+        fold_bloom(bank, delta, n_partitions=8, expected_per_partition=256).collect()
+    # matching parameters fold as before
+    folded = fold_bloom(bank, delta, n_partitions=4, expected_per_partition=256)
+    assert {r.pid for r in folded.select("pid").collect()} == {0, 1}

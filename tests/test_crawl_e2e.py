@@ -619,3 +619,38 @@ def test_broadcast_wave_crawl_identical(spark):
     )
     assert vars(base.stats) == vars(bcast.stats)
     assert bcast.stats.count_errors == 1  # the miss was counted via observe
+
+
+def test_bloom_fold_every_4_on_snapshot_io(spark, tmp_path):
+    """The bloom's uncovered tail outlives the durable store's two-snapshot
+    retention: folding every 4 waves over a longer crawl on SnapshotTableIO
+    (with and without seen compaction, whose waves fold early) gives the
+    in-memory crawl's results, seen set and Statistics."""
+    from doonop_spark.sources.tables import SnapshotTableIO
+
+    corpus = synthetic_corpus(spark, n_hosts=2, n_pages=20)
+    kw = dict(
+        seeds=["http://h0000.example/p0", "http://h0001.example/p0"],
+        engines=4,
+        bloom_partitions=4,
+        bloom_expected_per_partition=64,
+        bloom_fold_every=4,
+        bloom_probe_mode="copartition",
+    )
+    mem = run_crawl(spark, CrawlJob(**kw, seen_compact_every=0), corpus)
+    assert mem.iterations >= 5
+    for compact_every in (0, 3):
+        snap = run_crawl(
+            spark,
+            CrawlJob(**kw, seen_compact_every=compact_every),
+            corpus,
+            io=SnapshotTableIO(str(tmp_path / f"c{compact_every}")),
+        )
+        assert snap.iterations == mem.iterations
+        assert sorted((r.url, r.data) for r in mem.results.collect()) == sorted(
+            (r.url, r.data) for r in snap.results.collect()
+        )
+        assert sorted(r.ukey for r in mem.seen.collect()) == sorted(
+            r.ukey for r in snap.seen.collect()
+        )
+        assert vars(mem.stats) == vars(snap.stats)

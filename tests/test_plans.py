@@ -37,20 +37,24 @@ def test_no_per_row_python_anywhere(spark):
 
 
 def test_robots_gate_is_broadcast_join(spark):
-    from doonop_spark.operators.robots import robots_gate
+    """The per-wave gate over a compiled, checkpointed robots table (what
+    run_crawl passes) is a broadcast join with no Python stage: robots.txt
+    is parsed once per crawl, and path matching is regexp_like in the JVM."""
+    from doonop_spark.operators.robots import compile_robots, robots_gate
 
     wave = spark.range(0, 1000).select(
         F.concat(F.lit("http://h"), (F.col("id") % 5).cast("string"), F.lit(".example/p"), F.col("id").cast("string")).alias("url"),
         F.concat(F.lit("h"), (F.col("id") % 5).cast("string"), F.lit(".example")).alias("host"),
     )
     robots = spark.createDataFrame(
-        [(f"h{i}.example", "User-agent: *\n") for i in range(5)],
+        [(f"h{i}.example", "User-agent: *\nDisallow: /p1\n") for i in range(5)],
         "host string, robots_txt string",
     )
-    plan = plan_of(robots_gate(wave, robots, use_robots=True))
+    compiled = compile_robots(robots).localCheckpoint(eager=True)
+    plan = plan_of(robots_gate(wave, compiled, use_robots=True))
     assert "BroadcastHashJoin" in plan  # the wave must NOT shuffle
     assert "SortMergeJoin" not in plan
-    assert "ArrowEvalPython" in plan and "BatchEvalPython" not in plan
+    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
 
 
 def test_sitemap_expansion_broadcasts_sitemap_urls(spark):

@@ -120,6 +120,44 @@ def test_cancel_drains_and_resumes(spark, tmp_path):
     assert stopped.stats.count_visited == 0
 
 
+def test_default_budget_zero_binds_in_every_impl(spark):
+    """default_budget=0 is a budget, not "unbounded": hosts without a
+    budget row dispatch nothing, hostless rows always dispatch, and the
+    window, window2 and pandas schedulers pick the same wave (as does the
+    scale loop's budget_keep_flags)."""
+    from doonop_spark.operators.schedule import budget_keep_flags, policy_order
+
+    rows = [
+        (f"http://h{h}.example/p{i}", 0, 10 * h + i, False, 0, 0.0, f"h{h}.example")
+        for h in range(3)
+        for i in range(4)
+    ] + [("mailto:x@y", 0, 99, False, 0, 0.0, None)]
+    frontier = spark.createDataFrame(
+        rows,
+        "url string, depth int, seq long, is_retry boolean,"
+        " retry_count int, retry_at double, host string",
+    ).withColumn("ukey", F.col("url")).withColumn("url_hash", F.xxhash64("ukey"))
+    budgets = spark.createDataFrame([("h0.example", 2)], "host string, budget int")
+    kw = dict(
+        policy=RetryPolicy.FIRST, wave_size=None, now=0.0, fresh_empty=False,
+        per_host_budget=budgets, default_budget=0,
+    )
+    want = [("h0.example", 2), ("h0.example", 3), (None, 99)]
+    for impl in ("window", "window2", "pandas"):
+        got = sorted(
+            ((r.host, r.seq) for r in select_wave(frontier, impl=impl, **kw).collect()),
+            key=str,
+        )
+        assert got == sorted(want, key=str), impl
+    for impl in ("window", "window2"):
+        flagged = budget_keep_flags(
+            frontier, policy_order(RetryPolicy.FIRST), budgets, 0,
+            impl=impl, default_can_bind=True,
+        )
+        got = sorted(((r.host, r.seq) for r in flagged.filter("__keep").collect()), key=str)
+        assert got == sorted(want, key=str), impl
+
+
 def test_politeness_pandas_matches_window(spark):
     rows = [
         (f"http://h{h}.example/p{i}", f"http://h{h}.example/p{i}", 0, 10 * h + i,
