@@ -210,7 +210,6 @@ def q_crawl_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
         seeds=["http://h0000.example/d0"],
         engines=None,
         per_host_budget=100_000,
-        salt_target_rows=0,
     )
     res = run_crawl(spark, job, corpus)
     return res.results.select("url", "data")
@@ -242,7 +241,6 @@ def q_warc_crawl(spark: SparkSession, sf_dir: str) -> DataFrame:
             seeds=["http://h0000.example/d0"],
             engines=None,
             per_host_budget=100_000,
-            salt_target_rows=0,
         )
         res = run_crawl(spark, job, warc_corpus(spark, warc_dir + "/*.warc.gz"))
         out = res.results.select("url", "data")

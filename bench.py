@@ -228,64 +228,18 @@ def cluster_scaling() -> None:
     print(json.dumps(result))
 
 
-def ensure_corpus(
-    spark: SparkSession, path: str, n_pages: int, hot_share: float = 0.3
-) -> None:
+def ensure_corpus(spark: SparkSession, path: str, n_pages: int) -> None:
     """Materialize a bench corpus once (generation excluded from timing)."""
     if os.path.exists(os.path.join(path, "_SUCCESS")):
         return
     from doonop_spark.sources.corpus import synthetic_corpus
 
     corpus = synthetic_corpus(
-        spark, n_hosts=N_HOSTS, n_pages=n_pages, hot_share=hot_share,
+        spark, n_hosts=N_HOSTS, n_pages=n_pages,
         partitions=CPUS * 2,
         filler_words=150,  # ~1 KB bodies: extract stage is CPU-bound
     )
     corpus.write.mode("overwrite").parquet(path)
-
-
-def skew_stress() -> None:
-    """Skew stress with politeness OFF (the r3 bench found politeness
-    accidentally the best skew mitigation — this measures the PLAIN path's
-    exposure): an 80%-hot-host corpus crawled with and without hot-host
-    salting, against the standard 30% corpus. The salting gate
-    (plans/loop.py: wave > salt_target_rows) engages on the hot corpus's
-    peak BFS waves; salt_target_rows=0 disables it for the A/B.
-    Prints one JSON line."""
-    sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-    spark = session(CPUS)
-    tmp_bal = os.path.join(tempfile.gettempdir(), f"doonop_bench_corpus_{N_PAGES}")
-    tmp_hot = os.path.join(
-        tempfile.gettempdir(), f"doonop_bench_corpus_hot80_{N_PAGES}"
-    )
-    ensure_corpus(spark, tmp_bal, N_PAGES)
-    ensure_corpus(spark, tmp_hot, N_PAGES, hot_share=0.8)
-    # salt target sized to bind on the hot corpus's peak waves at this SF
-    salt_target = max(N_PAGES // 16, 1_000)
-    out: dict[str, dict] = {}
-    for name, path, salt in (
-        ("balanced_salted", tmp_bal, salt_target),
-        ("hot80_salted", tmp_hot, salt_target),
-        ("hot80_unsalted", tmp_hot, 0),
-    ):
-        s, v = bfs_crawl_seconds(spark, path, salt_target_rows=salt)
-        out[name] = {"sec": round(s, 1), "urls_per_sec": round(v / s, 1), "visited": v}
-    assert out["hot80_salted"]["visited"] == out["hot80_unsalted"]["visited"]
-    spark.stop()
-    print(
-        json.dumps(
-            {
-                "mode": "skew_stress (politeness OFF)",
-                "n_pages": N_PAGES,
-                "cpus": CPUS,
-                "salt_target_rows": salt_target,
-                "variants": out,
-                "salting_speedup_on_hot80": round(
-                    out["hot80_unsalted"]["sec"] / out["hot80_salted"]["sec"], 3
-                ),
-            }
-        )
-    )
 
 
 def frontier_throughput(spark: SparkSession, corpus, n_pages: int) -> float:
@@ -348,7 +302,6 @@ def bfs_crawl_seconds(
     bloom_partitions: int = 0,
     bloom_probe_mode: str = "broadcast",
     politeness: bool = False,
-    salt_target_rows: int = 0,
     n_pages: int | None = None,
 ) -> tuple[float, int]:
     """Full iterative BFS crawl wall time on a reduced corpus (the loop
@@ -356,8 +309,8 @@ def bfs_crawl_seconds(
     ``bloom_partitions`` exercise the storage-partitioned fetch and the
     bloom seen-sidecar (the 100 TB scale paths) on the same input.
     ``politeness`` adds a robots table whose hot-host Crawl-delay caps the
-    host at 15% of the corpus per wave — the grouped-priority-queue
-    scheduler (applyInPandas budgets) under a binding constraint; the
+    host at 15% of the corpus per wave — the per-host budget window
+    under a binding constraint; the
     visited set is unchanged (budgets defer, never drop)."""
     from doonop_spark.plans.job import CrawlJob
     from doonop_spark.plans.loop import run_crawl
@@ -369,7 +322,6 @@ def bfs_crawl_seconds(
         seeds=seeds,
         engines=None,
         per_host_budget=10_000_000,
-        salt_target_rows=salt_target_rows,
         corpus_buckets=corpus_buckets,
         bloom_partitions=bloom_partitions,
         bloom_probe_mode=bloom_probe_mode,
@@ -814,8 +766,6 @@ if __name__ == "__main__":
         )
     elif len(sys.argv) >= 2 and sys.argv[1] == "--cluster":
         cluster_scaling()
-    elif len(sys.argv) >= 2 and sys.argv[1] == "--skew":
-        skew_stress()
     elif len(sys.argv) >= 2 and sys.argv[1] == "--warc":
         warc_throughput()
     elif len(sys.argv) >= 3 and sys.argv[1] == "--polite":

@@ -117,7 +117,6 @@ def profile_crawl(variant: str) -> None:
         seeds=seeds,
         engines=None,
         per_host_budget=10_000_000,
-        salt_target_rows=0,
         bloom_expected_per_partition=max(
             N_PAGES // max(kw.get("bloom_partitions", 1), 1), 1024
         ),

@@ -100,18 +100,6 @@ def main(argv: list[str] | None = None) -> int:
     # 'wall' = reference parity, --retry_threshold honored in real ms
     # against time.time() (src/retry.rs:38-46)
     ext.add_argument("--retry-clock", choices=["wave", "wall"], default="wave")
-    # politeness scheduler: window (default) | window2 (skew-proof
-    # two-phase per-host top-k) | pandas (grouped priority queue) |
-    # auto (window below --politeness-auto-threshold frontier rows,
-    # window2 above — the count rides the existing frontier Observation)
-    ext.add_argument(
-        "--politeness-impl",
-        choices=["window", "window2", "pandas", "auto"],
-        default="window",
-    )
-    ext.add_argument(
-        "--politeness-auto-threshold", type=int, default=2_000_000
-    )
     # training-pipeline hand-off: also write collected results as WET
     # archives (conversion records; sources/warc.py) under this directory
     ext.add_argument("--wet-out")
@@ -135,8 +123,6 @@ def main(argv: list[str] | None = None) -> int:
     job.bloom_partitions = ours.bloom_partitions
     job.bloom_probe_mode = ours.bloom_probe_mode
     job.seen_compact_every = ours.seen_compact_every
-    job.politeness_impl = ours.politeness_impl
-    job.politeness_auto_threshold = ours.politeness_auto_threshold
 
     # --use_robots_txt without a robots table would silently not gate at
     # all (robots_gate's table-missing semantics are per-HOST fetch-error

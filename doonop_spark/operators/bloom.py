@@ -28,7 +28,7 @@ Hashing: the k bloom probe positions derive from the already-computed
 
 Build is a grouped Arrow aggregation: seen keys shuffle once by
 ``pmod(url_hash, P)`` and each group folds its hashes into one bitset row
-``(pid, m, k, bits)`` — appendable per wave (bitsets OR together).
+``(pid, m, k, bits)``; :func:`fold_bloom` ORs later seen deltas into it.
 """
 
 from __future__ import annotations
@@ -42,7 +42,6 @@ from pyspark.sql import functions as F
 
 __all__ = [
     "build_bloom",
-    "merge_bloom",
     "fold_bloom",
     "BloomBank",
     "bloom_probe",
@@ -157,13 +156,12 @@ def fold_bloom(
     hash_col: str = "url_hash",
 ) -> DataFrame:
     """OR a batch of seen keys into an existing bank in ONE cogrouped
-    Arrow stage — ``merge_bloom(bank, build_bloom(delta))`` fused
-    (round 6): the unfused form paid two shuffled applyInPandas
-    aggregations per fold; here the delta's keys cogroup with the bank's
-    row for their pid and the positions are OR'd straight into the
-    existing bitset. Bit-exact same bank (same ``_params``/``_positions``;
-    pinned by tests). A pid with bank row but no new keys passes its row
-    through; a pid with keys but no bank row creates one.
+    Arrow stage: the delta's keys cogroup with the bank's row for their
+    pid and the positions are OR'd straight into the existing bitset.
+    Bit-exact the bank ``build_bloom`` makes from base ∪ delta (same
+    ``_params``/``_positions``; pinned by tests). A pid with bank row but
+    no new keys passes its row through; a pid with keys but no bank row
+    creates one.
 
     The parameters are checked against one bank row before the cogroup
     (one small job), so a mismatched fold raises even when every key
@@ -219,31 +217,6 @@ def fold_bloom(
         .cogroup(bank.groupBy("pid"))
         .applyInPandas(fold, schema=BLOOM_SCHEMA)
     )
-
-
-def merge_bloom(a: DataFrame, b: DataFrame) -> DataFrame:
-    """OR two bloom banks (same pid/m/k) — incremental per-wave update."""
-
-    def fold(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        if pdf["p"].nunique() != 1 or pdf["m"].nunique() != 1:
-            raise ValueError("merge_bloom: banks built with different p/m")
-        m = int(pdf["m"].iloc[0])
-        k = int(pdf["k"].iloc[0])
-        acc = np.zeros(m // 8, dtype=np.uint8)
-        for raw in pdf["bits"]:
-            acc |= np.frombuffer(raw, dtype=np.uint8)
-        return pd.DataFrame(
-            {
-                "pid": [int(key[0])],
-                "p": [int(pdf["p"].iloc[0])],
-                "m": [m],
-                "k": [k],
-                "n": [int(pdf["n"].sum())],
-                "bits": [acc.tobytes()],
-            }
-        )
-
-    return a.unionByName(b).groupBy("pid").applyInPandas(fold, schema=BLOOM_SCHEMA)
 
 
 class BloomBank:

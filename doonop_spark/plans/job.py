@@ -168,27 +168,6 @@ class CrawlJob:
     # --- scale knobs (north_star extensions; no reference analog) ---
     per_host_budget: int | None = None  # max URLs per host per wave
     wave_seconds: float = 30.0  # politeness: budget = wave_seconds/crawl_delay
-    # X1 hot-host salting: repartition the gated wave by (host, salt)
-    # before the fetch when a wave exceeds this row count; 0 (default) =
-    # OFF. Measured OFF-by-default for a reason: every fetch path already
-    # balances the extract stage itself (the plain and bucketed joins
-    # shuffle by url hash; the broadcast path streams corpus partitions),
-    # so the salt shuffle adds cost without balancing anything — an
-    # 80%-hot-host corpus at sf0.1 crawled 26% FASTER unsalted (bench
-    # --skew: 40.8 s vs 51.4 s). This is the Spark analog of the
-    # reference's shared-URL-channel load balance (src/workload.rs:85-86)
-    # coming for free from the url-keyed shuffle. Set >0 only for custom
-    # data_expr pipelines that group by host downstream of the fetch.
-    salt_target_rows: int = 0
-    # waves at or below this row count broadcast into the corpus join
-    # (corpus probed in place, no shuffle). DISABLED by default: A/B runs
-    # showed AQE's runtime SortMergeJoin→BroadcastHashJoin conversion
-    # already covers small waves without this path's extra miss-branch
-    # materialization (70s vs 130s on a 400k-page crawl). Worth enabling
-    # only where the corpus scan itself must be avoided — i.e. a corpus
-    # bucketed/partitioned by xxhash64(url) where the broadcast join can
-    # prune storage partitions.
-    broadcast_wave_max: int = 0
     # bucket count of a corpus written by sources.corpus.write_bucketed_corpus
     # (partition column bucket = pmod(xxhash64(url), corpus_buckets)). When
     # >0 and the corpus carries a 'bucket' column, each wave's fetch join
@@ -224,9 +203,9 @@ class CrawlJob:
     # with no corpus-side Exchange/Sort instead of re-scanning the corpus
     # per wave (measured ~40% of plain-crawl wall time at bench scale).
     # MEMORY_AND_DISK, unpersisted on loop exit. At 100 TB the estimate
-    # exceeds any sane budget and the scan-per-wave plans (bucketed
-    # pruning / broadcast waves) stay in effect — this knob only changes
-    # the physical fetch plan, never results. 0 disables.
+    # exceeds any sane budget and the scan-per-wave fetch (bucket-pruned
+    # or raw corpus) stays in effect — this knob only changes the physical
+    # fetch plan, never results. 0 disables.
     corpus_cache_max_bytes: int = 8 << 30
     max_iterations: int = 10_000
     # extraction program surface (§2.10): 'text' = flagship byte-exact
@@ -240,22 +219,10 @@ class CrawlJob:
     # URL; True = the fetch keeps only the LATEST capture per URL
     # (wave-sized window in the fetch join — plans/loop.py
     # latest_capture). Default False: the parquet corpus contract has
-    # unique urls, and the dedup window is not free on the broadcast
-    # path. The CLI turns this on automatically for .warc corpora.
+    # unique urls, and the dedup window is not free. The CLI turns this
+    # on automatically for .warc corpora.
     dedup_captures: bool = False
     side_program: str | None = None
-    # politeness implementation: 'window' (JVM row_number, default),
-    # 'window2' (two-phase per-(host,salt)→per-host top-k — skew-proof:
-    # a hot host's frontier never sorts in one task; identical output),
-    # 'pandas' (applyInPandas grouped priority queue, for custom rules),
-    # or 'auto' (window below politeness_auto_threshold frontier rows,
-    # window2 above — operators/schedule.py:resolve_politeness_impl)
-    politeness_impl: str = "window"
-    # 'auto' switchover point: a frontier of R rows bounds any per-host
-    # candidate count by R, so below this the single-window form cannot
-    # meet a sort big enough to matter; 2M rows ≈ a few seconds of one
-    # task's window-sort, the cost the two-phase form amortizes away
-    politeness_auto_threshold: int = 2_000_000
     # CLI-fidelity no-ops (browser fetch does not exist here)
     browser: str = "firefox"
     proxy: dict | None = None

@@ -13,8 +13,8 @@ cycle of the reference:
    row). An optional ``fault_schedule`` table ``(url, attempt, fault)``
    injects ``timeout`` (retryable, E1/E2) and ``error`` faults per attempt.
 3. **extract** — Arrow UDFs over ``html``: out-links + flagship text
-   (byte-identical per URL). The wave is hot-host salted first so one
-   domain can't serialize the UDF stage.
+   (byte-identical per URL), in the same stage as the fetch join, whose
+   url-keyed shuffle already spreads a hot host over many tasks.
 4. **expand** — posexplode links in page order, absolutize (P4), filter
    (F5 before the dedup shuffle), canonical seen-key, within-batch dedup
    (D3), anti-join the seen table (D1, optional bloom pre-filter), robots
@@ -65,8 +65,6 @@ from doonop_spark.operators.schedule import (
     budget_keep_flags,
     policy_order,
     politeness_budget,
-    resolve_politeness_impl,
-    salt_for_skew,
     select_wave,
 )
 from doonop_spark.plans.job import CrawlJob, RetryPolicy
@@ -81,11 +79,11 @@ RESULTS_SCHEMA = (
 )
 
 
-def _observe_status(df: DataFrame, iteration: int, tag: str = ""):
+def _observe_status(df: DataFrame, iteration: int):
     """Attach per-status counts as an Observation riding the frame's next
     materialize action (K2 stats without a dedicated groupBy job).
     Returns (observed_df, get) where get() -> {n, ok, timeout, error}."""
-    obs = Observation(f"fetched_{tag}{iteration}")
+    obs = Observation(f"fetched_{iteration}")
     out = df.observe(
         obs,
         F.count(F.lit(1)).alias("n"),
@@ -241,8 +239,8 @@ def run_crawl(
         seq_counter = state["seq_counter"]
         collected = state["collected"]
         fresh_count = state["fresh_count"]
-        # pre-auto state files lack the key: None keeps 'auto' on the
-        # conservative 'window' for the first resumed wave
+        # older state files lack the key: None makes the first resumed
+        # wave assume retries and a binding default budget
         frontier_rows = state.get("frontier_rows")
         stats = Statistics(**state["stats"])
         frontier = io.load_table(spark, "frontier", iteration)
@@ -349,7 +347,7 @@ def run_crawl(
     # with no corpus-side Exchange or Sort (plan-verified), shuffling only
     # the wave. MEMORY_AND_DISK spills gracefully; unpersisted on exit. At
     # 100 TB the estimate exceeds any sane budget and the scan-per-wave
-    # plans (bucketed pruning, broadcast waves) remain the scale paths.
+    # fetch (bucket-pruned or raw corpus) remains the scale path.
     cached_corpus = None
     if job.corpus_cache_max_bytes > 0:
         try:
@@ -371,6 +369,24 @@ def run_crawl(
                 .sortWithinPartitions("url")
                 .persist(StorageLevel.MEMORY_AND_DISK)
             )
+
+    # ---- fetch side, chosen once per crawl ----------------------------------
+    # Every wave left-joins ONE corpus side on url (a URL missing from it
+    # is a terminal fetch error, E3), in this order of precedence:
+    # 1. the cached projection above: the SortMergeJoin reads its
+    #    partitions with no corpus-side Exchange or Sort, shuffling only
+    #    the wave (bucket pruning is a scan optimization the cache makes
+    #    moot);
+    # 2. the bucket-pruned corpus (the 100 TB plan): the corpus is
+    #    storage-partitioned by bucket = pmod(xxhash64(url), B)
+    #    (write_bucketed_corpus) and each wave's bucket set (≤ min(wave, B)
+    #    ints) is pushed down as a partition predicate, so the scan reads
+    #    only the wave's buckets instead of the whole corpus;
+    # 3. the raw corpus.
+    # The side changes only the physical plan, never the result.
+    prune_buckets = cached_corpus is None and bucketed_fetch
+    fetch_side = corpus if cached_corpus is None else cached_corpus
+    fetch_keys = ["bucket", "url"] if prune_buckets else "url"
 
     # partitioned bloom seen-sidecar (north_rule): built once over the
     # current seen set (covers resume too), then FOLDED every
@@ -473,10 +489,6 @@ def run_crawl(
                 fresh_empty=fresh_empty,
                 per_host_budget=budgets,
                 default_budget=job.per_host_budget,
-                impl=resolve_politeness_impl(
-                    job.politeness_impl, frontier_rows,
-                    job.politeness_auto_threshold,
-                ),
             )
             use_anti_remaining = True
             # dispatch_rank fixes the deterministic "completion order"
@@ -541,10 +553,6 @@ def run_crawl(
                     policy_order(job.retry_policy),
                     budgets,
                     job.per_host_budget,
-                    impl=resolve_politeness_impl(
-                        job.politeness_impl, frontier_rows,
-                        job.politeness_auto_threshold,
-                    ),
                     default_can_bind=default_bind,
                 )
                 obs_wave = Observation(f"wave_{iteration}")
@@ -593,14 +601,6 @@ def run_crawl(
         waves_run += 1
 
         gated = robots_gate(wave, robots, job.robot, job.use_robots)
-        # X1 salting is opt-in (salt_target_rows=0 default): every fetch
-        # path below already balances the extract stage via its own
-        # url-keyed shuffle / corpus-partition streaming, so salting here
-        # is measured pure overhead (bench --skew: 26% slower on an
-        # 80%-hot corpus); the knob remains for custom data_expr
-        # pipelines that host-group downstream of the fetch
-        if job.salt_target_rows and n_sched > job.salt_target_rows:
-            gated = salt_for_skew(gated, job.salt_target_rows)
 
         # ---- fetch (corpus join) + fault injection + extraction ----------
         def shape(joined: DataFrame) -> DataFrame:
@@ -658,11 +658,10 @@ def run_crawl(
             corpus may legally hold several captures of one URL; the
             fetch must return ONE page per frontier URL — the latest
             capture wins, ties broken by html hash for determinism.
-            Wave-sized window only (never a corpus-side shuffle); on the
-            plain path the join's url-keyed exchange is reused by the
-            window's partitionBy(url). Default OFF: the parquet corpus
-            contract has unique urls and the broadcast path would pay a
-            wave-sized shuffle for nothing."""
+            Wave-sized window only (never a corpus-side shuffle); the
+            join's url-keyed exchange is reused by the window's
+            partitionBy(url). Default OFF: the parquet corpus contract has
+            unique urls."""
             if not job.dedup_captures:
                 return joined
             w = Window.partitionBy("url").orderBy(
@@ -674,63 +673,18 @@ def run_crawl(
                 .drop("__cap_rn")
             )
 
-        # Cached fetch: when the corpus fits the configured cache budget it
-        # was persisted ONCE above, hash-partitioned and sorted by url — the
-        # per-wave join then shuffles/sorts ONLY the wave side (the corpus
-        # side of the SortMergeJoin reads the in-memory partitions with no
-        # Exchange and no Sort; guide §2.4/§5). Results are identical to
-        # every other fetch path (same left join on url; bucket pruning is
-        # a scan optimization the cache makes moot).
-        if cached_corpus is not None:
-            joined = latest_capture(
-                gated.join(cached_corpus, on="url", how="left")
-            )
-            shaped, get_counts = _observe_status(shape(joined), iteration)
-            fetched = io.materialize(shaped, "wave_fetched", iteration)
-        # Bucketed fetch (the 100 TB plan): the corpus is storage-partitioned
-        # by bucket = pmod(xxhash64(url), B) (write_bucketed_corpus), the
-        # wave's bucket set is collected (≤ min(wave, B) ints) and pushed as
-        # a partition predicate — the corpus scan reads ONLY the wave's
-        # buckets instead of rescanning the whole corpus every wave.
-        elif bucketed_fetch:
+        side = fetch_side
+        if prune_buckets:
             # bucket set observed on the wave/frontier materialize
             # (pre-gate superset of gated's buckets: still-correct
             # pruning, no extra job)
-            wave_b = gated.withColumn(
+            gated = gated.withColumn(
                 "bucket", bucket_expr(F.col("url"), corpus_buckets)
             )
-            pruned = corpus.filter(F.col("bucket").isin(bkts))
-            joined = latest_capture(
-                wave_b.join(pruned, on=["bucket", "url"], how="left").drop("bucket")
-            )
-            shaped, get_counts = _observe_status(shape(joined), iteration)
-            fetched = io.materialize(shaped, "wave_fetched", iteration)
-        # Small waves broadcast INTO the corpus join: the corpus (the 100 TB
-        # side) is probed in place instead of being shuffled under a
-        # sort-merge join. Outer joins cannot broadcast their preserved
-        # side, so fetch-misses (URLs absent from the corpus = terminal
-        # fetch errors, E3) are reconstructed with a second broadcast
-        # anti-join against the materialized hits — both joins stream the
-        # big side exactly once.
-        elif n_sched <= job.broadcast_wave_max:
-            hits = latest_capture(corpus.join(F.broadcast(gated), on="url", how="inner"))
-            shaped_h, get_hits = _observe_status(shape(hits), iteration, "hits")
-            fetched = io.materialize(shaped_h, "wave_fetched", iteration)
-            missed = gated.join(
-                F.broadcast(fetched.select("url")), on="url", how="left_anti"
-            ).withColumn("html", F.lit(None).cast("binary"))
-            # materialized too: a lazy miss branch would re-run its Arrow
-            # stage on every downstream action over `fetched`
-            shaped_m, get_miss = _observe_status(shape(missed), iteration, "miss")
-            missed = io.materialize(shaped_m, "wave_missed", iteration)
-            fetched = fetched.unionByName(missed)
-            get_counts = lambda: {
-                k: get_hits()[k] + get_miss()[k] for k in get_hits()
-            }
-        else:
-            joined = latest_capture(gated.join(corpus, on="url", how="left"))
-            shaped, get_counts = _observe_status(shape(joined), iteration)
-            fetched = io.materialize(shaped, "wave_fetched", iteration)
+            side = fetch_side.filter(F.col("bucket").isin(bkts))
+        joined = latest_capture(gated.join(side, on=fetch_keys, how="left"))
+        shaped, get_counts = _observe_status(shape(joined), iteration)
+        fetched = io.materialize(shaped, "wave_fetched", iteration)
         ok = F.col("status") == "ok"
 
         # ---- stats: observed on the fetch materialize, no extra job ------

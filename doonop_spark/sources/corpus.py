@@ -15,7 +15,7 @@ Ground truth: ``text`` is embedded HTML-escaped inside ``<main>`` so that
 written into ``html`` are exactly the site graph described in FIXTURES.md
 (binary same-host tree + cross-host edge every k-th page + a duplicate
 link for the within-batch dedup exercise + a hot host owning ~30% of all
-pages for the skew/salting exercise).
+pages for the skew exercise).
 """
 
 from __future__ import annotations

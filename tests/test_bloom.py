@@ -13,7 +13,6 @@ from doonop_spark.operators.bloom import (
     BloomBank,
     bloom_probe,
     build_bloom,
-    merge_bloom,
 )
 from doonop_spark.operators.dedup import anti_join_seen
 
@@ -78,24 +77,6 @@ def test_sparse_bank_no_false_negatives(spark):
     assert bank.p == 64
     hashes = np.array([r.url_hash for r in seen.collect()], dtype=np.int64)
     assert bank.maybe_seen(hashes).all()
-
-
-def test_merge_bloom(spark):
-    a = (
-        spark.range(0, 1000)
-        .select(F.xxhash64(F.col("id").cast("string")).alias("url_hash"))
-    )
-    b = (
-        spark.range(1000, 2000)
-        .select(F.xxhash64(F.col("id").cast("string")).alias("url_hash"))
-    )
-    ba = build_bloom(a, n_partitions=4, expected_per_partition=500)
-    bb = build_bloom(b, n_partitions=4, expected_per_partition=500)
-    merged = BloomBank.collect(merge_bloom(ba, bb))
-    all_h = np.array(
-        [r.url_hash for r in a.unionByName(b).collect()], dtype=np.int64
-    )
-    assert merged.maybe_seen(all_h).all()
 
 
 def test_anti_join_probe_runs_once_per_row(spark, seen):
@@ -214,33 +195,47 @@ def test_resolve_probe_mode_auto(spark, seen):
 
 
 def test_fold_bloom_bitwise_equals_merge_of_build(spark):
-    """Round-6: the fused fold (one cogrouped Arrow stage) must produce a
-    bank BITWISE identical to merge_bloom(bank, build_bloom(delta)) —
-    including pids with bank rows but no new keys, and pids with new keys
-    but no bank row."""
-    from doonop_spark.operators.bloom import build_bloom, fold_bloom, merge_bloom
+    """The fused fold (one cogrouped Arrow stage) must produce a bank
+    BITWISE identical, row by row, to build_bloom over base ∪ delta —
+    including a pid with bank rows but no new keys, and a pid with new
+    keys but no bank row."""
+    from doonop_spark.operators.bloom import fold_bloom
 
     P, EXP = 8, 256
+    # no base key on pid 3: the delta creates that pid's row
     base = spark.createDataFrame(
         [(i * 37,) for i in range(200)], "url_hash long"
-    )
-    # delta concentrated on a few pids so both empty-side cases occur
+    ).filter("pmod(url_hash, 8) != 3")
+    # delta concentrated on pids 0 and 3: the other pids keep their rows
     delta = spark.createDataFrame(
         [(i * 91 + 5,) for i in range(60)], "url_hash long"
     ).filter("pmod(url_hash, 8) in (0, 3)")
-    bank = build_bloom(base, n_partitions=P, expected_per_partition=EXP)
-    want = {
-        r["pid"]: (r["p"], r["m"], r["k"], r["n"], bytes(r["bits"]))
-        for r in merge_bloom(
-            bank, build_bloom(delta, n_partitions=P, expected_per_partition=EXP)
-        ).collect()
-    }
-    got = {
-        r["pid"]: (r["p"], r["m"], r["k"], r["n"], bytes(r["bits"]))
-        for r in fold_bloom(
-            bank, delta, n_partitions=P, expected_per_partition=EXP
-        ).collect()
-    }
+
+    def pids(df):
+        return {r[0] for r in df.selectExpr("pmod(url_hash, 8)").collect()}
+
+    assert 3 in pids(delta) - pids(base) and 0 in pids(base) & pids(delta)
+    assert pids(base) - pids(delta)
+
+    def rows(bank):
+        return {
+            r["pid"]: (r["p"], r["m"], r["k"], r["n"], bytes(r["bits"]))
+            for r in bank.collect()
+        }
+
+    want = rows(
+        build_bloom(
+            base.unionByName(delta), n_partitions=P, expected_per_partition=EXP
+        )
+    )
+    got = rows(
+        fold_bloom(
+            build_bloom(base, n_partitions=P, expected_per_partition=EXP),
+            delta,
+            n_partitions=P,
+            expected_per_partition=EXP,
+        )
+    )
     assert got == want
 
 

@@ -132,18 +132,6 @@ def test_cli_scale_knobs_identical_output(fixture_corpus_path):
     assert wall.stderr.endswith(
         "Statistics: visited 2, collected 2, errors 0, retries 0\n"
     ), wall.stderr[-500:]
-    # --politeness-impl window2 (skew-proof scheduler): same output
-    w2 = run_cli(
-        [
-            "--corpus",
-            fixture_corpus_path,
-            "--politeness-impl",
-            "window2",
-            "http://localhost:8000/basic/index.html",
-        ]
-    )
-    assert w2.returncode == 0
-    assert w2.stdout == plain.stdout
 
 
 def test_cli_robots_table_gates_links(fixture_corpus_path, spark, tmp_path):

@@ -332,40 +332,105 @@ def test_bloom_copartitioned_crawl_identical(spark):
     assert vars(base.stats) == vars(coparted.stats)
 
 
-def test_bucketed_corpus_crawl_identical(spark, tmp_path):
-    """Storage-partitioned fetch: crawling a bucket-partitioned corpus
-    yields byte-identical results to the plain url join, and each wave's
-    corpus scan is pruned to the wave's buckets (PartitionFilters)."""
+@pytest.mark.parametrize("side", ["cached", "bucketed", "raw"])
+def test_fetch_side_crawl_identical(spark, tmp_path, side):
+    """Every wave left-joins one fetch side chosen once per crawl: the
+    cached projection, the bucket-pruned corpus (with the cache off) or
+    the raw corpus (with the cache off). Each side crawls to the same
+    results, Statistics and seen set over a corpus with a link to a
+    missing page, a timeout that succeeds on retry and two captures of
+    one URL — and the side named is the side whose scan each wave's
+    fetch plan shows."""
+    from datetime import datetime
+
     from doonop_spark.sources.corpus import (
-        bucket_expr,
         read_bucketed_corpus,
         write_bucketed_corpus,
     )
+    from doonop_spark.sources.tables import MemoryTableIO
 
-    corpus = synthetic_corpus(spark, n_hosts=3, n_pages=80)
-    seeds = ["http://h0000.example/p0", "http://h0001.example/p0"]
-    base = run_crawl(spark, CrawlJob(seeds=seeds, engines=8), corpus)
-
-    path = str(tmp_path / "bucketed")
-    write_bucketed_corpus(corpus, path, n_buckets=16)
-    bcorpus = read_bucketed_corpus(spark, path)
-    assert "bucket" in bcorpus.columns
-    res = run_crawl(
-        spark, CrawlJob(seeds=seeds, engines=8, corpus_buckets=16), bcorpus
+    pages = mock_corpus(
+        spark,
+        {
+            "http://a.com/": ["http://gone.com/404", "http://flaky.com", "http://b.com"],
+            "http://flaky.com/": [],
+            "http://b.com/": ["http://c.com"],
+            "http://c.com/": [],
+        },
+        data={"http://c.com/": "new c"},
     )
-    assert sorted((r.url, r.data) for r in base.results.collect()) == sorted(
-        (r.url, r.data) for r in res.results.collect()
+    old_c = spark.createDataFrame(
+        [("http://c.com/", datetime(2023, 1, 1),
+          b"<html><body><main>old c</main></body></html>", "", "en")],
+        pages.schema,
     )
-    assert vars(base.stats) == vars(res.stats)
+    path = str(tmp_path / "corpus")
+    if side == "bucketed":
+        write_bucketed_corpus(pages.unionByName(old_c), path, n_buckets=16)
+        corpus = read_bucketed_corpus(spark, path)
+        assert "bucket" in corpus.columns
+    else:
+        pages.unionByName(old_c).write.parquet(path)
+        corpus = spark.read.parquet(path)
+    faults = spark.createDataFrame(
+        [("http://flaky.com/", 1, "timeout")], "url string, attempt int, fault string"
+    )
 
-    # the pruning predicate reaches the scan as a PARTITION filter (not a
-    # post-scan data filter): a 1-bucket wave reads only that bucket's
-    # directory, not the whole corpus
-    one = bcorpus.filter(F.col("bucket").isin([3]))
-    plan = one._jdf.queryExecution().executedPlan().toString()
-    pf = plan.split("PartitionFilters: [", 1)
-    assert len(pf) == 2, plan
-    assert "bucket" in pf[1].split("]", 1)[0]
+    class FetchPlans(MemoryTableIO):
+        def __init__(self):
+            super().__init__()
+            self.plans = []
+
+        def materialize(self, df, name, iteration):
+            out = super().materialize(df, name, iteration)
+            if name == "wave_fetched":
+                self.plans.append(df._jdf.queryExecution().executedPlan().toString())
+            return out
+
+    io = FetchPlans()
+    job = CrawlJob(
+        seeds=["http://a.com"],
+        engines=None,
+        retry_threshold=0.0,
+        dedup_captures=True,
+        corpus_cache_max_bytes=(8 << 30) if side == "cached" else 0,
+    )
+    res = run_crawl(spark, job, corpus, fault_schedule=faults, io=io)
+
+    assert sorted((r.url, r.data) for r in res.results.collect()) == [
+        ("http://a.com/", "http://a.com/"),
+        ("http://b.com/", "http://b.com/"),
+        ("http://c.com/", "new c"),  # the latest capture wins
+        ("http://flaky.com/", "http://flaky.com/"),
+    ]
+    assert vars(res.stats) == {
+        "count_errors": 1,  # the missing page
+        "count_retries": 1,  # flaky's first attempt
+        "count_visited": 6,
+        "count_collected": 4,
+    }
+    assert sorted(r.ukey for r in res.seen.collect()) == [
+        "http://a.com/",
+        "http://b.com/",
+        "http://c.com/",
+        "http://flaky.com/",
+        "http://gone.com/404",
+    ]
+
+    def bucket_pruned(plan):
+        pf = plan.split("PartitionFilters: [", 1)
+        return len(pf) == 2 and "bucket" in pf[1].split("]", 1)[0]
+
+    assert len(io.plans) == res.iterations
+    for plan in io.plans:
+        assert ("InMemoryTableScan" in plan) == (side == "cached"), plan
+        assert bucket_pruned(plan) == (side == "bucketed"), plan
+    if side == "bucketed":
+        # the pruning predicate reaches the scan as a PARTITION filter (not
+        # a post-scan data filter): a 1-bucket wave reads only that
+        # bucket's directory, not the whole corpus
+        one = corpus.filter(F.col("bucket").isin([3]))
+        assert bucket_pruned(one._jdf.queryExecution().executedPlan().toString())
 
 
 def test_bucketed_corpus_wrong_b_fails_loudly(spark, tmp_path):
@@ -510,52 +575,6 @@ def test_crawl_delay_budget_enforced_per_wave(spark):
     assert len(hot) >= 6  # the throttled host needed many more waves
 
 
-def test_politeness_impl_pandas_crawl_identical(spark):
-    """north_star: budgets 'enforced as grouped priority queues via
-    applyInPandas' — the pandas scheduler produces the same crawl as the
-    default window implementation under a binding Crawl-delay budget."""
-    from doonop_spark.sources.corpus import synthetic_robots
-
-    corpus = synthetic_corpus(spark, n_hosts=2, n_pages=20, hot_share=0.5)
-    robots = synthetic_robots(spark, n_hosts=2, crawl_delay={0: 10.0})
-    kw = dict(
-        seeds=["http://h0000.example/p0", "http://h0001.example/p0"],
-        engines=None,
-        per_host_budget=1000,
-        use_robots=True,
-        wave_seconds=30.0,
-    )
-    w = run_crawl(spark, CrawlJob(**kw, politeness_impl="window"), corpus, robots=robots)
-    p = run_crawl(spark, CrawlJob(**kw, politeness_impl="pandas"), corpus, robots=robots)
-    w2 = run_crawl(
-        spark, CrawlJob(**kw, politeness_impl="window2"), corpus, robots=robots
-    )
-    assert sorted((r.url, r.data) for r in w.results.collect()) == sorted(
-        (r.url, r.data) for r in p.results.collect()
-    )
-    assert vars(w.stats) == vars(p.stats)
-    assert w.iterations == p.iterations
-    # the skew-proof two-phase scheduler crawls identically too
-    assert sorted((r.url, r.data) for r in w.results.collect()) == sorted(
-        (r.url, r.data) for r in w2.results.collect()
-    )
-    assert vars(w.stats) == vars(w2.stats)
-    assert w.iterations == w2.iterations
-    # 'auto' at threshold 0: every wave resolves to window2 (the observed
-    # frontier count is always > 0 here) — still identical
-    a = run_crawl(
-        spark,
-        CrawlJob(**kw, politeness_impl="auto", politeness_auto_threshold=0),
-        corpus,
-        robots=robots,
-    )
-    assert sorted((r.url, r.data) for r in w.results.collect()) == sorted(
-        (r.url, r.data) for r in a.results.collect()
-    )
-    assert vars(w.stats) == vars(a.stats)
-    assert w.iterations == a.iterations
-
-
 def test_opaque_url_enters_seen_never_collected(spark):
     """Frontier policy for opaque non-special URLs (``mailto:``, ``a:``):
     ``url::Url::parse`` accepts them, so in the reference they ENTER the
@@ -592,33 +611,6 @@ def test_metrics_lineage(spark):
     total = m.agg(F.sum("n")).collect()[0][0]
     assert total == res.stats.count_visited
     assert m.filter(F.col("partition_id").isNull()).count() == 0
-
-
-def test_broadcast_wave_crawl_identical(spark):
-    """broadcast_wave_max: small waves broadcast INTO the corpus join
-    (hits + reconstructed misses as two materializes). Results AND stats
-    must equal the plain path — stats now ride per-branch Observations
-    summed across the hit/miss frames, so a missing-page error in a
-    broadcast wave must still count."""
-    corpus = mock_corpus(
-        spark,
-        {
-            "http://a.com/": ["http://gone.com/404", "http://b.com"],
-            "http://b.com/": ["http://c.com"],
-            "http://c.com/": [],
-        },
-    )
-    base = run_crawl(spark, CrawlJob(seeds=["http://a.com"], engines=2), corpus)
-    bcast = run_crawl(
-        spark,
-        CrawlJob(seeds=["http://a.com"], engines=2, broadcast_wave_max=1_000),
-        corpus,
-    )
-    assert sorted((r.url, r.data) for r in base.results.collect()) == sorted(
-        (r.url, r.data) for r in bcast.results.collect()
-    )
-    assert vars(base.stats) == vars(bcast.stats)
-    assert bcast.stats.count_errors == 1  # the miss was counted via observe
 
 
 def test_bloom_fold_every_4_on_snapshot_io(spark, tmp_path):

@@ -289,8 +289,8 @@ def test_cli_wet_out_dedups_revisits(spark, tmp_path):
 
 def test_crawl_dedup_captures_latest_wins(spark):
     """dedup_captures: with two captures of one URL in the corpus, the
-    fetch uses the LATEST capture's content — on both the plain and the
-    broadcast fetch paths."""
+    fetch uses the LATEST capture's content (every fetch side is covered
+    by tests/test_crawl_e2e.py::test_fetch_side_crawl_identical)."""
     from datetime import datetime
 
     from doonop_spark.plans.job import CrawlJob
@@ -302,12 +302,10 @@ def test_crawl_dedup_captures_latest_wins(spark):
         (url, datetime(2024, 5, 1), b"<html><main>new capture</main></html>"),
     ]
     corpus = spark.createDataFrame(rows, "url string, warc_ts timestamp, html binary")
-    for bmax in (0, 10_000):  # plain SMJ path, then broadcast-wave path
-        job = CrawlJob(seeds=[url], dedup_captures=True, broadcast_wave_max=bmax)
-        res = run_crawl(spark, job, corpus)
-        got = res.results.collect()
-        assert len(got) == 1 and got[0].data == "new capture", (bmax, got)
-        assert res.stats.count_visited == 1 and res.stats.count_collected == 1
+    res = run_crawl(spark, CrawlJob(seeds=[url], dedup_captures=True), corpus)
+    got = res.results.collect()
+    assert len(got) == 1 and got[0].data == "new capture", got
+    assert res.stats.count_visited == 1 and res.stats.count_collected == 1
 
 
 def test_wet_roundtrip_distributed(spark, tmp_path):
