@@ -29,16 +29,21 @@ Hashing: the k bloom probe positions derive from the already-computed
 Build is a grouped Arrow aggregation: seen keys shuffle once by
 ``pmod(url_hash, P)`` and each group folds its hashes into one bitset row
 ``(pid, m, k, bits)``; :func:`fold_bloom` ORs later seen deltas into it.
+:class:`SeenBloom` holds the crawl loop's bank, probe and unfolded tail.
 """
 
 from __future__ import annotations
 
+import logging
 import math
+from functools import reduce
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from doonop_spark.operators.dedup import anti_join_flagged
 
 __all__ = [
     "build_bloom",
@@ -49,6 +54,7 @@ __all__ = [
     "bank_size_bytes",
     "resolve_probe_mode",
     "BROADCAST_BANK_MAX_BYTES",
+    "SeenBloom",
 ]
 
 # banks at or below this size broadcast (driver + every executor hold one
@@ -103,15 +109,40 @@ def resolve_probe_mode(
     return "broadcast" if size <= threshold_bytes else "copartition"
 
 
-def _positions(hashes: np.ndarray, m: int, k: int) -> tuple[np.ndarray, np.ndarray]:
-    """Kirsch-Mitzenmacher: position_i = (h1 + i*h2) mod m, vectorized.
-    Returns (flat positions, per-hash view shape (n, k))."""
+def _positions(hashes: np.ndarray, m: int, k: int) -> np.ndarray:
+    """Kirsch-Mitzenmacher: position_i = (h1 + i*h2) mod m, vectorized;
+    shape (n, k)."""
     h = hashes.astype(np.uint64)
     h1 = h % np.uint64(m)
     h2 = (h >> np.uint64(33) | np.uint64(1)) % np.uint64(m)
     i = np.arange(k, dtype=np.uint64)
-    pos = (h1[:, None] + i[None, :] * h2[:, None]) % np.uint64(m)
-    return pos.ravel(), pos
+    return (h1[:, None] + i[None, :] * h2[:, None]) % np.uint64(m)
+
+
+def _bank_row(pid, p: int, m: int, k: int, bits: np.ndarray, n: int, hashes: np.ndarray):
+    """OR ``hashes`` into ``bits`` (m/8 bytes, ``n`` keys so far) → one
+    BLOOM_SCHEMA row as a pandas frame."""
+    pos = _positions(hashes, m, k).ravel()
+    np.bitwise_or.at(bits, (pos // 8).astype(np.int64), (1 << (pos % 8)).astype(np.uint8))
+    n += len(hashes)
+    return pd.DataFrame(
+        {"pid": [int(pid)], "p": [p], "m": [m], "k": [k], "n": [n], "bits": [bits.tobytes()]}
+    )
+
+
+def _or_bits(raws: pd.Series) -> np.ndarray:
+    """One pid's bank rows ORed into one bitset (rows not merged yet)."""
+    bits = np.frombuffer(raws.iloc[0], dtype=np.uint8).copy()
+    for raw in raws.iloc[1:]:
+        bits |= np.frombuffer(raw, dtype=np.uint8)
+    return bits
+
+
+def _maybe_seen(bits: np.ndarray, hashes: np.ndarray, m: int, k: int) -> np.ndarray:
+    """True = maybe seen (all k bits set); False = definitely new."""
+    pos = _positions(hashes, m, k)
+    hit = bits[(pos // 8).astype(np.int64)] & (1 << (pos % 8)).astype(np.uint8)
+    return (hit != 0).all(axis=1)
 
 
 def build_bloom(
@@ -125,20 +156,8 @@ def build_bloom(
     m, k = _params(expected_per_partition, fp_rate)
 
     def fold(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        bits = np.zeros(m // 8, dtype=np.uint8)
         hashes = pdf[hash_col].to_numpy(dtype=np.int64)
-        pos, _ = _positions(hashes, m, k)
-        np.bitwise_or.at(bits, (pos // 8).astype(np.int64), (1 << (pos % 8)).astype(np.uint8))
-        return pd.DataFrame(
-            {
-                "pid": [int(key[0])],
-                "p": [n_partitions],
-                "m": [m],
-                "k": [k],
-                "n": [len(pdf)],
-                "bits": [bits.tobytes()],
-            }
-        )
+        return _bank_row(key[0], n_partitions, m, k, np.zeros(m // 8, dtype=np.uint8), 0, hashes)
 
     return (
         seen.select(F.pmod(F.col(hash_col), F.lit(n_partitions)).cast("int").alias("pid"), hash_col)
@@ -183,30 +202,11 @@ def fold_bloom(
                     f"fold_bloom: bank built with p={bp}, m={bm}; folding "
                     f"with p={n_partitions}, m={m}"
                 )
-            bits = np.frombuffer(bpdf["bits"].iloc[0], dtype=np.uint8).copy()
-            for raw in bpdf["bits"].iloc[1:]:  # unmerged rows OR together
-                bits |= np.frombuffer(raw, dtype=np.uint8)
-            n = int(bpdf["n"].sum())
+            bits, n = _or_bits(bpdf["bits"]), int(bpdf["n"].sum())
         else:
-            bits = np.zeros(m // 8, dtype=np.uint8)
-            n = 0
-        if len(kpdf):
-            hashes = kpdf[hash_col].to_numpy(dtype=np.int64)
-            pos, _ = _positions(hashes, m, k)
-            np.bitwise_or.at(
-                bits, (pos // 8).astype(np.int64), (1 << (pos % 8)).astype(np.uint8)
-            )
-            n += len(kpdf)
-        return pd.DataFrame(
-            {
-                "pid": [int(key[0])],
-                "p": [n_partitions],
-                "m": [m],
-                "k": [k],
-                "n": [n],
-                "bits": [bits.tobytes()],
-            }
-        )
+            bits, n = np.zeros(m // 8, dtype=np.uint8), 0
+        hashes = kpdf[hash_col].to_numpy(dtype=np.int64) if len(kpdf) else np.empty(0, np.int64)
+        return _bank_row(key[0], n_partitions, m, k, bits, n, hashes)
 
     keys = seen_delta.select(
         F.pmod(F.col(hash_col), F.lit(n_partitions)).cast("int").alias("pid"),
@@ -246,16 +246,11 @@ class BloomBank:
             return out
         h = hashes.astype(np.int64)
         pids = (h % self.p + self.p) % self.p
-        _, pos = _positions(h, self.m, self.k)
-        byte_idx = (pos // 8).astype(np.int64)
-        bit_mask = (1 << (pos % 8)).astype(np.uint8)
         for pid in np.unique(pids):
             sel = pids == pid
             bank = self.bits.get(int(pid))
-            if bank is None:
-                continue  # no seen keys in this partition: definitely new
-            hit = (bank[byte_idx[sel]] & bit_mask[sel]) != 0
-            out[sel] = hit.all(axis=1)
+            if bank is not None:  # else no seen keys there: definitely new
+                out[sel] = _maybe_seen(bank, h[sel], self.m, self.k)
         return out
 
 
@@ -302,16 +297,12 @@ def bloom_flag_copartitioned(
                 raise ValueError(
                     f"bloom bank built with p={p}, probed with {n_partitions}"
                 )
-            m = int(bpdf["m"].iloc[0])
-            k = int(bpdf["k"].iloc[0])
-            bits = np.frombuffer(bpdf["bits"].iloc[0], dtype=np.uint8)
-            for raw in bpdf["bits"].iloc[1:]:  # unfolded delta rows OR in
-                bits = bits | np.frombuffer(raw, dtype=np.uint8)
-            hashes = lpdf[hash_col].to_numpy(dtype=np.int64)
-            _, pos = _positions(hashes, m, k)
-            byte_idx = (pos // 8).astype(np.int64)
-            bit_mask = (1 << (pos % 8)).astype(np.uint8)
-            maybe = ((bits[byte_idx] & bit_mask) != 0).all(axis=1)
+            maybe = _maybe_seen(
+                _or_bits(bpdf["bits"]),
+                lpdf[hash_col].to_numpy(dtype=np.int64),
+                int(bpdf["m"].iloc[0]),
+                int(bpdf["k"].iloc[0]),
+            )
         return lpdf.assign(**{flag_col: maybe})
 
     pid = F.pmod(F.col(hash_col), F.lit(n_partitions)).cast("int")
@@ -331,7 +322,86 @@ def bloom_probe(spark, bloom_df: DataFrame):
 
     @F.pandas_udf("boolean")
     def _probe(h: pd.Series) -> pd.Series:
-        res = b.value.maybe_seen(h.to_numpy(dtype=np.int64))
-        return pd.Series(res)
+        return pd.Series(b.value.maybe_seen(h.to_numpy(dtype=np.int64)))
 
-    return lambda col: _probe(col)
+    return _probe
+
+
+class SeenBloom:
+    """The crawl's seen-sidecar: the bank, built once over the seen set
+    (covers resume too) and folded every ``fold_every`` waves; the uncovered
+    tail of seen deltas not folded yet; and the probe (``mode``, with
+    'auto' resolved and logged). Rows the lagging bank clears are still
+    anti-joined with the tail, so no duplicate is ever admitted. The bank
+    and the flagged links are materialized through ``io`` (a TableIO).
+    """
+
+    def __init__(
+        self,
+        io,
+        seen: DataFrame,
+        iteration: int,
+        n_partitions: int,
+        expected_per_partition: int,
+        fp_rate: float,
+        probe_mode: str = "auto",
+        fold_every: int = 4,
+    ):
+        self.io = io
+        self.n_partitions = n_partitions
+        self.expected_per_partition = expected_per_partition
+        self.fp_rate = fp_rate
+        self.fold_every = max(fold_every, 1)
+        self.mode = resolve_probe_mode(
+            probe_mode, n_partitions, expected_per_partition, fp_rate
+        )
+        if probe_mode == "auto":
+            logging.getLogger("doonop_spark").info(
+                "bloom probe mode auto → %s (bank %d bytes, threshold %d)",
+                self.mode,
+                bank_size_bytes(n_partitions, expected_per_partition, fp_rate),
+                BROADCAST_BANK_MAX_BYTES,
+            )
+        self.tail: list[DataFrame] = []  # seen deltas not yet in the bank
+        self._set_bank(
+            build_bloom(
+                seen,
+                n_partitions=n_partitions,
+                expected_per_partition=expected_per_partition,
+                fp_rate=fp_rate,
+            ),
+            iteration,
+        )
+
+    def _set_bank(self, bank: DataFrame, iteration: int) -> None:
+        self.bank = self.io.materialize(bank, "bloom", iteration)
+        # the broadcast probe is rebuilt only when the bank changes (build
+        # and every fold): the bank is immutable between folds
+        self._probe = (
+            None if self.mode == "copartition" else bloom_probe(self.bank.sparkSession, self.bank)
+        )
+
+    def new_links(self, links: DataFrame, seen: DataFrame, iteration: int) -> DataFrame:
+        """``links`` not in ``seen`` (:func:`anti_join_flagged`)."""
+        if self._probe is None:
+            flagged = bloom_flag_copartitioned(links, self.bank, n_partitions=self.n_partitions)
+        else:
+            flagged = links.withColumn("__maybe", self._probe(F.col("url_hash")))
+        flagged = self.io.materialize(flagged, "links_flagged", iteration)
+        return anti_join_flagged(flagged, seen, self.tail)
+
+    def add(self, delta: DataFrame, iteration: int, fold_now: bool = False) -> None:
+        """Add a seen delta to the tail; fold the tail into the bank
+        (:func:`fold_bloom`, never a rebuild) once it holds ``fold_every``
+        deltas, or at once when ``fold_now``."""
+        self.tail.append(delta)
+        if fold_now or len(self.tail) >= self.fold_every:
+            folded = fold_bloom(
+                self.bank,
+                reduce(DataFrame.unionByName, self.tail),
+                n_partitions=self.n_partitions,
+                expected_per_partition=self.expected_per_partition,
+                fp_rate=self.fp_rate,
+            )
+            self.tail = []
+            self._set_bank(folded, iteration)

@@ -25,7 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-__all__ = ["dedup_within_batch", "anti_join_seen", "SEEN_COLS"]
+__all__ = ["dedup_within_batch", "anti_join_seen", "anti_join_flagged", "SEEN_COLS"]
 
 # ukey is the seen-set key string: the canonical URL in parity mode, the
 # SURT key in surt mode (plans/loop.py sets it); url_hash = xxhash64(ukey).
@@ -45,38 +45,34 @@ def dedup_within_batch(links: DataFrame, order_cols: list) -> DataFrame:
     )
 
 
-def anti_join_seen(
-    links: DataFrame, seen: DataFrame, bloom_probe=None, materializer=None
-) -> DataFrame:
+def anti_join_seen(links: DataFrame, seen: DataFrame, bloom_probe=None) -> DataFrame:
     """D1 — keep links whose canonical URL was never enqueued.
 
     ``bloom_probe``: optional ``Column``-producing callable
     ``f(url_hash_col) -> BooleanColumn`` ("maybe seen"); rows it clears as
-    definitely-new bypass the exact anti-join shuffle entirely and are
-    unioned back in (see operators/bloom.py).
-
-    ``materializer``: optional ``f(df) -> df`` that pins the flagged frame
-    so the probe runs once per row (the crawl loop passes its TableIO
-    materialize). The default is ``localCheckpoint(eager=True)`` — note
-    that leaves cached blocks resident until the returned frame is
-    garbage-collected and is not recomputable on executor loss; library
-    callers that care should supply their own materializer (e.g. a
-    persist they later unpersist, or a durable write+read).
+    definitely-new bypass the exact anti-join shuffle entirely
+    (:func:`anti_join_flagged`; see operators/bloom.py). The flagged frame
+    is pinned with ``localCheckpoint(eager=True)``, so the probe runs once
+    per row; its cached blocks stay resident until the returned frame is
+    garbage-collected, and are not recomputable on executor loss.
     """
-    if bloom_probe is not None:
-        # Flag ONCE over a materialized frame, then split on the flag
-        # column. Filtering an unmaterialized ``links`` pipeline on
-        # probe/~probe would re-run its whole upstream plan (and the probe
-        # UDF) twice — measured at 4.4× wave cost in the crawl loop, which
-        # uses the same pattern via its durable materializer
-        # (plans/loop.py, "links_flagged").
-        if materializer is None:
-            materializer = lambda df: df.localCheckpoint(eager=True)
-        flagged = materializer(
-            links.withColumn("__maybe", bloom_probe(F.col("url_hash")))
-        )
-        maybe = flagged.filter(F.col("__maybe")).drop("__maybe")
-        fresh = flagged.filter(~F.col("__maybe")).drop("__maybe")
-        checked = maybe.join(seen.select(*SEEN_COLS), on=SEEN_COLS, how="left_anti")
-        return fresh.unionByName(checked)
-    return links.join(seen.select(*SEEN_COLS), on=SEEN_COLS, how="left_anti")
+    if bloom_probe is None:
+        return links.join(seen.select(*SEEN_COLS), on=SEEN_COLS, how="left_anti")
+    flagged = links.withColumn("__maybe", bloom_probe(F.col("url_hash")))
+    return anti_join_flagged(flagged.localCheckpoint(eager=True), seen)
+
+
+def anti_join_flagged(flagged: DataFrame, seen: DataFrame, tail=()) -> DataFrame:
+    """D1 over links a bloom has flagged (``__maybe``: True = maybe seen).
+    Maybe-seen rows take the exact anti-join against ``seen``; cleared rows
+    are only anti-joined with the ``tail`` frames, the seen deltas the bloom
+    does not cover yet. ``flagged`` must be materialized: filtering an
+    unmaterialized pipeline on the flag and its negation would re-run the
+    whole upstream plan, and the probe, twice (measured 4.4× wave cost in
+    the crawl loop)."""
+    checked = flagged.filter(F.col("__maybe")).drop("__maybe")
+    checked = checked.join(seen.select(*SEEN_COLS), on=SEEN_COLS, how="left_anti")
+    fresh = flagged.filter(~F.col("__maybe")).drop("__maybe")
+    for recent in tail:
+        fresh = fresh.join(recent.select(*SEEN_COLS), on=SEEN_COLS, how="left_anti")
+    return checked.unionByName(fresh)

@@ -24,13 +24,15 @@ scheduling hot path.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from doonop_spark.plans.job import RetryPolicy
 
 __all__ = [
     "select_wave",
+    "scale_wave",
+    "ripe_split",
     "budget_keep_flags",
     "policy_order",
     "politeness_budget",
@@ -80,9 +82,9 @@ def budget_keep_flags(
     """Append a boolean ``__keep`` (dispatch this wave under the per-host
     budgets) WITHOUT dropping rows — the caller materializes the flagged
     frame once and derives both the wave (``__keep``) and the deferred
-    complement (``~__keep``) as cheap filters over it, replacing the
-    per-wave ``frontier ∖ wave`` anti-join the old path paid (guide §2.4:
-    one exchange feeds both outputs).
+    complement (``~__keep``) as cheap filters over it, with no per-wave
+    ``frontier ∖ wave`` anti-join (guide §2.4: one exchange feeds both
+    outputs).
 
     The budget is a per-host top-k: ``row_number`` over a window
     partitioned by host in ``order``; a row keeps when its rank is within
@@ -138,6 +140,19 @@ def budget_keep_flags(
     return flagged.drop("__budget")
 
 
+def ripe_split(
+    frontier: DataFrame, policy: RetryPolicy, now: float, fresh_empty: bool
+) -> tuple[DataFrame, Column]:
+    """The wave candidates — ripe rows (O3), and under policy No only fresh
+    ones — and the predicate of their complement, the rows that stay in
+    the frontier whatever the budgets decide."""
+    is_retry = F.col("is_retry")
+    cand = frontier.filter(~is_retry | (F.col("retry_at") <= F.lit(now)) | F.lit(fresh_empty))
+    if policy == RetryPolicy.NO:
+        return cand.filter(~is_retry), is_retry
+    return cand, is_retry & (F.col("retry_at") > F.lit(now)) & ~F.lit(fresh_empty)
+
+
 def select_wave(
     frontier: DataFrame,
     policy: RetryPolicy,
@@ -155,11 +170,7 @@ def select_wave(
     ``default_budget`` caps hosts without an entry. ``wave_size`` is the
     reference's engine bound (global top-k).
     """
-    ripe = ~F.col("is_retry") | (F.col("retry_at") <= F.lit(now)) | F.lit(fresh_empty)
-    cand = frontier.filter(ripe)
-    if policy == RetryPolicy.NO:
-        cand = cand.filter(~F.col("is_retry"))
-
+    cand, _ = ripe_split(frontier, policy, now, fresh_empty)
     order = policy_order(policy)
 
     if per_host_budget is not None or default_budget is not None:
@@ -181,6 +192,44 @@ def select_wave(
         # partition top-k + a k-row merge on the driver, NOT a full sort.
         cand = cand.orderBy(*order).limit(wave_size)
     return cand
+
+
+def scale_wave(
+    frontier: DataFrame,
+    policy: RetryPolicy,
+    now: float,
+    fresh_empty: bool,
+    has_retries: bool,
+    per_host_budget: DataFrame | None,
+    default_budget: int | None,
+    default_can_bind: bool,
+    materialize,
+) -> tuple[DataFrame, list[DataFrame], int | None]:
+    """Scale-mode wave (no engine cap) → ``(wave, deferred, n)``. Ripeness
+    and budgets are filters, so the rows staying behind (``deferred``) are
+    filters too: no ``frontier ∖ wave`` anti-join (guide §2.4). With
+    retries pending or a budget that can bind, the flagged frame
+    (:func:`budget_keep_flags`) goes once through ``materialize(flagged) ->
+    (frame, n kept)``. Otherwise the wave is the checkpointed frontier
+    itself: zero jobs, and ``n`` is None.
+    """
+    cand, stays = ripe_split(frontier, policy, now, fresh_empty)
+    deferred = [frontier.filter(stays)] if has_retries else []
+    binds = per_host_budget is not None or default_can_bind
+    if not (binds or has_retries):
+        return cand, deferred, None
+    flagged, n = materialize(
+        budget_keep_flags(
+            cand,
+            policy_order(policy),
+            per_host_budget,
+            default_budget,
+            default_can_bind=default_can_bind,
+        )
+    )
+    if binds:
+        deferred.append(flagged.filter(~F.col("__keep")).drop("__keep"))
+    return flagged.filter(F.col("__keep")).drop("__keep"), deferred, n
 
 
 def politeness_budget(

@@ -134,8 +134,10 @@ class CrawlJob:
 
     ``engines`` maps to the max in-flight URLs per wave: the reference
     never dispatches more URLs than engines (``src/workload.rs:93-98``), so
-    wave size = engines. ``engines=None`` lifts the cap (scale mode: the
-    per-host politeness budget bounds the wave instead).
+    wave size = engines, and at every value the wave is ranked exactly
+    (dense ``dispatch_rank`` and ``seq``; ``engines=1`` is the reference's
+    visit order). ``engines=None`` lifts the cap (scale mode: the per-host
+    politeness budget bounds the wave instead, and ranks are sparse).
     """
 
     seeds: list[str] = field(default_factory=list)
@@ -218,7 +220,7 @@ class CrawlJob:
     # revisit semantics: a WARC corpus may hold several captures of one
     # URL; True = the fetch keeps only the LATEST capture per URL
     # (wave-sized window in the fetch join — plans/loop.py
-    # latest_capture). Default False: the parquet corpus contract has
+    # _latest_capture). Default False: the parquet corpus contract has
     # unique urls, and the dedup window is not free. The CLI turns this
     # on automatically for .warc corpora.
     dedup_captures: bool = False

@@ -16,10 +16,19 @@ written into ``html`` are exactly the site graph described in FIXTURES.md
 (binary same-host tree + cross-host edge every k-th page + a duplicate
 link for the within-batch dedup exercise + a hot host owning ~30% of all
 pages for the skew exercise).
+
+The crawl's side of the corpus lives here too: the bucketed layout
+(:func:`write_bucketed_corpus`) and the per-crawl choice of the side every
+wave's fetch joins (:func:`choose_fetch_side`).
 """
 
 from __future__ import annotations
 
+import logging
+from dataclasses import dataclass
+
+from py4j.protocol import Py4JError
+from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -34,6 +43,8 @@ __all__ = [
     "write_bucketed_corpus",
     "read_bucketed_corpus",
     "corpus_bucket_count",
+    "FetchSide",
+    "choose_fetch_side",
 ]
 
 _EPOCH = "2024-01-01 00:00:00"
@@ -251,6 +262,96 @@ def corpus_bucket_count(corpus: DataFrame) -> int | None:
         return None
     md = corpus.schema["bucket"].metadata
     return int(md["n_buckets"]) if "n_buckets" in md else None
+
+
+@dataclass
+class FetchSide:
+    """The corpus side every wave's fetch left-joins, chosen once per crawl
+    (:func:`choose_fetch_side`). It changes the physical plan, never the
+    result."""
+
+    kind: str  # "cached" | "bucketed" | "raw"
+    df: DataFrame
+    keys: list[str] | str
+    n_buckets: int = 0  # the corpus layout's B; 0 = not bucketed
+
+    def join(self, wave: DataFrame, buckets: list[int] | None) -> DataFrame:
+        """``wave`` left-joined with the side; a bucket-pruned side scans
+        only ``buckets`` (the wave's bucket set or a superset; None prunes
+        nothing)."""
+        side = self.df
+        if self.kind == "bucketed":
+            wave = wave.withColumn("bucket", bucket_expr(F.col("url"), self.n_buckets))
+            if buckets is not None:
+                side = side.filter(F.col("bucket").isin(buckets))
+        return wave.join(side, on=self.keys, how="left")
+
+    def release(self) -> None:
+        if self.kind == "cached":
+            self.df.unpersist(blocking=False)
+
+
+def choose_fetch_side(
+    corpus: DataFrame,
+    corpus_buckets: int = 0,
+    cache_max_bytes: int = 0,
+    dedup_captures: bool = False,
+) -> FetchSide:
+    """Pick the fetch side, in this order of precedence (logged at INFO
+    with the size estimate and the cache budget):
+
+    1. **cached**: the optimizer's size estimate for ``corpus`` fits
+       ``cache_max_bytes``. The fetch projection is persisted once
+       (MEMORY_AND_DISK), hash-partitioned and sorted by url, so every
+       wave's SortMergeJoin reads it with no corpus-side Exchange or Sort
+       (guide §5: reuse × recompute cost). At 100 TB it never fits.
+    2. **bucketed**: a corpus written by :func:`write_bucketed_corpus`,
+       joined on ``(bucket, url)``; each wave's bucket set is pushed into
+       the scan as a partition predicate (the 100 TB plan).
+    3. **raw**: the corpus, joined on url.
+
+    ``corpus_buckets`` is validated against, or when 0 derived from, the
+    layout's own B (:func:`corpus_bucket_count`): pruning with the wrong
+    modulus would silently miss every page.
+    """
+    layout_b = corpus_bucket_count(corpus)
+    if layout_b is not None:
+        if corpus_buckets == 0:
+            corpus_buckets = layout_b  # bucketed corpus ⇒ prune by default
+        elif corpus_buckets != layout_b:
+            raise ValueError(
+                f"corpus_buckets={corpus_buckets} but the corpus layout was "
+                f"written with n_buckets={layout_b}; pmod(xxhash64(url), "
+                f"{corpus_buckets}) would match no stored partition"
+            )
+    n_buckets = corpus_buckets if corpus_buckets > 0 and "bucket" in corpus.columns else 0
+
+    est = None
+    if cache_max_bytes > 0:
+        try:
+            est = int(corpus._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+        except (AttributeError, Py4JError):  # no JVM plan, or no statistics
+            pass
+    if est is not None and est <= cache_max_bytes:
+        n_shuffle = int(corpus.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+        cached = (
+            corpus.select("url", "html", *(["warc_ts"] if dedup_captures else []))
+            .repartition(n_shuffle, "url")
+            .sortWithinPartitions("url")
+            .persist(StorageLevel.MEMORY_AND_DISK)
+        )
+        side = FetchSide("cached", cached, "url", n_buckets)
+    elif n_buckets:
+        side = FetchSide("bucketed", corpus, ["bucket", "url"], n_buckets)
+    else:
+        side = FetchSide("raw", corpus, "url")
+    logging.getLogger("doonop_spark").info(
+        "fetch side %s (corpus estimate %s bytes, cache budget %d bytes)",
+        side.kind,
+        est,
+        cache_max_bytes,
+    )
+    return side
 
 
 def pages_from_documents(

@@ -36,6 +36,21 @@ def seeds_from_file(path: str, filters: list[Filter], extra: list[str] = ()) -> 
     return clean_seeds(list(extra) + lines, filters)
 
 
+def _frontier_rows(seeds: DataFrame) -> DataFrame:
+    """``(url, ukey, seq)`` seed rows → wave-0 frontier rows."""
+    return seeds.select(
+        "url",
+        "ukey",
+        url_hash_col(F.col("ukey")).alias("url_hash"),
+        host_expr(F.col("url")).alias("host"),
+        F.lit(0).alias("depth"),
+        "seq",
+        F.lit(False).alias("is_retry"),
+        F.lit(0).alias("retry_count"),
+        F.lit(0.0).alias("retry_at"),
+    )
+
+
 def seed_frontier(
     spark: SparkSession, cleaned: list[str], url_key: str = "parity"
 ) -> DataFrame:
@@ -53,18 +68,7 @@ def seed_frontier(
         (u, surt_key(u) if url_key == "surt" else u, i)
         for i, u in enumerate(cleaned)
     ]
-    df = spark.createDataFrame(rows, "url string, ukey string, seq long")
-    return df.select(
-        "url",
-        "ukey",
-        url_hash_col(F.col("ukey")).alias("url_hash"),
-        host_expr(F.col("url")).alias("host"),
-        F.lit(0).alias("depth"),
-        "seq",
-        F.lit(False).alias("is_retry"),
-        F.lit(0).alias("retry_count"),
-        F.lit(0.0).alias("retry_at"),
-    )
+    return _frontier_rows(spark.createDataFrame(rows, "url string, ukey string, seq long"))
 
 
 def seed_frontier_distributed(
@@ -88,10 +92,9 @@ def seed_frontier_distributed(
 
     Scale shape: the sorted rank is range-repartition + within-partition
     sort + the monotonically_increasing_id (partition, offset)
-    decomposition with per-partition cumulative offsets from one tiny agg
-    (the same pattern as the crawl loop's scale-mode ``seq``,
-    plans/loop.py) — never a single-partition window, never a driver
-    materialization of the seed set.
+    decomposition with per-partition cumulative offsets from one tiny agg —
+    never a single-partition window, never a driver materialization of the
+    seed set.
     """
     from doonop_spark.functions.canonical import canonicalize_udf, surt_key_udf
     from doonop_spark.operators.filters import apply_link_filters
@@ -129,18 +132,4 @@ def seed_frontier_distributed(
     )
     seq = (off_expr + mid.bitwiseAND(F.lit((1 << 33) - 1))).cast("long")
     ukey = surt_key_udf(F.col("url")) if url_key == "surt" else F.col("url")
-    return ordered.select(
-        "url",
-        ukey.alias("ukey"),
-        seq.alias("seq"),
-    ).select(
-        "url",
-        "ukey",
-        url_hash_col(F.col("ukey")).alias("url_hash"),
-        host_expr(F.col("url")).alias("host"),
-        F.lit(0).alias("depth"),
-        "seq",
-        F.lit(False).alias("is_retry"),
-        F.lit(0).alias("retry_count"),
-        F.lit(0.0).alias("retry_at"),
-    )
+    return _frontier_rows(ordered.select("url", ukey.alias("ukey"), seq.alias("seq")))
