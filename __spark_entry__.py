@@ -714,11 +714,12 @@ def q_multimodal_decode_real(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_bloom_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """D1 with the partitioned bloom sidecar: candidates cleared by the
-    bloom as definitely-new skip the exact anti-join; output must equal
-    the plain anti-join (the oracle) — FPs only cost a probe."""
-    from doonop_spark.operators.bloom import bloom_probe, build_bloom
-    from doonop_spark.operators.dedup import anti_join_seen
+    """D1 with the partitioned bloom sidecar as the crawl runs it
+    (``SeenBloom.new_links``): candidates cleared by the bloom as
+    definitely-new skip the exact anti-join; output must equal the plain
+    anti-join (the oracle) — FPs only cost a probe."""
+    from doonop_spark.operators.bloom import SeenBloom
+    from doonop_spark.sources.tables import MemoryTableIO
 
     docs = _read(spark, sf_dir, "documents")
     key = F.col("doc_id").cast("string")
@@ -728,16 +729,18 @@ def q_bloom_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     seen = docs.filter(F.col("doc_id") % 3 == 0).select(
         key.alias("ukey"), F.xxhash64(key).alias("url_hash")
     )
-    bloom = build_bloom(seen, n_partitions=8, expected_per_partition=1024)
-    probe = bloom_probe(spark, bloom)
-    return anti_join_seen(cand, seen, probe).select("doc_id")
+    bloom = SeenBloom(
+        MemoryTableIO(), seen, 0, n_partitions=8, expected_per_partition=1024, fp_rate=0.01
+    )
+    return bloom.new_links(cand, seen, 0).select("doc_id")
 
 
 def q_bloom_dedup_copart(spark: SparkSession, sf_dir: str) -> DataFrame:
     """D1 with the bloom sidecar probed via the 10^10 path: candidates
     cogroup with the bank rows on pid (operators/bloom.py
-    bloom_flag_copartitioned) — the bank never touches the driver. Same
-    never-drop contract, same oracle as the broadcast mode."""
+    bloom_flag_copartitioned) — the bank never touches the driver. The
+    operator-level composition, without the crawl's ``SeenBloom``; same
+    never-drop contract and oracle as ``bloom_dedup``."""
     from doonop_spark.operators.bloom import bloom_flag_copartitioned, build_bloom
     from doonop_spark.operators.dedup import SEEN_COLS
 
@@ -2264,8 +2267,9 @@ def oracle_sql() -> dict[str, str]:
         """,
         "lang_id_heuristic": _lang_id_oracle_sql(),
         "minhash_lsh_dedup": _minhash_oracle_sql(),
-        # bloom is a pre-filter, not a semantics change: both probe modes
-        # must return exactly the exact-anti-join answer
+        # bloom is a pre-filter, not a semantics change: the crawl's
+        # SeenBloom and the operator composition must both return exactly
+        # the exact-anti-join answer
         "bloom_dedup_copart": """
             SELECT doc_id FROM documents
             WHERE doc_id % 2 = 0 AND doc_id % 3 <> 0

@@ -300,7 +300,6 @@ def bfs_crawl_seconds(
     corpus_path: str,
     corpus_buckets: int = 0,
     bloom_partitions: int = 0,
-    bloom_probe_mode: str = "broadcast",
     politeness: bool = False,
     n_pages: int | None = None,
 ) -> tuple[float, int]:
@@ -324,7 +323,6 @@ def bfs_crawl_seconds(
         per_host_budget=10_000_000,
         corpus_buckets=corpus_buckets,
         bloom_partitions=bloom_partitions,
-        bloom_probe_mode=bloom_probe_mode,
         bloom_expected_per_partition=max(n_pages // max(bloom_partitions, 1), 1024),
         use_robots=politeness,
     )
@@ -555,14 +553,9 @@ def main() -> None:
     )
     assert visited_b == visited
     timings["bfs_crawl_bucketed"] = round(crawl_bucketed_s, 3)
-    crawl_bloom_s, visited_bl = bfs_crawl_seconds(spark, tmp, bloom_partitions=32)
-    assert visited_bl == visited
-    timings["bfs_crawl_bloom"] = round(crawl_bloom_s, 3)
-    # the 10^10 probe path: bank cogrouped with links on pid, never
-    # driver-collected — per-wave cost vs the broadcast bank, same answer
-    crawl_bloom_cp_s, visited_cp = bfs_crawl_seconds(
-        spark, tmp, bloom_partitions=32, bloom_probe_mode="copartition"
-    )
+    # the bloom sidecar: bank cogrouped with links on pid, never
+    # driver-collected — same answer as the exact path
+    crawl_bloom_cp_s, visited_cp = bfs_crawl_seconds(spark, tmp, bloom_partitions=32)
     assert visited_cp == visited
     timings["bfs_crawl_bloom_copart"] = round(crawl_bloom_cp_s, 3)
     assert polite["visited"] == visited  # budgets defer, never drop
@@ -739,11 +732,6 @@ def crawl_only() -> None:
     assert v == visited
     out["bucketed"] = {"sec": round(s, 1), "urls_per_sec": round(v / s, 1)}
     s, v = bfs_crawl_seconds(spark, tmp, bloom_partitions=32)
-    assert v == visited
-    out["bloom_broadcast"] = {"sec": round(s, 1), "urls_per_sec": round(v / s, 1)}
-    s, v = bfs_crawl_seconds(
-        spark, tmp, bloom_partitions=32, bloom_probe_mode="copartition"
-    )
     assert v == visited
     out["bloom_copartition"] = {"sec": round(s, 1), "urls_per_sec": round(v / s, 1)}
     s, v = bfs_crawl_seconds(spark, tmp, politeness=True)

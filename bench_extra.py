@@ -4,8 +4,8 @@ NOT part of the frozen bench contract (bench.py is the driver's timed
 protocol and stays untouched); this harness exists so OPTIMIZATION_r06.md
 can cite isolated, per-phase numbers:
 
-  --profile-crawl VARIANT   one BFS crawl (plain|bucketed|bloom|
-                            bloom_copart|politeness) with a timing TableIO:
+  --profile-crawl VARIANT   one BFS crawl (plain|bucketed|bloom|politeness)
+                            with a timing TableIO:
                             prints per-wave seconds split by materialize
                             name (wave/wave_fetched/new_links/frontier/...)
                             plus the driver-side residual per wave.
@@ -41,7 +41,6 @@ VARIANTS = {
     "plain": {},
     "bucketed": {"corpus_buckets": 64},
     "bloom": {"bloom_partitions": 32},
-    "bloom_copart": {"bloom_partitions": 32, "bloom_probe_mode": "copartition"},
     "politeness": {"politeness": True},
 }
 

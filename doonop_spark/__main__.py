@@ -39,7 +39,7 @@ from pyspark.sql import functions as F
 
 from doonop_spark.plans.job import job_from_argv
 from doonop_spark.plans.loop import run_crawl
-from doonop_spark.sources.corpus import read_bucketed_corpus
+from doonop_spark.sources.corpus import latest_capture, read_bucketed_corpus
 from doonop_spark.sources.tables import open_table_io
 
 
@@ -90,11 +90,6 @@ def main(argv: list[str] | None = None) -> int:
     ext.add_argument("--table-root", help="durable checkpoint dir (resumable)")
     ext.add_argument("--resume", action="store_true")
     ext.add_argument("--bloom-partitions", type=int, default=0)
-    ext.add_argument(
-        "--bloom-probe-mode",
-        choices=["auto", "broadcast", "copartition"],
-        default="auto",
-    )
     ext.add_argument("--seen-compact-every", type=int, default=8)
     # O3 ripeness clock: 'wave' = deterministic logical waves (default);
     # 'wall' = reference parity, --retry_threshold honored in real ms
@@ -121,7 +116,6 @@ def main(argv: list[str] | None = None) -> int:
         job.retry_clock = "wall"
     job.corpus_buckets = ours.corpus_buckets
     job.bloom_partitions = ours.bloom_partitions
-    job.bloom_probe_mode = ours.bloom_probe_mode
     job.seen_compact_every = ours.seen_compact_every
 
     # --use_robots_txt without a robots table would silently not gate at
@@ -207,21 +201,14 @@ def main(argv: list[str] | None = None) -> int:
 
     if ours.wat_out:
         # WAT sink: metadata (extracted outlinks, HTTP metadata) for every
-        # VISITED page — the link-graph hand-off; latest capture per URL,
-        # mirroring the WET sink's revisit rule
-        from pyspark.sql import Window
-
+        # VISITED page — the link-graph hand-off. The visited pages are
+        # picked first, then the fetch's own revisit rule, so each record
+        # describes the capture the crawl collected
         from doonop_spark.sources.wat import write_wat
 
-        w = Window.partitionBy("url").orderBy(F.desc("warc_ts"))
-        latest = (
-            corpus.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn")
-        )
         visited = res.results.select("url").distinct()
         write_wat(
-            latest.join(visited.hint("broadcast"), "url", "left_semi"),
+            latest_capture(corpus.join(visited.hint("broadcast"), "url", "left_semi")),
             ours.wat_out,
         )
 

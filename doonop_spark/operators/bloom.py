@@ -9,18 +9,13 @@ to the exact anti-join; rows marked definitely-new skip it entirely. A
 false positive costs one extra exact probe — never a dropped URL;
 correctness stays with the anti-join.
 
-Two probe paths:
-
-- :func:`bloom_probe` — the bit bank collects to the driver and broadcasts
-  (vectorized numpy UDF per Arrow batch). Zero shuffle, but at ~1.2 bytes/
-  key for 1% FP the bank is ~12 GB at 10^10 keys: driver RAM + broadcast
-  cost make this the small/medium-scale path.
-- :func:`bloom_flag_copartitioned` — the 10^10 path: candidate links
-  cogroup with the bank rows on ``pid = pmod(url_hash, P)`` inside ONE
-  ``applyInPandas``, so each task holds exactly its partition's bitset
-  (bank/P bytes) and the driver never materializes the bank at all. Costs
-  one links shuffle per wave (which the exact anti-join pays anyway) plus
-  a bank-side exchange of P rows; both scale per-partition, not per-bank.
+The probe, :func:`bloom_flag_copartitioned`, is built for 10^10 keys:
+candidate links cogroup with the bank rows on ``pid = pmod(url_hash, P)``
+inside ONE ``applyInPandas``, so each task holds exactly its partition's
+bitset (bank/P bytes) and the driver never materializes the bank at all.
+It costs one links shuffle per wave (which the exact anti-join pays
+anyway) plus a bank-side exchange of P rows; both scale per-partition, not
+per-bank.
 
 Hashing: the k bloom probe positions derive from the already-computed
 ``xxhash64(url)`` via the Kirsch-Mitzenmacher double-hashing trick
@@ -29,18 +24,17 @@ Hashing: the k bloom probe positions derive from the already-computed
 Build is a grouped Arrow aggregation: seen keys shuffle once by
 ``pmod(url_hash, P)`` and each group folds its hashes into one bitset row
 ``(pid, m, k, bits)``; :func:`fold_bloom` ORs later seen deltas into it.
-:class:`SeenBloom` holds the crawl loop's bank, probe and unfolded tail.
+:class:`SeenBloom` holds the crawl loop's bank and its unfolded tail.
 """
 
 from __future__ import annotations
 
-import logging
 import math
 from functools import reduce
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from doonop_spark.operators.dedup import anti_join_flagged
@@ -48,22 +42,9 @@ from doonop_spark.operators.dedup import anti_join_flagged
 __all__ = [
     "build_bloom",
     "fold_bloom",
-    "BloomBank",
-    "bloom_probe",
     "bloom_flag_copartitioned",
-    "bank_size_bytes",
-    "resolve_probe_mode",
-    "BROADCAST_BANK_MAX_BYTES",
     "SeenBloom",
 ]
-
-# banks at or below this size broadcast (driver + every executor hold one
-# copy — cheap, no per-wave cogroup shuffle); above it the co-partitioned
-# probe keeps each task at bank/P bytes and the driver at zero. 256 MB is
-# well inside a default driver/executor heap while leaving broadcast for
-# the common 10^8-10^9-key regime; at the north-star 10^10 keys the bank
-# is ~12 GB and auto always picks copartition.
-BROADCAST_BANK_MAX_BYTES = 256 << 20
 
 # ``p`` (the bank's partition count) is carried EXPLICITLY in every row:
 # empty hash partitions emit no row from the groupBy build, so inferring
@@ -79,34 +60,6 @@ def _params(expected_per_partition: int, fp_rate: float) -> tuple[int, int]:
     m = max(64, (m + 63) // 64 * 64)  # word-align
     k = max(1, round(m / n * math.log(2)))
     return m, min(k, 16)
-
-
-def bank_size_bytes(
-    n_partitions: int, expected_per_partition: int, fp_rate: float
-) -> int:
-    """Exact size of a bank built with these parameters (p rows × m/8
-    bytes) — known BEFORE building, so probe-mode selection never needs to
-    look at data."""
-    m, _ = _params(expected_per_partition, fp_rate)
-    return n_partitions * (m // 8)
-
-
-def resolve_probe_mode(
-    mode: str,
-    n_partitions: int,
-    expected_per_partition: int,
-    fp_rate: float,
-    threshold_bytes: int = BROADCAST_BANK_MAX_BYTES,
-) -> str:
-    """'auto' → 'broadcast' when the bank fits ``threshold_bytes``, else
-    'copartition'; explicit modes pass through. The one knob the engine
-    can compute from its own parameters — users shouldn't hand-tune it."""
-    if mode != "auto":
-        if mode not in ("broadcast", "copartition"):
-            raise ValueError(f"unknown bloom probe mode {mode!r}")
-        return mode
-    size = bank_size_bytes(n_partitions, expected_per_partition, fp_rate)
-    return "broadcast" if size <= threshold_bytes else "copartition"
 
 
 def _positions(hashes: np.ndarray, m: int, k: int) -> np.ndarray:
@@ -219,41 +172,6 @@ def fold_bloom(
     )
 
 
-class BloomBank:
-    """Driver-held, broadcast-ready view of a bloom bank."""
-
-    def __init__(self, rows):
-        self.m = int(rows[0]["m"])
-        self.k = int(rows[0]["k"])
-        # explicit partition count from the build (NOT max(pid)+1 — empty
-        # partitions emit no rows and would shrink the modulus)
-        self.p = int(rows[0]["p"])
-        self.bits: dict[int, np.ndarray] = {
-            int(r["pid"]): np.frombuffer(r["bits"], dtype=np.uint8) for r in rows
-        }
-
-    @classmethod
-    def collect(cls, bloom_df: DataFrame) -> "BloomBank":
-        rows = bloom_df.collect()
-        if not rows:
-            raise ValueError("empty bloom bank")
-        return cls(rows)
-
-    def maybe_seen(self, hashes: np.ndarray) -> np.ndarray:
-        """Vectorized probe: True = maybe seen; False = definitely new."""
-        out = np.zeros(len(hashes), dtype=bool)
-        if len(hashes) == 0:
-            return out
-        h = hashes.astype(np.int64)
-        pids = (h % self.p + self.p) % self.p
-        for pid in np.unique(pids):
-            sel = pids == pid
-            bank = self.bits.get(int(pid))
-            if bank is not None:  # else no seen keys there: definitely new
-                out[sel] = _maybe_seen(bank, h[sel], self.m, self.k)
-        return out
-
-
 def bloom_flag_copartitioned(
     links: DataFrame,
     bloom_df: DataFrame,
@@ -313,27 +231,13 @@ def bloom_flag_copartitioned(
     )
 
 
-def bloom_probe(spark, bloom_df: DataFrame):
-    """Return a Column-producing probe ``f(url_hash_col) -> Boolean`` for
-    :func:`doonop_spark.operators.dedup.anti_join_seen`. The bank is
-    broadcast once; probing is a numpy lookup per Arrow batch."""
-    bank = BloomBank.collect(bloom_df)
-    b = spark.sparkContext.broadcast(bank)
-
-    @F.pandas_udf("boolean")
-    def _probe(h: pd.Series) -> pd.Series:
-        return pd.Series(b.value.maybe_seen(h.to_numpy(dtype=np.int64)))
-
-    return _probe
-
-
 class SeenBloom:
     """The crawl's seen-sidecar: the bank, built once over the seen set
-    (covers resume too) and folded every ``fold_every`` waves; the uncovered
-    tail of seen deltas not folded yet; and the probe (``mode``, with
-    'auto' resolved and logged). Rows the lagging bank clears are still
-    anti-joined with the tail, so no duplicate is ever admitted. The bank
-    and the flagged links are materialized through ``io`` (a TableIO).
+    (covers resume too) and folded every ``fold_every`` waves, and the
+    uncovered tail of seen deltas not folded yet. Rows the lagging bank
+    clears are still anti-joined with the tail, so no duplicate is ever
+    admitted. The bank and the flagged links are materialized through
+    ``io`` (a TableIO).
     """
 
     def __init__(
@@ -344,50 +248,34 @@ class SeenBloom:
         n_partitions: int,
         expected_per_partition: int,
         fp_rate: float,
-        probe_mode: str = "auto",
         fold_every: int = 4,
     ):
         self.io = io
         self.n_partitions = n_partitions
         self.expected_per_partition = expected_per_partition
         self.fp_rate = fp_rate
-        self.fold_every = max(fold_every, 1)
-        self.mode = resolve_probe_mode(
-            probe_mode, n_partitions, expected_per_partition, fp_rate
-        )
-        if probe_mode == "auto":
-            logging.getLogger("doonop_spark").info(
-                "bloom probe mode auto → %s (bank %d bytes, threshold %d)",
-                self.mode,
-                bank_size_bytes(n_partitions, expected_per_partition, fp_rate),
-                BROADCAST_BANK_MAX_BYTES,
-            )
+        self.fold_every = fold_every
         self.tail: list[DataFrame] = []  # seen deltas not yet in the bank
-        self._set_bank(
+        self.bank = io.materialize(
             build_bloom(
                 seen,
                 n_partitions=n_partitions,
                 expected_per_partition=expected_per_partition,
                 fp_rate=fp_rate,
             ),
+            "bloom",
             iteration,
         )
 
-    def _set_bank(self, bank: DataFrame, iteration: int) -> None:
-        self.bank = self.io.materialize(bank, "bloom", iteration)
-        # the broadcast probe is rebuilt only when the bank changes (build
-        # and every fold): the bank is immutable between folds
-        self._probe = (
-            None if self.mode == "copartition" else bloom_probe(self.bank.sparkSession, self.bank)
-        )
-
     def new_links(self, links: DataFrame, seen: DataFrame, iteration: int) -> DataFrame:
-        """``links`` not in ``seen`` (:func:`anti_join_flagged`)."""
-        if self._probe is None:
-            flagged = bloom_flag_copartitioned(links, self.bank, n_partitions=self.n_partitions)
-        else:
-            flagged = links.withColumn("__maybe", self._probe(F.col("url_hash")))
-        flagged = self.io.materialize(flagged, "links_flagged", iteration)
+        """``links`` not in ``seen``: flagged by
+        :func:`bloom_flag_copartitioned`, materialized once, then
+        :func:`anti_join_flagged`."""
+        flagged = self.io.materialize(
+            bloom_flag_copartitioned(links, self.bank, n_partitions=self.n_partitions),
+            "links_flagged",
+            iteration,
+        )
         return anti_join_flagged(flagged, seen, self.tail)
 
     def add(self, delta: DataFrame, iteration: int, fold_now: bool = False) -> None:
@@ -404,4 +292,4 @@ class SeenBloom:
                 fp_rate=self.fp_rate,
             )
             self.tail = []
-            self._set_bank(folded, iteration)
+            self.bank = self.io.materialize(folded, "bloom", iteration)

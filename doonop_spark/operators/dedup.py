@@ -16,8 +16,9 @@ a left-anti join against the seen table on ``url_hash`` *and* ``url`` (the
 hash is the shuffle/join key; the string comparison keeps 64-bit
 collisions harmless — at 10^10 URLs a few xxhash64 collisions are
 expected). An optional partitioned bloom sidecar (operators/bloom.py)
-pre-filters candidates so cold partitions of the seen table are never
-probed; a bloom false positive only costs an exact probe, never a drop.
+flags candidates first, and :func:`anti_join_flagged` sends only the
+maybe-seen ones through the exact anti-join; a bloom false positive only
+costs an exact probe, never a drop.
 """
 
 from __future__ import annotations
@@ -45,21 +46,9 @@ def dedup_within_batch(links: DataFrame, order_cols: list) -> DataFrame:
     )
 
 
-def anti_join_seen(links: DataFrame, seen: DataFrame, bloom_probe=None) -> DataFrame:
-    """D1 — keep links whose canonical URL was never enqueued.
-
-    ``bloom_probe``: optional ``Column``-producing callable
-    ``f(url_hash_col) -> BooleanColumn`` ("maybe seen"); rows it clears as
-    definitely-new bypass the exact anti-join shuffle entirely
-    (:func:`anti_join_flagged`; see operators/bloom.py). The flagged frame
-    is pinned with ``localCheckpoint(eager=True)``, so the probe runs once
-    per row; its cached blocks stay resident until the returned frame is
-    garbage-collected, and are not recomputable on executor loss.
-    """
-    if bloom_probe is None:
-        return links.join(seen.select(*SEEN_COLS), on=SEEN_COLS, how="left_anti")
-    flagged = links.withColumn("__maybe", bloom_probe(F.col("url_hash")))
-    return anti_join_flagged(flagged.localCheckpoint(eager=True), seen)
+def anti_join_seen(links: DataFrame, seen: DataFrame) -> DataFrame:
+    """D1 — keep links whose canonical URL was never enqueued."""
+    return links.join(seen.select(*SEEN_COLS), on=SEEN_COLS, how="left_anti")
 
 
 def anti_join_flagged(flagged: DataFrame, seen: DataFrame, tail=()) -> DataFrame:

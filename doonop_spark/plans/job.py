@@ -183,13 +183,10 @@ class CrawlJob:
     bloom_partitions: int = 0
     bloom_expected_per_partition: int = 1_000_000
     bloom_fp_rate: float = 0.01
-    # 'broadcast': bank collects to the driver and broadcasts (fast at
-    # sandbox scale; ~12 GB driver-resident at 10^10 keys). 'copartition':
-    # links cogroup with bank rows on pid — the 10^10 path, no driver
-    # materialization of the bank ever (operators/bloom.py). 'auto'
-    # (default): the engine computes the bank size from its parameters and
-    # picks broadcast ≤ 256 MB, copartition above.
-    bloom_probe_mode: str = "auto"
+    # the one bloom probe: links cogroup with bank rows on pid, and the
+    # bank is never driver-materialized (operators/bloom.py). 'copartition'
+    # is the only legal value.
+    bloom_probe_mode: str = "copartition"
     # fold accumulated seen deltas into the bloom bank every K waves, and
     # on every seen-compaction wave (which drops the parts the tail reads);
     # in between, bloom-cleared rows are exact-checked against the
@@ -219,8 +216,8 @@ class CrawlJob:
     check: str = "text"
     # revisit semantics: a WARC corpus may hold several captures of one
     # URL; True = the fetch keeps only the LATEST capture per URL
-    # (wave-sized window in the fetch join — plans/loop.py
-    # _latest_capture). Default False: the parquet corpus contract has
+    # (wave-sized window in the fetch join — sources/corpus.py
+    # latest_capture). Default False: the parquet corpus contract has
     # unique urls, and the dedup window is not free. The CLI turns this
     # on automatically for .warc corpora.
     dedup_captures: bool = False
@@ -231,6 +228,15 @@ class CrawlJob:
     page_load_timeout_ms: int = 10_000
 
     def __post_init__(self) -> None:
+        if self.engines is not None and self.engines < 1:
+            raise ValueError(f"engines must be >= 1 or None, got {self.engines}")
+        if self.bloom_fold_every < 1:
+            raise ValueError(f"bloom_fold_every must be >= 1, got {self.bloom_fold_every}")
+        if self.bloom_probe_mode != "copartition":
+            raise ValueError(
+                f"bloom_probe_mode={self.bloom_probe_mode!r}: the broadcast probe "
+                "was removed; 'copartition' is the only bloom probe"
+            )
         self.filters = squash_filters(list(self.filters))
 
 

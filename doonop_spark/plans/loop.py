@@ -70,7 +70,12 @@ from doonop_spark.operators.schedule import (
     select_wave,
 )
 from doonop_spark.plans.job import CrawlJob, RetryPolicy
-from doonop_spark.sources.corpus import FetchSide, bucket_expr, choose_fetch_side
+from doonop_spark.sources.corpus import (
+    FetchSide,
+    bucket_expr,
+    choose_fetch_side,
+    latest_capture,
+)
 from doonop_spark.sources.seeds import (
     seed_frontier,
     seed_frontier_distributed,
@@ -103,8 +108,7 @@ class CrawlResult:
     seen: DataFrame
     frontier: DataFrame  # rows never scheduled (non-empty iff limit hit)
     iterations: int = 0
-    # the physical paths chosen: {"fetch_side": "cached"|"bucketed"|"raw",
-    # "bloom_probe": "broadcast"|"copartition"|None}
+    # the physical path chosen: {"fetch_side": "cached"|"bucketed"|"raw"}
     extra: dict = field(default_factory=dict)
 
 
@@ -263,26 +267,6 @@ def _shape(joined: DataFrame, faults: DataFrame | None, check: Column | None) ->
     )
 
 
-def _latest_capture(joined: DataFrame, dedup_captures: bool) -> DataFrame:
-    """Revisit semantics (opt-in, ``job.dedup_captures``): a WARC corpus may
-    legally hold several captures of one URL; the fetch must return ONE
-    page per frontier URL — the latest capture wins, ties broken by html
-    hash for determinism. Wave-sized window only (never a corpus-side
-    shuffle); the join's url-keyed exchange is reused by the window's
-    partitionBy(url). Default OFF: the parquet corpus contract has unique
-    urls."""
-    if not dedup_captures:
-        return joined
-    w = Window.partitionBy("url").orderBy(
-        F.desc_nulls_last("warc_ts"), F.desc(F.xxhash64(F.col("html")))
-    )
-    return (
-        joined.withColumn("__cap_rn", F.row_number().over(w))
-        .filter(F.col("__cap_rn") == 1)
-        .drop("__cap_rn")
-    )
-
-
 @dataclass
 class _Crawl:
     """The per-crawl inputs, prepared once, and the four wave stages."""
@@ -371,7 +355,9 @@ class _Crawl:
         appended from it."""
         job, io, it = self.job, self.io, st.iteration
         gated = robots_gate(wave, self.robots, job.robot, job.use_robots)
-        joined = _latest_capture(self.side.join(gated, buckets), job.dedup_captures)
+        joined = self.side.join(gated, buckets)
+        if job.dedup_captures:
+            joined = latest_capture(joined)
         # per-status counts ride the fetch materialize (K2 stats without a
         # dedicated groupBy job)
         obs = Observation(f"fetched_{it}")
@@ -679,7 +665,6 @@ def run_crawl(
             n_partitions=job.bloom_partitions,
             expected_per_partition=job.bloom_expected_per_partition,
             fp_rate=job.bloom_fp_rate,
-            probe_mode=job.bloom_probe_mode,
             fold_every=job.bloom_fold_every,
         )
     check, data = _check_program(job, data_expr)
@@ -716,8 +701,5 @@ def run_crawl(
         seen,
         frontier,
         st.iteration,
-        extra={
-            "fetch_side": side.kind,
-            "bloom_probe": bloom.mode if bloom is not None else None,
-        },
+        extra={"fetch_side": side.kind},
     )

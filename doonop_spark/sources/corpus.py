@@ -18,8 +18,9 @@ link for the within-batch dedup exercise + a hot host owning ~30% of all
 pages for the skew exercise).
 
 The crawl's side of the corpus lives here too: the bucketed layout
-(:func:`write_bucketed_corpus`) and the per-crawl choice of the side every
-wave's fetch joins (:func:`choose_fetch_side`).
+(:func:`write_bucketed_corpus`), the per-crawl choice of the side every
+wave's fetch joins (:func:`choose_fetch_side`) and the revisit rule
+(:func:`latest_capture`).
 """
 
 from __future__ import annotations
@@ -29,7 +30,7 @@ from dataclasses import dataclass
 
 from py4j.protocol import Py4JError
 from pyspark import StorageLevel
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 __all__ = [
@@ -45,6 +46,7 @@ __all__ = [
     "corpus_bucket_count",
     "FetchSide",
     "choose_fetch_side",
+    "latest_capture",
 ]
 
 _EPOCH = "2024-01-01 00:00:00"
@@ -352,6 +354,24 @@ def choose_fetch_side(
         cache_max_bytes,
     )
     return side
+
+
+def latest_capture(pages: DataFrame) -> DataFrame:
+    """Revisit semantics: a WARC corpus may legally hold several captures
+    of one URL, and a fetch returns ONE page per URL — the latest capture
+    wins, ties broken by html hash so the pick is deterministic. The crawl
+    applies it to each wave's fetch join (``CrawlJob.dedup_captures``; the
+    window reuses the join's url-keyed exchange, never a corpus-side
+    shuffle) and the CLI's WAT sink to the visited pages, so both pick the
+    same capture."""
+    w = Window.partitionBy("url").orderBy(
+        F.desc_nulls_last("warc_ts"), F.desc(F.xxhash64(F.col("html")))
+    )
+    return (
+        pages.withColumn("__cap_rn", F.row_number().over(w))
+        .filter(F.col("__cap_rn") == 1)
+        .drop("__cap_rn")
+    )
 
 
 def pages_from_documents(

@@ -3,18 +3,12 @@ target, anti-join equivalence with and without the probe."""
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
 import pytest
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-from doonop_spark.operators.bloom import (
-    BloomBank,
-    bloom_probe,
-    build_bloom,
-)
-from doonop_spark.operators.dedup import anti_join_seen
+from doonop_spark.operators.bloom import SeenBloom, bloom_flag_copartitioned, build_bloom
+from doonop_spark.operators.dedup import anti_join_flagged, anti_join_seen
+from doonop_spark.sources.tables import MemoryTableIO
 
 
 @pytest.fixture(scope="module")
@@ -26,172 +20,108 @@ def seen(spark):
     )
 
 
+def _links(spark, prefix: str, lo: int, hi: int):
+    return (
+        spark.range(lo, hi)
+        .select(F.concat(F.lit(prefix), F.col("id")).alias("ukey"))
+        .withColumn("url_hash", F.xxhash64("ukey"))
+    )
+
+
+def _flag(links, bloom, n_partitions):
+    """The probe, materialized the way SeenBloom.new_links materializes it."""
+    return bloom_flag_copartitioned(links, bloom, n_partitions=n_partitions).localCheckpoint(
+        eager=True
+    )
+
+
 def test_no_false_negatives(spark, seen):
     bloom = build_bloom(seen, n_partitions=8, expected_per_partition=1000)
-    bank = BloomBank.collect(bloom)
-    hashes = np.array([r.url_hash for r in seen.collect()], dtype=np.int64)
-    assert bank.maybe_seen(hashes).all()  # every seen key must hit
+    flagged = _flag(seen, bloom, 8)
+    assert all(r["__maybe"] for r in flagged.collect())  # every seen key must hit
+    assert anti_join_flagged(flagged, seen).count() == 0
 
 
 def test_fp_rate_bounded(spark, seen):
     bloom = build_bloom(seen, n_partitions=8, expected_per_partition=1000, fp_rate=0.01)
-    bank = BloomBank.collect(bloom)
-    fresh = (
-        spark.range(100000, 110000)
-        .select(F.xxhash64(F.concat(F.lit("http://y.example/q"), F.col("id"))).alias("h"))
-        .collect()
-    )
-    hits = bank.maybe_seen(np.array([r.h for r in fresh], dtype=np.int64))
-    assert hits.mean() < 0.05  # ~1% target, generous bound
+    flagged = _flag(_links(spark, "http://y.example/q", 100000, 110000), bloom, 8)
+    hits = flagged.agg(F.avg(F.col("__maybe").cast("double"))).first()[0]
+    assert hits < 0.05  # ~1% target, generous bound
+    assert anti_join_flagged(flagged, seen).count() == 10000
 
 
 def test_anti_join_equivalence(spark, seen):
-    links = (
-        spark.range(2500, 7500)
-        .select(F.concat(F.lit("http://x.example/p"), F.col("id")).alias("ukey"))
-        .withColumn("url_hash", F.xxhash64("ukey"))
-        .withColumn("url", F.col("ukey"))
-    )
+    links = _links(spark, "http://x.example/p", 2500, 7500).withColumn("url", F.col("ukey"))
     exact = sorted(r.ukey for r in anti_join_seen(links, seen).collect())
     bloom = build_bloom(seen, n_partitions=8, expected_per_partition=1000)
-    probe = bloom_probe(spark, bloom)
-    with_bloom = sorted(r.ukey for r in anti_join_seen(links, seen, probe).collect())
+    with_bloom = sorted(r.ukey for r in anti_join_flagged(_flag(links, bloom, 8), seen).collect())
     assert exact == with_bloom  # FP only costs an exact probe, never drops
     assert len(exact) == 2500
 
 
 def test_sparse_bank_no_false_negatives(spark):
     """Regression: with far fewer seen keys than partitions, the highest
-    pids hold no rows. The bank must still probe with the BUILD-time
-    modulus (explicit ``p`` column), not max(pid)+1 — the old inference
-    marked actually-seen keys 'definitely new' (dropped-dup admission)."""
-    seen = (
-        spark.range(0, 50)
-        .select(F.concat(F.lit("http://s.example/"), F.col("id")).alias("ukey"))
-        .withColumn("url_hash", F.xxhash64("ukey"))
-    )
+    pids hold no rows. The probe must still use the BUILD-time modulus
+    (explicit ``p`` column), not max(pid)+1 — that inference marked
+    actually-seen keys 'definitely new' (dropped-dup admission)."""
+    seen = _links(spark, "http://s.example/", 0, 50)
     bloom = build_bloom(seen, n_partitions=64, expected_per_partition=64)
     rows = bloom.collect()
     assert len(rows) < 64  # precondition: some partitions really are empty
-    bank = BloomBank.collect(bloom)
-    assert bank.p == 64
-    hashes = np.array([r.url_hash for r in seen.collect()], dtype=np.int64)
-    assert bank.maybe_seen(hashes).all()
+    assert {r.p for r in rows} == {64}
+    flagged = _flag(seen, bloom, 64)
+    assert all(r["__maybe"] for r in flagged.collect())
+    assert anti_join_flagged(flagged, seen).count() == 0
 
 
 def test_anti_join_probe_runs_once_per_row(spark, seen):
-    """The probe branch must flag ONCE over a materialized frame: a lazy
+    """``SeenBloom.new_links`` flags ONCE, over a materialized frame: a lazy
     probe/~probe split would run the (possibly expensive) upstream plan and
-    the probe UDF twice per wave (measured 4.4× in the crawl loop).
-    Accumulator counts total rows through a counting probe."""
-    acc = spark.sparkContext.accumulator(0)
-
-    def counting_probe(col):
-        @F.pandas_udf(T.BooleanType())
-        def _probe(h: pd.Series) -> pd.Series:
-            acc.add(len(h))
-            return (h % 2 == 0)
-
-        return _probe(col)
-
-    links = (
-        spark.range(0, 1000)
-        .select(F.concat(F.lit("http://z.example/p"), F.col("id")).alias("ukey"))
-        .withColumn("url_hash", F.xxhash64("ukey"))
+    the probe twice per wave (measured 4.4× in the crawl loop). The plan
+    of the frame it returns holds no cogroup probe; the unmaterialized
+    probe's plan does."""
+    links = _links(spark, "http://x.example/p", 4000, 6000)
+    bloom = SeenBloom(
+        MemoryTableIO(), seen, 0, n_partitions=8, expected_per_partition=1000, fp_rate=0.01
     )
-    out = anti_join_seen(links, seen, counting_probe)
-    out.count()
-    # both branches consumed; probe evaluated exactly once per input row
-    assert acc.value == 1000
 
+    def plan(df):
+        return df._jdf.queryExecution().executedPlan().toString()
 
-def test_copartitioned_flags_match_broadcast(spark, seen):
-    """The cogroup probe (no driver bank) must flag every row identically
-    to the broadcast probe — including rows whose pid has no bank row
-    (definitely new) and hashes that are bloom false positives."""
-    from doonop_spark.operators.bloom import bloom_flag_copartitioned
-
-    links = (
-        spark.range(2500, 9000)
-        .select(F.concat(F.lit("http://x.example/p"), F.col("id")).alias("ukey"))
-        .withColumn("url_hash", F.xxhash64("ukey"))
+    assert "FlatMapCoGroupsInPandas" in plan(
+        bloom_flag_copartitioned(links, bloom.bank, n_partitions=8)
     )
-    bloom = build_bloom(seen, n_partitions=8, expected_per_partition=1000)
-    bank = BloomBank.collect(bloom)
-    expected = {
-        r.ukey: bool(m)
-        for r, m in zip(
-            links.collect(),
-            bank.maybe_seen(
-                np.array([r.url_hash for r in links.collect()], dtype=np.int64)
-            ),
-        )
-    }
-    got = {
-        r.ukey: r["__maybe"]
-        for r in bloom_flag_copartitioned(links, bloom, n_partitions=8).collect()
-    }
-    assert got == expected
-    # no false negatives: every actually-seen key flagged maybe
-    assert all(got[f"http://x.example/p{i}"] for i in range(2500, 5000))
+    out = bloom.new_links(links, seen, 0)
+    assert "FlatMapCoGroupsInPandas" not in plan(out)
+    assert sorted(r.ukey for r in out.collect()) == sorted(
+        r.ukey for r in anti_join_seen(links, seen).collect()
+    )
 
 
 def test_copartitioned_empty_pid_is_definitely_new(spark):
     """A pid with no bank row means no seen keys hash there: candidates in
     that pid are definitely new (False), and the probe must not error."""
-    from doonop_spark.operators.bloom import bloom_flag_copartitioned
-
     # one seen key ⇒ at most one of 16 pids has a bank row
     seen1 = spark.createDataFrame(
         [("http://only.example/",)], "ukey string"
     ).withColumn("url_hash", F.xxhash64("ukey"))
     bloom = build_bloom(seen1, n_partitions=16, expected_per_partition=64)
-    links = (
-        spark.range(0, 200)
-        .select(F.concat(F.lit("http://new.example/"), F.col("id")).alias("ukey"))
-        .withColumn("url_hash", F.xxhash64("ukey"))
-    )
-    rows = bloom_flag_copartitioned(links, bloom, n_partitions=16).collect()
+    bank_pids = {r.pid for r in bloom.collect()}
+    assert len(bank_pids) == 1
+    rows = bloom_flag_copartitioned(
+        _links(spark, "http://new.example/", 0, 200), bloom, n_partitions=16
+    ).collect()
     assert len(rows) == 200
-    bank = BloomBank.collect(bloom)
-    exp = bank.maybe_seen(np.array([r.url_hash for r in rows], dtype=np.int64))
-    assert [r["__maybe"] for r in rows] == [bool(x) for x in exp]
+    empty = [r for r in rows if r.url_hash % 16 not in bank_pids]
+    assert empty  # precondition: some rows land on a pid with no bank row
+    assert not any(r["__maybe"] for r in empty)
 
 
 def test_copartitioned_partition_mismatch_raises(spark, seen):
-    from doonop_spark.operators.bloom import bloom_flag_copartitioned
-
     bloom = build_bloom(seen, n_partitions=8, expected_per_partition=1000)
     links = seen.limit(50)
     with pytest.raises(Exception, match="built with p=8"):
         bloom_flag_copartitioned(links, bloom, n_partitions=4).collect()
-
-
-def test_resolve_probe_mode_auto(spark, seen):
-    """'auto' picks by computed bank size: broadcast within the threshold,
-    copartition at north-star scale (10^10 keys ≈ 12 GB bank); explicit
-    modes pass through; junk raises. The size formula must match the
-    bytes a built bank actually holds."""
-    from doonop_spark.operators.bloom import (
-        bank_size_bytes,
-        resolve_probe_mode,
-    )
-
-    assert resolve_probe_mode("auto", 32, 1_000_000, 0.01) == "broadcast"
-    assert (
-        resolve_probe_mode("auto", 1024, 10_000_000_000 // 1024, 0.01)
-        == "copartition"
-    )
-    # pass-through regardless of size
-    assert resolve_probe_mode("broadcast", 1024, 10**10 // 1024, 0.01) == "broadcast"
-    assert resolve_probe_mode("copartition", 4, 10, 0.1) == "copartition"
-    with pytest.raises(ValueError, match="unknown bloom probe mode"):
-        resolve_probe_mode("bogus", 4, 10, 0.1)
-
-    bank = build_bloom(seen, n_partitions=4, expected_per_partition=500)
-    built = sum(len(r.bits) for r in bank.select("bits").collect())
-    # empty pids emit no row, so built ≤ formula; with 4 populated pids equal
-    assert built == bank_size_bytes(4, 500, 0.01)
 
 
 def test_fold_bloom_bitwise_equals_merge_of_build(spark):

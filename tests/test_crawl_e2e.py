@@ -349,7 +349,6 @@ def test_bloom_copartitioned_crawl_identical(spark):
             bloom_partitions=8,
             bloom_expected_per_partition=256,
             bloom_fold_every=2,
-            bloom_probe_mode="copartition",
         ),
         corpus,
     )
@@ -360,6 +359,42 @@ def test_bloom_copartitioned_crawl_identical(spark):
         r.ukey for r in coparted.seen.collect()
     )
     assert vars(base.stats) == vars(coparted.stats)
+
+
+@pytest.mark.parametrize("engines", [1, None])
+def test_surt_key_crawl(spark, engines):
+    """``url_key="surt"`` (CLI ``--url-key surt``) keys the seen set on the
+    SURT form in both the seed frontier and the expanded links: two
+    spellings of one page are fetched once, and a link to a seed's other
+    spelling is already seen. Parity mode fetches every spelling."""
+    a_www, a_bare = "http://www.a.com/p?b=2&a=1", "http://a.com/p?a=1&b=2"
+    corpus = mock_corpus(
+        spark,
+        {
+            "http://s.example/": [a_www, a_bare, "http://c.com/"],
+            "http://www.c.com/": [],
+            a_www: [],
+            a_bare: [],
+            "http://c.com/": [],
+        },
+    )
+    seeds = ["http://s.example/", "http://www.c.com/"]
+    got = {}
+    for key in ("surt", "parity"):
+        res = run_crawl(spark, CrawlJob(seeds=seeds, engines=engines, url_key=key), corpus)
+        got[key] = (
+            sorted(r.url for r in res.results.collect()),
+            sorted(r.ukey for r in res.seen.collect()),
+            res.stats,
+        )
+    urls, ukeys, stats = got["surt"]
+    assert urls == sorted([*seeds, a_www])  # first spelling in link order
+    assert ukeys == sorted(["com,a)/p?a=1&b=2", "com,c)/", "example,s)/"])
+    assert (stats.count_visited, stats.count_collected) == (3, 3)
+    urls, ukeys, stats = got["parity"]
+    assert urls == sorted([*seeds, a_www, a_bare, "http://c.com/"])
+    assert ukeys == urls
+    assert (stats.count_visited, stats.count_collected) == (5, 5)
 
 
 @pytest.mark.parametrize("side", ["cached", "bucketed", "raw"])
@@ -426,7 +461,7 @@ def test_fetch_side_crawl_identical(spark, tmp_path, side):
         corpus_cache_max_bytes=(8 << 30) if side == "cached" else 0,
     )
     res = run_crawl(spark, job, corpus, fault_schedule=faults, io=io)
-    assert res.extra == {"fetch_side": side, "bloom_probe": None}
+    assert res.extra == {"fetch_side": side}
 
     assert sorted((r.url, r.data) for r in res.results.collect()) == [
         ("http://a.com/", "http://a.com/"),
@@ -544,9 +579,8 @@ def test_resume_with_compaction(spark, tmp_path):
     )
 
 
-@pytest.mark.parametrize("probe_mode", ["broadcast", "copartition"])
-def test_resume_with_bloom(spark, tmp_path, probe_mode):
-    """Kill-and-resume with the bloom sidecar on (both probe modes): the
+def test_resume_with_bloom(spark, tmp_path):
+    """Kill-and-resume with the bloom sidecar on: the
     bank is rebuilt from the checkpointed seen set at resume, so the
     resumed run reproduces the uninterrupted run exactly (never-drop
     invariant survives the restart)."""
@@ -557,12 +591,10 @@ def test_resume_with_bloom(spark, tmp_path, probe_mode):
     kw = dict(
         seeds=seeds, engines=4, bloom_partitions=4,
         bloom_expected_per_partition=64, bloom_fold_every=2,
-        bloom_probe_mode=probe_mode,
     )
     job = CrawlJob(**kw)
 
     full = run_crawl(spark, job, corpus, io=SnapshotTableIO(str(tmp_path / "full")))
-    assert full.extra["bloom_probe"] == probe_mode
     part_io = SnapshotTableIO(str(tmp_path / "part"))
     run_crawl(spark, CrawlJob(**kw, max_iterations=2), corpus, io=part_io)
     resumed = run_crawl(spark, job, corpus, io=part_io, resume=True)
@@ -659,7 +691,6 @@ def test_bloom_fold_every_4_on_snapshot_io(spark, tmp_path):
         bloom_partitions=4,
         bloom_expected_per_partition=64,
         bloom_fold_every=4,
-        bloom_probe_mode="copartition",
     )
     mem = run_crawl(spark, CrawlJob(**kw, seen_compact_every=0), corpus)
     assert mem.iterations >= 5

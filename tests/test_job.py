@@ -161,3 +161,28 @@ def test_job_from_argv_defaults_match_reference():
     assert job.browser == "firefox"
     assert not job.use_robots
     assert job.robot == "DoonopRobot"
+
+
+_EDGE_KNOBS = [
+    ("engines", 0, "engines must be >= 1"),
+    ("engines", -2, "engines must be >= 1"),
+    ("bloom_fold_every", 0, "bloom_fold_every must be >= 1"),
+    ("bloom_fold_every", -1, "bloom_fold_every must be >= 1"),
+    ("bloom_probe_mode", "auto", "broadcast probe was removed"),
+    ("bloom_probe_mode", "broadcast", "broadcast probe was removed"),
+]
+
+
+@pytest.mark.parametrize(
+    "knob, value, match", _EDGE_KNOBS, ids=[f"{k}={v}" for k, v, _ in _EDGE_KNOBS]
+)
+def test_crawl_job_rejects_edge_knob_values(knob, value, match):
+    """Edge-case knob values raise at construction instead of being
+    reinterpreted: ``engines=0`` used to schedule nothing and return an
+    empty crawl, ``bloom_fold_every=0`` used to fold every wave."""
+    with pytest.raises(ValueError, match=match):
+        CrawlJob(seeds=["http://a.com"], **{knob: value})
+    if knob == "engines":  # the CLI's -j reaches the same check
+        with pytest.raises(ValueError, match=match):
+            job_from_argv(["-j", str(value), "http://a.com"])
+    assert CrawlJob(engines=None, bloom_fold_every=1, bloom_probe_mode="copartition")
