@@ -298,30 +298,30 @@ def frontier_throughput(spark: SparkSession, corpus, n_pages: int) -> float:
 def bfs_crawl_seconds(
     spark: SparkSession,
     corpus_path: str,
-    corpus_buckets: int = 0,
     bloom_partitions: int = 0,
     politeness: bool = False,
     n_pages: int | None = None,
 ) -> tuple[float, int]:
     """Full iterative BFS crawl wall time on a reduced corpus (the loop
-    includes per-wave materialization overhead). ``corpus_buckets``/
-    ``bloom_partitions`` exercise the storage-partitioned fetch and the
-    bloom seen-sidecar (the 100 TB scale paths) on the same input.
+    includes per-wave materialization overhead). A bucketed
+    ``corpus_path`` (its layout carries B) and ``bloom_partitions``
+    exercise the storage-partitioned fetch and the bloom seen-sidecar (the
+    100 TB scale paths) on the same input.
     ``politeness`` adds a robots table whose hot-host Crawl-delay caps the
     host at 15% of the corpus per wave — the per-host budget window
     under a binding constraint; the
     visited set is unchanged (budgets defer, never drop)."""
     from doonop_spark.plans.job import CrawlJob
     from doonop_spark.plans.loop import run_crawl
+    from doonop_spark.sources.corpus import read_bucketed_corpus
 
-    corpus = spark.read.parquet(corpus_path)
+    corpus = read_bucketed_corpus(spark, corpus_path)
     seeds = [f"http://h{h:04d}.example/p0" for h in range(N_HOSTS)]
     n_pages = n_pages or N_PAGES
     job = CrawlJob(
         seeds=seeds,
         engines=None,
         per_host_budget=10_000_000,
-        corpus_buckets=corpus_buckets,
         bloom_partitions=bloom_partitions,
         bloom_expected_per_partition=max(n_pages // max(bloom_partitions, 1), 1024),
         use_robots=politeness,
@@ -548,9 +548,7 @@ def main() -> None:
         # but rmtree first so a non-parquet leftover can't confuse the scan
         shutil.rmtree(tmp_bucketed, ignore_errors=True)
         write_bucketed_corpus(spark.read.parquet(tmp), tmp_bucketed, n_buckets=64)
-    crawl_bucketed_s, visited_b = bfs_crawl_seconds(
-        spark, tmp_bucketed, corpus_buckets=64
-    )
+    crawl_bucketed_s, visited_b = bfs_crawl_seconds(spark, tmp_bucketed)
     assert visited_b == visited
     timings["bfs_crawl_bucketed"] = round(crawl_bucketed_s, 3)
     # the bloom sidecar: bank cogrouped with links on pid, never
@@ -728,7 +726,7 @@ def crawl_only() -> None:
         # but rmtree first so a non-parquet leftover can't confuse the scan
         shutil.rmtree(tmp_bucketed, ignore_errors=True)
         write_bucketed_corpus(spark.read.parquet(tmp), tmp_bucketed, n_buckets=64)
-    s, v = bfs_crawl_seconds(spark, tmp_bucketed, corpus_buckets=64)
+    s, v = bfs_crawl_seconds(spark, tmp_bucketed)
     assert v == visited
     out["bucketed"] = {"sec": round(s, 1), "urls_per_sec": round(v / s, 1)}
     s, v = bfs_crawl_seconds(spark, tmp, bloom_partitions=32)

@@ -39,7 +39,7 @@ from bench import (  # noqa: E402
 
 VARIANTS = {
     "plain": {},
-    "bucketed": {"corpus_buckets": 64},
+    "bucketed": {},  # the bucketed corpus path; its layout carries B
     "bloom": {"bloom_partitions": 32},
     "politeness": {"politeness": True},
 }
@@ -98,17 +98,13 @@ class TimingTableIO:
 def profile_crawl(variant: str) -> None:
     from doonop_spark.plans.job import CrawlJob
     from doonop_spark.plans.loop import run_crawl
-    from doonop_spark.sources.corpus import synthetic_robots
+    from doonop_spark.sources.corpus import read_bucketed_corpus, synthetic_robots
 
     spark = session(CPUS)
     path = _prepare(spark, variant)
     kw = dict(VARIANTS[variant])
     politeness = kw.pop("politeness", False)
-    corpus = spark.read.parquet(path)
-    if variant == "bucketed":
-        from doonop_spark.sources.corpus import read_bucketed_corpus
-
-        corpus = read_bucketed_corpus(spark, path)
+    corpus = read_bucketed_corpus(spark, path)
     from bench import N_HOSTS
 
     seeds = [f"http://h{h:04d}.example/p0" for h in range(N_HOSTS)]

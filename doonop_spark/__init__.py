@@ -22,7 +22,7 @@ Layout (maps SURVEY.md §2 operator ids to modules):
 - operators/similarity.py — ANN / LSH similarity search
 - sources/tables.py       — snapshot TableIO (checkpoint/resume)
 - sources/corpus.py       — deterministic synthetic page corpora, fetch side
-- sources/seeds.py        — S1/S2 seed scans + F4 seed clean
+- sources/seeds.py        — wave-0 seed frontier (seed list, DataFrame seeds)
 - plans/job.py            — CrawlJob config (C1-C4)
 - plans/loop.py           — run_crawl: the iterative wave driver (§3),
                             schedule → fetch → expand → commit over WaveState

@@ -14,20 +14,23 @@ Reproduces the reference sink contract byte-for-byte:
 
 The reference fetches live pages; this engine fetches by joining a page
 corpus, so the one extension flag is ``--corpus`` (parquet path — plain or
-bucket-partitioned via ``write_bucketed_corpus``, with ``--corpus-buckets``
-enabling pruned fetches). All reference CLI options are accepted by
-``job_from_argv`` (C1, src/cfg.rs:25-98). Ctrl-c maps to the graceful
-drain-and-commit cancel (X3, src/main.rs:41-48).
+bucket-partitioned via ``write_bucketed_corpus``, whose layout carries its
+bucket count so fetches prune by it — or WARC archives). This module parses
+only inputs and sinks; every flag that sets a ``CrawlJob`` field, all
+reference CLI options included, is parsed by ``job_from_argv`` (C1,
+src/cfg.rs:25-98). Ctrl-c maps to the graceful drain-and-commit cancel
+(X3, src/main.rs:41-48).
 
 Cluster deployment: ``spark-submit --py-files doonop_spark.zip
 doonop_spark/__main__.py --corpus <iceberg/parquet path> <seeds...>`` —
-the session builder below only fills in a local master when none is
-configured.
+the session builder sets no master, so spark-submit's ``--master``
+applies; from plain python the session runs on ``local[*]``.
 """
 
 from __future__ import annotations
 
 import argparse
+import dataclasses
 import json
 import os
 import signal
@@ -43,58 +46,26 @@ from doonop_spark.sources.corpus import latest_capture, read_bucketed_corpus
 from doonop_spark.sources.tables import open_table_io
 
 
-def _master_configured() -> bool:
-    """True iff a master is already configured (spark-submit --master sets
-    the "spark.master" system property on the JVM side; builder.master()
-    would silently override it)."""
-    from pyspark import SparkConf, SparkContext
-
-    try:
-        # SparkConf() is a plain dict until the py4j gateway is up, so the
-        # gateway must be probed first; _ensure_initialized is private and
-        # absent on some pyspark lines — fall back to "not configured"
-        # (builder fills in a local master, harmless under spark-submit 3.x
-        # which also exports MASTER-related conf through the gateway).
-        SparkContext._ensure_initialized()
-    except AttributeError:
-        return False
-    return SparkConf().contains("spark.master")
-
-
-def _builder(master_configured: bool):
-    b = SparkSession.builder.appName("doonop-spark")
-    # spark-submit passes --master as the "spark.master" SparkConf system
-    # property (NOT an env var), and builder.master() would override it —
-    # so only fill in a local default when no master is configured anywhere.
-    if not master_configured and not os.environ.get("SPARK_MASTER"):
-        b = b.master(os.environ.get("DOONOP_MASTER", "local[*]"))
-    return b.config(
-        "spark.sql.shuffle.partitions",
-        os.environ.get("DOONOP_SHUFFLE_PARTITIONS", "32"),
-    ).config("spark.ui.showConsoleProgress", "false")
-
-
-def _session() -> SparkSession:
-    return _builder(_master_configured()).getOrCreate()
+def _builder():
+    # no master here: under spark-submit its --master applies, and from
+    # plain python pyspark's launcher defaults to local[*]
+    return (
+        SparkSession.builder.appName("doonop-spark")
+        .config("spark.sql.shuffle.partitions", os.environ.get("DOONOP_SHUFFLE_PARTITIONS", "32"))
+        .config("spark.ui.showConsoleProgress", "false")
+    )
 
 
 def main(argv: list[str] | None = None) -> int:
     argv = sys.argv[1:] if argv is None else argv
     ext = argparse.ArgumentParser(add_help=False)
     ext.add_argument("--corpus", required=True, help="pages corpus parquet path")
-    ext.add_argument("--corpus-buckets", type=int, default=0)
     ext.add_argument("--robots-table", help="parquet path of (host, robots_txt)")
     # the reference ships sitemap seeding as scripts/sitemap.sh (robots.txt
     # Sitemap: lines → xpath //loc); this runs the same expansion natively
     ext.add_argument("--sitemap-seeds", action="store_true")
     ext.add_argument("--table-root", help="durable checkpoint dir (resumable)")
     ext.add_argument("--resume", action="store_true")
-    ext.add_argument("--bloom-partitions", type=int, default=0)
-    ext.add_argument("--seen-compact-every", type=int, default=8)
-    # O3 ripeness clock: 'wave' = deterministic logical waves (default);
-    # 'wall' = reference parity, --retry_threshold honored in real ms
-    # against time.time() (src/retry.rs:38-46)
-    ext.add_argument("--retry-clock", choices=["wave", "wall"], default="wave")
     # training-pipeline hand-off: also write collected results as WET
     # archives (conversion records; sources/warc.py) under this directory
     ext.add_argument("--wet-out")
@@ -108,15 +79,6 @@ def main(argv: list[str] | None = None) -> int:
     ours, rest = ext.parse_known_args(argv)
 
     job = job_from_argv(rest)
-    if ours.retry_clock == "wall":
-        # job_from_argv stored ms/1000/wave_seconds (logical waves);
-        # multiply back to SECONDS so the threshold is the reference's
-        # exact --retry-threshold-milis in real time
-        job.retry_threshold = job.retry_threshold * job.wave_seconds
-        job.retry_clock = "wall"
-    job.corpus_buckets = ours.corpus_buckets
-    job.bloom_partitions = ours.bloom_partitions
-    job.seen_compact_every = ours.seen_compact_every
 
     # --use_robots_txt without a robots table would silently not gate at
     # all (robots_gate's table-missing semantics are per-HOST fetch-error
@@ -138,7 +100,7 @@ def main(argv: list[str] | None = None) -> int:
         )
         return 2
 
-    spark = _session()
+    spark = _builder().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     if ".warc" in ours.corpus.rsplit("/", 1)[-1]:
         # Common Crawl's native format: .warc/.warc.gz archives (or a
@@ -149,16 +111,16 @@ def main(argv: list[str] | None = None) -> int:
         corpus = warc_corpus(spark, ours.corpus, transcode=ours.transcode)
         # WARC archives may hold several captures (revisits) of one URL;
         # the fetch keeps the latest capture per URL
-        job.dedup_captures = True
+        job = dataclasses.replace(job, dedup_captures=True)
     else:
-        # read_bucketed_corpus attaches the layout's bucket count
-        # (sidecar → column metadata) so the loop can validate
-        # --corpus-buckets or derive B when the flag is unset; plain
-        # corpora fall through to a bare read
+        # a bucketed layout carries its bucket count (sidecar → column
+        # metadata), so the fetch prunes by it; plain corpora fall through
+        # to a bare read
         corpus = read_bucketed_corpus(spark, ours.corpus)
     robots = (
         spark.read.parquet(ours.robots_table) if ours.robots_table else None
     )
+    seed_urls = None
     if ours.sitemap_seeds:
         # distributed S6: sitemap <loc> seeds stay a DataFrame all the way
         # into the wave-0 frontier (a million-entry sitemap never becomes
@@ -169,7 +131,7 @@ def main(argv: list[str] | None = None) -> int:
             sitemap_urls_from_robots,
         )
 
-        job.seed_frame = expand_sitemaps(sitemap_urls_from_robots(robots), corpus)
+        seed_urls = expand_sitemaps(sitemap_urls_from_robots(robots), corpus)
     io = (
         open_table_io("snapshot", ours.table_root) if ours.table_root else None
     )
@@ -183,34 +145,38 @@ def main(argv: list[str] | None = None) -> int:
         pass  # not the main thread (e.g. under a test harness)
 
     res = run_crawl(
-        spark, job, corpus, robots=robots, io=io, resume=ours.resume, cancel=cancel
+        spark,
+        job,
+        corpus,
+        robots=robots,
+        seed_urls=seed_urls,
+        io=io,
+        resume=ours.resume,
+        cancel=cancel,
     )
 
+    if ours.wet_out or ours.wat_out:
+        # the visited pages' captures, picked by the fetch's own revisit
+        # rule, so each sink record describes the capture the crawl
+        # collected and a revisited URL yields exactly one record
+        visited = res.results.select("url").distinct()
+        captures = latest_capture(corpus.join(visited.hint("broadcast"), "url", "left_semi"))
     if ours.wet_out:
         # WET sink: each collected value becomes a conversion record,
-        # stamped with the page's capture time from the corpus (K1's
-        # stdout contract is unchanged — this is an ADDITIONAL sink)
+        # stamped with the page's capture time (K1's stdout contract is
+        # unchanged — this is an ADDITIONAL sink)
         from doonop_spark.sources.warc import write_wet
 
-        # a WARC corpus may legally hold several captures (revisits) of
-        # one URL — keep the latest capture time so each collected value
-        # emits exactly ONE conversion record
-        captures = corpus.groupBy("url").agg(F.max("warc_ts").alias("warc_ts"))
-        wet_rows = res.results.select("url", "data").join(captures, "url", "left")
+        wet_rows = res.results.select("url", "data").join(
+            captures.select("url", "warc_ts"), "url", "left"
+        )
         write_wet(wet_rows, ours.wet_out, text_col="data")
-
     if ours.wat_out:
         # WAT sink: metadata (extracted outlinks, HTTP metadata) for every
-        # VISITED page — the link-graph hand-off. The visited pages are
-        # picked first, then the fetch's own revisit rule, so each record
-        # describes the capture the crawl collected
+        # VISITED page — the link-graph hand-off
         from doonop_spark.sources.wat import write_wat
 
-        visited = res.results.select("url").distinct()
-        write_wat(
-            latest_capture(corpus.join(visited.hint("broadcast"), "url", "left_semi")),
-            ours.wat_out,
-        )
+        write_wat(captures, ours.wat_out)
 
     # materialize the ordered values BEFORE stopping spark, emit AFTER —
     # Spark writes its own shutdown logs to stderr, and the reference's

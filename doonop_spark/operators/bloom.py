@@ -247,7 +247,7 @@ class SeenBloom:
         iteration: int,
         n_partitions: int,
         expected_per_partition: int,
-        fp_rate: float,
+        fp_rate: float = 0.01,
         fold_every: int = 4,
     ):
         self.io = io

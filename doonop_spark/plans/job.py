@@ -2,15 +2,16 @@
 ``CrawlConfig`` at ``src/lib.rs:28-41``, CLI schema ``src/cfg.rs:25-98``).
 
 Also carries the reference's CLI-fidelity pure parsers (proxy spec, retry
-policy, browser) — the proxy/browser settings are physical no-ops for a
-corpus-join fetch but are parsed and validated exactly as the reference
-does (golden tests ported from ``src/cfg.rs:352-397``).
+policy, browser). The proxy and browser flags have no effect on a
+corpus-join fetch, so no job field holds them, but ``job_from_argv``
+validates them exactly as the reference does (golden tests ported from
+``src/cfg.rs:352-397``).
 """
 
 from __future__ import annotations
 
 import argparse
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, fields
 from enum import Enum
 
 from doonop_spark.operators.filters import (
@@ -128,9 +129,20 @@ def parse_proxy(s: str) -> dict | None:
     return None
 
 
+def _checked(default, *, least=None, legal=None):
+    """A field ``CrawlJob.__post_init__`` checks: a value below ``least``
+    (None passes — it lifts the bound) or not in ``legal`` raises. Zero
+    stays legal where it means "off" or is a real setting."""
+    return field(default=default, metadata={"least": least, "legal": legal})
+
+
 @dataclass
 class CrawlJob:
-    """The validated logical plan (reference CrawlConfig analog).
+    """The validated logical plan (reference CrawlConfig analog): the
+    values the engine reads and cannot work out for itself. Every field is
+    checked at construction (``__post_init__``, also run by
+    ``dataclasses.replace``); a misspelled or out-of-range value raises a
+    ``ValueError`` naming the field instead of running other behaviour.
 
     ``engines`` maps to the max in-flight URLs per wave: the reference
     never dispatches more URLs than engines (``src/workload.rs:93-98``), so
@@ -138,24 +150,23 @@ class CrawlJob:
     (dense ``dispatch_rank`` and ``seq``; ``engines=1`` is the reference's
     visit order). ``engines=None`` lifts the cap (scale mode: the per-host
     politeness budget bounds the wave instead, and ranks are sparse).
+
+    Inputs are not part of the job: the corpus (whose bucketed layout
+    carries its own bucket count), the robots table and extra seed URLs as
+    a DataFrame are arguments of ``run_crawl``.
     """
 
     seeds: list[str] = field(default_factory=list)
-    # extra seed URLs as a DataFrame(url: string) — cleaned and unioned
-    # into the wave-0 frontier Spark-side, never driver-materialized (the
-    # scale path for --sitemap-seeds; sources/seeds.py
-    # seed_frontier_distributed). None = CLI/file seeds only.
-    seed_frame: object | None = None
     filters: list[Filter] = field(default_factory=list)
-    limit: int | None = None  # O5: stop enqueueing once N results collected
-    engines: int | None = 1  # reference default: 1 (src/cfg.rs:23,249)
+    limit: int | None = _checked(None, least=0)  # O5: stop enqueueing once N results collected
+    engines: int | None = _checked(1, least=1)  # reference default: 1 (src/cfg.rs:23,249)
     # reference default: RetryFirst (src/cfg.rs:73); without fault
     # injection FIRST and NO are behaviorally identical (nothing to retry)
-    retry_policy: RetryPolicy = RetryPolicy.FIRST
-    retry_count: int = 3  # budget: count >= retry_count ⇒ give up
+    retry_policy: RetryPolicy = _checked(RetryPolicy.FIRST, legal=tuple(p.value for p in RetryPolicy))
+    retry_count: int = _checked(3, least=0)  # budget: count >= retry_count ⇒ give up
     # ripeness threshold: in 'wave' clock units (logical waves) or 'wall'
     # clock units (seconds) depending on retry_clock
-    retry_threshold: float = 0.0
+    retry_threshold: float = _checked(0.0, least=0)
     # retry ripeness clock (O3). 'wave': deterministic logical time — a
     # retry ripens retry_threshold WAVES after requeue (test/repro mode).
     # 'wall': reference parity — requeue stamps real time.time() and the
@@ -163,26 +174,18 @@ class CrawlJob:
     # like src/retry.rs:31-46 comparing elapsed wall-clock against
     # --retry-threshold-milis. Don't mix clocks across a resume: retry_at
     # values in the checkpointed frontier are in the writing run's units.
-    retry_clock: str = "wave"
+    retry_clock: str = _checked("wave", legal=("wave", "wall"))
     use_robots: bool = False
     robot: str = DEFAULT_ROBOT
-    url_key: str = "parity"  # 'parity' (url::Url equality) | 'surt'
+    url_key: str = _checked("parity", legal=("parity", "surt"))  # url::Url equality | SURT
     # --- scale knobs (north_star extensions; no reference analog) ---
-    per_host_budget: int | None = None  # max URLs per host per wave
+    per_host_budget: int | None = _checked(None, least=0)  # max URLs per host per wave
     wave_seconds: float = 30.0  # politeness: budget = wave_seconds/crawl_delay
-    # bucket count of a corpus written by sources.corpus.write_bucketed_corpus
-    # (partition column bucket = pmod(xxhash64(url), corpus_buckets)). When
-    # >0 and the corpus carries a 'bucket' column, each wave's fetch join
-    # prunes the corpus scan to the wave's buckets (storage-partitioned
-    # join): at 100 TB a wave touching k of B buckets reads k/B of the
-    # corpus instead of all of it, every wave. 0 = plain url join.
-    corpus_buckets: int = 0
     # partitioned bloom seen-sidecar (north_rule): >0 wires operators.bloom
     # into the per-wave anti-join — candidates the bloom clears as
     # definitely-new skip the exact anti-join shuffle. 0 = exact-only.
-    bloom_partitions: int = 0
-    bloom_expected_per_partition: int = 1_000_000
-    bloom_fp_rate: float = 0.01
+    bloom_partitions: int = _checked(0, least=0)
+    bloom_expected_per_partition: int = _checked(1_000_000, least=1)
     # the one bloom probe: links cogroup with bank rows on pid, and the
     # bank is never driver-materialized (operators/bloom.py). 'copartition'
     # is the only legal value.
@@ -191,10 +194,11 @@ class CrawlJob:
     # on every seen-compaction wave (which drops the parts the tail reads);
     # in between, bloom-cleared rows are exact-checked against the
     # ≤K-frame uncovered tail (correct AND amortizes the bank update)
-    bloom_fold_every: int = 4
+    bloom_fold_every: int = _checked(4, least=1)
     # compact the seen-delta chain every K waves: the anti-join otherwise
-    # scans one delta frame per past wave (O(waves²) over a long crawl)
-    seen_compact_every: int = 8
+    # scans one delta frame per past wave (O(waves²) over a long crawl).
+    # 0 = never compact.
+    seen_compact_every: int = _checked(8, least=0)
     # fetch-side corpus cache budget (bytes): when the optimizer's size
     # estimate for the corpus is at or below this, run_crawl persists the
     # fetch projection (url, html[, warc_ts]) once — hash-partitioned and
@@ -205,15 +209,16 @@ class CrawlJob:
     # exceeds any sane budget and the scan-per-wave fetch (bucket-pruned
     # or raw corpus) stays in effect — this knob only changes the physical
     # fetch plan, never results. 0 disables.
-    corpus_cache_max_bytes: int = 8 << 30
-    max_iterations: int = 10_000
+    corpus_cache_max_bytes: int = _checked(8 << 30, least=0)
+    max_iterations: int = _checked(10_000, least=0)
     # extraction program surface (§2.10): 'text' = flagship byte-exact
     # extraction; 'url' = the reference's default JS program
-    # (return window.location.href ≡ F.col("url")); 'side' = run the
-    # Selenium-IDE subset program in side_program against each fetched page
+    # (return window.location.href ≡ F.col("url")); 'title' / 'html' = the
+    # recognized one-liner JS programs; 'side' = run the Selenium-IDE
+    # subset program in side_program against each fetched page
     # (P3, src/backend.rs:173-184); run_crawl's data_expr argument
     # overrides with an arbitrary Column
-    check: str = "text"
+    check: str = _checked("text", legal=("text", "url", "title", "html", "side"))
     # revisit semantics: a WARC corpus may hold several captures of one
     # URL; True = the fetch keeps only the LATEST capture per URL
     # (wave-sized window in the fetch join — sources/corpus.py
@@ -222,16 +227,20 @@ class CrawlJob:
     # on automatically for .warc corpora.
     dedup_captures: bool = False
     side_program: str | None = None
-    # CLI-fidelity no-ops (browser fetch does not exist here)
-    browser: str = "firefox"
-    proxy: dict | None = None
-    page_load_timeout_ms: int = 10_000
 
     def __post_init__(self) -> None:
-        if self.engines is not None and self.engines < 1:
-            raise ValueError(f"engines must be >= 1 or None, got {self.engines}")
-        if self.bloom_fold_every < 1:
-            raise ValueError(f"bloom_fold_every must be >= 1, got {self.bloom_fold_every}")
+        for f in fields(self):
+            value = getattr(self, f.name)
+            least, legal = f.metadata.get("least"), f.metadata.get("legal")
+            if legal is not None and value not in legal:
+                raise ValueError(f"{f.name} must be one of {legal}, got {value!r}")
+            if least is not None and value is not None and value < least:
+                raise ValueError(f"{f.name} must be >= {least}, got {value}")
+        self.retry_policy = RetryPolicy(self.retry_policy)
+        if self.check == "side" and self.side_program is None:
+            raise ValueError("check='side' needs a side_program")
+        if not self.wave_seconds > 0:
+            raise ValueError(f"wave_seconds must be > 0, got {self.wave_seconds}")
         if self.bloom_probe_mode != "copartition":
             raise ValueError(
                 f"bloom_probe_mode={self.bloom_probe_mode!r}: the broadcast probe "
@@ -242,7 +251,9 @@ class CrawlJob:
 
 def job_from_argv(argv: list[str]) -> CrawlJob:
     """C1 — the reference's 16-option CLI schema (src/cfg.rs:25-98) mapped
-    onto the spark-submit entry."""
+    onto the spark-submit entry, plus the flags that set the scale knobs.
+    Every flag that sets a ``CrawlJob`` field is parsed here, so the job is
+    built (and checked) once."""
     # Option spellings mirror the reference's clap schema exactly
     # (src/cfg.rs:25-98): kebab-case longs except the three it spells with
     # underscores (--retry_threshold, --use_robots_txt, --robot), plus its
@@ -259,7 +270,7 @@ def job_from_argv(argv: list[str]) -> CrawlJob:
     p.add_argument("--retry-policy", default="first")
     p.add_argument("--retry-count", type=int, default=3)
     # reference spelling --retry_threshold, default 10000 ms
-    # (src/cfg.rs:76-77); converted below into the loop's logical-wave unit
+    # (src/cfg.rs:76-77); converted below into the retry clock's unit
     p.add_argument(
         "--retry_threshold",
         "--retry-threshold-milis",
@@ -267,6 +278,10 @@ def job_from_argv(argv: list[str]) -> CrawlJob:
         type=float,
         default=10_000.0,
     )
+    # O3 ripeness clock: 'wave' = deterministic logical waves (default);
+    # 'wall' = reference parity, --retry_threshold honored in real ms
+    # against time.time() (src/retry.rs:38-46)
+    p.add_argument("--retry-clock", default="wave")
     p.add_argument(
         "--use_robots_txt",
         "--use-robots-txt",
@@ -274,14 +289,19 @@ def job_from_argv(argv: list[str]) -> CrawlJob:
         action="store_true",
     )
     p.add_argument("--robot", "--robot-name", dest="robot_name", default=DEFAULT_ROBOT)
-    p.add_argument("-b", "--browser", default="firefox")
-    p.add_argument("--proxy")
-    p.add_argument("-p", "--page-load-timeout", type=int, default=10_000)
-    # accepted for command-line fidelity; a corpus-join fetch has no driver
-    p.add_argument("-w", "--webdriver-url", default="http://localhost:4444")
-    p.add_argument("--url-key", default="parity", choices=["parity", "surt"])
+    # the reference's WebDriver settings (src/cfg.rs:216-289): validated
+    # like the reference does, so its command lines run unchanged, but a
+    # corpus-join fetch has no browser, proxy, page load or driver
+    no_effect = "accepted and validated; has no effect on a corpus-join fetch"
+    p.add_argument("-b", "--browser", default="firefox", help=no_effect)
+    p.add_argument("--proxy", help=no_effect)
+    p.add_argument("-p", "--page-load-timeout", type=int, default=10_000, help=no_effect)
+    p.add_argument("-w", "--webdriver-url", default="http://localhost:4444", help=no_effect)
+    p.add_argument("--url-key", default="parity")
     p.add_argument("-c", "--check-file")
     p.add_argument("--check-file-format")
+    p.add_argument("--bloom-partitions", type=int, default=0)
+    p.add_argument("--seen-compact-every", type=int, default=8)
     a = p.parse_args(argv)
 
     filters: list[Filter] = [RegexFilter(rx) for rx in a.ignore]
@@ -291,11 +311,9 @@ def job_from_argv(argv: list[str]) -> CrawlJob:
             raise ValueError(f"Failed to parse a filter: {spec!r}")
         filters.append(f)
 
-    proxy = None
-    if a.proxy is not None:
-        proxy = parse_proxy(a.proxy)
-        if proxy is None:
-            raise ValueError("Failed to parse proxy setting")
+    parse_browser(a.browser)
+    if a.proxy is not None and parse_proxy(a.proxy) is None:
+        raise ValueError("Failed to parse proxy setting")
 
     seeds = list(a.urls)
     if a.seed_file:
@@ -326,10 +344,13 @@ def job_from_argv(argv: list[str]) -> CrawlJob:
         # overridable with an arbitrary Column via run_crawl(data_expr=...)
         check = "text"
 
-    # --retry-threshold-milis is wall-clock in the reference; the loop's
-    # retry_threshold is in logical waves (one wave ≈ wave_seconds of
-    # dispatch work), so convert ms → waves against the default cadence.
-    wave_seconds = CrawlJob.__dataclass_fields__["wave_seconds"].default
+    # --retry-threshold-milis is wall-clock in the reference. The wall
+    # clock takes it in seconds; the wave clock counts logical waves (one
+    # wave ≈ wave_seconds of dispatch work), so ms → waves against the
+    # default cadence.
+    threshold = a.retry_threshold_milis / 1000.0
+    if a.retry_clock == "wave":
+        threshold /= CrawlJob.__dataclass_fields__["wave_seconds"].default
     return CrawlJob(
         check=check,
         side_program=side_program,
@@ -339,11 +360,11 @@ def job_from_argv(argv: list[str]) -> CrawlJob:
         engines=a.count_searchers,
         retry_policy=parse_retry_policy(a.retry_policy),
         retry_count=a.retry_count,
-        retry_threshold=a.retry_threshold_milis / 1000.0 / wave_seconds,
+        retry_threshold=threshold,
+        retry_clock=a.retry_clock,
         use_robots=a.use_robots_txt,
         robot=a.robot_name,
         url_key=a.url_key,
-        browser=parse_browser(a.browser),
-        proxy=proxy,
-        page_load_timeout_ms=a.page_load_timeout,
+        bloom_partitions=a.bloom_partitions,
+        seen_compact_every=a.seen_compact_every,
     )

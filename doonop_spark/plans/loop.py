@@ -61,7 +61,7 @@ from doonop_spark.functions.canonical import (
 from doonop_spark.functions.extract import extract_page_udf
 from doonop_spark.operators.bloom import SeenBloom
 from doonop_spark.operators.dedup import SEEN_COLS, anti_join_seen, dedup_within_batch
-from doonop_spark.operators.filters import apply_link_filters
+from doonop_spark.operators.filters import apply_link_filters, clean_seeds
 from doonop_spark.operators.robots import compile_robots, robots_gate
 from doonop_spark.operators.schedule import (
     policy_order,
@@ -76,11 +76,7 @@ from doonop_spark.sources.corpus import (
     choose_fetch_side,
     latest_capture,
 )
-from doonop_spark.sources.seeds import (
-    seed_frontier,
-    seed_frontier_distributed,
-    seeds_from_list,
-)
+from doonop_spark.sources.seeds import seed_frontier, seed_frontier_distributed
 from doonop_spark.sources.tables import MemoryTableIO, TableIO
 
 __all__ = ["Statistics", "CrawlResult", "WaveState", "run_crawl"]
@@ -205,7 +201,7 @@ def _check_program(job: CrawlJob, data_expr: Column | None) -> tuple[Column | No
     if job.check == "side":
         from doonop_spark.functions.side import side_data_udf
 
-        check = side_data_udf(job.side_program or "{}")(F.col("url"), F.col("html"))
+        check = side_data_udf(job.side_program)(F.col("url"), F.col("html"))
     elif job.check == "title":
         check = F.regexp_extract(
             F.decode(F.col("html"), "UTF-8"),
@@ -568,6 +564,7 @@ def run_crawl(
     corpus: DataFrame,
     robots: DataFrame | None = None,
     fault_schedule: DataFrame | None = None,
+    seed_urls: DataFrame | None = None,
     io: TableIO | None = None,
     data_expr: Column | None = None,
     resume: bool = False,
@@ -575,6 +572,16 @@ def run_crawl(
     clock=None,
 ) -> CrawlResult:
     """Crawl ``corpus`` from ``job.seeds``; see module docstring.
+
+    ``corpus`` is the page table every fetch joins. A layout written by
+    ``write_bucketed_corpus`` and read by ``read_bucketed_corpus`` carries
+    its bucket count, and each wave's fetch then scans only the wave's
+    buckets. ``robots`` is the ``(host, robots_txt)`` table that
+    ``job.use_robots`` needs. ``fault_schedule`` ``(url, attempt, fault)``
+    injects fetch faults. ``seed_urls`` is an optional DataFrame with a
+    ``url`` column of extra seeds (e.g. sitemap-expanded), cleaned and
+    merged into the wave-0 frontier without reaching the driver; invalid
+    URLs in it are dropped, as for discovered links.
 
     ``data_expr`` is the check-program surface (§2.10): a Column over the
     fetched+extracted wave that becomes the collected ``data`` value. The
@@ -602,9 +609,7 @@ def run_crawl(
             "be silently admitted"
         )
     # resolved before seeding, so the seed frontier observes its buckets
-    side = choose_fetch_side(
-        corpus, job.corpus_buckets, job.corpus_cache_max_bytes, job.dedup_captures
-    )
+    side = choose_fetch_side(corpus, job.corpus_cache_max_bytes, job.dedup_captures)
 
     # ---- init / resume -----------------------------------------------------
     st = WaveState.load(io) if resume else None
@@ -616,12 +621,12 @@ def run_crawl(
     else:
         st = WaveState(iteration=0, seq_counter=0, collected=0, fresh_count=0,
                        frontier_rows=0, frontier_buckets=None, stats=Statistics())
-        cleaned = seeds_from_list(job.seeds, job.filters)
-        if job.seed_frame is not None:
+        cleaned = clean_seeds(job.seeds, job.filters)
+        if seed_urls is not None:
             # distributed seeding (S6 at scale): sitemap-expanded seeds
             # stay a DataFrame end-to-end
             seeds = seed_frontier_distributed(
-                spark, cleaned, job.seed_frame, job.url_key, job.filters
+                spark, cleaned, seed_urls, job.url_key, job.filters
             )
         else:
             seeds = seed_frontier(spark, cleaned, job.url_key)
@@ -664,7 +669,6 @@ def run_crawl(
             st.iteration,
             n_partitions=job.bloom_partitions,
             expected_per_partition=job.bloom_expected_per_partition,
-            fp_rate=job.bloom_fp_rate,
             fold_every=job.bloom_fold_every,
         )
     check, data = _check_program(job, data_expr)

@@ -25,6 +25,7 @@ wave's fetch joins (:func:`choose_fetch_side`) and the revisit rule
 
 from __future__ import annotations
 
+import json
 import logging
 from dataclasses import dataclass
 
@@ -50,6 +51,7 @@ __all__ = [
 ]
 
 _EPOCH = "2024-01-01 00:00:00"
+_SIDECAR = "_doonop_buckets.json"
 
 
 def host_name(h: Column) -> Column:
@@ -230,31 +232,41 @@ def write_bucketed_corpus(corpus: DataFrame, path: str, n_buckets: int = 64) -> 
     # urls to partition values that don't exist, silently turning every
     # fetch into a miss. The sidecar (underscore-prefixed: invisible to
     # Spark's file listing, like _SUCCESS) lets readers recover the true B.
-    import json as _json
-    import os as _os
+    fs, sidecar = _sidecar(corpus.sparkSession, path)
+    out = fs.create(sidecar, True)
+    try:
+        out.write(json.dumps({"n_buckets": n_buckets}).encode())
+    finally:
+        out.close()
 
-    with open(_os.path.join(path, "_doonop_buckets.json"), "w") as f:
-        _json.dump({"n_buckets": n_buckets}, f)
+
+def _sidecar(spark: SparkSession, path: str):
+    """``(FileSystem, Path)`` of a bucketed layout's bucket-count sidecar,
+    through Hadoop's filesystem API so any URI the corpus lives on (hdfs://,
+    s3a://, file://, a plain path) holds it next to the data."""
+    sidecar = spark._jvm.org.apache.hadoop.fs.Path(path, _SIDECAR)
+    return sidecar.getFileSystem(spark._jsc.hadoopConfiguration()), sidecar
 
 
 def read_bucketed_corpus(spark: SparkSession, path: str) -> DataFrame:
     """Read a corpus written by :func:`write_bucketed_corpus`; the
     ``bucket`` partition column stays on the frame so the crawl loop can
     push a pruning predicate into the scan. The layout's bucket count is
-    attached as column metadata on ``bucket`` (key ``n_buckets``) so the
-    loop can validate — or derive — B instead of trusting a flag."""
-    import json as _json
-    import os as _os
-
+    attached as column metadata on ``bucket`` (key ``n_buckets``), so the
+    fetch prunes with the modulus the layout was written with. Any other
+    parquet path reads as is."""
     df = spark.read.parquet(path)
-    sidecar = _os.path.join(path, "_doonop_buckets.json")
-    if _os.path.exists(sidecar) and "bucket" in df.columns:
-        with open(sidecar) as f:
-            n = int(_json.load(f)["n_buckets"])
-        df = df.withColumn(
-            "bucket", F.col("bucket").alias("bucket", metadata={"n_buckets": n})
-        )
-    return df
+    if "bucket" not in df.columns:
+        return df
+    fs, sidecar = _sidecar(spark, path)
+    if not fs.exists(sidecar):
+        return df
+    stream = fs.open(sidecar)
+    try:
+        n = int(json.loads(bytes(stream.readAllBytes()))["n_buckets"])
+    finally:
+        stream.close()
+    return df.withColumn("bucket", F.col("bucket").alias("bucket", metadata={"n_buckets": n}))
 
 
 def corpus_bucket_count(corpus: DataFrame) -> int | None:
@@ -295,7 +307,6 @@ class FetchSide:
 
 def choose_fetch_side(
     corpus: DataFrame,
-    corpus_buckets: int = 0,
     cache_max_bytes: int = 0,
     dedup_captures: bool = False,
 ) -> FetchSide:
@@ -307,26 +318,15 @@ def choose_fetch_side(
        (MEMORY_AND_DISK), hash-partitioned and sorted by url, so every
        wave's SortMergeJoin reads it with no corpus-side Exchange or Sort
        (guide §5: reuse × recompute cost). At 100 TB it never fits.
-    2. **bucketed**: a corpus written by :func:`write_bucketed_corpus`,
-       joined on ``(bucket, url)``; each wave's bucket set is pushed into
-       the scan as a partition predicate (the 100 TB plan).
-    3. **raw**: the corpus, joined on url.
-
-    ``corpus_buckets`` is validated against, or when 0 derived from, the
-    layout's own B (:func:`corpus_bucket_count`): pruning with the wrong
-    modulus would silently miss every page.
+    2. **bucketed**: a corpus read by :func:`read_bucketed_corpus`, whose
+       ``bucket`` column carries the layout's B; joined on
+       ``(bucket, url)``, and each wave's bucket set is pushed into the
+       scan as a partition predicate (the 100 TB plan).
+    3. **raw**: the corpus, joined on url. A ``bucket`` column whose B is
+       unknown joins raw too: pruning with a guessed modulus would
+       silently miss every page.
     """
-    layout_b = corpus_bucket_count(corpus)
-    if layout_b is not None:
-        if corpus_buckets == 0:
-            corpus_buckets = layout_b  # bucketed corpus ⇒ prune by default
-        elif corpus_buckets != layout_b:
-            raise ValueError(
-                f"corpus_buckets={corpus_buckets} but the corpus layout was "
-                f"written with n_buckets={layout_b}; pmod(xxhash64(url), "
-                f"{corpus_buckets}) would match no stored partition"
-            )
-    n_buckets = corpus_buckets if corpus_buckets > 0 and "bucket" in corpus.columns else 0
+    n_buckets = corpus_bucket_count(corpus) or 0
 
     est = None
     if cache_max_bytes > 0:

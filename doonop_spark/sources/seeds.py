@@ -13,27 +13,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from doonop_spark.functions.canonical import host_expr, url_hash_col
-from doonop_spark.operators.filters import Filter, clean_seeds
+from doonop_spark.operators.filters import Filter
 
 __all__ = [
-    "seeds_from_list",
-    "seeds_from_file",
     "seed_frontier",
     "seed_frontier_distributed",
 ]
-
-
-def seeds_from_list(urls: list[str], filters: list[Filter]) -> list[str]:
-    """S1 — canonicalize + clean (invalid URL ⇒ hard error, as in the
-    reference's parse_urls)."""
-    return clean_seeds(urls, filters)
-
-
-def seeds_from_file(path: str, filters: list[Filter], extra: list[str] = ()) -> list[str]:
-    """S2 — url-per-line file, combined with CLI seeds then cleaned once."""
-    with open(path) as f:
-        lines = [ln.strip() for ln in f if ln.strip()]
-    return clean_seeds(list(extra) + lines, filters)
 
 
 def _frontier_rows(seeds: DataFrame) -> DataFrame:
@@ -88,7 +73,7 @@ def seed_frontier_distributed(
     order (the sort pins the initial LIFO order, ``src/cfg.rs:338-342``).
     One difference by design: invalid URLs in ``extra_urls`` are *dropped*
     (they are discovered content, like links — F5), while invalid CLI
-    seeds still raise in ``seeds_from_list`` upstream.
+    seeds still raise in ``clean_seeds`` upstream.
 
     Scale shape: the sorted rank is range-repartition + within-partition
     sort + the monotonically_increasing_id (partition, offset)

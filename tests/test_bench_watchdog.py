@@ -10,12 +10,13 @@ adapts to a time budget instead of assuming the host's speed.
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import bench  # noqa: E402
 

@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 from doonop_spark.plans.job import CrawlJob, RetryPolicy
 from doonop_spark.plans.loop import run_crawl
 from doonop_spark.sources.corpus import fixture_site_corpus, synthetic_corpus
+from doonop_spark.sources.tables import MemoryTableIO
 
 
 def mock_corpus(spark, pages: dict[str, list[str]], data: dict[str, str] | None = None):
@@ -34,6 +35,26 @@ def mock_corpus(spark, pages: dict[str, list[str]], data: dict[str, str] | None 
         F.lit("").alias("text"),
         F.lit("en").alias("lang"),
     )
+
+
+class FetchPlans(MemoryTableIO):
+    """MemoryTableIO that records the executed plan of every wave's fetch."""
+
+    def __init__(self):
+        super().__init__()
+        self.plans = []
+
+    def materialize(self, df, name, iteration):
+        out = super().materialize(df, name, iteration)
+        if name == "wave_fetched":
+            self.plans.append(df._jdf.queryExecution().executedPlan().toString())
+        return out
+
+
+def bucket_pruned(plan: str) -> bool:
+    """The scan's PartitionFilters name the ``bucket`` column."""
+    pf = plan.split("PartitionFilters: [", 1)
+    return len(pf) == 2 and "bucket" in pf[1].split("]", 1)[0]
 
 
 def collected_data(res):
@@ -412,7 +433,6 @@ def test_fetch_side_crawl_identical(spark, tmp_path, side):
         read_bucketed_corpus,
         write_bucketed_corpus,
     )
-    from doonop_spark.sources.tables import MemoryTableIO
 
     pages = mock_corpus(
         spark,
@@ -440,17 +460,6 @@ def test_fetch_side_crawl_identical(spark, tmp_path, side):
     faults = spark.createDataFrame(
         [("http://flaky.com/", 1, "timeout")], "url string, attempt int, fault string"
     )
-
-    class FetchPlans(MemoryTableIO):
-        def __init__(self):
-            super().__init__()
-            self.plans = []
-
-        def materialize(self, df, name, iteration):
-            out = super().materialize(df, name, iteration)
-            if name == "wave_fetched":
-                self.plans.append(df._jdf.queryExecution().executedPlan().toString())
-            return out
 
     io = FetchPlans()
     job = CrawlJob(
@@ -483,10 +492,6 @@ def test_fetch_side_crawl_identical(spark, tmp_path, side):
         "http://gone.com/404",
     ]
 
-    def bucket_pruned(plan):
-        pf = plan.split("PartitionFilters: [", 1)
-        return len(pf) == 2 and "bucket" in pf[1].split("]", 1)[0]
-
     assert len(io.plans) == res.iterations
     for plan in io.plans:
         assert ("InMemoryTableScan" in plan) == (side == "cached"), plan
@@ -501,9 +506,10 @@ def test_fetch_side_crawl_identical(spark, tmp_path, side):
 
 def test_bucketed_corpus_wrong_b_fails_loudly(spark, tmp_path):
     """pmod(xxhash64(url), B') with B' ≠ layout B maps urls to partition
-    values that don't exist — every fetch silently misses. The loop must
-    read the layout's own bucket count (sidecar → column metadata) and
-    refuse a mismatched flag instead."""
+    values that don't exist — every fetch would silently miss. So no
+    caller passes B: the loop reads the layout's own bucket count (sidecar
+    → column metadata), prunes correctly and matches the plain-corpus
+    run."""
     from doonop_spark.sources.corpus import (
         read_bucketed_corpus,
         write_bucketed_corpus,
@@ -515,17 +521,46 @@ def test_bucketed_corpus_wrong_b_fails_loudly(spark, tmp_path):
     bcorpus = read_bucketed_corpus(spark, path)
     seeds = ["http://h0000.example/p0", "http://h0001.example/p0"]
 
-    with pytest.raises(ValueError, match="written with n_buckets=16"):
-        run_crawl(spark, CrawlJob(seeds=seeds, engines=8, corpus_buckets=8), bcorpus)
-
-    # ...and with no flag at all, B derives from the layout: the crawl
-    # prunes correctly and matches the plain-corpus run
     base = run_crawl(spark, CrawlJob(seeds=seeds, engines=8), corpus)
     derived = run_crawl(spark, CrawlJob(seeds=seeds, engines=8), bcorpus)
     assert sorted((r.url, r.data) for r in base.results.collect()) == sorted(
         (r.url, r.data) for r in derived.results.collect()
     )
     assert vars(base.stats) == vars(derived.stats)
+
+
+def test_bucketed_corpus_on_uri_path(spark, tmp_path):
+    """A bucketed layout written and read through a URI (here file://, as
+    hdfs:// or s3a:// on a cluster) keeps its bucket-count sidecar next to
+    the data: the reader takes B from it, and every wave's fetch scan is
+    pruned by a bucket partition filter. All 20 pages are reachable from
+    the two roots, so a wrong B would show as fetch errors."""
+    from doonop_spark.sources.corpus import (
+        corpus_bucket_count,
+        read_bucketed_corpus,
+        write_bucketed_corpus,
+    )
+
+    uri = (tmp_path / "b16").as_uri()
+    assert uri.startswith("file://")
+    write_bucketed_corpus(synthetic_corpus(spark, n_hosts=2, n_pages=20), uri, n_buckets=16)
+    corpus = read_bucketed_corpus(spark, uri)
+    assert corpus_bucket_count(corpus) == 16
+    assert "_doonop_buckets.json" not in " ".join(corpus.inputFiles())
+
+    io = FetchPlans()
+    seeds = ["http://h0000.example/p0", "http://h0001.example/p0"]
+    job = CrawlJob(seeds=seeds, engines=8, corpus_cache_max_bytes=0)
+    res = run_crawl(spark, job, corpus, io=io)
+    assert res.extra == {"fetch_side": "bucketed"}
+    assert vars(res.stats) == {
+        "count_errors": 0,
+        "count_retries": 0,
+        "count_visited": 20,
+        "count_collected": 20,
+    }
+    assert len(io.plans) == res.iterations > 1
+    assert all(bucket_pruned(plan) for plan in io.plans), io.plans
 
 
 def test_seen_compaction_identical_and_bounded(spark, tmp_path):

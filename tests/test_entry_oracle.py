@@ -5,12 +5,13 @@ values) at sf0.01."""
 
 from __future__ import annotations
 
+import os
 import sys
 
 import duckdb
 import pytest
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import __spark_entry__ as entrymod
 
 SF_DIR = "/root/testdata/sf0.01"

@@ -108,7 +108,7 @@ def test_job_from_argv_full():
     )
     assert job.engines == 4 and job.limit == 10
     assert job.retry_policy == RetryPolicy.FIRST and job.retry_count == 5
-    assert job.use_robots and job.proxy == {"kind": "direct"}
+    assert job.use_robots
     # squash: one RegexFilter + ONE union DomainFilter
     from doonop_spark.operators.filters import DomainFilter, RegexFilter
 
@@ -144,7 +144,6 @@ def test_job_from_argv_reference_spellings():
         ]
     )
     assert job.engines == 2 and job.limit == 7
-    assert job.browser == "chrome" and job.page_load_timeout_ms == 5000
     assert job.use_robots and job.robot == "MyBot"
     assert job.retry_count == 2
     # 60000 ms / 1000 / wave_seconds(30) = 2 logical waves
@@ -153,12 +152,11 @@ def test_job_from_argv_reference_spellings():
 
 def test_job_from_argv_defaults_match_reference():
     """Default config parity (src/cfg.rs): retry_policy=first,
-    retry_threshold=10000ms, retry_count=3, browser=firefox, robots off."""
+    retry_threshold=10000ms, retry_count=3, robots off."""
     job = job_from_argv(["http://a.com"])
     assert job.retry_policy == RetryPolicy.FIRST
     assert job.retry_count == 3
     assert job.retry_threshold == pytest.approx(10.0 / 30.0)
-    assert job.browser == "firefox"
     assert not job.use_robots
     assert job.robot == "DoonopRobot"
 
@@ -170,7 +168,34 @@ _EDGE_KNOBS = [
     ("bloom_fold_every", -1, "bloom_fold_every must be >= 1"),
     ("bloom_probe_mode", "auto", "broadcast probe was removed"),
     ("bloom_probe_mode", "broadcast", "broadcast probe was removed"),
+    ("retry_policy", "bogus", "retry_policy must be one of"),
+    ("retry_clock", "Wave", "retry_clock must be one of"),
+    ("url_key", "SURT", "url_key must be one of"),
+    ("check", "js", "check must be one of"),
+    ("check", "side", "check='side' needs a side_program"),
+    ("limit", -1, "limit must be >= 0"),
+    ("retry_count", -1, "retry_count must be >= 0"),
+    ("retry_threshold", -0.5, "retry_threshold must be >= 0"),
+    ("per_host_budget", -1, "per_host_budget must be >= 0"),
+    ("bloom_partitions", -1, "bloom_partitions must be >= 0"),
+    ("seen_compact_every", -1, "seen_compact_every must be >= 0"),
+    ("corpus_cache_max_bytes", -1, "corpus_cache_max_bytes must be >= 0"),
+    ("max_iterations", -1, "max_iterations must be >= 0"),
+    ("wave_seconds", 0, "wave_seconds must be > 0"),
+    ("wave_seconds", -30.0, "wave_seconds must be > 0"),
+    ("bloom_expected_per_partition", 0, "bloom_expected_per_partition must be >= 1"),
 ]
+
+# the flag that sets each knob, for the values a command line can carry
+_KNOB_FLAGS = {
+    "engines": "-j",
+    "limit": "-l",
+    "retry_count": "--retry-count",
+    "retry_clock": "--retry-clock",
+    "url_key": "--url-key",
+    "bloom_partitions": "--bloom-partitions",
+    "seen_compact_every": "--seen-compact-every",
+}
 
 
 @pytest.mark.parametrize(
@@ -179,10 +204,44 @@ _EDGE_KNOBS = [
 def test_crawl_job_rejects_edge_knob_values(knob, value, match):
     """Edge-case knob values raise at construction instead of being
     reinterpreted: ``engines=0`` used to schedule nothing and return an
-    empty crawl, ``bloom_fold_every=0`` used to fold every wave."""
+    empty crawl, ``bloom_fold_every=0`` used to fold every wave,
+    ``retry_clock="Wave"`` ran the wall clock, ``retry_policy="bogus"``
+    ran RetryLast, ``wave_seconds=0`` made every Crawl-delay budget 1 and
+    a negative ``bloom_partitions`` turned the bloom off."""
     with pytest.raises(ValueError, match=match):
         CrawlJob(seeds=["http://a.com"], **{knob: value})
-    if knob == "engines":  # the CLI's -j reaches the same check
+    if knob in _KNOB_FLAGS:  # the command line reaches the same check
         with pytest.raises(ValueError, match=match):
-            job_from_argv(["-j", str(value), "http://a.com"])
-    assert CrawlJob(engines=None, bloom_fold_every=1, bloom_probe_mode="copartition")
+            job_from_argv([_KNOB_FLAGS[knob], str(value), "http://a.com"])
+    if knob == "retry_threshold":  # --retry_threshold is in milliseconds
+        with pytest.raises(ValueError, match=match):
+            job_from_argv(["--retry_threshold", "-500", "http://a.com"])
+
+
+def test_crawl_job_accepts_documented_edge_values():
+    """Zero is legal wherever it means "off" or is a real setting, None
+    wherever it lifts a bound; a ``dataclasses.replace`` runs the checks
+    again."""
+    import dataclasses
+
+    job = CrawlJob(
+        engines=None,
+        limit=0,
+        retry_policy="last",
+        retry_count=0,
+        retry_clock="wall",
+        url_key="surt",
+        per_host_budget=0,
+        bloom_partitions=0,
+        bloom_expected_per_partition=1,
+        bloom_fold_every=1,
+        seen_compact_every=0,
+        corpus_cache_max_bytes=0,
+        max_iterations=0,
+        check="side",
+        side_program="{}",
+    )
+    assert job.retry_policy is RetryPolicy.LAST
+    assert dataclasses.replace(job, dedup_captures=True).dedup_captures
+    with pytest.raises(ValueError, match="engines must be >= 1"):
+        dataclasses.replace(job, engines=0)
