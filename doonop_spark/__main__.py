@@ -44,6 +44,7 @@ from doonop_spark.plans.job import job_from_argv
 from doonop_spark.plans.loop import run_crawl
 from doonop_spark.sources.corpus import latest_capture, read_bucketed_corpus
 from doonop_spark.sources.tables import open_table_io
+from doonop_spark.sources.warc import _local_path
 
 
 def _builder():
@@ -99,6 +100,17 @@ def main(argv: list[str] | None = None) -> int:
             file=sys.stderr,
         )
         return 2
+
+    # the archive sinks write through a mounted filesystem; refuse any
+    # other scheme now rather than after the whole crawl has run
+    for flag, out in (("--wet-out", ours.wet_out), ("--wat-out", ours.wat_out)):
+        if not out:
+            continue
+        try:
+            _local_path(out)
+        except NotImplementedError as e:
+            print(f"error: {flag}: {e}", file=sys.stderr)
+            return 2
 
     spark = _builder().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")

@@ -50,6 +50,11 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from doonop_spark.sources.corpus import (
+    _read_bucket_count,
+    _write_bucket_count,
+    bucket_expr,
+)
 from doonop_spark.sources.warc import (
     _glob_paths,
     _http_body,
@@ -199,7 +204,7 @@ def cdx_index(
                     yield pd.DataFrame(rows, columns=cols)
 
     parsed = pdfp.mapInPandas(parse, schema=_CDX_SCHEMA)
-    ts = F.to_timestamp(F.col("__ts"))
+    ts = F.try_to_timestamp(F.col("__ts"))
     # ts14 comes straight from the WARC-Date digits (UTC by spec) — not
     # from the parsed timestamp — so it is session-timezone-independent
     ts14 = F.substring(F.regexp_replace(F.col("__ts"), "[^0-9]", ""), 1, 14)
@@ -267,7 +272,7 @@ def fetch_cdx(cdx: DataFrame) -> DataFrame:
 
     pages = sel.mapInPandas(fetch, schema="url string, __ts string, html binary")
     return pages.select(
-        "url", F.to_timestamp(F.col("__ts")).alias("warc_ts"), "html"
+        "url", F.try_to_timestamp(F.col("__ts")).alias("warc_ts"), "html"
     )
 
 
@@ -403,7 +408,7 @@ def _parse_cdxj(raw: DataFrame) -> DataFrame:
     return raw.select(
         meta["url"].alias("url"),
         surt.alias("surt"),
-        F.to_timestamp(ts14, "yyyyMMddHHmmss").alias("warc_ts"),
+        F.try_to_timestamp(ts14, F.lit("yyyyMMddHHmmss")).alias("warc_ts"),
         ts14.alias("ts14"),
         meta["status"].alias("status"),
         meta["mime"].alias("mime"),
@@ -453,17 +458,19 @@ def write_cdx_parquet(cdx: DataFrame, out_dir: str, n_buckets: int = 64) -> None
     i.e. a lookup against the index of a 100 TB crawl touches a few MB.
     ``repartition(n_buckets, surt_bucket)`` makes one file per directory
     (the writer would otherwise emit one file per input task per bucket).
+    ``n_buckets`` is recorded in the same sidecar a bucketed corpus
+    carries, so :func:`lookup_cdx_parquet` probes with the index's own
+    modulus.
     """
     (
-        cdx.withColumn(
-            "surt_bucket", F.pmod(F.xxhash64("surt"), F.lit(n_buckets)).cast("int")
-        )
+        cdx.withColumn("surt_bucket", bucket_expr(F.col("surt"), n_buckets))
         .repartition(n_buckets, "surt_bucket")
         .sortWithinPartitions("surt", "ts14")
         .write.partitionBy("surt_bucket")
         .mode("overwrite")
         .parquet(out_dir)
     )
+    _write_bucket_count(cdx.sparkSession, out_dir, n_buckets)
 
 
 def read_cdx_parquet(spark: SparkSession, path: str) -> DataFrame:
@@ -472,25 +479,26 @@ def read_cdx_parquet(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.parquet(path)
 
 
-def lookup_cdx_parquet(
-    spark: SparkSession, path: str, surts: list[str], n_buckets: int = 64
-) -> DataFrame:
+def lookup_cdx_parquet(spark: SparkSession, path: str, surts: list[str]) -> DataFrame:
     """Point-lookup captures for a small set of SURTs out of the columnar
-    index. Recomputes each probe's bucket driver-side (cheap: len(surts)
-    hashes via one tiny local DataFrame) and pushes BOTH predicates —
-    ``surt_bucket IN (...)`` prunes directories, ``surt IN (...)`` skips
-    row groups within them. The plan's PartitionFilters line is the
-    receipt; tests assert only the probed buckets' files are read."""
-    probe = spark.createDataFrame([(s,) for s in surts], "surt string").select(
-        F.col("surt"), F.pmod(F.xxhash64("surt"), F.lit(n_buckets)).cast("int").alias("b")
-    )
-    pairs = probe.collect()  # bounded: one row per probed SURT
-    buckets = sorted({r["b"] for r in pairs})
-    keys = sorted({r["surt"] for r in pairs})
+    index. Recomputes each probe's bucket driver-side with the index's
+    recorded bucket count (cheap: len(surts) hashes via one tiny local
+    DataFrame) and pushes BOTH predicates — ``surt_bucket IN (...)``
+    prunes directories, ``surt IN (...)`` skips row groups within them.
+    The plan's PartitionFilters line is the receipt; tests assert only the
+    probed buckets' files are read. An index with no sidecar is filtered
+    on ``surt`` alone (correct, not pruned)."""
+    keys = sorted(set(surts))
     df = spark.read.parquet(path)
-    return df.filter(
-        F.col("surt_bucket").isin(buckets) & F.col("surt").isin(keys)
+    hit = df.filter(F.col("surt").isin(keys))
+    n_buckets = _read_bucket_count(spark, path)
+    if n_buckets is None:
+        return hit
+    probe = spark.createDataFrame([(s,) for s in keys], "surt string").select(
+        bucket_expr(F.col("surt"), n_buckets).alias("b")
     )
+    buckets = sorted({r["b"] for r in probe.collect()})  # one row per SURT
+    return hit.filter(F.col("surt_bucket").isin(buckets))
 
 
 def latest_capture(cdx: DataFrame) -> DataFrame:

@@ -230,9 +230,23 @@ def write_bucketed_corpus(corpus: DataFrame, path: str, n_buckets: int = 64) -> 
     )
     # B travels WITH the layout: pmod(xxhash64(url), B') with B' ≠ B maps
     # urls to partition values that don't exist, silently turning every
-    # fetch into a miss. The sidecar (underscore-prefixed: invisible to
-    # Spark's file listing, like _SUCCESS) lets readers recover the true B.
-    fs, sidecar = _sidecar(corpus.sparkSession, path)
+    # fetch into a miss.
+    _write_bucket_count(corpus.sparkSession, path, n_buckets)
+
+
+def _sidecar(spark: SparkSession, path: str):
+    """``(FileSystem, Path)`` of a bucketed layout's bucket-count sidecar,
+    through Hadoop's filesystem API so any URI the layout lives on (hdfs://,
+    s3a://, file://, a plain path) holds it next to the data. The name is
+    underscore-prefixed, so Spark's file listing skips it like _SUCCESS."""
+    sidecar = spark._jvm.org.apache.hadoop.fs.Path(path, _SIDECAR)
+    return sidecar.getFileSystem(spark._jsc.hadoopConfiguration()), sidecar
+
+
+def _write_bucket_count(spark: SparkSession, path: str, n_buckets: int) -> None:
+    """Record the bucket count a hash-bucketed layout at ``path`` was
+    written with (the corpus here, the columnar CDX index in cdx.py)."""
+    fs, sidecar = _sidecar(spark, path)
     out = fs.create(sidecar, True)
     try:
         out.write(json.dumps({"n_buckets": n_buckets}).encode())
@@ -240,12 +254,17 @@ def write_bucketed_corpus(corpus: DataFrame, path: str, n_buckets: int = 64) -> 
         out.close()
 
 
-def _sidecar(spark: SparkSession, path: str):
-    """``(FileSystem, Path)`` of a bucketed layout's bucket-count sidecar,
-    through Hadoop's filesystem API so any URI the corpus lives on (hdfs://,
-    s3a://, file://, a plain path) holds it next to the data."""
-    sidecar = spark._jvm.org.apache.hadoop.fs.Path(path, _SIDECAR)
-    return sidecar.getFileSystem(spark._jsc.hadoopConfiguration()), sidecar
+def _read_bucket_count(spark: SparkSession, path: str) -> int | None:
+    """The bucket count :func:`_write_bucket_count` recorded for the
+    layout at ``path``; None when the layout has no sidecar."""
+    fs, sidecar = _sidecar(spark, path)
+    if not fs.exists(sidecar):
+        return None
+    stream = fs.open(sidecar)
+    try:
+        return int(json.loads(bytes(stream.readAllBytes()))["n_buckets"])
+    finally:
+        stream.close()
 
 
 def read_bucketed_corpus(spark: SparkSession, path: str) -> DataFrame:
@@ -258,14 +277,9 @@ def read_bucketed_corpus(spark: SparkSession, path: str) -> DataFrame:
     df = spark.read.parquet(path)
     if "bucket" not in df.columns:
         return df
-    fs, sidecar = _sidecar(spark, path)
-    if not fs.exists(sidecar):
+    n = _read_bucket_count(spark, path)
+    if n is None:
         return df
-    stream = fs.open(sidecar)
-    try:
-        n = int(json.loads(bytes(stream.readAllBytes()))["n_buckets"])
-    finally:
-        stream.close()
     return df.withColumn("bucket", F.col("bucket").alias("bucket", metadata={"n_buckets": n}))
 
 

@@ -31,7 +31,17 @@ apply because file bytes never enter a row. Parsing is stdlib-only
 
 A corrupt record mid-archive does not poison the tail: the parser
 resyncs to the next ``\\r\\nWARC/`` marker and counts the skipped bytes
-(logged per file).
+(logged per file), and a malformed ``WARC-Date`` reads as a null
+``warc_ts``.
+
+Sinks (``write_wet``, ``write_warc_dir`` and ``wat.write_wat``) are one
+``select`` each over one writer, :func:`_write_parts`: one part file per
+partition under a local path or ``file:`` URI (other schemes raise
+before any job runs), a ``warcinfo`` lead record, then one gzip member
+per record framed by :func:`_warc_record`. Every capture record carries a
+deterministic ``WARC-Record-ID`` and a ``WARC-Date`` from
+:func:`warc_date`: the instant in UTC whatever the session time zone, the
+epoch for a null time.
 
 ``write_warc`` is the deterministic fixture generator (exact inverse of
 the reader for the emitted subset), so round-trips are byte-asserted in
@@ -44,11 +54,11 @@ import gzip
 import io
 import logging
 import zlib
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 from typing import BinaryIO
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 __all__ = [
@@ -60,9 +70,11 @@ __all__ = [
     "write_wet",
     "read_wet",
     "write_warc_dir",
+    "warc_date",
 ]
 
 _CRLF = b"\r\n"
+_EPOCH = "1970-01-01T00:00:00Z"
 _log = logging.getLogger(__name__)
 
 
@@ -88,6 +100,29 @@ def _sha1_b32(data: bytes) -> bytes:
     return b"sha1:" + base64.b32encode(hashlib.sha1(data).digest())
 
 
+def _warc_record(fields: list[tuple[bytes, bytes]], block: bytes) -> bytes:
+    """The one WARC record framing every writer uses: ``WARC/1.0``, the
+    ``(name, value)`` header fields in order, ``Content-Length``, a blank
+    line, the block, and the closing CRLFCRLF."""
+    head = b"".join(k + b": " + v + _CRLF for k, v in fields)
+    return (
+        b"WARC/1.0\r\n" + head
+        + b"Content-Length: " + str(len(block)).encode() + _CRLF + _CRLF
+        + block + _CRLF + _CRLF
+    )
+
+
+def _capture_fields(rtype: str, url: str, ts: str) -> list[tuple[bytes, bytes]]:
+    """The leading fields of every capture record: type, target URI, date
+    and the deterministic ``WARC-Record-ID`` over the three."""
+    return [
+        (b"WARC-Type", rtype.encode()),
+        (b"WARC-Target-URI", url.encode()),
+        (b"WARC-Date", ts.encode()),
+        (b"WARC-Record-ID", _record_id(rtype, url, ts)),
+    ]
+
+
 def _response_record_bytes(url: str, ts: str, body: bytes) -> bytes:
     """One ``response`` record: stored HTTP/1.1 200 message wrapping
     ``body``, with the interop headers real consumers (warcio, CDX
@@ -98,34 +133,35 @@ def _response_record_bytes(url: str, ts: str, body: bytes) -> bytes:
         b"Content-Type: text/html\r\n"
         b"Content-Length: " + str(len(body)).encode() + _CRLF + _CRLF + body
     )
-    hdr = (
-        b"WARC/1.0\r\n"
-        b"WARC-Type: response\r\n"
-        b"WARC-Target-URI: " + url.encode() + _CRLF
-        + b"WARC-Date: " + ts.encode() + _CRLF
-        + b"WARC-Record-ID: " + _record_id("response", url, ts) + _CRLF
-        + b"WARC-Payload-Digest: " + _sha1_b32(body) + _CRLF
-        + b"Content-Type: application/http;msgtype=response\r\n"
-        + b"Content-Length: " + str(len(http)).encode() + _CRLF + _CRLF
+    return _warc_record(
+        _capture_fields("response", url, ts) + [
+            (b"WARC-Payload-Digest", _sha1_b32(body)),
+            (b"Content-Type", b"application/http;msgtype=response"),
+        ],
+        http,
     )
-    return hdr + http + _CRLF + _CRLF
 
 
 def _conversion_record_bytes(url: str, ts: str, body: bytes) -> bytes:
     """One ``conversion`` (WET extracted-text) record; the block IS the
     payload, so the digest header is ``WARC-Block-Digest`` (the field WET
     files carry)."""
-    hdr = (
-        b"WARC/1.0\r\n"
-        b"WARC-Type: conversion\r\n"
-        b"WARC-Target-URI: " + url.encode() + _CRLF
-        + b"WARC-Date: " + ts.encode() + _CRLF
-        + b"WARC-Record-ID: " + _record_id("conversion", url, ts) + _CRLF
-        + b"WARC-Block-Digest: " + _sha1_b32(body) + _CRLF
-        + b"Content-Type: text/plain\r\n"
-        + b"Content-Length: " + str(len(body)).encode() + _CRLF + _CRLF
+    return _warc_record(
+        _capture_fields("conversion", url, ts) + [
+            (b"WARC-Block-Digest", _sha1_b32(body)),
+            (b"Content-Type", b"text/plain"),
+        ],
+        body,
     )
-    return hdr + body + _CRLF + _CRLF
+
+
+def _metadata_record_bytes(url: str, ts: str, body: bytes) -> bytes:
+    """One ``metadata`` (WAT) record; the block is the JSON envelope."""
+    return _warc_record(
+        _capture_fields("metadata", url, ts)
+        + [(b"Content-Type", b"application/json")],
+        body,
+    )
 
 
 def _warcinfo_record_bytes(filename: str) -> bytes:
@@ -134,20 +170,16 @@ def _warcinfo_record_bytes(filename: str) -> bytes:
     so sink output is deterministic — a deliberate deviation from live
     writers, which stamp wall-clock; readers (ours included) treat
     warcinfo as metadata and skip it by type."""
-    body = (
-        b"software: doonop-spark\r\n"
-        b"format: WARC File Format 1.0\r\n"
+    return _warc_record(
+        [
+            (b"WARC-Type", b"warcinfo"),
+            (b"WARC-Date", _EPOCH.encode()),
+            (b"WARC-Filename", filename.encode()),
+            (b"WARC-Record-ID", _record_id("warcinfo", filename)),
+            (b"Content-Type", b"application/warc-fields"),
+        ],
+        b"software: doonop-spark\r\nformat: WARC File Format 1.0\r\n",
     )
-    hdr = (
-        b"WARC/1.0\r\n"
-        b"WARC-Type: warcinfo\r\n"
-        b"WARC-Date: 1970-01-01T00:00:00Z\r\n"
-        b"WARC-Filename: " + filename.encode() + _CRLF
-        + b"WARC-Record-ID: " + _record_id("warcinfo", filename) + _CRLF
-        + b"Content-Type: application/warc-fields\r\n"
-        + b"Content-Length: " + str(len(body)).encode() + _CRLF + _CRLF
-    )
-    return hdr + body + _CRLF + _CRLF
 
 
 def write_warc(
@@ -406,10 +438,10 @@ def _glob_paths(spark: SparkSession, path_glob: str) -> list[str]:
 
 
 def _local_path(path: str) -> str:
-    """``file:`` URI (Hadoop listing output) → OS path for worker-side
-    ``open``. Non-local schemes raise: this reader streams from the
-    task's filesystem view (local disk or a DFS mount), the same
-    assumption the distributed sinks make."""
+    """Plain path or ``file:`` URI (Hadoop listing output) → OS path for
+    worker-side ``open``. Non-local schemes raise: the archive readers
+    and sinks stream through the task's filesystem view (local disk or a
+    DFS mount)."""
     from urllib.parse import unquote, urlparse
 
     if ":" not in path.split("/", 1)[0] and "://" not in path:
@@ -418,7 +450,7 @@ def _local_path(path: str) -> str:
     if u.scheme in ("", "file"):
         return unquote(u.path)
     raise NotImplementedError(
-        f"warc reader streams from a mounted filesystem; got scheme {u.scheme}://"
+        f"archives stream through a mounted filesystem; got scheme {u.scheme}://"
     )
 
 
@@ -472,7 +504,7 @@ def _read_archives(
         parse, schema=f"url string, __ts string, {body_col} {body_type}"
     )
     return parsed.select(
-        "url", F.to_timestamp(F.col("__ts")).alias("warc_ts"), body_col
+        "url", F.try_to_timestamp(F.col("__ts")).alias("warc_ts"), body_col
     )
 
 
@@ -525,6 +557,63 @@ def warc_corpus(
     )
 
 
+def warc_date(ts: Column) -> Column:
+    """``WARC-Date`` text for a timestamp column: the instant in UTC as
+    ``yyyy-MM-ddTHH:mm:ssZ`` whatever the session time zone, and the
+    epoch for a null time. A JVM expression, so every sink formats the
+    date the same way before any row reaches Python."""
+    utc = F.convert_timezone(None, F.lit("UTC"), ts)
+    return F.coalesce(
+        F.date_format(utc, "yyyy-MM-dd'T'HH:mm:ss'Z'"), F.lit(_EPOCH)
+    )
+
+
+def _write_parts(
+    rows: DataFrame,
+    out_dir: str,
+    suffix: str,
+    record: Callable[[str, str, bytes], bytes],
+) -> int:
+    """The one archive writer: ``rows`` of ``(__u, __t, __b)`` — url,
+    WARC-Date text (:func:`warc_date`) and block bytes — become one
+    ``part-NNNNN{suffix}`` per non-empty partition under ``out_dir``: a
+    warcinfo member, then one gzip member per ``record(url, ts, block)``.
+    Each task streams straight to its own file (local disk here, a DFS
+    mount on a cluster): shuffle-free, O(record) task memory. ``out_dir``
+    is a local path or ``file:`` URI, resolved on the driver before any
+    job runs (a Python task has no JVM gateway to open a Hadoop stream).
+    Returns the number of part files written."""
+    import os
+
+    base = _local_path(out_dir)
+    os.makedirs(base, exist_ok=True)
+
+    def dump(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        from pyspark import TaskContext
+
+        pid = TaskContext.get().partitionId()
+        name = f"part-{pid:05d}{suffix}"
+        f = None
+        n = 0
+        try:
+            for pdf in batches:
+                for url, ts, block in zip(pdf["__u"], pdf["__t"], pdf["__b"]):
+                    if f is None:  # lazy: empty partitions write no file
+                        f = open(os.path.join(base, name), "wb")
+                        f.write(gzip.compress(_warcinfo_record_bytes(name), mtime=0))
+                    rec = record(str(url), ts, b"" if block is None else bytes(block))
+                    f.write(gzip.compress(rec, mtime=0))
+                    n += 1
+        finally:
+            if f is not None:
+                f.close()
+        yield pd.DataFrame({"part": [pid], "n_records": [n]})
+
+    parts = rows.mapInPandas(dump, schema="part int, n_records long").collect()
+    # bounded collect: one row per partition
+    return sum(1 for r in parts if r.n_records > 0)
+
+
 def write_wet(
     corpus: DataFrame,
     out_dir: str,
@@ -535,57 +624,14 @@ def write_wet(
     """Distributed WET sink: ``(url, warc_ts, text)`` → one
     ``part-NNNNN.warc.wet.gz`` of ``conversion`` records per partition
     (Common Crawl's extracted-text interchange format — the standard
-    hand-off from a crawl to a training-data pipeline). Each task streams
-    record gzip members straight to its own file under ``out_dir`` (local
-    FS here; a DFS mount on a cluster) — shuffle-free, O(record) task
-    memory, scales with partition count. Returns the number of part
-    files written."""
-    import os
-
-    os.makedirs(out_dir, exist_ok=True)
-
-    def dump(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId()
-        f = None
-        n = 0
-        try:
-            for pdf in batches:
-                for url, ts, text in zip(pdf["__u"], pdf["__t"], pdf["__x"]):
-                    body = (text or "").encode("utf-8")
-                    ts_s = (
-                        ts.strftime("%Y-%m-%dT%H:%M:%SZ")
-                        if ts is not None and hasattr(ts, "strftime")
-                        else "1970-01-01T00:00:00Z"
-                    )
-                    if f is None:  # lazy: empty partitions write no file
-                        name = f"part-{pid:05d}.warc.wet.gz"
-                        f = open(os.path.join(out_dir, name), "wb")
-                        f.write(
-                            gzip.compress(_warcinfo_record_bytes(name), mtime=0)
-                        )
-                    f.write(
-                        gzip.compress(
-                            _conversion_record_bytes(str(url), ts_s, body), mtime=0
-                        )
-                    )
-                    n += 1
-        finally:
-            if f is not None:
-                f.close()
-        yield pd.DataFrame({"part": [pid], "n_records": [n]})
-
-    parts = (
-        corpus.select(
-            F.col(url_col).alias("__u"),
-            F.col(ts_col).alias("__t"),
-            F.col(text_col).alias("__x"),
-        )
-        .mapInPandas(dump, schema="part int, n_records long")
-        .collect()  # bounded: one row per partition
+    hand-off from a crawl to a training-data pipeline), written by
+    :func:`_write_parts`. Returns the number of part files written."""
+    rows = corpus.select(
+        F.col(url_col).alias("__u"),
+        warc_date(F.col(ts_col)).alias("__t"),
+        F.encode(F.col(text_col), "UTF-8").alias("__b"),
     )
-    return sum(1 for r in parts if r.n_records > 0)
+    return _write_parts(rows, out_dir, ".warc.wet.gz", _conversion_record_bytes)
 
 
 def read_wet(
@@ -610,53 +656,12 @@ def write_warc_dir(
     html_col: str = "html",
 ) -> int:
     """Distributed WARC sink: one ``part-NNNNN.warc.gz`` of ``response``
-    records per partition (same task-local shuffle-free streaming shape
-    as :func:`write_wet`). Inverse of :func:`read_warc` — used to emit
-    re-shardable archives and to build archive fixtures at scale.
-    Returns the number of part files written."""
-    import os
-
-    os.makedirs(out_dir, exist_ok=True)
-
-    def dump(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId()
-        f = None
-        n = 0
-        try:
-            for pdf in batches:
-                for url, ts, html in zip(pdf["__u"], pdf["__t"], pdf["__h"]):
-                    body = bytes(html) if html is not None else b""
-                    ts_s = (
-                        ts.strftime("%Y-%m-%dT%H:%M:%SZ")
-                        if ts is not None and hasattr(ts, "strftime")
-                        else "1970-01-01T00:00:00Z"
-                    )
-                    if f is None:
-                        name = f"part-{pid:05d}.warc.gz"
-                        f = open(os.path.join(out_dir, name), "wb")
-                        f.write(
-                            gzip.compress(_warcinfo_record_bytes(name), mtime=0)
-                        )
-                    f.write(
-                        gzip.compress(
-                            _response_record_bytes(str(url), ts_s, body), mtime=0
-                        )
-                    )
-                    n += 1
-        finally:
-            if f is not None:
-                f.close()
-        yield pd.DataFrame({"part": [pid], "n_records": [n]})
-
-    parts = (
-        corpus.select(
-            F.col(url_col).alias("__u"),
-            F.col(ts_col).alias("__t"),
-            F.col(html_col).alias("__h"),
-        )
-        .mapInPandas(dump, schema="part int, n_records long")
-        .collect()  # bounded: one row per partition
+    records per partition, written by :func:`_write_parts`. Inverse of
+    :func:`read_warc` — used to emit re-shardable archives and to build
+    archive fixtures at scale. Returns the number of part files written."""
+    rows = corpus.select(
+        F.col(url_col).alias("__u"),
+        warc_date(F.col(ts_col)).alias("__t"),
+        F.col(html_col).alias("__b"),
     )
-    return sum(1 for r in parts if r.n_records > 0)
+    return _write_parts(rows, out_dir, ".warc.gz", _response_record_bytes)

@@ -10,19 +10,23 @@ degree stats — ``operators/graph.py``) normally read WAT, not WARC,
 because the links are already extracted: a 100 TB WARC crawl compresses
 to a few-TB WAT scan for graph work.
 
-Container format is plain WARC (ISO 28500): each capture becomes one
-``metadata`` record, ``Content-Type: application/json``, body = the JSON
-envelope. We emit the Common Crawl envelope subset we can compute
+Container format is plain WARC (ISO 28500): each part file opens with
+a ``warcinfo`` record, then each capture becomes one ``metadata`` record
+(``WARC-Record-ID``, ``Content-Type: application/json``, body = the JSON
+envelope). We emit the Common Crawl envelope subset we can compute
 exactly and parse it back **entirely JVM-side** (``from_json`` over the
-framed record body) — the only Python in the write path is the fused
-flagship extract kernel that produces the links, and the read path's
-only Python is the streaming WARC framing loop shared with
-``read_warc``.
+framed record body). The envelope and its ``WARC-Date`` (``warc_date``:
+UTC, the epoch for a null time) are JVM expressions; the write path's
+Python is the fused flagship extract kernel that produces the links and
+the per-partition archive writer shared with the WET and WARC sinks, and
+the read path's only Python is the streaming WARC framing loop shared
+with ``read_warc``.
 
 Scale shape: identical to the WARC reader — one task per archive,
 member-by-member streaming inflation, chunked Arrow batches, no
 shuffle; the sink streams one gzip member per record to a per-partition
-part file (O(record) task memory both ways).
+part file (O(record) task memory both ways) under a local path or
+``file:`` URI.
 
 Reference parity note: the reference engine (``src/backend.rs:97-106``)
 extracts links live per page; WAT is the batch-corpus materialization
@@ -33,16 +37,16 @@ collection.
 
 from __future__ import annotations
 
-import gzip
-import os
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from doonop_spark.sources.warc import _CRLF, _read_archives
+from doonop_spark.sources.warc import (
+    _metadata_record_bytes,
+    _read_archives,
+    _write_parts,
+    warc_date,
+)
 
 __all__ = ["wat_envelope", "write_wat", "read_wat", "read_wat_links"]
 
@@ -55,7 +59,6 @@ def wat_envelope(
 ) -> F.Column:
     """JSON envelope column (Common Crawl WAT subset) for one capture.
     Pure JVM expression — ``to_json`` over nested structs; no UDF."""
-    ts_s = F.date_format(F.col(ts_col), "yyyy-MM-dd'T'HH:mm:ss'Z'")
     link_objs = F.transform(
         F.col(links_col),
         lambda u: F.struct(F.lit("A@/href").alias("path"), u.alias("url")),
@@ -65,7 +68,7 @@ def wat_envelope(
             F.struct(
                 F.struct(
                     F.col(url_col).alias("WARC-Target-URI"),
-                    ts_s.alias("WARC-Date"),
+                    warc_date(F.col(ts_col)).alias("WARC-Date"),
                     F.lit("response").alias("WARC-Type"),
                 ).alias("WARC-Header-Metadata"),
                 F.struct(
@@ -158,13 +161,12 @@ def write_wat(
     """Distributed WAT sink: extract each page's outlinks with the fused
     flagship kernel (ONE Arrow pass, absolutized — same kernel the crawl
     uses, so WAT links == crawl links byte-for-byte), build the JSON
-    envelope JVM-side, and stream one ``metadata`` record gzip member per
-    capture to a per-partition ``part-NNNNN.warc.wat.gz`` (same
-    shuffle-free O(record) sink shape as ``write_wet``). Returns the
-    number of part files written."""
+    envelope JVM-side, and write one ``metadata`` record per capture to
+    a per-partition ``part-NNNNN.warc.wat.gz`` through the archive writer
+    ``write_wet`` uses (warcinfo first, shuffle-free, O(record) task
+    memory). Returns the number of part files written."""
     from doonop_spark.functions.extract import extract_page_udf
 
-    os.makedirs(out_dir, exist_ok=True)
     rows = corpus.withColumn(
         "__links",
         F.coalesce(
@@ -173,44 +175,12 @@ def write_wat(
         ),
     ).select(
         F.col(url_col).alias("__u"),
-        F.date_format(F.col(ts_col), "yyyy-MM-dd'T'HH:mm:ss'Z'").alias("__t"),
-        wat_envelope(url_col, ts_col, html_col, "__links").alias("__j"),
+        warc_date(F.col(ts_col)).alias("__t"),
+        F.encode(
+            wat_envelope(url_col, ts_col, html_col, "__links"), "UTF-8"
+        ).alias("__b"),
     )
-
-    def dump(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId()
-        f = None
-        n = 0
-        try:
-            for pdf in batches:
-                for url, ts_s, env in zip(pdf["__u"], pdf["__t"], pdf["__j"]):
-                    body = str(env).encode("utf-8")
-                    hdr = (
-                        b"WARC/1.0\r\n"
-                        b"WARC-Type: metadata\r\n"
-                        b"WARC-Target-URI: " + str(url).encode() + _CRLF
-                        + b"WARC-Date: " + str(ts_s).encode() + _CRLF
-                        + b"Content-Type: application/json\r\n"
-                        + b"Content-Length: " + str(len(body)).encode()
-                        + _CRLF + _CRLF
-                    )
-                    if f is None:  # lazy: empty partitions write no file
-                        f = open(
-                            os.path.join(out_dir, f"part-{pid:05d}.warc.wat.gz"),
-                            "wb",
-                        )
-                    f.write(gzip.compress(hdr + body + _CRLF + _CRLF, mtime=0))
-                    n += 1
-        finally:
-            if f is not None:
-                f.close()
-        yield pd.DataFrame({"part": [pid], "n_records": [n]})
-
-    parts = rows.mapInPandas(dump, schema="part int, n_records long").collect()
-    # bounded collect: one row per partition
-    return sum(1 for r in parts if r.n_records > 0)
+    return _write_parts(rows, out_dir, ".warc.wat.gz", _metadata_record_bytes)
 
 
 def read_wat(

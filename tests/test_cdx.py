@@ -9,6 +9,7 @@ from __future__ import annotations
 
 import gzip
 import io
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -266,8 +267,13 @@ def test_cdx_parquet_lookup_prunes_partitions(spark, tmp_path):
         corpus.select("url").toPandas()["url"]
     )
 
+    # the index carries its bucket count: a lookup that is not told it
+    # still finds every capture of the 16-bucket layout
+    all_surts = [r.surt for r in cdx.select("surt").collect()]
+    assert lookup_cdx_parquet(spark, idx, all_surts).count() == 60
+
     surts = [r.surt for r in cdx.filter(F.col("url").rlike("/p(3|41)$")).collect()]
-    hit = lookup_cdx_parquet(spark, idx, surts, n_buckets=16)
+    hit = lookup_cdx_parquet(spark, idx, surts)
     rows = hit.collect()
     assert {r.surt for r in rows} == set(surts)
     # pruning receipt: the bucket IN-list reaches the scan as a partition
@@ -285,6 +291,34 @@ def test_cdx_parquet_lookup_prunes_partitions(spark, tmp_path):
         for r in corpus.filter(F.col("url").rlike("/p(3|41)$")).collect()
     }
     assert pages == want
+
+    # an index with no sidecar is scanned on surt alone: same captures
+    os.remove(os.path.join(idx, "_doonop_buckets.json"))
+    assert {r.surt for r in lookup_cdx_parquet(spark, idx, surts).collect()} == set(surts)
+
+
+def test_malformed_warc_date_reads_as_null(spark, tmp_path):
+    """One record with an unparseable WARC-Date does not fail the scan:
+    its warc_ts is null through read_warc, cdx_index, fetch_cdx and a
+    CDXJ round-trip, and the well-formed record keeps its time."""
+    from doonop_spark.sources.warc import read_warc
+
+    path = str(tmp_path / "a.warc.gz")
+    write_warc(path, [
+        ("http://h.example/ok", "2024-01-01T00:00:00Z", b"<html>ok"),
+        ("http://h.example/bad", "not-a-date", b"<html>bad"),
+    ])
+
+    def secs(df):
+        return {r.url: r.s for r in df.select("url", F.unix_seconds("warc_ts").alias("s")).collect()}
+
+    want = {"http://h.example/ok": 1704067200, "http://h.example/bad": None}
+    assert secs(read_warc(spark, path)) == want
+    cdx = cdx_index(spark, path)
+    assert secs(cdx) == want
+    assert secs(fetch_cdx(cdx)) == want
+    write_cdxj(cdx, str(tmp_path / "cdxj"), n_shards=1)
+    assert secs(read_cdxj(spark, str(tmp_path / "cdxj"))) == want
 
 
 def test_latest_capture_and_recrawl_due(spark, tmp_path):

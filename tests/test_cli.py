@@ -302,6 +302,24 @@ def test_cli_use_robots_requires_table(fixture_corpus_path):
     assert "--robots-table" in proc.stderr
 
 
+@pytest.mark.parametrize("flag", ["--wet-out", "--wat-out"])
+def test_cli_foreign_sink_scheme_fails_before_spark(monkeypatch, capsys, flag):
+    """A sink URI the archive writers cannot open exits 2 with an error
+    before a Spark session starts, not after the whole crawl has run."""
+    import doonop_spark.__main__ as cli
+
+    def no_session():
+        raise AssertionError("a Spark session was started")
+
+    monkeypatch.setattr(cli, "_builder", no_session)
+    rc = cli.main(
+        ["--corpus", "unused.parquet", flag, "hdfs://nn/out", "http://h.example/"]
+    )
+    assert rc == 2
+    err = capsys.readouterr().err
+    assert err.startswith(f"error: {flag}") and "hdfs://" in err
+
+
 def test_cli_sitemap_seeds(spark, tmp_path):
     """--sitemap-seeds: robots Sitemap: declarations → sitemap XML in the
     corpus → <loc> URLs become seeds (the reference's scripts/sitemap.sh

@@ -5,7 +5,9 @@ WARC-backed corpus must crawl identically to the parquet fixture."""
 from __future__ import annotations
 
 import gzip
+import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from doonop_spark.sources.warc import (
@@ -374,12 +376,13 @@ def test_cli_wet_out_sink(spark, tmp_path):
 
 
 def test_warc_sink_interop_headers(spark, tmp_path):
-    """Sink fidelity (the headers real WARC consumers expect): every part
-    file opens with a warcinfo record naming itself; every response
-    record carries a urn:uuid WARC-Record-ID and a WARC-Payload-Digest
-    that verifies (sha1/base32 of the payload, the CC convention); WET
-    conversion records carry a verifying WARC-Block-Digest. The readers
-    skip warcinfo by type, so round-trips are unchanged."""
+    """Sink fidelity (the headers real WARC consumers expect): every WARC,
+    WET and WAT part file opens with a warcinfo record naming itself;
+    every capture record carries a urn:uuid WARC-Record-ID; response
+    records carry a WARC-Payload-Digest that verifies (sha1/base32 of the
+    payload, the CC convention) and WET conversion records a verifying
+    WARC-Block-Digest. The readers skip warcinfo by type, so round-trips
+    are unchanged."""
     import os
     import re
 
@@ -392,6 +395,7 @@ def test_warc_sink_interop_headers(spark, tmp_path):
         write_warc_dir,
         write_wet,
     )
+    from doonop_spark.sources.wat import write_wat
 
     corpus = spark.range(0, 12).select(
         F.concat(F.lit("http://h.example/p"), F.col("id")).alias("url"),
@@ -399,15 +403,17 @@ def test_warc_sink_interop_headers(spark, tmp_path):
         F.encode(F.concat(F.lit("<html>page "), F.col("id")), "utf-8").alias("html"),
         F.concat(F.lit("page "), F.col("id")).alias("text"),
     )
-    adir, wdir = str(tmp_path / "arcs"), str(tmp_path / "wet")
+    adir, wdir, tdir = (str(tmp_path / d) for d in ("arcs", "wet", "wat"))
     write_warc_dir(corpus.repartition(3), adir)
     write_wet(corpus.repartition(2), wdir)
+    write_wat(corpus.repartition(2), tdir)
 
     uuid_re = re.compile(rb"^<urn:uuid:[0-9a-f-]{36}>$")
-    n_resp = n_conv = 0
+    n_resp = n_conv = n_meta = 0
     for d, want_type, digest_hdr in (
         (adir, "response", "warc-payload-digest"),
         (wdir, "conversion", "warc-block-digest"),
+        (tdir, "metadata", None),
     ):
         for name in sorted(os.listdir(d)):
             with gzip.open(os.path.join(d, name), "rb") as fh:
@@ -418,11 +424,13 @@ def test_warc_sink_interop_headers(spark, tmp_path):
             for _o, _s, hdrs, block in recs[1:]:
                 assert hdrs["warc-type"] == want_type
                 assert uuid_re.match(hdrs["warc-record-id"].encode())
-                payload = _http_body(block) if want_type == "response" else block
-                assert hdrs[digest_hdr].encode() == _sha1_b32(payload)
+                if digest_hdr is not None:
+                    payload = _http_body(block) if want_type == "response" else block
+                    assert hdrs[digest_hdr].encode() == _sha1_b32(payload)
                 n_resp += want_type == "response"
                 n_conv += want_type == "conversion"
-    assert n_resp == 12 and n_conv == 12
+                n_meta += want_type == "metadata"
+    assert n_resp == 12 and n_conv == 12 and n_meta == 12
 
     # reader round-trip unchanged: warcinfo skipped by type
     from doonop_spark.sources.warc import read_warc, read_wet
@@ -431,3 +439,75 @@ def test_warc_sink_interop_headers(spark, tmp_path):
     assert back == {r.url: bytes(r.html) for r in corpus.collect()}
     wet = {r.url: r.text for r in read_wet(spark, wdir + "/*.wet.gz").collect()}
     assert wet == {r.url: r.text for r in corpus.collect()}
+
+
+def _sinks():
+    """(writer, reader, part suffix) per archive sink."""
+    from doonop_spark.sources.warc import read_wet, write_warc_dir, write_wet
+    from doonop_spark.sources.wat import read_wat, write_wat
+
+    return {
+        "wet": (write_wet, read_wet, ".warc.wet.gz"),
+        "warc": (write_warc_dir, read_warc, ".warc.gz"),
+        "wat": (write_wat, read_wat, ".warc.wat.gz"),
+    }
+
+
+def _one_row(spark, ts, url=None):
+    """One capture in one partition, so its part file is part-00000."""
+    return spark.range(0, 1, 1, 1).select(
+        (F.lit("http://h.example/p") if url is None else url).alias("url"),
+        ts.alias("warc_ts"),
+        F.encode(F.lit("<html><a href='/q'>q</a>"), "utf-8").alias("html"),
+        F.lit("page").alias("text"),
+    )
+
+
+def _read_secs(spark, reader, out_dir):
+    return [r.s for r in reader(spark, out_dir + "/*.gz")
+            .select(F.unix_seconds("warc_ts").alias("s")).collect()]
+
+
+@pytest.mark.parametrize("sink", ["wet", "warc", "wat"])
+def test_sink_null_capture_time_writes_epoch(spark, tmp_path, sink):
+    """A null capture time is written as the epoch WARC-Date and reads
+    back as the epoch (not a crash, not an unparseable 'None')."""
+    write, read, _ = _sinks()[sink]
+    out = str(tmp_path / sink)
+    assert write(_one_row(spark, F.lit(None).cast("timestamp")), out) == 1
+    assert _read_secs(spark, read, out) == [0]
+
+
+@pytest.mark.parametrize("sink", ["wet", "warc", "wat"])
+def test_sink_warc_date_is_utc_in_any_session_zone(spark, tmp_path, sink):
+    """WARC-Date is the capture instant in UTC whatever the session time
+    zone, so a capture written and read in an Asia/Tokyo session reads
+    back at the same instant."""
+    write, read, _ = _sinks()[sink]
+    out = str(tmp_path / sink)
+    prev = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "Asia/Tokyo")
+    try:
+        write(_one_row(spark, F.timestamp_seconds(F.lit(1704067200))), out)
+        assert _read_secs(spark, read, out) == [1704067200]
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", prev)
+
+
+@pytest.mark.parametrize("sink", ["wet", "warc", "wat"])
+def test_sink_out_dir_uri(spark, tmp_path, monkeypatch, sink):
+    """A file:// out_dir writes at the URI's path; a scheme the tasks
+    cannot open raises before any job runs (the frame fails if it is
+    ever evaluated)."""
+    write, _, suffix = _sinks()[sink]
+    monkeypatch.chdir(tmp_path)  # a misread URI would land under the cwd
+    out = tmp_path / "out"
+    assert write(_one_row(spark, F.current_timestamp()), out.as_uri()) == 1
+    assert os.listdir(out) == ["part-00000" + suffix]
+    poisoned = _one_row(
+        spark, F.current_timestamp(),
+        url=F.when(F.col("id") >= 0, F.raise_error(F.lit("a job ran"))).cast("string"),
+    )
+    with pytest.raises(NotImplementedError, match="hdfs://"):
+        write(poisoned, "hdfs://nn/out")
+    assert os.listdir(tmp_path) == ["out"]

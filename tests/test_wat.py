@@ -6,6 +6,7 @@ identically to extracting from HTML directly."""
 from __future__ import annotations
 
 import gzip
+import io
 import json
 
 from pyspark.sql import functions as F
@@ -65,7 +66,13 @@ def test_wat_envelope_is_common_crawl_shaped(spark, tmp_path):
     write_wat(corpus, out)
     import glob as _glob
 
+    from doonop_spark.sources.warc import _iter_warc_raw
+
     raw = gzip.decompress(open(_glob.glob(out + "/*.warc.wat.gz")[0], "rb").read())
+    # the part opens with warcinfo; check the first metadata record
+    recs = list(_iter_warc_raw(io.BytesIO(raw)))
+    assert recs[0][2]["warc-type"] == "warcinfo"
+    raw = raw[recs[1][0]:]
     assert raw.startswith(b"WARC/1.0\r\nWARC-Type: metadata\r\n")
     body = raw.split(b"\r\n\r\n", 1)[1].rsplit(b"\r\n\r\n", 1)[0]
     env = json.loads(body)["Envelope"]
