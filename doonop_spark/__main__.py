@@ -101,20 +101,25 @@ def main(argv: list[str] | None = None) -> int:
         )
         return 2
 
-    # the archive sinks write through a mounted filesystem; refuse any
-    # other scheme now rather than after the whole crawl has run
-    for flag, out in (("--wet-out", ours.wet_out), ("--wat-out", ours.wat_out)):
-        if not out:
+    # archives are read and written through a mounted filesystem; refuse
+    # any other scheme now rather than after Spark (or the crawl) started
+    warc = ".warc" in ours.corpus.rsplit("/", 1)[-1]
+    for flag, path in (
+        ("--corpus", ours.corpus if warc else None),
+        ("--wet-out", ours.wet_out),
+        ("--wat-out", ours.wat_out),
+    ):
+        if not path:
             continue
         try:
-            _local_path(out)
+            _local_path(path)
         except NotImplementedError as e:
             print(f"error: {flag}: {e}", file=sys.stderr)
             return 2
 
     spark = _builder().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    if ".warc" in ours.corpus.rsplit("/", 1)[-1]:
+    if warc:
         # Common Crawl's native format: .warc/.warc.gz archives (or a
         # glob of them) parse straight into the corpus shape — one task
         # per archive file (sources/warc.py)

@@ -44,7 +44,6 @@ __all__ = [
     "host_of",
     "surt_key",
     "canonicalize_udf",
-    "absolutize_links_udf",
     "surt_key_udf",
     "host_expr",
     "url_hash_col",
@@ -254,27 +253,6 @@ def canonicalize_udf(urls: pd.Series) -> pd.Series:
 @F.pandas_udf(T.StringType())
 def surt_key_udf(urls: pd.Series) -> pd.Series:
     return urls.map(surt_key, na_action="ignore")
-
-
-@F.pandas_udf(T.ArrayType(T.StringType()))
-def absolutize_links_udf(base: pd.Series, links: pd.Series) -> pd.Series:
-    """Vectorized P4: per page, resolve every raw href against the page URL,
-    dropping unresolvable ones (order preserved)."""
-
-    def resolve(row: tuple) -> list[str] | None:
-        b, hrefs = row
-        if hrefs is None:
-            return None
-        out = []
-        for h in hrefs:
-            a = absolutize(b, h)
-            if a is not None:
-                out.append(a)
-        return out
-
-    return pd.Series(
-        [resolve(r) for r in zip(base, links)], dtype="object"
-    )
 
 
 def host_expr(url: Column) -> Column:

@@ -6,8 +6,7 @@ Semantics ported:
 - **RegexFilter** (F1): a URL is *ignored* when the regex matches anywhere
   in the full URL string (``src/filters.rs:15-17``; fancy-regex allows
   lookaround/backrefs — Java's regex engine used by ``rlike`` supports
-  both, so the hot path stays JVM-side; ``python_regex=True`` opts a
-  pattern into an Arrow-batched ``re`` fallback for exotic syntax).
+  both, so the filter runs JVM-side).
 - **DomainFilter** (F2): a URL is *kept* iff its domain — with a leading
   ``www.`` stripped on BOTH sides — equals one of the allowed domains;
   URLs without a domain (IP literals, opaque schemes) are ignored
@@ -28,10 +27,8 @@ from __future__ import annotations
 import re
 from dataclasses import dataclass, field
 
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from doonop_spark.functions.canonical import canonicalize, host_of, host_expr
 
@@ -52,7 +49,6 @@ class RegexFilter:
     """F1 — drop URL when ``pattern`` matches the full URL string."""
 
     pattern: str
-    python_regex: bool = False  # route through Arrow batch + `re` instead of rlike
 
 
 @dataclass(frozen=True)
@@ -110,15 +106,6 @@ def is_ignored(f: Filter, url: str) -> bool:
 def ignored_expr(f: Filter, url: Column) -> Column:
     """JVM-side predicate: True when the filter ignores the URL."""
     if isinstance(f, RegexFilter):
-        if f.python_regex:
-            pat = f.pattern
-
-            @F.pandas_udf(T.BooleanType())
-            def _py_match(urls: pd.Series) -> pd.Series:
-                rx = re.compile(pat)
-                return urls.map(lambda u: rx.search(u) is not None, na_action="ignore")
-
-            return _py_match(url)
         return url.rlike(f.pattern)
     host = host_expr(url)
     stripped = F.regexp_replace(host, r"^www\.", "")

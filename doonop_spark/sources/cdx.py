@@ -11,8 +11,9 @@ range request instead of scanning a segment. This module produces and
 consumes that index:
 
 - :func:`cdx_index` — distributed index build: one task per archive
-  (the same shuffle-free scan shape as ``read_warc``), streaming
-  member-by-member so task memory is O(record). Offsets come from
+  through the scan ``read_warc`` uses (``warc._scan_archives``: same
+  path rule, batching and skipped-byte log), streaming member-by-member
+  so task memory is O(record). Offsets come from
   counting *compressed* bytes per gzip member (``.warc.gz``) or record
   spans in the raw byte stream (plain ``.warc``).
 - :func:`read_warc_record` / :func:`fetch_cdx` — random access: seek to
@@ -57,10 +58,12 @@ from doonop_spark.sources.corpus import (
 )
 from doonop_spark.sources.warc import (
     _glob_paths,
-    _http_body,
     _http_status_mime,
+    _is_gzip,
     _iter_warc_raw,
     _local_path,
+    _payload,
+    _scan_archives,
 )
 
 __all__ = [
@@ -128,90 +131,63 @@ def iter_gzip_members(
             d = None
 
 
-def _cdx_row(
-    headers: dict[str, str], block: bytes, offset: int, length: int, filename: str
-) -> tuple | None:
-    if headers.get("warc-type") != "response":
-        return None
-    url = headers.get("warc-target-uri")
-    if not url:
-        return None
-    status, mime = _http_status_mime(block)
-    digest = hashlib.sha256(_http_body(block)).hexdigest()
-    return (url, headers.get("warc-date", ""), status, mime, digest, length, offset, filename)
+def _indexed_records(
+    fh: BinaryIO, path: str, skipped: list[int]
+) -> Iterator[tuple[int, int, dict[str, str], bytes]]:
+    """``(offset, length, headers, block)`` per record of one archive:
+    compressed member coordinates for ``.warc.gz``, raw record spans for
+    plain ``.warc``."""
+    if not _is_gzip(fh):
+        yield from _iter_warc_raw(fh, skipped=skipped)
+        return
+    for off, clen, data in iter_gzip_members(fh):
+        recs = list(_iter_warc_raw(io.BytesIO(data), skipped=skipped))
+        if len(recs) > 1:
+            # non-CC layout: several records share one member; they
+            # share its coordinates (random access re-parses all)
+            _log.warning(
+                "%s: gzip member at %d holds %d records", path, off, len(recs)
+            )
+        for _o, _s, headers, block in recs:
+            yield off, clen, headers, block
 
 
-def _cdx_rows_for_file(path: str) -> Iterator[tuple]:
-    """Index one archive: (url, ts, status, mime, digest, length, offset,
-    filename) per ``response`` capture. Offsets are compressed member
-    coordinates for ``.warc.gz``, raw record spans for plain ``.warc``."""
-    local = _local_path(path)
-    with open(local, "rb") as fh:
-        magic = fh.read(2)
-        fh.seek(0)
-        if magic == b"\x1f\x8b":
-            for off, clen, data in iter_gzip_members(fh):
-                recs = list(_iter_warc_raw(io.BytesIO(data)))
-                if len(recs) > 1:
-                    # non-CC layout: several records share one member; they
-                    # share its coordinates (random access re-parses all)
-                    _log.warning(
-                        "%s: gzip member at %d holds %d records",
-                        path, off, len(recs),
-                    )
-                for _o, _s, headers, block in recs:
-                    row = _cdx_row(headers, block, off, clen, path)
-                    if row:
-                        yield row
-        else:
-            for off, span, headers, block in _iter_warc_raw(fh):
-                row = _cdx_row(headers, block, off, span, path)
-                if row:
-                    yield row
+def _cdx_rows_for_file(path: str, skipped: list[int]) -> Iterator[tuple[tuple, int]]:
+    """Index one archive: ``(url, ts, status, mime, digest, length,
+    offset, filename)`` per ``response`` capture, as the ``(row, payload
+    bytes)`` pairs :func:`~doonop_spark.sources.warc._scan_archives`
+    batches; an index row carries no payload."""
+    with open(_local_path(path), "rb") as fh:
+        for off, length, headers, block in _indexed_records(fh, path, skipped):
+            url = headers.get("warc-target-uri")
+            if headers.get("warc-type") != "response" or not url:
+                continue
+            status, mime = _http_status_mime(block)
+            digest = hashlib.sha256(_payload(headers, block)).hexdigest()
+            ts = headers.get("warc-date", "")
+            yield (url, ts, status, mime, digest, length, off, path), 0
 
 
-def cdx_index(
-    spark: SparkSession, path_glob: str, records_per_batch: int = 10_000
-) -> DataFrame:
+def cdx_index(spark: SparkSession, path_glob: str) -> DataFrame:
     """``.warc``/``.warc.gz`` archives → capture index
     ``(url, surt, warc_ts, ts14, status, mime, digest, length, offset,
     filename)``. One task per archive, streaming, shuffle-free — the
     output is ~100 bytes/capture, so the index of a 100 TB crawl is a
     few GB and joins broadcast-side downstream. ``surt`` is computed
     JVM→Arrow-batched from ``url`` (same key as ``CrawlJob.url_key=
-    'surt'``), ``ts14`` is the CDX timestamp form of ``WARC-Date``."""
+    'surt'``), ``ts14`` is the CDX timestamp form of ``WARC-Date``.
+    ``path_glob`` follows :func:`~doonop_spark.sources.warc.read_warc`'s
+    path rule; ``filename`` is each archive's path as listed."""
     from doonop_spark.functions.canonical import surt_key_udf
 
-    paths = _glob_paths(spark, path_glob)
-    if not paths:
-        raise FileNotFoundError(f"no archive files match {path_glob}")
-    pdfp = spark.createDataFrame(
-        spark.sparkContext.parallelize([(p,) for p in paths], len(paths)),
-        "path string",
-    )
-    cols = ["url", "__ts", "status", "mime", "digest", "length", "offset", "filename"]
-
-    def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for p in pdf["path"]:
-                rows: list[tuple] = []
-                for row in _cdx_rows_for_file(str(p)):
-                    rows.append(row)
-                    if len(rows) >= records_per_batch:
-                        yield pd.DataFrame(rows, columns=cols)
-                        rows = []
-                if rows:
-                    yield pd.DataFrame(rows, columns=cols)
-
-    parsed = pdfp.mapInPandas(parse, schema=_CDX_SCHEMA)
-    ts = F.try_to_timestamp(F.col("__ts"))
+    parsed = _scan_archives(spark, path_glob, _cdx_rows_for_file, _CDX_SCHEMA)
     # ts14 comes straight from the WARC-Date digits (UTC by spec) — not
     # from the parsed timestamp — so it is session-timezone-independent
     ts14 = F.substring(F.regexp_replace(F.col("__ts"), "[^0-9]", ""), 1, 14)
     return parsed.select(
         "url",
         surt_key_udf(F.col("url")).alias("surt"),
-        ts.alias("warc_ts"),
+        "warc_ts",
         ts14.alias("ts14"),
         "status",
         "mime",
@@ -225,15 +201,11 @@ def cdx_index(
 def _record_at(data: bytes) -> tuple[str, str, bytes]:
     """First WARC record in ``data`` (inflating a leading gzip member
     chain first) → (url, warc_date, decoded_body)."""
-    if data[:2] == b"\x1f\x8b":
-        data = gzip.decompress(data)
-    for _o, _s, headers, block in _iter_warc_raw(io.BytesIO(data)):
-        body = (
-            _http_body(block)
-            if headers.get("warc-type") == "response"
-            else block
-        )
-        return headers.get("warc-target-uri", ""), headers.get("warc-date", ""), body
+    fh = io.BytesIO(data)
+    stream = gzip.GzipFile(fileobj=fh) if _is_gzip(fh) else fh
+    for _o, _s, headers, block in _iter_warc_raw(stream):
+        url, ts = headers.get("warc-target-uri", ""), headers.get("warc-date", "")
+        return url, ts, _payload(headers, block)
     raise ValueError("no WARC record at the given offset")
 
 

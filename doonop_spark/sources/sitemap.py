@@ -17,7 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-__all__ = ["sitemap_urls_from_robots", "expand_sitemaps", "seeds_with_sitemaps"]
+__all__ = ["sitemap_urls_from_robots", "expand_sitemaps"]
 
 
 def sitemap_urls_from_robots(robots: DataFrame) -> DataFrame:
@@ -56,40 +56,3 @@ def expand_sitemaps(sitemap_urls: DataFrame, corpus: DataFrame) -> DataFrame:
         ).alias("url"),
     )
     return locs.select("url").distinct()
-
-
-def seeds_with_sitemaps(
-    seeds: list[str], robots: DataFrame | None, corpus: DataFrame, filters
-) -> list[str]:
-    """S6 end-to-end: CLI seeds + every sitemap-declared URL, cleaned once
-    (sort/dedup/filter — F4).
-
-    .. deprecated:: round 5
-        Returning ``list[str]`` inherently materializes the seed set on
-        the driver — fine for test fixtures, wrong for a 100 TB sitemap
-        expansion. The CLI path uses
-        :func:`doonop_spark.sources.seeds.seed_frontier_distributed`
-        instead (seeds stay a DataFrame into the wave-0 frontier); this
-        helper now delegates to it so the cleaning/ordering semantics
-        live in exactly one place, and warns.
-    """
-    import warnings
-
-    warnings.warn(
-        "seeds_with_sitemaps materializes the seed set on the driver; "
-        "use seed_frontier_distributed (sources/seeds.py) for the scale path",
-        DeprecationWarning,
-        stacklevel=2,
-    )
-    from doonop_spark.operators.filters import clean_seeds
-    from doonop_spark.sources.seeds import seed_frontier_distributed
-
-    spark = corpus.sparkSession
-    if robots is not None:
-        extra = expand_sitemaps(sitemap_urls_from_robots(robots), corpus)
-    else:
-        extra = spark.createDataFrame([], "url string")
-    frontier = seed_frontier_distributed(
-        spark, clean_seeds(list(seeds), filters), extra, filters=filters
-    )
-    return [r.url for r in frontier.orderBy("seq").select("url").collect()]

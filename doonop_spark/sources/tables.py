@@ -31,6 +31,7 @@ import shutil
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 __all__ = ["TableIO", "MemoryTableIO", "SnapshotTableIO", "open_table_io"]
 
@@ -135,6 +136,9 @@ class SnapshotTableIO(TableIO):
 
     def __init__(self, root: str) -> None:
         self.root = root
+        # each appended table's schema, so reading the parts back needs no
+        # inference job; a resumed process without it infers once per read
+        self._schemas: dict[str, StructType] = {}
         os.makedirs(root, exist_ok=True)
 
     def _dir(self, name: str, iteration: int) -> str:
@@ -160,6 +164,7 @@ class SnapshotTableIO(TableIO):
     def append(self, df: DataFrame, name: str, iteration: int, eager: bool = True) -> DataFrame:
         path = os.path.join(self.root, name, f"part_iter={iteration}")
         df.write.mode("overwrite").parquet(path)  # durable: always written
+        self._schemas[name] = df.schema
         return _read_back(df, path)
 
     def read_appended(self, spark: SparkSession, name: str) -> DataFrame | None:
@@ -169,7 +174,10 @@ class SnapshotTableIO(TableIO):
         parts = [os.path.join(base, d) for d in os.listdir(base) if d.startswith("part_iter=")]
         if not parts:
             return None
-        return spark.read.parquet(*parts)
+        reader = spark.read
+        if name in self._schemas:
+            reader = reader.schema(self._schemas[name])
+        return reader.parquet(*parts)
 
     def save_state(self, state: dict[str, Any]) -> None:
         tmp = os.path.join(self.root, "_state.json.tmp")

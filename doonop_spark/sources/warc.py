@@ -22,12 +22,18 @@ driver lists paths (Hadoop glob, same listing the DataSource API does),
 one task opens one archive and **streams** it: gzip members inflate
 incrementally through :class:`gzip.GzipFile` (bounded internal buffer),
 records parse out of a rolling window, and rows leave the task as
-chunked Arrow batches every ``records_per_batch`` records /
-``batch_target_bytes`` body bytes. Peak task memory is O(record), not
-O(archive) — a 1 GB gzipped / 5 GB inflated segment streams through a
-3 GB executor — and the ``binaryFile`` 2 GB whole-file row cap does not
-apply because file bytes never enter a row. Parsing is stdlib-only
-(``gzip``/``zlib``) and runs on Arrow batches.
+chunked Arrow batches every ``_BATCH_RECORDS`` records or
+``_BATCH_BYTES`` payload bytes, whichever comes first. Peak task memory
+is O(record), not O(archive) — a 1 GB gzipped / 5 GB inflated segment
+streams through a 3 GB executor — and the ``binaryFile`` 2 GB whole-file
+row cap does not apply because file bytes never enter a row. Parsing is
+stdlib-only (``gzip``/``zlib``) and runs on Arrow batches.
+
+Every reader — ``read_warc``, ``read_wet``, ``wat.read_wat`` and
+``cdx.cdx_index`` — is one :func:`_scan_archives` call: one listing, one
+path rule (a local path or ``file:`` URI; any other scheme raises on the
+driver before a job runs), one task per archive, one batching rule and
+one ``WARC-Date`` parse.
 
 A corrupt record mid-archive does not poison the tail: the parser
 resyncs to the next ``\\r\\nWARC/`` marker and counts the skipped bytes
@@ -60,6 +66,7 @@ from typing import BinaryIO
 import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import DataType
 
 __all__ = [
     "write_warc",
@@ -75,6 +82,9 @@ __all__ = [
 
 _CRLF = b"\r\n"
 _EPOCH = "1970-01-01T00:00:00Z"
+# one Arrow batch leaves a scan task per this many rows or payload bytes
+_BATCH_RECORDS = 10_000
+_BATCH_BYTES = 64 << 20
 _log = logging.getLogger(__name__)
 
 
@@ -280,6 +290,21 @@ def _http_status_mime(block: bytes) -> tuple[int | None, str | None]:
     return status, mime
 
 
+def _payload(headers: dict[str, str], block: bytes) -> bytes:
+    """A record's page bytes: the HTTP body of a ``response`` block
+    (:func:`_http_body`), any other block (WET text, WAT JSON) as it
+    is."""
+    return _http_body(block) if headers.get("warc-type") == "response" else block
+
+
+def _is_gzip(fh: BinaryIO) -> bool:
+    """True when ``fh`` holds gzip data (``.warc.gz``); leaves ``fh`` at
+    its start."""
+    magic = fh.read(2)
+    fh.seek(0)
+    return magic == b"\x1f\x8b"
+
+
 def _iter_warc_raw(
     stream: BinaryIO,
     chunk_size: int = 1 << 20,
@@ -394,18 +419,11 @@ def iter_warc_stream(
     transfer framing and gzip/deflate content-encoding decoded);
     ``conversion`` blocks (WET extracted text) ARE the body.
     """
-    magic = fh.read(2)
-    fh.seek(0)
-    stream: BinaryIO = gzip.GzipFile(fileobj=fh) if magic == b"\x1f\x8b" else fh  # type: ignore[assignment]
+    stream: BinaryIO = gzip.GzipFile(fileobj=fh) if _is_gzip(fh) else fh  # type: ignore[assignment]
     for _offset, _span, headers, block in _iter_warc_raw(stream, chunk_size, skipped):
-        rtype = headers.get("warc-type")
-        if rtype not in types:
-            continue
         url = headers.get("warc-target-uri")
-        if not url:
-            continue
-        body = _http_body(block) if rtype == "response" else block
-        yield url, headers.get("warc-date", ""), body
+        if headers.get("warc-type") in types and url:
+            yield url, headers.get("warc-date", ""), _payload(headers, block)
 
 
 def parse_warc_bytes(
@@ -454,74 +472,92 @@ def _local_path(path: str) -> str:
     )
 
 
-def _read_archives(
+def _scan_archives(
     spark: SparkSession,
     path_glob: str,
-    types: tuple[str, ...],
-    body_col: str,
-    decode_text: bool,
-    records_per_batch: int,
-    batch_target_bytes: int,
+    rows: Callable[[str, list[int]], Iterator[tuple[tuple, int]]],
+    schema: str,
 ) -> DataFrame:
+    """The one archive scan: list ``path_glob``, check every path with
+    :func:`_local_path` on the driver (a foreign scheme raises before any
+    job runs), then run one task per archive over the ``(row, payload
+    bytes)`` pairs ``rows(path, skipped)`` yields for it. Rows leave the
+    task in Arrow batches of ``_BATCH_RECORDS`` rows or ``_BATCH_BYTES``
+    payload bytes, whichever comes first, so task memory stays O(record);
+    bytes the parser skips to resync (``skipped[0]``) are logged per
+    archive. ``schema`` is the DDL of the rows, with the ``WARC-Date``
+    text as ``__ts``; the result adds ``warc_ts`` parsed from it (null
+    where malformed)."""
     paths = _glob_paths(spark, path_glob)
     if not paths:
         raise FileNotFoundError(f"no archive files match {path_glob}")
-    # exactly one archive per task: parallelize with one slice per path
-    pdfp = spark.createDataFrame(
-        spark.sparkContext.parallelize([(p,) for p in paths], len(paths)),
-        "path string",
-    )
-    cols = ["url", "__ts", body_col]
+    for p in paths:
+        _local_path(p)
+    cols = DataType.fromDDL(schema).names
+    max_rows, max_bytes = _BATCH_RECORDS, _BATCH_BYTES
 
-    def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             for p in pdf["path"]:
                 skipped = [0]
-                with open(_local_path(str(p)), "rb") as fh:
-                    rows: list[tuple[str, str, object]] = []
-                    nbytes = 0
-                    for url, ts, body in iter_warc_stream(
-                        fh, types=types, skipped=skipped
-                    ):
-                        val: object = (
-                            body.decode("utf-8", "replace") if decode_text else body
-                        )
-                        rows.append((url, ts, val))
-                        nbytes += len(body)
-                        if len(rows) >= records_per_batch or nbytes >= batch_target_bytes:
-                            yield pd.DataFrame(rows, columns=cols)
-                            rows, nbytes = [], 0
-                    if rows:
-                        yield pd.DataFrame(rows, columns=cols)
+                out: list[tuple] = []
+                nbytes = 0
+                for row, size in rows(str(p), skipped):
+                    out.append(row)
+                    nbytes += size
+                    if len(out) >= max_rows or nbytes >= max_bytes:
+                        yield pd.DataFrame(out, columns=cols)
+                        out, nbytes = [], 0
+                if out:
+                    yield pd.DataFrame(out, columns=cols)
                 if skipped[0]:
                     _log.warning(
                         "warc parse: skipped %d unparseable bytes in %s",
                         skipped[0], p,
                     )
 
-    body_type = "string" if decode_text else "binary"
-    parsed = pdfp.mapInPandas(
-        parse, schema=f"url string, __ts string, {body_col} {body_type}"
+    # exactly one archive per task: parallelize with one slice per path
+    listed = spark.createDataFrame(
+        spark.sparkContext.parallelize([(p,) for p in paths], len(paths)),
+        "path string",
     )
-    return parsed.select(
-        "url", F.try_to_timestamp(F.col("__ts")).alias("warc_ts"), body_col
+    return listed.mapInPandas(scan, schema=schema).withColumn(
+        "warc_ts", F.try_to_timestamp(F.col("__ts"))
     )
 
 
-def read_warc(
+def _read_records(
     spark: SparkSession,
     path_glob: str,
-    records_per_batch: int = 10_000,
-    batch_target_bytes: int = 64 << 20,
+    types: tuple[str, ...],
+    body_col: str,
+    as_text: bool,
 ) -> DataFrame:
+    """Archives → ``(url, warc_ts, body_col)`` for the records whose
+    WARC-Type is in ``types``: the page bytes, or UTF-8 text when
+    ``as_text``."""
+
+    def rows(path: str, skipped: list[int]) -> Iterator[tuple[tuple, int]]:
+        with open(_local_path(path), "rb") as fh:
+            for url, ts, body in iter_warc_stream(fh, types, skipped=skipped):
+                val = body.decode("utf-8", "replace") if as_text else body
+                yield (url, ts, val), len(body)
+
+    kind = "string" if as_text else "binary"
+    schema = f"url string, __ts string, {body_col} {kind}"
+    return _scan_archives(spark, path_glob, rows, schema).select(
+        "url", "warc_ts", body_col
+    )
+
+
+def read_warc(spark: SparkSession, path_glob: str) -> DataFrame:
     """``.warc`` / ``.warc.gz`` files → rows ``(url, warc_ts, html)``.
     One task per archive file, streaming member-by-member inflation,
     chunked Arrow batches — task memory O(record), no whole-file row
-    (so no ``binaryFile`` 2 GB cap), no shuffle."""
-    return _read_archives(
-        spark, path_glob, ("response",), "html", False,
-        records_per_batch, batch_target_bytes,
-    )
+    (so no ``binaryFile`` 2 GB cap), no shuffle. ``path_glob`` is a local
+    path or ``file:`` URI (glob or directory); any other scheme raises
+    ``NotImplementedError`` before a job runs."""
+    return _read_records(spark, path_glob, ("response",), "html", False)
 
 
 def warc_corpus(
@@ -634,18 +670,10 @@ def write_wet(
     return _write_parts(rows, out_dir, ".warc.wet.gz", _conversion_record_bytes)
 
 
-def read_wet(
-    spark: SparkSession,
-    path_glob: str,
-    records_per_batch: int = 10_000,
-    batch_target_bytes: int = 64 << 20,
-) -> DataFrame:
-    """WET archives → ``(url, warc_ts, text)`` (conversion records; same
-    streaming scan shape as :func:`read_warc`)."""
-    return _read_archives(
-        spark, path_glob, ("conversion",), "text", True,
-        records_per_batch, batch_target_bytes,
-    )
+def read_wet(spark: SparkSession, path_glob: str) -> DataFrame:
+    """WET archives → ``(url, warc_ts, text)`` (conversion records; the
+    same scan and path rule as :func:`read_warc`)."""
+    return _read_records(spark, path_glob, ("conversion",), "text", True)
 
 
 def write_warc_dir(

@@ -43,7 +43,7 @@ from pyspark.sql import types as T
 
 from doonop_spark.sources.warc import (
     _metadata_record_bytes,
-    _read_archives,
+    _read_records,
     _write_parts,
     warc_date,
 )
@@ -183,21 +183,14 @@ def write_wat(
     return _write_parts(rows, out_dir, ".warc.wat.gz", _metadata_record_bytes)
 
 
-def read_wat(
-    spark: SparkSession,
-    path_glob: str,
-    records_per_batch: int = 10_000,
-    batch_target_bytes: int = 64 << 20,
-) -> DataFrame:
+def read_wat(spark: SparkSession, path_glob: str) -> DataFrame:
     """WAT archives → ``(url, warc_ts, status, content_length,
-    links array<string>)``. The WARC framing streams exactly like
-    ``read_warc`` (one task per archive, O(record) memory); the JSON
-    envelope parses JVM-side via ``from_json`` — malformed envelopes
-    yield null metadata columns rather than dropping the capture."""
-    raw = _read_archives(
-        spark, path_glob, ("metadata",), "wat_json", True,
-        records_per_batch, batch_target_bytes,
-    )
+    links array<string>)``. The WARC framing streams through the same
+    scan as ``read_warc`` (one task per archive, O(record) memory, a
+    local path or ``file:`` URI); the JSON envelope parses JVM-side via
+    ``from_json`` — malformed envelopes yield null metadata columns
+    rather than dropping the capture."""
+    raw = _read_records(spark, path_glob, ("metadata",), "wat_json", True)
     env = F.from_json(F.col("wat_json"), _ENVELOPE_SCHEMA)["Envelope"]
     pm = env["Payload-Metadata"]
     return raw.select(

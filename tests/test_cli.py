@@ -302,18 +302,20 @@ def test_cli_use_robots_requires_table(fixture_corpus_path):
     assert "--robots-table" in proc.stderr
 
 
-@pytest.mark.parametrize("flag", ["--wet-out", "--wat-out"])
+@pytest.mark.parametrize("flag", ["--wet-out", "--wat-out", "--corpus"])
 def test_cli_foreign_sink_scheme_fails_before_spark(monkeypatch, capsys, flag):
-    """A sink URI the archive writers cannot open exits 2 with an error
-    before a Spark session starts, not after the whole crawl has run."""
+    """A sink URI the archive writers cannot open, or a .warc corpus the
+    archive readers cannot open, exits 2 with an error before a Spark
+    session starts, not after the whole crawl has run."""
     import doonop_spark.__main__ as cli
 
     def no_session():
         raise AssertionError("a Spark session was started")
 
     monkeypatch.setattr(cli, "_builder", no_session)
+    uri = "hdfs://nn/crawl/*.warc.gz" if flag == "--corpus" else "hdfs://nn/out"
     rc = cli.main(
-        ["--corpus", "unused.parquet", flag, "hdfs://nn/out", "http://h.example/"]
+        ["--corpus", "unused.parquet", flag, uri, "http://h.example/"]
     )
     assert rc == 2
     err = capsys.readouterr().err

@@ -77,9 +77,8 @@ def test_clean_seeds():
         clean_seeds(["no-scheme.com"], [])
 
 
-@pytest.mark.parametrize("python_regex", [False, True])
-def test_filters_spark_parity(spark, python_regex):
-    """JVM/Arrow predicates must agree with the pure-Python kernel."""
+def test_filters_spark_parity(spark):
+    """JVM predicates must agree with the pure-Python kernel."""
     urls = [
         "http://google.com/",
         "http://google.com/image.png",
@@ -90,7 +89,7 @@ def test_filters_spark_parity(spark, python_regex):
         "http://127.0.0.1/x",
     ]
     filters = [
-        RegexFilter(r".jpg$", python_regex=python_regex),
+        RegexFilter(r".jpg$"),
         DomainFilter(("google.com", "www.bing.com")),
     ]
     df = spark.createDataFrame([(u,) for u in urls], "url string")

@@ -8,6 +8,7 @@ import threading
 
 from pyspark.sql import functions as F
 
+from doonop_spark.operators.filters import clean_seeds
 from doonop_spark.operators.schedule import (
     budget_keep_flags,
     policy_order,
@@ -16,11 +17,8 @@ from doonop_spark.operators.schedule import (
 from doonop_spark.plans.job import CrawlJob, RetryPolicy
 from doonop_spark.plans.loop import run_crawl
 from doonop_spark.sources.corpus import synthetic_corpus
-from doonop_spark.sources.sitemap import (
-    expand_sitemaps,
-    seeds_with_sitemaps,
-    sitemap_urls_from_robots,
-)
+from doonop_spark.sources.seeds import seed_frontier_distributed
+from doonop_spark.sources.sitemap import expand_sitemaps, sitemap_urls_from_robots
 
 
 def test_sitemap_expansion(spark):
@@ -44,7 +42,10 @@ def test_sitemap_expansion(spark):
     assert [r.sitemap_url for r in sm.collect()] == ["http://a.example/sitemap.xml"]
     urls = sorted(r.url for r in expand_sitemaps(sm, corpus).collect())
     assert urls == ["http://a.example/p1", "http://a.example/p2"]
-    seeds = seeds_with_sitemaps(["http://z.example/"], robots, corpus, [])
+    frontier = seed_frontier_distributed(
+        spark, clean_seeds(["http://z.example/"], []), expand_sitemaps(sm, corpus)
+    )
+    seeds = [r.url for r in frontier.orderBy("seq").collect()]
     assert seeds == [
         "http://a.example/p1",
         "http://a.example/p2",

@@ -140,9 +140,11 @@ def test_warc_resync_after_corrupt_record():
     assert [(u, b) for u, _, b in got] == [("http://a.example/1", b"ONE")]
 
 
-def test_warc_streaming_chunked_batches(spark, tmp_path):
+def test_warc_streaming_chunked_batches(spark, tmp_path, monkeypatch):
     """The distributed reader yields multiple Arrow batches per archive
     (O(record) memory, not O(archive)) and the union is byte-identical."""
+    from doonop_spark.sources import warc
+
     recs = [
         (
             f"http://s.example/p{j}",
@@ -155,11 +157,14 @@ def test_warc_streaming_chunked_batches(spark, tmp_path):
     write_warc(p, recs)
 
     # small batch caps force many yields through one archive
-    df = read_warc(spark, p, records_per_batch=10)
+    monkeypatch.setattr(warc, "_BATCH_RECORDS", 10)
+    df = read_warc(spark, p)
     got = sorted((r.url, bytes(r.html)) for r in df.collect())
     assert got == sorted((u, b) for u, _, b in recs)
     # tiny byte target takes the bytes-trigger path
-    df2 = read_warc(spark, p, batch_target_bytes=64)
+    monkeypatch.undo()
+    monkeypatch.setattr(warc, "_BATCH_BYTES", 64)
+    df2 = read_warc(spark, p)
     assert sorted((r.url, bytes(r.html)) for r in df2.collect()) == got
 
     # the stream parser itself is chunk-size independent
@@ -511,3 +516,22 @@ def test_sink_out_dir_uri(spark, tmp_path, monkeypatch, sink):
     with pytest.raises(NotImplementedError, match="hdfs://"):
         write(poisoned, "hdfs://nn/out")
     assert os.listdir(tmp_path) == ["out"]
+
+
+@pytest.mark.parametrize("reader", ["read_warc", "read_wet", "read_wat", "cdx_index"])
+def test_archive_readers_reject_foreign_scheme(spark, monkeypatch, reader):
+    """An archive a task cannot open raises at the call, before any job
+    runs, not as a worker failure when the frame is first evaluated."""
+    from doonop_spark.sources import cdx, warc, wat
+
+    read = {
+        "read_warc": warc.read_warc,
+        "read_wet": warc.read_wet,
+        "read_wat": wat.read_wat,
+        "cdx_index": cdx.cdx_index,
+    }[reader]
+    monkeypatch.setattr(
+        warc, "_glob_paths", lambda _spark, _glob: ["hdfs://nn/crawl/seg-0.warc.gz"]
+    )
+    with pytest.raises(NotImplementedError, match="hdfs://"):
+        read(spark, "hdfs://nn/crawl/*.warc.gz")
