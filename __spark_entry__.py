@@ -289,17 +289,15 @@ def q_cdx_index(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_cdxj_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Point lookup through the full CDXJ interchange path
     (sources/cdx.py): corpus → archives → cdx_index → write_cdxj
-    (SURT-range shards + the ``_cluster.idx`` secondary index) →
-    lookup_cdxj for every 50th document's SURT. The lookup bisects the
-    cluster index and scans ONLY the hit shards (tests/test_cdx.py pins
-    the pruning via inputFiles); a hash match here proves the sharded
-    text round-trip and the bisection return exactly the captures the
-    oracle computes closed-form. The key list is driver-side by design —
-    it is the CDX client's query argument, one string per lookup."""
+    (SURT-range shards) → read_cdxj filtered to every 50th document's
+    SURT. A hash match here proves the sharded text round-trip returns
+    exactly the captures the oracle computes closed-form. The key list is
+    driver-side by design — it is the CDX client's query argument, one
+    string per lookup."""
     import shutil
     import tempfile
 
-    from doonop_spark.sources.cdx import cdx_index, lookup_cdxj, write_cdxj
+    from doonop_spark.sources.cdx import cdx_index, read_cdxj, write_cdxj
     from doonop_spark.sources.corpus import pages_from_documents
     from doonop_spark.sources.warc import write_warc_dir
 
@@ -313,7 +311,8 @@ def q_cdxj_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_warc_dir(corpus.repartition(8), adir)
         write_cdxj(cdx_index(spark, adir + "/*.warc.gz"), jdir, n_shards=8)
         out = (
-            lookup_cdxj(spark, jdir, keys)
+            read_cdxj(spark, jdir)
+            .filter(F.col("surt").isin(keys))
             .select("url", "surt", "ts14", "status", "mime", "digest")
             .localCheckpoint()
         )

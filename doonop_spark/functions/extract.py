@@ -42,13 +42,7 @@ __all__ = [
     "extract_links_udf",
     "extract_text_udf",
     "extract_page_udf",
-    "DEFAULT_CHECK_PROGRAM",
 ]
-
-# The reference's default check program (src/cfg.rs:344-346): identity on
-# the page URL. In Spark terms that is simply F.col("url") — kept here so
-# plans/loop.py can register it as the default "check" extraction.
-DEFAULT_CHECK_PROGRAM = "return window.location.href;"
 
 # <a ...> open tags, document order; [^>]* cannot cross into the next tag.
 _A_TAG_RE = re.compile(r"<a\b([^>]*)>", re.IGNORECASE | re.DOTALL)

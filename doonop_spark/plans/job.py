@@ -44,7 +44,7 @@ def open_code_file(path: str | None, fmt: str | None = None) -> tuple[str, str]:
     ('side'/'json' ⇒ side, 'js' ⇒ js), then the extension; neither ⇒ hard
     error. Returns (program_text, 'js'|'side'). The program text selects a
     registered extraction; 'js' text equal to the default program maps to
-    the identity-on-url Column (see plans/loop.py data_expr)."""
+    the identity-on-url Column (``check='url'``)."""
     if path is None:
         return DEFAULT_CODE, "js"
     with open(path) as f:
@@ -216,8 +216,7 @@ class CrawlJob:
     # (return window.location.href ≡ F.col("url")); 'title' / 'html' = the
     # recognized one-liner JS programs; 'side' = run the Selenium-IDE
     # subset program in side_program against each fetched page
-    # (P3, src/backend.rs:173-184); run_crawl's data_expr argument
-    # overrides with an arbitrary Column
+    # (P3, src/backend.rs:173-184)
     check: str = _checked("text", legal=("text", "url", "title", "html", "side"))
     # revisit semantics: a WARC corpus may hold several captures of one
     # URL; True = the fetch keeps only the LATEST capture per URL
@@ -340,8 +339,7 @@ def job_from_argv(argv: list[str]) -> CrawlJob:
         check = "html"
     else:
         # any other program maps to the registered-extraction surface
-        # (§2.10): the flagship byte-exact text extraction by default,
-        # overridable with an arbitrary Column via run_crawl(data_expr=...)
+        # (§2.10): the flagship byte-exact text extraction
         check = "text"
 
     # --retry-threshold-milis is wall-clock in the reference. The wall

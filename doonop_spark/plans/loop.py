@@ -142,20 +142,6 @@ def _empty_metrics(spark: SparkSession) -> DataFrame:
     )
 
 
-def _empty_crawl(spark: SparkSession) -> CrawlResult:
-    """Reference: empty seed ⇒ empty result, zero stats
-    (src/workload.rs:81-83)."""
-    empty = _empty_results(spark)
-    return CrawlResult(
-        empty,
-        _empty_metrics(spark),
-        Statistics(),
-        empty.select(url_hash_col(F.col("url")).alias("url_hash"), F.col("url").alias("ukey")),
-        empty,
-        0,
-    )
-
-
 def _bucket_set(n_buckets: int) -> Column:
     return F.collect_set(bucket_expr(F.col("url"), n_buckets)).alias("buckets")
 
@@ -193,7 +179,7 @@ def _commit_frontier(
     return out
 
 
-def _check_program(job: CrawlJob, data_expr: Column | None) -> tuple[Column | None, Column]:
+def _check_program(job: CrawlJob) -> tuple[Column | None, Column]:
     """The check-program surface (§2.10) → ``(check, data)``: ``check`` is
     evaluated over ``(url, html)`` in the fetch stage, for programs that
     need the raw page (Side programs, P3: the stored RESULT, null included;
@@ -211,11 +197,8 @@ def _check_program(job: CrawlJob, data_expr: Column | None) -> tuple[Column | No
     elif job.check == "html":
         check = F.decode(F.col("html"), "UTF-8")
     else:
-        check = None
-    if data_expr is None:
-        default = "url" if job.check == "url" else "text"
-        data_expr = F.col("check_data" if check is not None else default)
-    return check, data_expr
+        return None, F.col("url" if job.check == "url" else "text")
+    return check, F.col("check_data")
 
 
 def _shape(joined: DataFrame, faults: DataFrame | None, check: Column | None) -> DataFrame:
@@ -566,7 +549,6 @@ def run_crawl(
     fault_schedule: DataFrame | None = None,
     seed_urls: DataFrame | None = None,
     io: TableIO | None = None,
-    data_expr: Column | None = None,
     resume: bool = False,
     cancel=None,
     clock=None,
@@ -583,11 +565,15 @@ def run_crawl(
     merged into the wave-0 frontier without reaching the driver; invalid
     URLs in it are dropped, as for discovered links.
 
-    ``data_expr`` is the check-program surface (§2.10): a Column over the
-    fetched+extracted wave that becomes the collected ``data`` value. The
-    default follows ``job.check``: 'text' = flagship byte-identical text
-    extraction; 'url' = the reference's default program
-    (``return window.location.href`` ≡ the page URL).
+    The collected ``data`` value follows ``job.check`` (the check-program
+    surface, §2.10): 'text' = flagship byte-identical text extraction;
+    'url' = the reference's default program (``return
+    window.location.href`` ≡ the page URL); 'title' / 'html' / 'side' =
+    the page-level programs.
+
+    An empty seed list ends like any crawl whose frontier runs dry: zero
+    ``Statistics``, no results, ``iterations == 0`` (reference
+    src/workload.rs:81-83).
 
     ``cancel`` (threading.Event-like) is the ctrl-c analog (X3,
     src/main.rs:41-48): when set, the current wave drains and commits,
@@ -631,9 +617,6 @@ def run_crawl(
         else:
             seeds = seed_frontier(spark, cleaned, job.url_key)
         frontier = _commit_frontier(io, seeds, st, side.n_buckets)
-        if st.frontier_rows == 0:
-            side.release()
-            return _empty_crawl(spark)
         st.seq_counter = st.frontier_rows
         # the seen table is append-only (monotone, §2.9): store per-wave
         # DELTAS and anti-join against their union — rewriting the full
@@ -671,7 +654,7 @@ def run_crawl(
             expected_per_partition=job.bloom_expected_per_partition,
             fold_every=job.bloom_fold_every,
         )
-    check, data = _check_program(job, data_expr)
+    check, data = _check_program(job)
     crawl = _Crawl(
         spark, job, io, side, robots, budgets, faults, bloom, check, data, clock or time.time
     )

@@ -17,14 +17,20 @@ consumes that index:
   counting *compressed* bytes per gzip member (``.warc.gz``) or record
   spans in the raw byte stream (plain ``.warc``).
 - :func:`read_warc_record` / :func:`fetch_cdx` — random access: seek to
-  ``offset``, read ``length`` bytes, inflate one member, parse one
-  record. ``fetch_cdx`` is the distributed form (an indexed subset →
-  pages) — it repartitions by filename and seeks ascending offsets so
-  each task streams forward through one archive.
+  ``offset``, read ``length`` bytes, inflate one member and return the
+  record the index row names (its ``url`` and ``ts14``), so a member
+  holding several records still returns each capture's own page.
+  ``fetch_cdx`` is the distributed form (an indexed subset → pages) — it
+  repartitions by filename and seeks ascending offsets so each task
+  streams forward through one archive.
 - :func:`write_cdxj` / :func:`read_cdxj` — the CDXJ text interchange
   form, written as globally SURT-ordered shards (range partition +
-  in-partition sort, Common Crawl's ``cdx-NNNNN.gz`` layout) so a
-  lookup range-probes one shard.
+  in-partition sort, Common Crawl's ``cdx-NNNNN.gz`` layout).
+- :func:`write_cdx_parquet` / :func:`lookup_cdx_parquet` — the columnar
+  index, the one pruned point lookup (bucket directories + row-group
+  stats).
+- :func:`closest_capture` / :func:`latest_capture` — one capture per
+  SURT, each a :func:`~doonop_spark.sources.corpus.first_per` pick.
 
 Deviation from Common Crawl's field conventions, chosen for
 oracle-ability: ``digest`` is lowercase-hex SHA-256 of the *decoded*
@@ -34,7 +40,8 @@ SURT key, ts14 timestamp, member-exact offsets — matches.
 At 100 TB: the index build is a single 10^5-task scan emitting ~100
 bytes per capture (3-4 orders of magnitude smaller than the corpus —
 index rows shuffle freely); the CDXJ sort is one range-shuffle of that
-small table; random access reads exactly the bytes a capture occupies.
+small table; random access reads exactly the bytes a capture's member
+occupies.
 """
 
 from __future__ import annotations
@@ -43,6 +50,7 @@ import gzip
 import hashlib
 import io
 import logging
+import re
 import zlib
 from collections.abc import Iterator
 from typing import BinaryIO
@@ -55,9 +63,9 @@ from doonop_spark.sources.corpus import (
     _read_bucket_count,
     _write_bucket_count,
     bucket_expr,
+    first_per,
 )
 from doonop_spark.sources.warc import (
-    _glob_paths,
     _http_status_mime,
     _is_gzip,
     _iter_warc_raw,
@@ -73,12 +81,10 @@ __all__ = [
     "fetch_cdx",
     "write_cdxj",
     "read_cdxj",
-    "lookup_cdxj",
     "closest_capture",
     "latest_capture",
     "recrawl_due",
     "write_cdx_parquet",
-    "read_cdx_parquet",
     "lookup_cdx_parquet",
 ]
 
@@ -87,6 +93,11 @@ _log = logging.getLogger(__name__)
 _CDX_SCHEMA = (
     "url string, __ts string, status int, mime string, digest string, "
     "length long, offset long, filename string"
+)
+# the columns of every index frame (cdx_index, read_cdxj), in order
+_CDX_COLS = (
+    "url", "surt", "warc_ts", "ts14", "status", "mime", "digest", "length",
+    "offset", "filename",
 )
 
 
@@ -143,8 +154,9 @@ def _indexed_records(
     for off, clen, data in iter_gzip_members(fh):
         recs = list(_iter_warc_raw(io.BytesIO(data), skipped=skipped))
         if len(recs) > 1:
-            # non-CC layout: several records share one member; they
-            # share its coordinates (random access re-parses all)
+            # non-CC layout: the records share the member's coordinates,
+            # so random access inflates the whole member and picks by
+            # (url, ts14)
             _log.warning(
                 "%s: gzip member at %d holds %d records", path, off, len(recs)
             )
@@ -182,44 +194,54 @@ def cdx_index(spark: SparkSession, path_glob: str) -> DataFrame:
 
     parsed = _scan_archives(spark, path_glob, _cdx_rows_for_file, _CDX_SCHEMA)
     # ts14 comes straight from the WARC-Date digits (UTC by spec) — not
-    # from the parsed timestamp — so it is session-timezone-independent
+    # from the parsed timestamp — so it is session-timezone-independent;
+    # _record_at applies the same rule in Python
     ts14 = F.substring(F.regexp_replace(F.col("__ts"), "[^0-9]", ""), 1, 14)
     return parsed.select(
-        "url",
-        surt_key_udf(F.col("url")).alias("surt"),
-        "warc_ts",
-        ts14.alias("ts14"),
-        "status",
-        "mime",
-        "digest",
-        "length",
-        "offset",
-        "filename",
-    )
+        "*", surt_key_udf(F.col("url")).alias("surt"), ts14.alias("ts14")
+    ).select(*_CDX_COLS)
 
 
-def _record_at(data: bytes) -> tuple[str, str, bytes]:
-    """First WARC record in ``data`` (inflating a leading gzip member
-    chain first) → (url, warc_date, decoded_body)."""
+def _record_at(
+    data: bytes, url: str | None = None, ts14: str | None = None
+) -> tuple[str, str, bytes]:
+    """The WARC record in ``data`` (inflating a leading gzip member chain
+    first) that an index row names → (url, warc_date, decoded_body): the
+    ``response`` whose target URI is ``url`` and whose ``WARC-Date``
+    gives ``ts14``, either left out matching any. With neither, the first
+    record. A member holding several records shares one offset, so the
+    pick, not the offset, tells its captures apart."""
     fh = io.BytesIO(data)
     stream = gzip.GzipFile(fileobj=fh) if _is_gzip(fh) else fh
+    pick = url is not None or ts14 is not None
     for _o, _s, headers, block in _iter_warc_raw(stream):
-        url, ts = headers.get("warc-target-uri", ""), headers.get("warc-date", "")
-        return url, ts, _payload(headers, block)
-    raise ValueError("no WARC record at the given offset")
+        u, ts = headers.get("warc-target-uri", ""), headers.get("warc-date", "")
+        if not pick or (
+            headers.get("warc-type") == "response"
+            and url in (None, u)
+            and ts14 in (None, re.sub("[^0-9]", "", ts)[:14])  # cdx_index's rule
+        ):
+            return u, ts, _payload(headers, block)
+    raise ValueError(f"no WARC record for {url} {ts14} at the given offset")
 
 
 def read_warc_record(
-    path: str, offset: int, length: int | None = None
+    path: str,
+    offset: int,
+    length: int | None = None,
+    url: str | None = None,
+    ts14: str | None = None,
 ) -> tuple[str, str, bytes]:
     """Random access — the CDX client pattern (Common Crawl serves this
     as an HTTP range request): seek to ``offset``, read ``length``
-    bytes, inflate the single gzip member (or parse the raw record for a
-    plain ``.warc``), return ``(url, warc_date, page_bytes)``."""
+    bytes, inflate the gzip member (or parse the raw record for a plain
+    ``.warc``), return ``(url, warc_date, page_bytes)`` of the record an
+    index row's ``url`` and ``ts14`` name (the first record without
+    them)."""
     with open(_local_path(path), "rb") as fh:
         fh.seek(offset)
         data = fh.read(length) if length is not None else fh.read()
-    return _record_at(data)
+    return _record_at(data, url, ts14)
 
 
 def fetch_cdx(cdx: DataFrame) -> DataFrame:
@@ -230,16 +252,20 @@ def fetch_cdx(cdx: DataFrame) -> DataFrame:
     order (forward-only disk reads). The fetch cost is proportional to
     the *selected* bytes — at 100 TB this is the difference between
     re-reading a crawl and plucking 10^3 pages out of it."""
-    sel = cdx.select("filename", "offset", "length", "url").repartition("filename")
+    sel = cdx.select("filename", "offset", "length", "url", "ts14").repartition(
+        "filename"
+    )
 
     def fetch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             for fn, grp in pdf.groupby("filename", sort=True):
                 rows: list[tuple[str, str, bytes]] = []
                 with open(_local_path(str(fn)), "rb") as fh:
-                    for off, ln in sorted(zip(grp["offset"], grp["length"])):
+                    for off, ln, url, ts14 in sorted(
+                        zip(grp["offset"], grp["length"], grp["url"], grp["ts14"])
+                    ):
                         fh.seek(int(off))
-                        rows.append(_record_at(fh.read(int(ln))))
+                        rows.append(_record_at(fh.read(int(ln)), url, ts14))
                 yield pd.DataFrame(rows, columns=["url", "__ts", "html"])
 
     pages = sel.mapInPandas(fetch, schema="url string, __ts string, html binary")
@@ -256,22 +282,10 @@ def write_cdxj(cdx: DataFrame, out_dir: str, n_shards: int | None = None) -> Non
     are **globally SURT-ordered** — ``repartitionByRange(surt, ts14)``
     makes the shard order the global order and ``sortWithinPartitions``
     orders lines inside each (Common Crawl's ``cdx-NNNNN.gz`` layout), so
-    a lookup binary-searches one shard. One range-shuffle of the small
-    index table; the corpus is never touched.
-
-    Alongside the shards a **secondary index** ``_cluster.idx`` is
-    written (Common Crawl's ``cluster.idx`` pattern): one line
-    ``<first_surt> <first_ts14> <shard_filename>`` per non-empty shard,
-    in shard order. :func:`lookup_cdxj` bisects it so a point lookup
-    opens only the hit shard(s) — O(1) shards per key instead of a scan
-    of all of them. The leading underscore (a deviation from CC's
-    ``cluster.idx`` name) keeps the file invisible to Spark's file
-    index, so ``read_cdxj(out_dir)`` full scans are unaffected.
-    Building it reads one line per shard driver-side — O(#shards) work
-    on a table that is already ~4 orders of magnitude smaller than the
-    corpus."""
-    import os
-
+    the shards interchange with CDX tools. One range-shuffle of the small
+    index table; the corpus is never touched. Pruned point lookups go
+    through the columnar index (:func:`lookup_cdx_parquet`); over CDXJ a
+    lookup is :func:`read_cdxj` plus a ``surt`` filter."""
     ranged = (
         cdx.repartitionByRange(n_shards, "surt", "ts14")
         if n_shards
@@ -292,103 +306,22 @@ def write_cdxj(cdx: DataFrame, out_dir: str, n_shards: int | None = None) -> Non
         .mode("overwrite")
         .text(out_dir)
     )
-    spark = cdx.sparkSession
-    idx_lines: list[str] = []
-    for p in _glob_paths(spark, out_dir):
-        name = os.path.basename(p)
-        if not name.startswith("part-"):
-            continue
-        first = _first_line(_local_path(p))
-        if first is None:
-            continue  # empty shard (range partitioner gave it no rows)
-        surt, ts14 = first.split(" ", 2)[:2]
-        idx_lines.append(f"{surt} {ts14} {name}")
-    with open(os.path.join(_local_path(out_dir), "_cluster.idx"), "w") as f:
-        f.write("\n".join(idx_lines) + ("\n" if idx_lines else ""))
-
-
-def _first_line(path: str) -> str | None:
-    """First text line of a (possibly gzip) shard — reads one gzip block,
-    not the file."""
-    opener = gzip.open if path.endswith(".gz") else open
-    with opener(path, "rt", encoding="utf-8") as f:  # type: ignore[call-overload]
-        line = f.readline()
-    return line.rstrip("\n") or None
-
-
-def _cdxj_hit_shards(
-    idx: list[tuple[str, str, str]], surts: list[str]
-) -> list[str]:
-    """Shard filenames that can hold any of ``surts``, by bisection over
-    the (first_surt, first_ts14) shard boundaries. A key's captures live
-    in the last shard whose first key is ≤ (key, "") — plus any later
-    shards whose first key still equals the key (captures straddling a
-    shard boundary). Pure function so the boundary logic is unit-testable
-    without a filesystem."""
-    import bisect
-
-    if not idx:
-        return []
-    firsts = [(s, t) for s, t, _ in idx]
-    hits: set[int] = set()
-    for k in surts:
-        lo = max(bisect.bisect_right(firsts, (k, "")) - 1, 0)
-        hi = max(bisect.bisect_right(firsts, (k, "￿")) - 1, lo)
-        hits.update(range(lo, hi + 1))
-    return [idx[i][2] for i in sorted(hits)]
-
-
-def lookup_cdxj(spark: SparkSession, out_dir: str, surts: list[str]) -> DataFrame:
-    """Point lookup over a :func:`write_cdxj` directory: bisect
-    ``_cluster.idx`` (tiny, driver-side) to the shard(s) whose SURT range
-    covers each key, scan ONLY those files, filter to the keys. At 100 TB
-    this reads O(keys) shards of an index that is itself ~10^-4 of the
-    corpus — the cost a CDX server pays per query, never a full-index
-    scan. Result shape = :func:`read_cdxj`."""
-    import os
-
-    base = _local_path(out_dir)
-    idx: list[tuple[str, str, str]] = []
-    with open(os.path.join(base, "_cluster.idx"), encoding="utf-8") as f:
-        for line in f:
-            line = line.rstrip("\n")
-            if line:
-                s, t, name = line.split(" ", 2)
-                idx.append((s, t, name))
-    files = _cdxj_hit_shards(idx, surts)
-    if not files:
-        raw = spark.createDataFrame([], "value string")
-    else:
-        raw = spark.read.text([os.path.join(out_dir, name) for name in files])
-    return _parse_cdxj(raw).filter(F.col("surt").isin(list(surts)))
 
 
 def read_cdxj(spark: SparkSession, path: str) -> DataFrame:
     """CDXJ shards → the :func:`cdx_index` frame shape (``warc_ts``
     reconstructed from ``ts14``). Plain distributed text scan."""
-    return _parse_cdxj(spark.read.text(path))
-
-
-def _parse_cdxj(raw: DataFrame) -> DataFrame:
-    """``value: string`` CDXJ lines → the :func:`cdx_index` frame shape."""
+    raw = spark.read.text(path)
     surt = F.substring_index(F.col("value"), " ", 1)
     ts14 = F.element_at(F.split(F.col("value"), " ", 3), 2)
     meta = F.from_json(
         F.expr("substring(value, length(substring_index(value, ' ', 2)) + 2)"),
         _CDXJ_META,
     )
+    warc_ts = F.try_to_timestamp(ts14, F.lit("yyyyMMddHHmmss"))
     return raw.select(
-        meta["url"].alias("url"),
-        surt.alias("surt"),
-        F.try_to_timestamp(ts14, F.lit("yyyyMMddHHmmss")).alias("warc_ts"),
-        ts14.alias("ts14"),
-        meta["status"].alias("status"),
-        meta["mime"].alias("mime"),
-        meta["digest"].alias("digest"),
-        meta["length"].alias("length"),
-        meta["offset"].alias("offset"),
-        meta["filename"].alias("filename"),
-    )
+        meta.alias("m"), surt.alias("surt"), warc_ts.alias("warc_ts"), ts14.alias("ts14")
+    ).select("m.*", "surt", "warc_ts", "ts14").select(*_CDX_COLS)
 
 
 def closest_capture(cdx: DataFrame, target_ts: str) -> DataFrame:
@@ -399,26 +332,20 @@ def closest_capture(cdx: DataFrame, target_ts: str) -> DataFrame:
     frame partitioned by ``surt`` — the corpus is never touched, and at
     100 TB the per-SURT capture lists are tiny (revisit counts), so the
     window never sees a skewed partition."""
-    from pyspark.sql import Window
-
     diff = F.abs(
         F.unix_timestamp(F.col("warc_ts"))
         - F.unix_timestamp(F.lit(target_ts).cast("timestamp"))
     )
-    w = Window.partitionBy("surt").orderBy(
-        diff.asc(), F.col("warc_ts").asc(), F.col("offset").asc(),
+    return first_per(
+        cdx, "surt", diff.asc(), F.col("warc_ts").asc(), F.col("offset").asc(),
         F.col("filename").asc(),
-    )
-    return (
-        cdx.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
     )
 
 
 def write_cdx_parquet(cdx: DataFrame, out_dir: str, n_buckets: int = 64) -> None:
     """Columnar capture index — the Common Crawl *cc-index* analog, and
-    the form a Spark shop should actually serve lookups from. Hive-
+    the form point lookups are served from (:func:`lookup_cdx_parquet`;
+    read the whole index with ``spark.read.parquet``). Hive-
     partitioned parquet on ``surt_bucket = pmod(xxhash64(surt), n)`` with
     SURT-sorted files inside each bucket, so:
 
@@ -443,12 +370,6 @@ def write_cdx_parquet(cdx: DataFrame, out_dir: str, n_buckets: int = 64) -> None
         .parquet(out_dir)
     )
     _write_bucket_count(cdx.sparkSession, out_dir, n_buckets)
-
-
-def read_cdx_parquet(spark: SparkSession, path: str) -> DataFrame:
-    """The columnar index back as the :func:`cdx_index` frame shape
-    (plus ``surt_bucket``)."""
-    return spark.read.parquet(path)
 
 
 def lookup_cdx_parquet(spark: SparkSession, path: str, surts: list[str]) -> DataFrame:
@@ -479,15 +400,9 @@ def latest_capture(cdx: DataFrame) -> DataFrame:
     window shape as :func:`closest_capture`; ties (same ``warc_ts``)
     break to the LAST ``(offset, filename)`` so the pick is total-ordered.
     """
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("surt").orderBy(
-        F.col("warc_ts").desc(), F.col("offset").desc(), F.col("filename").desc()
-    )
-    return (
-        cdx.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
+    return first_per(
+        cdx, "surt",
+        F.col("warc_ts").desc(), F.col("offset").desc(), F.col("filename").desc(),
     )
 
 

@@ -20,7 +20,7 @@ pages for the skew exercise).
 The crawl's side of the corpus lives here too: the bucketed layout
 (:func:`write_bucketed_corpus`), the per-crawl choice of the side every
 wave's fetch joins (:func:`choose_fetch_side`) and the revisit rule
-(:func:`latest_capture`).
+(:func:`latest_capture`, one :func:`first_per` pick).
 """
 
 from __future__ import annotations
@@ -47,6 +47,7 @@ __all__ = [
     "corpus_bucket_count",
     "FetchSide",
     "choose_fetch_side",
+    "first_per",
     "latest_capture",
 ]
 
@@ -370,6 +371,19 @@ def choose_fetch_side(
     return side
 
 
+def first_per(df: DataFrame, key: str, *order: Column) -> DataFrame:
+    """The first row of each ``key`` group under ``order``: one
+    ``row_number`` window, rank 1 kept. Every capture pick (the crawl's
+    revisit rule and the CDX index's latest and closest captures) is one
+    call; ``order`` must be total for the pick to be deterministic."""
+    w = Window.partitionBy(key).orderBy(*order)
+    return (
+        df.withColumn("__first_rn", F.row_number().over(w))
+        .filter(F.col("__first_rn") == 1)
+        .drop("__first_rn")
+    )
+
+
 def latest_capture(pages: DataFrame) -> DataFrame:
     """Revisit semantics: a WARC corpus may legally hold several captures
     of one URL, and a fetch returns ONE page per URL — the latest capture
@@ -378,13 +392,8 @@ def latest_capture(pages: DataFrame) -> DataFrame:
     window reuses the join's url-keyed exchange, never a corpus-side
     shuffle) and the CLI's WAT sink to the visited pages, so both pick the
     same capture."""
-    w = Window.partitionBy("url").orderBy(
-        F.desc_nulls_last("warc_ts"), F.desc(F.xxhash64(F.col("html")))
-    )
-    return (
-        pages.withColumn("__cap_rn", F.row_number().over(w))
-        .filter(F.col("__cap_rn") == 1)
-        .drop("__cap_rn")
+    return first_per(
+        pages, "url", F.desc_nulls_last("warc_ts"), F.desc(F.xxhash64(F.col("html")))
     )
 
 

@@ -18,7 +18,6 @@ from doonop_spark.sources.cdx import (
     cdx_index,
     fetch_cdx,
     iter_gzip_members,
-    lookup_cdxj,
     read_cdxj,
     read_warc_record,
     write_cdxj,
@@ -122,37 +121,58 @@ def test_iter_gzip_members_boundaries(tmp_path):
 
 
 def test_cdx_multi_record_member(spark, tmp_path):
-    """Non-CC layout: one gzip member holding two records. Both captures
-    index with the member's shared coordinates, and random access at
-    those coordinates returns the first record (the CC convention is one
-    per member — this pins the degraded-but-defined behavior)."""
+    """Non-CC layout: one gzip member holding a request record and three
+    captures, two of them of one URL. Every capture indexes with the
+    member's shared coordinates, and random access at those coordinates
+    returns each capture's own page, by (url, ts14), through
+    read_warc_record and fetch_cdx."""
     recs = [
         ("http://m.example/a", "2024-01-01T00:00:00Z", b"page a"),
         ("http://m.example/b", "2024-01-01T00:00:01Z", b"page b"),
+        ("http://m.example/a", "2024-01-01T00:00:02Z", b"page a again"),
     ]
-    raw = io.BytesIO()
 
-    def _rec(url, ts, body):
+    def _rec(url, ts, body, kind="response"):
         http = (
             b"HTTP/1.1 200 OK\r\nContent-Type: text/html\r\nContent-Length: "
             + str(len(body)).encode() + b"\r\n\r\n" + body
         )
         return (
-            b"WARC/1.0\r\nWARC-Type: response\r\nWARC-Target-URI: " + url.encode()
+            b"WARC/1.0\r\nWARC-Type: " + kind.encode()
+            + b"\r\nWARC-Target-URI: " + url.encode()
             + b"\r\nWARC-Date: " + ts.encode()
-            + b"\r\nContent-Type: application/http;msgtype=response\r\n"
+            + b"\r\nContent-Type: application/http;msgtype=" + kind.encode() + b"\r\n"
             + b"Content-Length: " + str(len(http)).encode() + b"\r\n\r\n"
             + http + b"\r\n\r\n"
         )
 
-    raw.write(gzip.compress(b"".join(_rec(*r) for r in recs), mtime=0))
+    # the request shares the second capture's URI and date; it is not a
+    # capture, so random access must skip it
+    records = [_rec(*recs[0]), _rec(*recs[1], kind="request"), *(_rec(*r) for r in recs[1:])]
     path = str(tmp_path / "multi.warc.gz")
     with open(path, "wb") as f:
-        f.write(raw.getvalue())
-    cdx = cdx_index(spark, path).orderBy("url").collect()
-    assert [r.url for r in cdx] == ["http://m.example/a", "http://m.example/b"]
-    assert cdx[0].offset == cdx[1].offset and cdx[0].length == cdx[1].length
-    url, _ts, body = read_warc_record(path, cdx[0].offset, cdx[0].length)
+        f.write(gzip.compress(b"".join(records), mtime=0))
+    cdx = cdx_index(spark, path)
+    rows = cdx.orderBy("url", "ts14").collect()
+    assert [(r.url, r.ts14) for r in rows] == [
+        ("http://m.example/a", "20240101000000"),
+        ("http://m.example/a", "20240101000002"),
+        ("http://m.example/b", "20240101000001"),
+    ]
+    assert len({(r.offset, r.length) for r in rows}) == 1
+    want = {(u, ts): body for u, ts, body in recs}
+    for r in rows:
+        url, ts, body = read_warc_record(path, r.offset, r.length, r.url, r.ts14)
+        assert (url, body) == (r.url, want[(url, ts)])
+    got = sorted(
+        (r.url, r.s, bytes(r.html))
+        for r in fetch_cdx(cdx)
+        .select("url", F.unix_seconds("warc_ts").alias("s"), "html")
+        .collect()
+    )
+    assert got == sorted((u, 1704067200 + i, b) for i, (u, _t, b) in enumerate(recs))
+    # no index row given: the member's first record, as before
+    url, _ts, body = read_warc_record(path, rows[0].offset, rows[0].length)
     assert (url, body) == ("http://m.example/a", b"page a")
 
 
@@ -248,11 +268,7 @@ def test_cdx_parquet_lookup_prunes_partitions(spark, tmp_path):
     """The columnar index: round-trips all captures, and a point lookup
     reads ONLY the probed buckets' files (partition pruning receipt via
     inputFiles), returning exactly the probed SURTs' captures."""
-    from doonop_spark.sources.cdx import (
-        lookup_cdx_parquet,
-        read_cdx_parquet,
-        write_cdx_parquet,
-    )
+    from doonop_spark.sources.cdx import lookup_cdx_parquet, write_cdx_parquet
 
     corpus = _fixture_corpus(spark, n=60)
     arcs = str(tmp_path / "arcs")
@@ -261,7 +277,7 @@ def test_cdx_parquet_lookup_prunes_partitions(spark, tmp_path):
     idx = str(tmp_path / "ccindex")
     write_cdx_parquet(cdx, idx, n_buckets=16)
 
-    back = read_cdx_parquet(spark, idx)
+    back = spark.read.parquet(idx)
     assert back.count() == 60
     assert sorted(back.select("url").toPandas()["url"]) == sorted(
         corpus.select("url").toPandas()["url"]
@@ -341,74 +357,3 @@ def test_latest_capture_and_recrawl_due(spark, tmp_path):
     # cutoff t0+45 s: latest capture 3·id < 45 ⇔ id ≤ 14
     due = {r.url for r in recrawl_due(cdx, "2024-03-01 00:00:45").collect()}
     assert due == {f"http://h{i % 7}.example/p{i}" for i in range(15)}
-
-
-def test_cdxj_cluster_idx_and_lookup(spark, tmp_path):
-    """write_cdxj emits a _cluster.idx secondary index (one sorted line
-    per non-empty shard); lookup_cdxj answers a point query from ONLY the
-    hit shard files (inputFiles ⊂ shard set) with exactly the rows a full
-    scan + filter yields."""
-    import glob
-    import os
-
-    corpus = _fixture_corpus(spark, n=50)
-    arcs = str(tmp_path / "arcs")
-    write_warc_dir(corpus.repartition(3), arcs)
-    cdx = cdx_index(spark, arcs + "/*.warc.gz")
-    jdir = str(tmp_path / "cdxj")
-    write_cdxj(cdx, jdir, n_shards=4)
-
-    idx_path = os.path.join(jdir, "_cluster.idx")
-    assert os.path.exists(idx_path)
-    with open(idx_path) as f:
-        idx_lines = [ln.rstrip("\n") for ln in f if ln.strip()]
-    shards = sorted(os.path.basename(p) for p in glob.glob(jdir + "/part-*"))
-    assert 1 <= len(idx_lines) <= len(shards)
-    keys = [tuple(ln.split(" ", 2)[:2]) for ln in idx_lines]
-    assert keys == sorted(keys)  # shard order IS the global order
-    names = [ln.split(" ", 2)[2] for ln in idx_lines]
-    assert names == sorted(names) and set(names) <= set(shards)
-    # each index line really is its shard's first line
-    for ln in idx_lines:
-        s, t, name = ln.split(" ", 2)
-        with gzip.open(os.path.join(jdir, name), "rt") as f:
-            first = f.readline()
-        assert first.startswith(f"{s} {t} ")
-
-    some = [r.surt for r in cdx.select("surt").distinct().limit(3).collect()]
-    hit = lookup_cdxj(spark, jdir, some)
-    want = sorted(
-        map(tuple, read_cdxj(spark, jdir).filter(F.col("surt").isin(some)).collect())
-    )
-    got = sorted(map(tuple, hit.collect()))
-    assert got == want and len(got) > 0
-    # pruning: the lookup scanned a strict subset of the shard files
-    scanned = {os.path.basename(p) for p in hit.inputFiles()}
-    assert scanned <= set(names)
-    if len(idx_lines) > 1:
-        assert len(scanned) < len(idx_lines)
-
-    # miss: a key below every shard boundary returns empty, scanning ≤1 shard
-    miss = lookup_cdxj(spark, jdir, ["aaaaa,nonexistent)/"])
-    assert miss.count() == 0
-
-
-def test_cdxj_hit_shards_boundaries():
-    """Pure bisection logic: keys below/above all boundaries, interior
-    keys, and a key that IS a shard's first (straddle → both shards)."""
-    from doonop_spark.sources.cdx import _cdxj_hit_shards
-
-    idx = [
-        ("b,example)/", "20240101000000", "part-0"),
-        ("d,example)/", "20240101000000", "part-1"),
-        ("d,example)/", "20240101000500", "part-2"),
-        ("f,example)/", "20240101000000", "part-3"),
-    ]
-    assert _cdxj_hit_shards(idx, ["a,example)/"]) == ["part-0"]  # below all
-    assert _cdxj_hit_shards(idx, ["c,example)/"]) == ["part-0"]  # interior
-    # key equal to a boundary first: captures may straddle the previous
-    # shard's tail and BOTH shards opening with the key
-    assert _cdxj_hit_shards(idx, ["d,example)/"]) == ["part-0", "part-1", "part-2"]
-    assert _cdxj_hit_shards(idx, ["z,example)/"]) == ["part-3"]  # above all
-    assert _cdxj_hit_shards(idx, ["a,x)/", "z,x)/"]) == ["part-0", "part-3"]
-    assert _cdxj_hit_shards([], ["anything"]) == []

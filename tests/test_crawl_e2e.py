@@ -120,6 +120,10 @@ def test_empty_seed_zero_stats(spark):
         count_errors=0, count_retries=0, count_visited=0, count_collected=0
     )
     assert res.results.count() == 0
+    # the same exit as any crawl whose frontier runs dry
+    assert res.iterations == 0
+    assert list(res.extra) == ["fetch_side"]
+    assert res.seen.count() == 0
 
 
 def test_missing_page_is_terminal_error(spark):
