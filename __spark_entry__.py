@@ -736,7 +736,7 @@ def q_bloom_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_bloom_dedup_copart(spark: SparkSession, sf_dir: str) -> DataFrame:
     """D1 with the bloom sidecar probed via the 10^10 path: candidates
-    cogroup with the bank rows on pid (operators/bloom.py
+    shuffle-hash join the bank blocks on (pid, blk) (operators/bloom.py
     bloom_flag_copartitioned) — the bank never touches the driver. The
     operator-level composition, without the crawl's ``SeenBloom``; same
     never-drop contract and oracle as ``bloom_dedup``."""
@@ -752,7 +752,9 @@ def q_bloom_dedup_copart(spark: SparkSession, sf_dir: str) -> DataFrame:
         key.alias("ukey"), F.xxhash64(key).alias("url_hash")
     )
     bloom = build_bloom(seen, n_partitions=8, expected_per_partition=1024)
-    flagged = bloom_flag_copartitioned(cand, bloom, n_partitions=8)
+    flagged = bloom_flag_copartitioned(
+        cand, bloom, n_partitions=8, expected_per_partition=1024
+    )
     maybe = flagged.filter(F.col("__maybe")).drop("__maybe")
     fresh = flagged.filter(~F.col("__maybe")).drop("__maybe")
     checked = maybe.join(seen.select(*SEEN_COLS), on=SEEN_COLS, how="left_anti")

@@ -186,9 +186,9 @@ class CrawlJob:
     # definitely-new skip the exact anti-join shuffle. 0 = exact-only.
     bloom_partitions: int = _checked(0, least=0)
     bloom_expected_per_partition: int = _checked(1_000_000, least=1)
-    # the one bloom probe: links cogroup with bank rows on pid, and the
-    # bank is never driver-materialized (operators/bloom.py). 'copartition'
-    # is the only legal value.
+    # the one bloom probe: links shuffle-hash join the bank blocks on
+    # (pid, blk), and the bank is never driver-materialized
+    # (operators/bloom.py). 'copartition' is the only legal value.
     bloom_probe_mode: str = "copartition"
     # fold accumulated seen deltas into the bloom bank every K waves, and
     # on every seen-compaction wave (which drops the parts the tail reads);

@@ -526,11 +526,10 @@ class _Crawl:
             # backends write regardless (resume safety)
             part = io.append(seen_new, "seen", it, eager=False)
         if self.bloom is not None:
-            # the bloom's tail reads the appended seen part: a durable
-            # store keeps only the two newest new_links snapshots. A
-            # compaction wave drops those parts, so it folds at once; its
-            # own part is all of seen, so its new_links delta stands in, as
-            # for a TableIO whose append returns no part.
+            # the bloom's tail reads the appended seen part, as the store
+            # holds it. A compaction wave drops those parts, so it folds
+            # at once; its own part is all of seen, so its new_links delta
+            # stands in, as for a TableIO whose append returns no part.
             self.bloom.add(seen_new if part is None else part, it, fold_now=compact_now)
 
         st.iteration += 1

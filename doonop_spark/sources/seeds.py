@@ -9,6 +9,7 @@ popped (dispatched) first.
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -46,14 +47,22 @@ def seed_frontier(
 
     ``ukey`` is the seen-set key: the canonical URL itself in parity mode,
     the SURT key in surt mode.
+
+    The rows are built as an Arrow table, which Spark turns into a JVM
+    ``LocalRelation``: no Python RDD, so no Python task reads the seeds.
     """
     from doonop_spark.functions.canonical import surt_key
 
-    rows = [
-        (u, surt_key(u) if url_key == "surt" else u, i)
-        for i, u in enumerate(cleaned)
-    ]
-    return _frontier_rows(spark.createDataFrame(rows, "url string, ukey string, seq long"))
+    seeds = pa.table(
+        {
+            "url": pa.array(cleaned, pa.string()),
+            "ukey": pa.array(
+                [surt_key(u) for u in cleaned] if url_key == "surt" else cleaned, pa.string()
+            ),
+            "seq": pa.array(range(len(cleaned)), pa.int64()),
+        }
+    )
+    return _frontier_rows(spark.createDataFrame(seeds))
 
 
 def seed_frontier_distributed(
@@ -84,7 +93,7 @@ def seed_frontier_distributed(
     from doonop_spark.functions.canonical import canonicalize_udf, surt_key_udf
     from doonop_spark.operators.filters import apply_link_filters
 
-    cli = spark.createDataFrame([(u,) for u in cleaned], "url string")
+    cli = spark.createDataFrame(pa.table({"url": pa.array(cleaned, pa.string())}))
     extra = extra_urls.select(
         canonicalize_udf(F.col("url").cast("string")).alias("url")
     ).filter(F.col("url").isNotNull())

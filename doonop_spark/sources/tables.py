@@ -12,13 +12,22 @@ Two interchangeable backends behind one interface:
 - :class:`MemoryTableIO` — state is held as eagerly local-checkpointed
   DataFrames (lineage cut per wave so iterative plans don't snowball).
   Used by tests and the throughput bench.
-- :class:`SnapshotTableIO` — every wave writes parquet snapshot
-  directories ``{root}/{name}/iter={i}`` plus a JSON manifest of scalar
-  state (seq counter, collected count, iteration). ``resume()`` restores
-  the exact pre-wave state — kill the driver at any point and the next
-  run continues from the last complete wave. This is the
+- :class:`SnapshotTableIO` — durable state: what a resume reads and
+  nothing else. The ``frontier`` snapshot of every wave is written as
+  parquet to a temp directory and moved into ``{root}/frontier/iter={i}``
+  with one ``os.replace``; the appended tables (``seen``, ``results``,
+  ``metrics``) are written as ``part_iter={i}`` parts; a JSON manifest
+  (``state.json``) holds the scalar state (seq counter, collected count,
+  iteration). Every other materialized table (``wave``, ``wave_fetched``,
+  ``links_flagged``, ``new_links``, ``bloom``) is a local checkpoint, as
+  in the in-memory backend: no resume reads it, and the bloom bank is
+  rebuilt from ``seen``. ``resume()`` restores the exact pre-wave state —
+  kill the driver at any point and the next run continues from the last
+  committed wave. Losing an executor mid-wave loses that wave's local
+  checkpoints, so it fails the wave, and the crawl resumes from the last
+  committed wave, the same as after a driver crash. This is the
   parquet-directory stand-in for an Iceberg snapshot chain: no Iceberg
-  catalog/jars ship in this sandbox, so Iceberg support is a config
+  catalog/jars ship with this runtime, so Iceberg support is a config
   switch (``table_format="iceberg"``) that raises until the runtime has
   ``spark.sql.catalog.*`` configured for Iceberg.
 """
@@ -134,6 +143,10 @@ def _read_back(df: DataFrame, path: str) -> DataFrame:
 class SnapshotTableIO(TableIO):
     """Parquet snapshot-directory backend with exact resume."""
 
+    # the materialized tables a resume reads; every other one is a local
+    # checkpoint
+    DURABLE = frozenset({"frontier"})
+
     def __init__(self, root: str) -> None:
         self.root = root
         # each appended table's schema, so reading the parts back needs no
@@ -145,10 +158,17 @@ class SnapshotTableIO(TableIO):
         return os.path.join(self.root, name, f"iter={iteration}")
 
     def materialize(self, df: DataFrame, name: str, iteration: int) -> DataFrame:
+        if name not in self.DURABLE:
+            return df.localCheckpoint(eager=True)
         path = self._dir(name, iteration)
-        if os.path.exists(path):
-            shutil.rmtree(path)  # partial write from a killed run
-        df.write.mode("overwrite").parquet(path)
+        tmp = os.path.join(self.root, name, f"_iter={iteration}.tmp")
+        try:
+            df.write.mode("overwrite").parquet(tmp)
+            if os.path.exists(path):
+                shutil.rmtree(path)  # written by a run killed before its state commit
+            os.replace(tmp, path)  # a failed write never leaves iter={iteration}
+        finally:
+            shutil.rmtree(tmp, ignore_errors=True)
         out = _read_back(df, path)
         # snapshots older than the previous wave are dead weight; keep two
         # (current + previous) so a crash mid-write never loses state.
@@ -193,6 +213,11 @@ class SnapshotTableIO(TableIO):
             return json.load(f)
 
     def load_table(self, spark: SparkSession, name: str, iteration: int) -> DataFrame:
+        if name not in self.DURABLE:
+            raise ValueError(
+                f"SnapshotTableIO keeps no durable {name!r} table; "
+                f"durable tables: {', '.join(sorted(self.DURABLE))}"
+            )
         return spark.read.parquet(self._dir(name, iteration))
 
     def prune_appends(self, name: str, max_iteration: int) -> None:

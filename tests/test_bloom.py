@@ -28,11 +28,11 @@ def _links(spark, prefix: str, lo: int, hi: int):
     )
 
 
-def _flag(links, bloom, n_partitions):
+def _flag(links, bloom, n_partitions, expected_per_partition=1000):
     """The probe, materialized the way SeenBloom.new_links materializes it."""
-    return bloom_flag_copartitioned(links, bloom, n_partitions=n_partitions).localCheckpoint(
-        eager=True
-    )
+    return bloom_flag_copartitioned(
+        links, bloom, n_partitions=n_partitions, expected_per_partition=expected_per_partition
+    ).localCheckpoint(eager=True)
 
 
 def test_no_false_negatives(spark, seen):
@@ -69,30 +69,39 @@ def test_sparse_bank_no_false_negatives(spark):
     rows = bloom.collect()
     assert len(rows) < 64  # precondition: some partitions really are empty
     assert {r.p for r in rows} == {64}
-    flagged = _flag(seen, bloom, 64)
+    flagged = _flag(seen, bloom, 64, expected_per_partition=64)
     assert all(r["__maybe"] for r in flagged.collect())
     assert anti_join_flagged(flagged, seen).count() == 0
+
+
+def _plan(df):
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def _bank_join(plan: str) -> bool:
+    """The probe's shuffle-hash join of links to bank blocks."""
+    return any("ShuffledHashJoin" in ln and "__blk" in ln for ln in plan.splitlines())
 
 
 def test_anti_join_probe_runs_once_per_row(spark, seen):
     """``SeenBloom.new_links`` flags ONCE, over a materialized frame: a lazy
     probe/~probe split would run the (possibly expensive) upstream plan and
     the probe twice per wave (measured 4.4× in the crawl loop). The plan
-    of the frame it returns holds no cogroup probe; the unmaterialized
+    of the frame it returns holds no bank join; the unmaterialized
     probe's plan does."""
     links = _links(spark, "http://x.example/p", 4000, 6000)
     bloom = SeenBloom(
         MemoryTableIO(), seen, 0, n_partitions=8, expected_per_partition=1000, fp_rate=0.01
     )
-
-    def plan(df):
-        return df._jdf.queryExecution().executedPlan().toString()
-
-    assert "FlatMapCoGroupsInPandas" in plan(
-        bloom_flag_copartitioned(links, bloom.bank, n_partitions=8)
+    assert _bank_join(
+        _plan(
+            bloom_flag_copartitioned(
+                links, bloom.bank, n_partitions=8, expected_per_partition=1000
+            )
+        )
     )
     out = bloom.new_links(links, seen, 0)
-    assert "FlatMapCoGroupsInPandas" not in plan(out)
+    assert not _bank_join(_plan(out))
     assert sorted(r.ukey for r in out.collect()) == sorted(
         r.ukey for r in anti_join_seen(links, seen).collect()
     )
@@ -109,7 +118,10 @@ def test_copartitioned_empty_pid_is_definitely_new(spark):
     bank_pids = {r.pid for r in bloom.collect()}
     assert len(bank_pids) == 1
     rows = bloom_flag_copartitioned(
-        _links(spark, "http://new.example/", 0, 200), bloom, n_partitions=16
+        _links(spark, "http://new.example/", 0, 200),
+        bloom,
+        n_partitions=16,
+        expected_per_partition=64,
     ).collect()
     assert len(rows) == 200
     empty = [r for r in rows if r.url_hash % 16 not in bank_pids]
@@ -121,7 +133,32 @@ def test_copartitioned_partition_mismatch_raises(spark, seen):
     bloom = build_bloom(seen, n_partitions=8, expected_per_partition=1000)
     links = seen.limit(50)
     with pytest.raises(Exception, match="built with p=8"):
-        bloom_flag_copartitioned(links, bloom, n_partitions=4).collect()
+        bloom_flag_copartitioned(
+            links, bloom, n_partitions=4, expected_per_partition=1000
+        ).collect()
+
+
+def test_bloom_plans_run_no_python(spark, seen):
+    """Build, fold and probe stay in the JVM: no plan holds a Python
+    operator."""
+    from doonop_spark.operators.bloom import fold_bloom
+
+    bank = build_bloom(seen, n_partitions=8, expected_per_partition=1000)
+    delta = _links(spark, "http://z.example/", 0, 100)
+    plans = [
+        bank,
+        fold_bloom(bank, delta, n_partitions=8, expected_per_partition=1000),
+        bloom_flag_copartitioned(delta, bank, n_partitions=8, expected_per_partition=1000),
+    ]
+    python_ops = (
+        "FlatMapGroupsInPandas",
+        "FlatMapCoGroupsInPandas",
+        "ArrowEvalPython",
+        "BatchEvalPython",
+    )
+    for df in plans:
+        plan = _plan(df)
+        assert not [op for op in python_ops if op in plan], plan
 
 
 def test_fold_bloom_bitwise_equals_merge_of_build(spark):

@@ -647,6 +647,27 @@ def test_resume_with_bloom(spark, tmp_path):
     assert vars(full.stats) == vars(resumed.stats)
 
 
+def test_bloom_crawl_snapshot_holds_durable_tables_only(spark, tmp_path):
+    """A bloom crawl on SnapshotTableIO writes only what a resume reads:
+    the frontier snapshots, the appended tables and the state manifest."""
+    import os
+
+    from doonop_spark.sources.tables import SnapshotTableIO
+
+    corpus = synthetic_corpus(spark, n_hosts=2, n_pages=16)
+    job = CrawlJob(
+        seeds=["http://h0000.example/p0", "http://h0001.example/p0"],
+        engines=4,
+        bloom_partitions=4,
+        bloom_expected_per_partition=64,
+        bloom_fold_every=2,
+    )
+    res = run_crawl(spark, job, corpus, io=SnapshotTableIO(str(tmp_path)))
+    assert res.iterations > 2
+    assert sorted(os.listdir(tmp_path)) == ["frontier", "metrics", "results", "seen", "state.json"]
+    assert all(d.startswith("iter=") for d in os.listdir(tmp_path / "frontier"))
+
+
 def test_crawl_delay_budget_enforced_per_wave(spark):
     """north_star politeness: a host whose robots.txt sets Crawl-delay gets
     at most floor(wave_seconds/delay) dispatches per wave — observable in

@@ -53,6 +53,18 @@ def test_sitemap_expansion(spark):
     ]
 
 
+def test_seed_frontier_has_no_python_rdd(spark):
+    """The seed rows reach Spark as an Arrow-built LocalRelation, not a
+    Python RDD, in both key modes."""
+    from doonop_spark.sources.seeds import seed_frontier
+
+    seeds = ["http://a.example/", "http://b.example/x"]
+    for url_key in ("parity", "surt"):
+        df = seed_frontier(spark, seeds, url_key)
+        assert "LogicalRDD" not in df._jdf.queryExecution().optimizedPlan().toString()
+        assert [r.seq for r in df.orderBy("seq").collect()] == [0, 1]
+
+
 def test_seed_frontier_distributed_matches_driver_clean(spark, monkeypatch):
     """The DataFrame seed path must reproduce seed_frontier(clean_seeds(...))
     exactly — same urls, same sorted-rank seq — at any input partitioning,
