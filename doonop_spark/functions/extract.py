@@ -23,8 +23,10 @@ Reference semantics being reproduced:
      unescaped, and whitespace runs collapsed to single spaces (classic
      boilerplate-free fallback).
 
-Both are pandas UDFs over Arrow batches — regex scans per element inside a
-batch, never row-at-a-time Spark UDFs (input_hint: no per-row Python).
+Both run, with P4 absolutization of the links against the page URL, in
+one pandas UDF, :func:`extract_page_udf` — regex scans per element inside
+an Arrow batch, never a row-at-a-time Spark UDF (input_hint: no per-row
+Python). The ``_py`` kernels are its reference implementation.
 """
 
 from __future__ import annotations
@@ -39,8 +41,6 @@ from pyspark.sql import types as T
 __all__ = [
     "extract_links_py",
     "extract_text_py",
-    "extract_links_udf",
-    "extract_text_udf",
     "extract_page_udf",
 ]
 
@@ -101,16 +101,6 @@ def extract_text_py(html: bytes | str | None) -> str | None:
     body = _TAG_RE.sub(" ", body)
     body = _html.unescape(body)
     return _WS_RE.sub(" ", body).strip()
-
-
-@F.pandas_udf(T.ArrayType(T.StringType()))
-def extract_links_udf(html: pd.Series) -> pd.Series:
-    return pd.Series([extract_links_py(h) for h in html], dtype="object")
-
-
-@F.pandas_udf(T.StringType())
-def extract_text_udf(html: pd.Series) -> pd.Series:
-    return pd.Series([extract_text_py(h) for h in html], dtype="object")
 
 
 # Fused P1+P2+P4 kernel: ONE Arrow stage computing links (already

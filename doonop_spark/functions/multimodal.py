@@ -33,7 +33,6 @@ __all__ = [
     "auto_decode",
     "encode_ppm",
     "decode_media",
-    "extract_features",
     "sample_frames",
 ]
 
@@ -144,7 +143,6 @@ def fake_decode(payload: bytes, mime: str) -> np.ndarray:
 def decode_media(
     df: DataFrame,
     decoder: Callable[[bytes, str], np.ndarray] = fake_decode,
-    batch_hint: int = 64,
 ) -> DataFrame:
     """binary payload → decoded frame stats (mapInPandas). Output keeps the
     id plus the decoded shape and summary stats — the pattern a real
@@ -175,30 +173,6 @@ def decode_media(
     return df.select("media_id", "payload", "mime").mapInPandas(
         run,
         schema="media_id long, shape array<int>, mean double, std double, error string",
-    )
-
-
-def extract_features(
-    df: DataFrame,
-    dim: int = 16,
-    decoder: Callable[[bytes, str], np.ndarray] = fake_decode,
-) -> DataFrame:
-    """media → embedding-shaped feature vector (array<float>), usable by
-    operators/similarity.py. Deterministic under the fake decoder."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, vecs = [], []
-            for mid, payload, mime in zip(pdf["media_id"], pdf["payload"], pdf["mime"]):
-                frame = decoder(bytes(payload) if payload is not None else b"", mime)
-                flat = frame.ravel()
-                reps = int(np.ceil(dim / flat.size))
-                vecs.append(np.tile(flat, reps)[:dim].astype(np.float32).tolist())
-                ids.append(int(mid))
-            yield pd.DataFrame({"media_id": ids, "features": vecs})
-
-    return df.select("media_id", "payload", "mime").mapInPandas(
-        run, schema="media_id long, features array<float>"
     )
 
 

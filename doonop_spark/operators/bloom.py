@@ -57,13 +57,13 @@ def _params(expected_per_partition: int, fp_rate: float) -> tuple[int, int]:
     return m, min(k, 16)
 
 
-def _keyed(df: DataFrame, hash_col: str, n_partitions: int, m: int) -> DataFrame:
-    """``df`` with each key's partition ``__pid``, block ``__blk`` and
-    second hash ``__g``."""
-    g = F.xxhash64(F.col(hash_col))
+def _keyed(df: DataFrame, n_partitions: int, m: int) -> DataFrame:
+    """``df`` with each ``url_hash`` key's partition ``__pid``, block
+    ``__blk`` and second hash ``__g``."""
+    g = F.xxhash64(F.col("url_hash"))
     return df.select(
         "*",
-        F.pmod(F.col(hash_col), F.lit(n_partitions)).cast("int").alias("__pid"),
+        F.pmod(F.col("url_hash"), F.lit(n_partitions)).cast("int").alias("__pid"),
         F.pmod(g, F.lit(-(-m // _BLOCK_BITS))).cast("int").alias("__blk"),
         g.alias("__g"),
     )
@@ -104,11 +104,11 @@ def build_bloom(
     n_partitions: int = 64,
     expected_per_partition: int = 1_000_000,
     fp_rate: float = 0.01,
-    hash_col: str = "url_hash",
 ) -> DataFrame:
-    """Seen keys → one bank row per non-empty ``(pid, blk)`` block."""
+    """Seen ``url_hash`` keys → one bank row per non-empty ``(pid, blk)``
+    block."""
     m, k = _params(expected_per_partition, fp_rate)
-    positions = _keyed(seen.select(hash_col), hash_col, n_partitions, m).select(
+    positions = _keyed(seen.select("url_hash"), n_partitions, m).select(
         "__pid", "__blk", F.posexplode(F.array(*_bit_positions(k))).alias("i", "pos")
     )
     return _bank(
@@ -121,13 +121,32 @@ def build_bloom(
     )
 
 
+def _param_mismatch(
+    p_col: Column, m_col: Column, n_partitions: int, m: int, verb: str
+) -> tuple[Column, Column]:
+    """``(condition, error)`` for a bank row whose ``p`` or ``m`` differs
+    from the parameters it is ``verb`` with: using such a bank would probe
+    or fold with the wrong modulus or block count (false negatives =
+    dropped-duplicate admissions), so the job fails through
+    ``raise_error`` instead."""
+    error = F.raise_error(
+        F.concat(
+            F.lit("bloom bank built with p="),
+            p_col.cast("string"),
+            F.lit(", m="),
+            m_col.cast("string"),
+            F.lit(f"; {verb} with p={n_partitions}, m={m}"),
+        )
+    )
+    return (p_col != n_partitions) | (m_col != m), error
+
+
 def fold_bloom(
     bank: DataFrame,
     seen_delta: DataFrame,
     n_partitions: int,
     expected_per_partition: int = 1_000_000,
     fp_rate: float = 0.01,
-    hash_col: str = "url_hash",
 ) -> DataFrame:
     """OR a batch of seen keys into an existing bank: the delta's own bank
     is unioned in and each block's bitmaps are ORed by ``bitmap_or_agg``.
@@ -135,19 +154,20 @@ def fold_bloom(
     tests). A block with bank row but no new keys passes its bits
     through; a block with keys but no bank row creates one.
 
-    The parameters are checked against one bank row first (one small
-    job), so a mismatched fold raises even when every key lands on a
-    block the bank has no row for."""
+    Every bank row is checked against the fold's parameters inside the
+    fold's own plan (:func:`_param_mismatch` on its ``pid``, a grouping
+    key no projection prunes), so a mismatched fold fails when it is
+    materialized, even when every key lands on a block the bank has no
+    row for."""
     m, k = _params(expected_per_partition, fp_rate)
-    row = bank.select("p", "m").first()
-    if row is not None and (row["p"] != n_partitions or row["m"] != m):
-        raise ValueError(
-            f"fold_bloom: bank built with p={row['p']}, m={row['m']}; "
-            f"folding with p={n_partitions}, m={m}"
+    bad, error = _param_mismatch(F.col("p"), F.col("m"), n_partitions, m, "folded")
+    cols = [F.col("blk").alias("__blk"), "n", "bits"]
+    both = bank.select(
+        F.when(bad, error).otherwise(F.col("pid")).alias("__pid"), *cols
+    ).unionByName(
+        build_bloom(seen_delta, n_partitions, expected_per_partition, fp_rate).select(
+            F.col("pid").alias("__pid"), *cols
         )
-    delta = build_bloom(seen_delta, n_partitions, expected_per_partition, fp_rate, hash_col)
-    both = bank.unionByName(delta).select(
-        F.col("pid").alias("__pid"), F.col("blk").alias("__blk"), "n", "bits"
     )
     return _bank(both, F.sum("n"), F.bitmap_or_agg("bits"), n_partitions, m, k)
 
@@ -164,10 +184,8 @@ def bloom_flag_copartitioned(
     n_partitions: int,
     expected_per_partition: int = 1_000_000,
     fp_rate: float = 0.01,
-    hash_col: str = "url_hash",
-    flag_col: str = "__maybe",
 ) -> DataFrame:
-    """Append ``flag_col`` (True = maybe seen, False = definitely new) to
+    """Append ``__maybe`` (True = maybe seen, False = definitely new) to
     ``links`` WITHOUT driver-collecting the bank: links left-join the bank
     rows on ``(pid, blk)`` as a shuffle-hash join with the bank as the
     build side, and k JVM bit tests over the joined block set the flag. A
@@ -175,10 +193,8 @@ def bloom_flag_copartitioned(
     definitely new.
 
     ``n_partitions``, ``expected_per_partition`` and ``fp_rate`` must be
-    the bank's build parameters. A joined row whose ``p`` or ``m`` differs
-    fails the job through ``raise_error`` instead of probing with the
-    wrong modulus or block count (false negatives = dropped-duplicate
-    admissions)."""
+    the bank's build parameters: a joined row whose ``p`` or ``m`` differs
+    fails the job (:func:`_param_mismatch`)."""
     m, k = _params(expected_per_partition, fp_rate)
     bank = bloom_df.select(
         F.col("pid").alias("__pid"),
@@ -187,26 +203,14 @@ def bloom_flag_copartitioned(
         F.col("m").alias("__m"),
         F.col("bits").alias("__bits"),
     )
-    joined = _keyed(links, hash_col, n_partitions, m).join(
+    joined = _keyed(links, n_partitions, m).join(
         bank.hint("shuffle_hash"), on=["__pid", "__blk"], how="left"
     )
     bits = F.col("__bits")
     hit = reduce(Column.__and__, [_bit_set(bits, pos) for pos in _bit_positions(k)])
-    mismatch = F.raise_error(
-        F.concat(
-            F.lit("bloom bank built with p="),
-            F.col("__p").cast("string"),
-            F.lit(", m="),
-            F.col("__m").cast("string"),
-            F.lit(f"; probed with p={n_partitions}, m={m}"),
-        )
-    )
-    flag = (
-        F.when(bits.isNull(), F.lit(False))
-        .when((F.col("__p") != n_partitions) | (F.col("__m") != m), mismatch)
-        .otherwise(hit)
-    )
-    return joined.select(*links.columns, flag.alias(flag_col))
+    bad, error = _param_mismatch(F.col("__p"), F.col("__m"), n_partitions, m, "probed")
+    flag = F.when(bits.isNull(), F.lit(False)).when(bad, error).otherwise(hit)
+    return joined.select(*links.columns, flag.alias("__maybe"))
 
 
 class SeenBloom:

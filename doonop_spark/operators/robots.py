@@ -232,8 +232,6 @@ def robots_gate(
     robots: DataFrame | None,
     robot: str = DEFAULT_ROBOT,
     use_robots: bool = False,
-    host_col: str = "host",
-    url_col: str = "url",
 ) -> DataFrame:
     """F6/F7 — admission gate over a scheduled wave.
 
@@ -254,10 +252,10 @@ def robots_gate(
     r = F.broadcast(
         robots.select(F.col("host").alias("__rhost"), F.col("rules").alias("__rules"))
     )
-    joined = wave.join(r, wave[host_col] == r["__rhost"], "left")
-    path = _path_expr(F.col(url_col))
+    joined = wave.join(r, wave["host"] == r["__rhost"], "left")
+    path = _path_expr(F.col("url"))
     longest = F.array_max(F.filter("__rules", lambda x: F.regexp_like(path, x["rx"])))
-    gate = F.col(host_col).isNull() | (
+    gate = F.col("host").isNull() | (
         F.col("__rules").isNotNull() & F.coalesce(longest["allow"], F.lit(True))
     )
     return joined.filter(gate).drop("__rhost", "__rules")

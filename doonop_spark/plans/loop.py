@@ -669,9 +669,13 @@ def run_crawl(
         # reference's ≤ in-flight-count overshoot (src/workload.rs:127-131)
         if job.limit is not None and waves_run > 0 and st.collected >= job.limit:
             break
+        if st.frontier_rows == 0:
+            break  # the committed frontier is empty: no wave to schedule
         wave, deferred, n, buckets = crawl.schedule_wave(frontier, st)
         if n == 0:
-            break  # nothing dispatchable: job_counter == 0 (src/workload.rs:178)
+            # budgets or unripe retries held back every row: nothing
+            # dispatchable, job_counter == 0 (src/workload.rs:178)
+            break
         waves_run += 1
         fetched = crawl.fetch_wave(wave, buckets, st)
         new_links = crawl.expand_links(fetched, seen, st.iteration)

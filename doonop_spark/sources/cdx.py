@@ -13,13 +13,17 @@ consumes that index:
 - :func:`cdx_index` — distributed index build: one task per archive
   through the scan ``read_warc`` uses (``warc._scan_archives``: same
   path rule, batching and skipped-byte log), streaming member-by-member
-  so task memory is O(record). Offsets come from
+  so task memory is O(member): O(record) for Common Crawl's
+  one-record-per-member layout, but the whole inflated archive for a
+  ``.warc.gz`` written as one member. Offsets come from
   counting *compressed* bytes per gzip member (``.warc.gz``) or record
   spans in the raw byte stream (plain ``.warc``).
 - :func:`read_warc_record` / :func:`fetch_cdx` — random access: seek to
   ``offset``, read ``length`` bytes, inflate one member and return the
   record the index row names (its ``url`` and ``ts14``), so a member
-  holding several records still returns each capture's own page.
+  holding several records still returns each capture's own page. Every
+  capture of such a member shares its offset, so each one re-inflates
+  the member from its start.
   ``fetch_cdx`` is the distributed form (an indexed subset → pages) — it
   repartitions by filename and seeks ascending offsets so each task
   streams forward through one archive.
@@ -107,9 +111,12 @@ def iter_gzip_members(
     """Yield ``(offset, compressed_length, inflated_bytes)`` per gzip
     member of a multi-member stream — the member boundaries ARE the CDX
     coordinates for a ``.warc.gz`` (one record per member, the Common
-    Crawl convention). Memory is O(member) = O(record); a corrupt member
-    stops the scan (the caller logs how many bytes of the archive were
-    indexed)."""
+    Crawl convention). Memory is O(member): O(record) in that layout,
+    but the whole inflated archive for an archive written as one member,
+    whose captures then all share one offset, so random access into it
+    re-inflates the member from its start for every capture. A corrupt
+    member stops the scan (the caller logs how many bytes of the archive
+    were indexed)."""
     next_off = 0  # absolute offset of the next compressed byte to consume
     tail = b""
     d: zlib._Decompress | None = None

@@ -71,7 +71,6 @@ def seed_frontier_distributed(
     extra_urls: DataFrame,
     url_key: str = "parity",
     filters: list[Filter] = (),
-    n_partitions: int | None = None,
 ) -> DataFrame:
     """Wave-0 frontier from CLI seeds PLUS a *DataFrame* of extra seed URLs
     (column ``url``) — the scale path for sitemap expansion (S6): millions
@@ -100,7 +99,7 @@ def seed_frontier_distributed(
     urls = apply_link_filters(cli.unionByName(extra), list(filters))
     urls = urls.dropDuplicates(["url"])
 
-    n = n_partitions or spark.sparkContext.defaultParallelism
+    n = spark.sparkContext.defaultParallelism
     # range-partitioned sort: partition i of the checkpointed frame holds
     # the i-th url range, sorted within — so (partition index, row offset)
     # IS the global sorted rank once per-partition offsets are added

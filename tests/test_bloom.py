@@ -208,8 +208,10 @@ def test_fold_bloom_bitwise_equals_merge_of_build(spark):
 
 def test_fold_bloom_param_mismatch_raises_on_empty_pids(spark):
     """A fold whose p/m differ from the bank's raises even when every new
-    key lands on a pid the bank has no row for (no per-pid row to compare
-    against inside the cogroup)."""
+    key lands on a pid the bank has no row for (no block of the bank
+    meets a block of the delta)."""
+    from pyspark.errors import SparkRuntimeException
+
     from doonop_spark.operators.bloom import fold_bloom
 
     bank = build_bloom(
@@ -219,10 +221,39 @@ def test_fold_bloom_param_mismatch_raises_on_empty_pids(spark):
     )
     delta = spark.createDataFrame([(i * 4 + 1,) for i in range(50)], "url_hash long")
     assert {r.pid for r in bank.select("pid").collect()} == {0}
-    with pytest.raises(ValueError, match="fold_bloom: bank built with p=4"):
+    with pytest.raises(SparkRuntimeException, match="bank built with p=4"):
         fold_bloom(bank, delta, n_partitions=4, expected_per_partition=512).collect()
-    with pytest.raises(ValueError, match="fold_bloom: bank built with p=4"):
+    with pytest.raises(SparkRuntimeException, match="bank built with p=4"):
         fold_bloom(bank, delta, n_partitions=8, expected_per_partition=256).collect()
     # matching parameters fold as before
     folded = fold_bloom(bank, delta, n_partitions=4, expected_per_partition=256)
     assert {r.pid for r in folded.select("pid").collect()} == {0, 1}
+
+
+def test_fold_bloom_checks_in_plan_not_on_driver(spark):
+    """Building a fold launches no Spark job: the parameter check rides in
+    the fold's plan, so a mismatched fold fails only when materialized,
+    with the same message shape the probe uses."""
+    from pyspark.errors import SparkRuntimeException
+
+    from doonop_spark.operators.bloom import fold_bloom
+
+    # a checkpointed bank, as the crawl loop holds it: p and m are data
+    bank = build_bloom(
+        _links(spark, "http://x.example/", 0, 200), n_partitions=4, expected_per_partition=256
+    ).localCheckpoint(eager=True)
+    delta = _links(spark, "http://y.example/", 0, 50)
+    sc = spark.sparkContext
+    sc.setJobGroup("fold_bloom", "fold construction")
+    try:
+        mismatched = fold_bloom(bank, delta, n_partitions=8, expected_per_partition=256)
+        matched = fold_bloom(bank, delta, n_partitions=4, expected_per_partition=256)
+        assert sc.statusTracker().getJobIdsForGroup("fold_bloom") == []
+        bank.count()  # the group does record jobs
+        assert sc.statusTracker().getJobIdsForGroup("fold_bloom")
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    with pytest.raises(SparkRuntimeException, match="p=4, m=2496; folded with p=8, m=2496"):
+        mismatched.localCheckpoint(eager=True)
+    assert matched.localCheckpoint(eager=True).count() > 0

@@ -51,6 +51,18 @@ class FetchPlans(MemoryTableIO):
         return out
 
 
+class CallLog(MemoryTableIO):
+    """MemoryTableIO that records the name of every materialized table."""
+
+    def __init__(self):
+        super().__init__()
+        self.names = []
+
+    def materialize(self, df, name, iteration):
+        self.names.append(name)
+        return super().materialize(df, name, iteration)
+
+
 def bucket_pruned(plan: str) -> bool:
     """The scan's PartitionFilters name the ``bucket`` column."""
     pf = plan.split("PartitionFilters: [", 1)
@@ -124,6 +136,30 @@ def test_empty_seed_zero_stats(spark):
     assert res.iterations == 0
     assert list(res.extra) == ["fetch_side"]
     assert res.seen.count() == 0
+
+
+@pytest.mark.parametrize("engines", [1, None])
+def test_drained_frontier_schedules_no_wave(spark, engines):
+    """A crawl whose committed frontier is empty stops before scheduling:
+    no ``wave`` materializes after the last frontier commit, and there is
+    one ``wave`` per crawled iteration. In scale mode a Crawl-delay budget
+    makes every schedule materialize its wave."""
+    pages = {
+        "http://a.com/": ["http://b.com/", "http://c.com/"],
+        "http://b.com/": ["http://a.com/"],
+        "http://c.com/": [],
+    }
+    robots = spark.createDataFrame(
+        [(u[7:-1], "User-agent: *\nCrawl-delay: 1\n") for u in pages],
+        "host string, robots_txt string",
+    )
+    job = CrawlJob(seeds=["http://a.com"], engines=engines, use_robots=engines is None)
+    io = CallLog()
+    res = run_crawl(spark, job, mock_corpus(spark, pages), robots=robots, io=io)
+    assert res.stats.count_collected == 3 and res.frontier.count() == 0
+    last_commit = len(io.names) - 1 - io.names[::-1].index("frontier")
+    assert "wave" not in io.names[last_commit:], io.names
+    assert io.names.count("wave") == res.iterations
 
 
 def test_missing_page_is_terminal_error(spark):

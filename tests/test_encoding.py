@@ -134,23 +134,27 @@ def test_transcode_corpus_passthrough_and_recode(spark):
 
 
 def test_transcoded_page_extracts_clean_text(spark):
-    """End-to-end: a windows-1252 page through transcode + the flagship
-    extract kernel yields the true unicode text, not mojibake."""
-    from doonop_spark.functions.extract import extract_text_udf
+    """End-to-end: a windows-1252 page through transcode + the crawl's
+    fused extract kernel yields the true unicode text, not mojibake, and
+    its link absolutized against the page URL."""
+    from doonop_spark.functions.extract import extract_page_udf
 
     legacy = (
         '<html><head><meta charset="windows-1252"></head>'
-        "<body><main>naïve café – done</main></body></html>"
+        '<body><main>naïve café – done</main><a href="../menu">menu</a></body></html>'
     ).encode("windows-1252")
-    corpus = spark.createDataFrame([(legacy,)], "html binary")
-    raw = corpus.select(extract_text_udf("html").alias("t")).collect()[0]["t"]
-    assert "café" not in raw  # mojibake without transcoding
-    fixed = (
-        transcode_corpus(corpus)
-        .select(extract_text_udf("html").alias("t"))
-        .collect()[0]["t"]
+    corpus = spark.createDataFrame(
+        [("http://legacy.example/a/b", legacy)], "url string, html binary"
     )
-    assert fixed == "naïve café – done"
+
+    def page(df):
+        return df.select(extract_page_udf("url", "html").alias("p")).collect()[0]["p"]
+
+    raw = page(corpus)
+    assert "café" not in raw.text  # mojibake without transcoding
+    fixed = page(transcode_corpus(corpus))
+    assert fixed.text == "naïve café – done"
+    assert fixed.links == ["http://legacy.example/menu"]
 
 
 def test_charset_detection_is_jvm_only(spark):

@@ -68,22 +68,23 @@ def test_text_fallback_strips_and_collapses():
 
 
 def test_udfs_on_spark(spark):
-    from pyspark.sql import functions as F
-
-    from doonop_spark.functions.extract import extract_links_udf, extract_text_udf
+    """The crawl's fused kernel on Spark: links absolutized against the
+    page URL, text by the same rule as the pure-Python kernel."""
+    from doonop_spark.functions.extract import extract_page_udf
 
     df = spark.createDataFrame(
-        [("u1", FIXTURE_INDEX.encode()), ("u2", FIXTURE_ABOUT.encode())],
+        [
+            ("http://basic.example/docs/index.html", FIXTURE_INDEX.encode()),
+            ("http://basic.example/docs/about.html", FIXTURE_ABOUT.encode()),
+        ],
         "url string, html binary",
     )
     rows = {
-        r.url: (r.links, r.text)
-        for r in df.select(
-            "url",
-            extract_links_udf("html").alias("links"),
-            extract_text_udf("html").alias("text"),
-        ).collect()
+        r.url: (r.page.links, r.page.text)
+        for r in df.select("url", extract_page_udf("url", "html").alias("page")).collect()
     }
-    assert rows["u1"][0] == ["./about.html"]
-    assert rows["u2"][0] == []
-    assert rows["u2"][1] == "Nothing is here"
+    assert rows["http://basic.example/docs/index.html"] == (
+        ["http://basic.example/docs/about.html"],
+        "About",
+    )
+    assert rows["http://basic.example/docs/about.html"] == ([], "Nothing is here")

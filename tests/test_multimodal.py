@@ -8,7 +8,6 @@ import pytest
 from doonop_spark.functions.multimodal import (
     MEDIA_SCHEMA,
     decode_media,
-    extract_features,
     fake_decode,
     sample_frames,
     strict_decode,
@@ -50,13 +49,6 @@ def test_decode_media_plumbing(spark, media):
 def test_strict_mode_errors_as_rows(spark, media):
     out = decode_media(media, decoder=strict_decode).collect()
     assert all(r.error is not None and r.shape is None for r in out)
-
-
-def test_extract_features_shape(spark, media):
-    out = extract_features(media, dim=16).collect()
-    assert all(len(r.features) == 16 for r in out)
-    by_id = {r.media_id: r.features for r in out}
-    assert by_id[1] != by_id[2]
 
 
 def test_sample_frames_fanout(spark, media):
@@ -158,12 +150,7 @@ def test_decode_media_with_real_codec(spark):
     payloads surface as error rows (strict semantics)."""
     import numpy as np
 
-    from doonop_spark.functions.multimodal import (
-        auto_decode,
-        decode_media,
-        encode_ppm,
-        extract_features,
-    )
+    from doonop_spark.functions.multimodal import auto_decode, encode_ppm
 
     img = np.linspace(0, 1, 2 * 4 * 3, dtype=np.float32).reshape(2, 4, 3)
     rows = [
@@ -181,9 +168,3 @@ def test_decode_media_with_real_codec(spark):
     assert abs(got[1].mean - float(decoded.mean())) < 1e-6
     assert got[1].error is None
     assert got[2].shape is None and "codec" in got[2].error
-
-    feats = {
-        r.media_id: r.features
-        for r in extract_features(media.filter("media_id = 1"), dim=8, decoder=auto_decode).collect()
-    }
-    assert np.allclose(feats[1], decoded.ravel()[:8])
