@@ -50,11 +50,15 @@ _BLOCK_BITS = 32768
 
 def _params(expected_per_partition: int, fp_rate: float) -> tuple[int, int]:
     """Optimal (m bits, k hashes) for n keys at the target FP rate."""
-    n = max(expected_per_partition, 1)
+    n = expected_per_partition
+    if n < 1:
+        raise ValueError(f"bloom expected_per_partition must be >= 1, got {n}")
+    if not 0 < fp_rate < 1:
+        raise ValueError(f"bloom fp_rate must be in (0, 1), got {fp_rate}")
     m = int(-n * math.log(fp_rate) / (math.log(2) ** 2))
     m = max(64, (m + 63) // 64 * 64)  # word-align
     k = max(1, round(m / n * math.log(2)))
-    return m, min(k, 16)
+    return m, k
 
 
 def _keyed(df: DataFrame, n_partitions: int, m: int) -> DataFrame:

@@ -8,9 +8,11 @@ Reference semantics reproduced exactly:
   a small ``robots`` table ``(host, robots_txt)``; :func:`compile_robots`
   turns it ONCE per crawl, in one Arrow pass, into ``(host, delay,
   rules)`` — each rule a ``(len, allow, rx)`` struct whose ``rx`` is a Java
-  regex — and ``run_crawl`` checkpoints that table. Every wave's gate then
-  broadcast-joins it and matches paths with ``regexp_like`` inside a
-  higher-order ``filter``: JVM only, no Python stage.
+  regex — and ``run_crawl`` checkpoints that table. The crawl gates each
+  URL once, as it enters the frontier (the seeds, then each wave's new
+  links), so no wave spends a fetch slot on a disallowed URL: the gate
+  broadcast-joins the table and matches paths with ``regexp_like`` inside
+  a higher-order ``filter``: JVM only, no Python stage.
 - a URL **without a domain is always allowed** (F7, ``src/robots.rs:16-19``).
 - a robots **fetch error ⇒ the URL is silently skipped** — never
   dispatched, never counted (``src/workload.rs:100-109`` ``if let Ok(true)``
@@ -227,32 +229,24 @@ def compile_robots(robots: DataFrame, robot: str = DEFAULT_ROBOT) -> DataFrame:
     return robots.select("host", c["delay"].alias("delay"), c["rules"].alias("rules"))
 
 
-def robots_gate(
-    wave: DataFrame,
-    robots: DataFrame | None,
-    robot: str = DEFAULT_ROBOT,
-    use_robots: bool = False,
-) -> DataFrame:
-    """F6/F7 — admission gate over a scheduled wave.
+def robots_gate(frame: DataFrame, robots: DataFrame | None) -> DataFrame:
+    """F6/F7 — the admission gate: the rows of ``frame`` (``url``, ``host``)
+    that may enter the frontier; ``robots=None`` admits every row.
 
-    ``robots`` is a tiny per-host table, compiled (:func:`compile_robots`)
-    or raw ``(host, robots_txt)`` (compiled here), broadcast-joined onto
-    the wave. A row passes when its host is NULL (F7), or when its host
-    has rules and the longest rule matching its path — ``array_max`` over
-    the matching ``(len, allow, rx)`` structs — is an Allow (tie ⇒ Allow,
-    no match ⇒ allowed). A host without rules (no robots row, or a NULL
-    ``robots_txt``) is a fetch miss: its rows drop silently. Over a
-    compiled, checkpointed table the gate is JVM only.
+    ``robots`` is the compiled per-host table (:func:`compile_robots`),
+    broadcast-joined onto ``frame``. A row passes when its host is NULL
+    (F7), or when its host has rules and the longest rule matching its
+    path — ``array_max`` over the matching ``(len, allow, rx)`` structs —
+    is an Allow (tie ⇒ Allow, no match ⇒ allowed). A host without rules
+    (no robots row, or a NULL ``robots_txt``) is a fetch miss: its rows
+    drop silently. Over a checkpointed table the gate is JVM only.
     """
-    if not use_robots or robots is None:
-        return wave
-    if "rules" not in robots.columns:
-        robots = compile_robots(robots, robot)
-
+    if robots is None:
+        return frame
     r = F.broadcast(
         robots.select(F.col("host").alias("__rhost"), F.col("rules").alias("__rules"))
     )
-    joined = wave.join(r, wave["host"] == r["__rhost"], "left")
+    joined = frame.join(r, frame["host"] == r["__rhost"], "left")
     path = _path_expr(F.col("url"))
     longest = F.array_max(F.filter("__rules", lambda x: F.regexp_like(path, x["rx"])))
     gate = F.col("host").isNull() | (

@@ -232,10 +232,7 @@ def scale_wave(
     return flagged.filter(F.col("__keep")).drop("__keep"), deferred, n
 
 
-def politeness_budget(
-    robots: DataFrame | None,
-    wave_seconds: float,
-) -> DataFrame | None:
+def politeness_budget(robots: DataFrame, wave_seconds: float) -> DataFrame:
     """Per-host wave budget from robots Crawl-delay: a host allowing one
     request per ``delay`` seconds gets ``max(1, wave_seconds/delay)`` slots
     per wave (north_star politeness extension; the reference only has the
@@ -243,8 +240,6 @@ def politeness_budget(
     table (:func:`doonop_spark.operators.robots.compile_robots`), whose
     ``delay`` is already parsed — this is a pure JVM projection. A delay
     so small that the budget overflows an int is unbounded."""
-    if robots is None:
-        return None
     slots = F.floor(F.lit(wave_seconds) / F.col("delay"))
     return robots.filter(F.col("delay").isNotNull() & (F.col("delay") > 0)).select(
         "host",

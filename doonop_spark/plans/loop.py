@@ -10,13 +10,14 @@ and runs four stages per wave (methods of ``_Crawl``) over one
    per-host politeness budget, global engine cap (operators/schedule.py:
    ``select_wave`` when ``engines`` bounds the wave, else ``scale_wave``).
    Pure JVM.
-2. **fetch_wave** — left-join the wave against the fetch side chosen once
-   per crawl (sources/corpus.py ``choose_fetch_side``: cached,
-   bucket-pruned or raw; S4: the corpus replaces the live WebDriver
-   fetch). A URL missing from it is a terminal fetch error (E3). An
-   optional ``fault_schedule`` ``(url, attempt, fault)`` injects
-   ``timeout`` (retryable, E1/E2) and ``error`` faults. Out-links and
-   byte-identical text come from one Arrow stage in the join's stage.
+2. **fetch_wave** — left-join the wave, whose rows all passed the robots
+   gate on entering the frontier, against the fetch side chosen once per
+   crawl (sources/corpus.py ``choose_fetch_side``: cached, bucket-pruned or
+   raw; S4: the corpus replaces the live WebDriver fetch). A URL missing
+   from it is a terminal fetch error (E3). An optional ``fault_schedule``
+   ``(url, attempt, fault)`` injects ``timeout`` (retryable, E1/E2) and
+   ``error`` faults. Out-links and byte-identical text come from one Arrow
+   stage in the join's stage.
    Statistics, metrics and results are taken here.
 3. **expand_links** — posexplode, filter (F5), seen key, within-batch dedup
    (D3), anti-join the seen table (D1), optionally behind the bloom
@@ -25,6 +26,11 @@ and runs four stages per wave (methods of ``_Crawl``) over one
    seen set, like the reference's pop-then-skip), ``seq``, retries, then
    frontier, seen, bloom delta and ``WaveState`` through TableIO ⇒ exact
    resume at wave granularity.
+
+The robots gate runs once per URL, as it enters the frontier: ``run_crawl``
+gates the seeds and ``commit_wave`` the new links, so no wave spends a slot
+on a disallowed URL — the reference's check at dispatch
+(``src/workload.rs:100-109``).
 
 Bounded and scale mode differ only in wave selection and in ``seq`` /
 ``dispatch_rank``: bounded mode ranks exactly (``row_number``), scale mode
@@ -333,8 +339,7 @@ class _Crawl:
         Statistics are observed on that job, then metrics and results are
         appended from it."""
         job, io, it = self.job, self.io, st.iteration
-        gated = robots_gate(wave, self.robots, job.robot, job.use_robots)
-        joined = self.side.join(gated, buckets)
+        joined = self.side.join(wave, buckets)
         if job.dedup_captures:
             joined = latest_capture(joined)
         # per-status counts ride the fetch materialize (K2 stats without a
@@ -352,7 +357,7 @@ class _Crawl:
             "wave_fetched",
             it,
         )
-        c = {k: int(v) for k, v in obs.get.items()}  # n may be 0: all robots-skipped
+        c = {k: int(v) for k, v in obs.get.items()}
         st.stats.count_visited += c["n"]
         st.stats.count_collected += c["ok"]
         if job.retry_policy == RetryPolicy.NO:
@@ -451,12 +456,7 @@ class _Crawl:
         # all newly-discovered links enter the seen set at enqueue time
         # (D1, src/workload.rs:202-211) — even those robots later rejects
         seen_new = new_links.select(*SEEN_COLS)
-        admitted = robots_gate(
-            new_links.withColumn("host", host_expr(F.col("url"))),
-            self.robots,
-            job.robot,
-            job.use_robots,
-        )
+        admitted = robots_gate(new_links.withColumn("host", host_expr(F.col("url"))), self.robots)
         enqueue = admitted.withColumn("__rn", rank).select(
             "url",
             "ukey",
@@ -595,6 +595,16 @@ def run_crawl(
         )
     # resolved before seeding, so the seed frontier observes its buckets
     side = choose_fetch_side(corpus, job.corpus_cache_max_bytes, job.dedup_captures)
+    budgets = None
+    if job.use_robots:
+        # robots.txt is parsed ONCE per crawl (the reference's per-(domain,
+        # robot) verifier cache, src/robots.rs:23-33): one Arrow pass
+        # compiles it to Java regexes, checkpointed so the admission gate
+        # and the Crawl-delay budgets stay in the JVM
+        robots = compile_robots(robots, job.robot).localCheckpoint(eager=True)
+        budgets = politeness_budget(robots, job.wave_seconds)
+    else:
+        robots = None
 
     # ---- init / resume -----------------------------------------------------
     st = WaveState.load(io) if resume else None
@@ -615,24 +625,21 @@ def run_crawl(
             )
         else:
             seeds = seed_frontier(spark, cleaned, job.url_key)
-        frontier = _commit_frontier(io, seeds, st, side.n_buckets)
-        st.seq_counter = st.frontier_rows
+        # seeds pass the robots gate as they enter the frontier, like every
+        # discovered link (F6: a disallowed URL never takes a wave slot)
+        frontier = _commit_frontier(io, robots_gate(seeds, robots), st, side.n_buckets)
+        if st.frontier_rows:
+            # seeds hold seq 0..max_seq; links are numbered from max_seq + 2
+            st.seq_counter += 1
         # the seen table is append-only (monotone, §2.9): store per-wave
         # DELTAS and anti-join against their union — rewriting the full
-        # seen set every wave would be O(total²) over the crawl. Seeds are
-        # the wave "-1" delta (enqueue-time insert, src/workload.rs:205).
-        io.append(frontier.select(*SEEN_COLS), "seen", -1)
+        # seen set every wave would be O(total²) over the crawl. Every
+        # cleaned seed, gated or not, is the wave "-1" delta (enqueue-time
+        # insert, src/workload.rs:205).
+        io.append(seeds.select(*SEEN_COLS), "seen", -1)
         st.save(io)
     seen = io.read_appended(spark, "seen")
 
-    budgets = None
-    if robots is not None and job.use_robots:
-        # robots.txt is parsed ONCE per crawl (the reference's per-(domain,
-        # robot) verifier cache, src/robots.rs:23-33): one Arrow pass
-        # compiles it to Java regexes, checkpointed so both of every
-        # wave's gates and the Crawl-delay budgets stay in the JVM
-        robots = compile_robots(robots, job.robot).localCheckpoint(eager=True)
-        budgets = politeness_budget(robots, job.wave_seconds)
     faults = None
     if fault_schedule is not None:
         # static like the robots table: checkpointed once instead of

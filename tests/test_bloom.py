@@ -50,6 +50,17 @@ def test_fp_rate_bounded(spark, seen):
     assert anti_join_flagged(flagged, seen).count() == 10000
 
 
+def test_bloom_params_raise_not_clamp(spark, seen):
+    """A key count below 1 or an FP rate outside (0, 1) raises instead of
+    being mapped to a working filter, and k is what the FP rate needs, not
+    capped: 1e-6 at 1,000 keys takes 28,800 bits and k = 20."""
+    for n, fp in [(0, 0.01), (-5, 0.01), (1000, 0.0), (1000, 1.0), (1000, 1.5), (1000, -0.1)]:
+        with pytest.raises(ValueError, match="bloom"):
+            build_bloom(seen, n_partitions=8, expected_per_partition=n, fp_rate=fp)
+    bank = build_bloom(seen, n_partitions=8, expected_per_partition=1000, fp_rate=1e-6)
+    assert {(r.m, r.k) for r in bank.select("m", "k").distinct().collect()} == {(28800, 20)}
+
+
 def test_anti_join_equivalence(spark, seen):
     links = _links(spark, "http://x.example/p", 2500, 7500).withColumn("url", F.col("ukey"))
     exact = sorted(r.ukey for r in anti_join_seen(links, seen).collect())

@@ -270,6 +270,70 @@ def test_robots_silent_skip(spark):
     assert res.frontier.count() == 0
 
 
+def _private_robots(spark, extra: str = ""):
+    """a.example disallows ``/private``; no other host has a robots row."""
+    return spark.createDataFrame(
+        [("a.example", "User-agent: *\nDisallow: /private\n" + extra)],
+        "host string, robots_txt string",
+    )
+
+
+def test_disallowed_seed_takes_no_engine(spark):
+    """F6 at dispatch: a disallowed seed never enters the frontier, so the
+    LIFO top of the seed stack (``/private``, the last seed in sorted
+    order) does not take one of the two engines — both allowed seeds go
+    out in the first wave, ranked densely."""
+    pages = {f"http://a.example/{p}": [] for p in ("p0", "p1", "private")}
+    job = CrawlJob(seeds=list(pages), engines=2, use_robots=True)
+    res = run_crawl(spark, job, mock_corpus(spark, pages), robots=_private_robots(spark))
+    got = sorted((r.iteration, r.dispatch_rank, r.url) for r in res.results.collect())
+    assert got == [(0, 1, "http://a.example/p1"), (0, 2, "http://a.example/p0")]
+    assert res.iterations == 1 and res.stats.count_visited == 2
+    assert res.seen.count() == 3
+
+
+def test_disallowed_seed_takes_no_crawl_delay_slot(spark):
+    """Scale mode: a Crawl-delay of one page a wave is spent on the allowed
+    seed, not on the disallowed one that the LIFO order ranks first."""
+    pages = {"http://a.example/p0": [], "http://a.example/private": []}
+    job = CrawlJob(seeds=list(pages), engines=None, use_robots=True, wave_seconds=30.0)
+    robots = _private_robots(spark, "Crawl-delay: 30\n")
+    res = run_crawl(spark, job, mock_corpus(spark, pages), robots=robots)
+    assert [(r.iteration, r.url) for r in res.results.collect()] == [(0, "http://a.example/p0")]
+    assert res.iterations == 1 and res.stats.count_visited == 1
+
+
+def test_all_seeds_disallowed_runs_no_wave(spark):
+    """Seeds that robots rejects (a disallowed path, a host missing from the
+    robots table) enter seen but not the frontier: the crawl ends like an
+    empty seed list, with no wave."""
+    seeds = ["http://a.example/private/x", "http://b.example/"]
+    pages = {u: [] for u in seeds}
+    job = CrawlJob(seeds=seeds, engines=None, use_robots=True)
+    res = run_crawl(spark, job, mock_corpus(spark, pages), robots=_private_robots(spark))
+    assert res.iterations == 0
+    assert vars(res.stats) == dict(
+        count_errors=0, count_retries=0, count_visited=0, count_collected=0
+    )
+    assert res.results.count() == 0
+    assert sorted(r.ukey for r in res.seen.collect()) == seeds
+
+
+def test_fetch_runs_no_robots_gate(spark):
+    """Every frontier row passed the gate on admission, so no wave's fetch
+    plan joins the robots rules again."""
+    pages = {
+        "http://a.example/": ["http://a.example/private/x", "http://a.example/ok"],
+        "http://a.example/ok": [],
+        "http://a.example/private/x": [],
+    }
+    job = CrawlJob(seeds=["http://a.example"], engines=None, use_robots=True)
+    io = FetchPlans()
+    res = run_crawl(spark, job, mock_corpus(spark, pages), robots=_private_robots(spark), io=io)
+    assert res.stats.count_visited == 2 and len(io.plans) == res.iterations == 2
+    assert not [p for p in io.plans if "__rules" in p]
+
+
 def test_dedup_across_hosts_and_duplicate_links(spark):
     """D1/D3 on the synthetic graph (duplicate links built in): every page
     visited exactly once; visited == number of reachable pages."""
@@ -339,6 +403,8 @@ def test_checkpoint_resume_identical(spark, tmp_path, mode):
                 "url string, attempt int, fault string",
             ),
         )
+        # a seed on a host missing from the robots table: gated at seeding
+        seeds = [*seeds, "http://h0002.example/p0"]
         kw = dict(seeds=seeds, engines=None, use_robots=True, corpus_cache_max_bytes=0)
         kill, retried = 2, 1
 
@@ -355,9 +421,9 @@ def test_checkpoint_resume_identical(spark, tmp_path, mode):
     a = sorted((r.url, r.data) for r in full.results.collect())
     b = sorted((r.url, r.data) for r in resumed.results.collect())
     assert a == b
-    assert sorted(r.ukey for r in full.seen.collect()) == sorted(
-        r.ukey for r in resumed.seen.collect()
-    )
+    full_seen = sorted(r.ukey for r in full.seen.collect())
+    assert full_seen == sorted(r.ukey for r in resumed.seen.collect())
+    assert set(seeds) <= set(full_seen)
     assert vars(full.stats) == vars(resumed.stats)
     assert full.stats.count_visited == corpus.count() + retried
     assert full.stats.count_retries == retried

@@ -37,7 +37,7 @@ def test_no_per_row_python_anywhere(spark):
 
 
 def test_robots_gate_is_broadcast_join(spark):
-    """The per-wave gate over a compiled, checkpointed robots table (what
+    """The admission gate over a compiled, checkpointed robots table (what
     run_crawl passes) is a broadcast join with no Python stage: robots.txt
     is parsed once per crawl, and path matching is regexp_like in the JVM."""
     from doonop_spark.operators.robots import compile_robots, robots_gate
@@ -51,7 +51,7 @@ def test_robots_gate_is_broadcast_join(spark):
         "host string, robots_txt string",
     )
     compiled = compile_robots(robots).localCheckpoint(eager=True)
-    plan = plan_of(robots_gate(wave, compiled, use_robots=True))
+    plan = plan_of(robots_gate(wave, compiled))
     assert "BroadcastHashJoin" in plan  # the wave must NOT shuffle
     assert "SortMergeJoin" not in plan
     assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
@@ -252,9 +252,8 @@ def test_per_wave_driver_jobs_flat_and_bounded(spark, monkeypatch):
         "bookkeeping count/collect leaked back into the loop"
     )
     mats = [name for kind, name, _ in trace if kind == "mat"]
-    # 4 per wave + the one-time seed-frontier materialize + the final
-    # empty-wave materialize that detects termination
-    assert len(mats) <= 4 * waves + 2, f"{len(mats)} materializes / {waves} waves"
+    # 4 per wave + the one-time seed-frontier materialize
+    assert len(mats) == 4 * waves + 1, f"{len(mats)} materializes / {waves} waves"
     # eager appends only on compaction waves (seen_compact_every=8)
     eager_apps = [n for kind, _, n in trace if kind == "app" and n > 0]
     assert len(eager_apps) <= waves // 8 + 1

@@ -75,12 +75,10 @@ def test_robots_gate_spark(spark):
         [("a.example", "User-agent: *\nDisallow: /secret/\n")],
         "host string, robots_txt string",
     )
-    got = sorted(
-        r.url for r in robots_gate(frontier, robots, use_robots=True).collect()
-    )
+    got = sorted(r.url for r in robots_gate(frontier, compile_robots(robots)).collect())
     assert got == ["http://a.example/ok", "javascript:void(0)"]
     # gate off → passthrough
-    assert robots_gate(frontier, robots, use_robots=False).count() == 4
+    assert robots_gate(frontier, None).count() == 4
 
 
 def test_ua_exact_token_never_substring():
@@ -228,7 +226,7 @@ def test_jvm_gate_matches_python_verifier(spark, cases):
         wave.append((len(wave), url, None))
     frame = spark.createDataFrame(wave, "rid int, url string, host string")
     compiled = compile_robots(robots).localCheckpoint(eager=True)
-    got = {r.rid for r in robots_gate(frame, compiled, use_robots=True).collect()}
+    got = {r.rid for r in robots_gate(frame, compiled).collect()}
     assert got == want, [wave[i] for i in got ^ want]
 
     budgets = {r.host: r.budget for r in politeness_budget(compiled, 30.0).collect()}
