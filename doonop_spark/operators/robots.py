@@ -26,8 +26,10 @@ Reference semantics reproduced exactly:
   wins; tie ⇒ Allow; no rule ⇒ allowed. ``*`` and ``$`` wildcards.
 
 ``Crawl-delay`` is parsed as well — not used by the reference, but it
-feeds the per-host politeness budgeter (north_star extension, see
-``operators/schedule.py``) through the compiled table's ``delay``.
+feeds the per-host politeness budget (north_star extension, see
+``operators/schedule.py``): the compiled table's ``delay`` rides each
+admitted row as a frontier column, looked up by the same join that gates
+the URL, so scheduling reads it from the row with no join of its own.
 
 :func:`is_allowed` / :func:`crawl_delay_of` are the pure-Python verifier;
 the JVM gate is tested against them (``tests/test_robots.py``).
@@ -231,7 +233,9 @@ def compile_robots(robots: DataFrame, robot: str = DEFAULT_ROBOT) -> DataFrame:
 
 def robots_gate(frame: DataFrame, robots: DataFrame | None) -> DataFrame:
     """F6/F7 — the admission gate: the rows of ``frame`` (``url``, ``host``)
-    that may enter the frontier; ``robots=None`` admits every row.
+    that may enter the frontier, each with its host's Crawl-delay as
+    ``delay`` (null when ``robots`` is None, the host is null or it has no
+    Crawl-delay); ``robots=None`` admits every row.
 
     ``robots`` is the compiled per-host table (:func:`compile_robots`),
     broadcast-joined onto ``frame``. A row passes when its host is NULL
@@ -242,9 +246,9 @@ def robots_gate(frame: DataFrame, robots: DataFrame | None) -> DataFrame:
     drop silently. Over a checkpointed table the gate is JVM only.
     """
     if robots is None:
-        return frame
+        return frame.withColumn("delay", F.lit(None).cast("double"))
     r = F.broadcast(
-        robots.select(F.col("host").alias("__rhost"), F.col("rules").alias("__rules"))
+        robots.select(F.col("host").alias("__rhost"), F.col("rules").alias("__rules"), "delay")
     )
     joined = frame.join(r, frame["host"] == r["__rhost"], "left")
     path = _path_expr(F.col("url"))

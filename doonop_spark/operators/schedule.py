@@ -43,15 +43,6 @@ __all__ = [
 _UNBOUNDED = 2**31 - 1
 
 
-def _host_budget(default_budget: int | None):
-    """A joined row's budget: its host's ``__budget`` row, else the default
-    (0 is a real budget, only None is unbounded)."""
-    return F.coalesce(
-        F.col("__budget"),
-        F.lit(_UNBOUNDED if default_budget is None else default_budget),
-    )
-
-
 def policy_order(policy: RetryPolicy):
     """Sort keys implementing O1-O3 for the given retry policy."""
     is_retry = F.col("is_retry")
@@ -75,7 +66,7 @@ def policy_order(policy: RetryPolicy):
 def budget_keep_flags(
     cand: DataFrame,
     order,
-    per_host_budget,
+    wave_seconds: float | None,
     default_budget,
     default_can_bind: bool = False,
 ) -> DataFrame:
@@ -88,51 +79,37 @@ def budget_keep_flags(
 
     The budget is a per-host top-k: ``row_number`` over a window
     partitioned by host in ``order``; a row keeps when its rank is within
-    its host's budget row, else within ``default_budget`` (None =
-    unbounded). Hostless rows always keep.
+    its own budget — :func:`politeness_budget` of the host's Crawl-delay
+    that the robots gate stamped on the row as ``delay``, read with no
+    join — else within ``default_budget`` (None = unbounded).
+    ``wave_seconds=None`` (no robots table) leaves every row's budget
+    null. Hostless rows always keep.
 
-    Only rows of hosts that actually carry a budget row are windowed:
-    a host with no entry is bounded by ``default_budget`` only, so when
-    the caller can prove the default cannot bind (total candidate rows ≤
-    default budget ⇒ no host can exceed it), those rows skip the window
-    shuffle+sort entirely — in a politeness crawl where one host carries
-    a Crawl-delay, that removes ~all of the window work. Pass
-    ``default_can_bind=True`` to window every row.
+    Only rows that carry a budget are windowed: a row without one is
+    bounded by ``default_budget`` only, so when the caller can prove the
+    default cannot bind (total candidate rows ≤ default budget ⇒ no host
+    can exceed it), those rows skip the window shuffle+sort entirely — in
+    a politeness crawl where one host carries a Crawl-delay, that removes
+    ~all of the window work. Pass ``default_can_bind=True`` to window
+    every row.
     """
-    if per_host_budget is None:
-        # only the scalar default budget exists
-        if not default_can_bind:
-            return cand.withColumn("__keep", F.lit(True))
-        w = Window.partitionBy("host").orderBy(*order)
-        return (
-            cand.withColumn("__rn", F.row_number().over(w))
-            .withColumn(
-                "__keep",
-                (F.col("__rn") <= F.lit(default_budget)) | F.col("host").isNull(),
-            )
-            .drop("__rn")
-        )
-
-    b = F.broadcast(
-        per_host_budget.select(
-            F.col("host").alias("__bhost"), F.col("budget").alias("__budget")
-        )
+    budget = (
+        F.lit(None) if wave_seconds is None else politeness_budget(F.col("delay"), wave_seconds)
     )
-    joined = cand.join(b, cand["host"] == F.col("__bhost"), "left").drop("__bhost")
-    budget = _host_budget(default_budget)
+    cand = cand.withColumn("__budget", budget.cast("int"))
+    windowed, passed = cand, None
+    if not default_can_bind:
+        windowed = cand.filter(F.col("__budget").isNotNull())
+        passed = cand.filter(F.col("__budget").isNull()).withColumn("__keep", F.lit(True))
 
-    if default_can_bind:
-        windowed = joined
-        passed = None
-    else:
-        windowed = joined.filter(F.col("__budget").isNotNull())
-        passed = joined.filter(F.col("__budget").isNull()).withColumn(
-            "__keep", F.lit(True)
-        )
-
+    # a row's own budget, else the default (0 is a real budget, only None
+    # is unbounded)
+    limit = F.coalesce(
+        F.col("__budget"), F.lit(_UNBOUNDED if default_budget is None else default_budget)
+    )
     w = Window.partitionBy("host").orderBy(*order)
     flagged = windowed.withColumn("__rn", F.row_number().over(w)).withColumn(
-        "__keep", (F.col("__rn") <= budget) | F.col("host").isNull()
+        "__keep", (F.col("__rn") <= limit) | F.col("host").isNull()
     ).drop("__rn")
 
     if passed is not None:
@@ -159,26 +136,27 @@ def select_wave(
     wave_size: int | None,
     now: float,
     fresh_empty: bool,
-    per_host_budget: DataFrame | None = None,
+    wave_seconds: float | None = None,
     default_budget: int | None = None,
 ) -> DataFrame:
     """Pick the next wave from the frontier: ripeness filter → per-host
     budget (:func:`budget_keep_flags`) → global top-k.
 
-    ``per_host_budget`` is an optional tiny table ``(host, budget)``
-    (derived from robots Crawl-delay) broadcast onto the frontier;
-    ``default_budget`` caps hosts without an entry. ``wave_size`` is the
-    reference's engine bound (global top-k).
+    ``wave_seconds`` turns each row's ``delay`` (its host's robots
+    Crawl-delay, stamped on the row by the admission gate) into the
+    host's budget; None means no robots table. ``default_budget`` caps
+    rows without a Crawl-delay. ``wave_size`` is the reference's engine
+    bound (global top-k).
     """
     cand, _ = ripe_split(frontier, policy, now, fresh_empty)
     order = policy_order(policy)
 
-    if per_host_budget is not None or default_budget is not None:
+    if wave_seconds is not None or default_budget is not None:
         cand = (
             budget_keep_flags(
                 cand,
                 order,
-                per_host_budget,
+                wave_seconds,
                 default_budget,
                 default_can_bind=default_budget is not None,
             )
@@ -200,7 +178,7 @@ def scale_wave(
     now: float,
     fresh_empty: bool,
     has_retries: bool,
-    per_host_budget: DataFrame | None,
+    wave_seconds: float | None,
     default_budget: int | None,
     default_can_bind: bool,
     materialize,
@@ -215,14 +193,14 @@ def scale_wave(
     """
     cand, stays = ripe_split(frontier, policy, now, fresh_empty)
     deferred = [frontier.filter(stays)] if has_retries else []
-    binds = per_host_budget is not None or default_can_bind
+    binds = wave_seconds is not None or default_can_bind
     if not (binds or has_retries):
         return cand, deferred, None
     flagged, n = materialize(
         budget_keep_flags(
             cand,
             policy_order(policy),
-            per_host_budget,
+            wave_seconds,
             default_budget,
             default_can_bind=default_can_bind,
         )
@@ -232,18 +210,19 @@ def scale_wave(
     return flagged.filter(F.col("__keep")).drop("__keep"), deferred, n
 
 
-def politeness_budget(robots: DataFrame, wave_seconds: float) -> DataFrame:
+def politeness_budget(delay: Column, wave_seconds: float) -> Column:
     """Per-host wave budget from robots Crawl-delay: a host allowing one
     request per ``delay`` seconds gets ``max(1, wave_seconds/delay)`` slots
     per wave (north_star politeness extension; the reference only has the
-    global engine bound + robots allow/deny). ``robots`` is the compiled
-    table (:func:`doonop_spark.operators.robots.compile_robots`), whose
-    ``delay`` is already parsed — this is a pure JVM projection. A delay
-    so small that the budget overflows an int is unbounded."""
-    slots = F.floor(F.lit(wave_seconds) / F.col("delay"))
-    return robots.filter(F.col("delay").isNotNull() & (F.col("delay") > 0)).select(
-        "host",
-        F.greatest(F.lit(1), F.least(slots, F.lit(_UNBOUNDED))).cast("int").alias("budget"),
+    global engine bound + robots allow/deny). ``delay`` is the parsed
+    Crawl-delay that the admission gate
+    (:func:`doonop_spark.operators.robots.robots_gate`) stamps on each row,
+    so this is a pure JVM expression. Only a delay > 0 gives a budget
+    (else null); a delay so small that the budget overflows an int is
+    unbounded."""
+    slots = F.floor(F.lit(wave_seconds) / delay)
+    return F.when(
+        delay > 0, F.greatest(F.lit(1), F.least(slots, F.lit(_UNBOUNDED))).cast("int")
     )
 
 

@@ -7,9 +7,9 @@ and runs four stages per wave (methods of ``_Crawl``) over one
 :class:`WaveState`, the crawl's scalar checkpoint:
 
 1. **schedule_wave** — retry-policy priority, LIFO seq order, ripeness,
-   per-host politeness budget, global engine cap (operators/schedule.py:
-   ``select_wave`` when ``engines`` bounds the wave, else ``scale_wave``).
-   Pure JVM.
+   per-host politeness budget from the Crawl-delay on each row, global
+   engine cap (operators/schedule.py: ``select_wave`` when ``engines``
+   bounds the wave, else ``scale_wave``). Pure JVM, no join.
 2. **fetch_wave** — left-join the wave, whose rows all passed the robots
    gate on entering the frontier, against the fetch side chosen once per
    crawl (sources/corpus.py ``choose_fetch_side``: cached, bucket-pruned or
@@ -30,7 +30,9 @@ and runs four stages per wave (methods of ``_Crawl``) over one
 The robots gate runs once per URL, as it enters the frontier: ``run_crawl``
 gates the seeds and ``commit_wave`` the new links, so no wave spends a slot
 on a disallowed URL — the reference's check at dispatch
-(``src/workload.rs:100-109``).
+(``src/workload.rs:100-109``). The same join stamps the host's Crawl-delay
+on the admitted row as ``delay``, a frontier column that timeouts keep
+when requeued, so the politeness budget is looked up once per URL too.
 
 Bounded and scale mode differ only in wave selection and in ``seq`` /
 ``dispatch_rank``: bounded mode ranks exactly (``row_number``), scale mode
@@ -71,7 +73,6 @@ from doonop_spark.operators.filters import apply_link_filters, clean_seeds
 from doonop_spark.operators.robots import compile_robots, robots_gate
 from doonop_spark.operators.schedule import (
     policy_order,
-    politeness_budget,
     scale_wave,
     select_wave,
 )
@@ -239,6 +240,7 @@ def _shape(joined: DataFrame, faults: DataFrame | None, check: Column | None) ->
         "ukey",
         "url_hash",
         "host",
+        "delay",
         "depth",
         "seq",
         "is_retry",
@@ -261,7 +263,6 @@ class _Crawl:
     io: TableIO
     side: FetchSide
     robots: DataFrame | None
-    budgets: DataFrame | None  # per-host Crawl-delay budgets
     faults: DataFrame | None
     bloom: SeenBloom | None
     check: Column | None
@@ -289,6 +290,8 @@ class _Crawl:
         # wall-clock seconds (reference parity, src/retry.rs:38-46)
         now = float(st.iteration) if job.retry_clock == "wave" else float(self.clock())
         fresh_empty = st.fresh_count == 0
+        # rows carry their host's Crawl-delay; without robots none can bind
+        wave_seconds = job.wave_seconds if self.robots is not None else None
         if job.engines is not None:
             wave = select_wave(
                 frontier,
@@ -296,7 +299,7 @@ class _Crawl:
                 job.engines,
                 now=now,
                 fresh_empty=fresh_empty,
-                per_host_budget=self.budgets,
+                wave_seconds=wave_seconds,
                 default_budget=job.per_host_budget,
             )
             # dispatch_rank fixes the deterministic "completion order"
@@ -317,7 +320,7 @@ class _Crawl:
             fresh_empty,
             # retries exist in the frontier iff some rows are is_retry
             has_retries=st.fresh_count != st.frontier_rows,
-            per_host_budget=self.budgets,
+            wave_seconds=wave_seconds,
             default_budget=job.per_host_budget,
             # the scalar default budget provably cannot bind when the
             # WHOLE frontier holds no more rows than the budget
@@ -462,6 +465,7 @@ class _Crawl:
             "ukey",
             "url_hash",
             "host",
+            "delay",
             (F.col("parent_depth") + 1).alias("depth"),
             (F.col("__rn") + F.lit(st.seq_counter)).alias("seq"),
             F.lit(False).alias("is_retry"),
@@ -491,6 +495,7 @@ class _Crawl:
                     "ukey",
                     "url_hash",
                     "host",
+                    "delay",
                     "depth",
                     "seq",
                     F.lit(True).alias("is_retry"),
@@ -595,14 +600,12 @@ def run_crawl(
         )
     # resolved before seeding, so the seed frontier observes its buckets
     side = choose_fetch_side(corpus, job.corpus_cache_max_bytes, job.dedup_captures)
-    budgets = None
     if job.use_robots:
         # robots.txt is parsed ONCE per crawl (the reference's per-(domain,
         # robot) verifier cache, src/robots.rs:23-33): one Arrow pass
-        # compiles it to Java regexes, checkpointed so the admission gate
-        # and the Crawl-delay budgets stay in the JVM
+        # compiles it to Java regexes, checkpointed so the admission gate,
+        # which also stamps each admitted row's Crawl-delay, stays in the JVM
         robots = compile_robots(robots, job.robot).localCheckpoint(eager=True)
-        budgets = politeness_budget(robots, job.wave_seconds)
     else:
         robots = None
 
@@ -661,9 +664,7 @@ def run_crawl(
             fold_every=job.bloom_fold_every,
         )
     check, data = _check_program(job)
-    crawl = _Crawl(
-        spark, job, io, side, robots, budgets, faults, bloom, check, data, clock or time.time
-    )
+    crawl = _Crawl(spark, job, io, side, robots, faults, bloom, check, data, clock or time.time)
 
     # ---- the loop (reference src/workload.rs:79-200) -----------------------
     waves_run = 0

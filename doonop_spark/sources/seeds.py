@@ -102,10 +102,14 @@ def seed_frontier_distributed(
     n = spark.sparkContext.defaultParallelism
     # range-partitioned sort: partition i of the checkpointed frame holds
     # the i-th url range, sorted within — so (partition index, row offset)
-    # IS the global sorted rank once per-partition offsets are added
+    # IS the global sorted rank once per-partition offsets are added. The
+    # key is computed before the checkpoint, so a surt key's Python UDF
+    # runs once however often the seed frame is read.
+    ukey = surt_key_udf(F.col("url")) if url_key == "surt" else F.col("url")
     ordered = (
         urls.repartitionByRange(n, F.asc("url"))
         .sortWithinPartitions("url")
+        .select("url", ukey.alias("ukey"))
         .localCheckpoint(eager=True)
     )
     mid = F.monotonically_increasing_id()
@@ -124,5 +128,4 @@ def seed_frontier_distributed(
         else F.lit(0)
     )
     seq = (off_expr + mid.bitwiseAND(F.lit((1 << 33) - 1))).cast("long")
-    ukey = surt_key_udf(F.col("url")) if url_key == "surt" else F.col("url")
-    return _frontier_rows(ordered.select("url", ukey.alias("ukey"), seq.alias("seq")))
+    return _frontier_rows(ordered.select("url", "ukey", seq.alias("seq")))

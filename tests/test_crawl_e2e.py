@@ -37,16 +37,19 @@ def mock_corpus(spark, pages: dict[str, list[str]], data: dict[str, str] | None 
     )
 
 
-class FetchPlans(MemoryTableIO):
-    """MemoryTableIO that records the executed plan of every wave's fetch."""
+class PlanLog(MemoryTableIO):
+    """MemoryTableIO that records the executed plan of every materialize of
+    one table: ``wave_fetched`` (each wave's fetch) or ``wave`` (each
+    schedule)."""
 
-    def __init__(self):
+    def __init__(self, table: str):
         super().__init__()
+        self.table = table
         self.plans = []
 
     def materialize(self, df, name, iteration):
         out = super().materialize(df, name, iteration)
-        if name == "wave_fetched":
+        if name == self.table:
             self.plans.append(df._jdf.queryExecution().executedPlan().toString())
         return out
 
@@ -328,10 +331,46 @@ def test_fetch_runs_no_robots_gate(spark):
         "http://a.example/private/x": [],
     }
     job = CrawlJob(seeds=["http://a.example"], engines=None, use_robots=True)
-    io = FetchPlans()
+    io = PlanLog("wave_fetched")
     res = run_crawl(spark, job, mock_corpus(spark, pages), robots=_private_robots(spark), io=io)
     assert res.stats.count_visited == 2 and len(io.plans) == res.iterations == 2
     assert not [p for p in io.plans if "__rules" in p]
+
+
+@pytest.mark.parametrize("engines", [2, None])
+def test_schedule_joins_no_table(spark, engines):
+    """The admission gate stamps each row's Crawl-delay on it, so no wave's
+    schedule joins a budget table, and a host with one slot a wave still
+    gets one: its three pages go out in three waves."""
+    pages = {
+        "http://a.example/": [
+            "http://a.example/p1", "http://a.example/p2",
+            "http://b.example/q1", "http://b.example/q2",
+        ],
+        "http://b.example/": [],
+        **{u: [] for u in ("http://a.example/p1", "http://a.example/p2",
+                           "http://b.example/q1", "http://b.example/q2")},
+    }
+    robots = spark.createDataFrame(
+        [("a.example", "User-agent: *\nCrawl-delay: 30\n"), ("b.example", "User-agent: *\n")],
+        "host string, robots_txt string",
+    )
+    job = CrawlJob(
+        seeds=["http://a.example/", "http://b.example/"],
+        engines=engines,
+        use_robots=True,
+        wave_seconds=30.0,
+    )
+    io = PlanLog("wave")
+    res = run_crawl(spark, job, mock_corpus(spark, pages), robots=robots, io=io)
+    assert res.stats.count_collected == 6
+    assert len(io.plans) == res.iterations
+    assert not [p for p in io.plans if "Join" in p or "BroadcastExchange" in p]
+    hot = {}
+    for r in res.results.collect():
+        if r.url.startswith("http://a.example/"):
+            hot[r.iteration] = hot.get(r.iteration, 0) + 1
+    assert len(hot) == 3 and set(hot.values()) == {1}, hot
 
 
 def test_dedup_across_hosts_and_duplicate_links(spark):
@@ -567,7 +606,7 @@ def test_fetch_side_crawl_identical(spark, tmp_path, side):
         [("http://flaky.com/", 1, "timeout")], "url string, attempt int, fault string"
     )
 
-    io = FetchPlans()
+    io = PlanLog("wave_fetched")
     job = CrawlJob(
         seeds=["http://a.com"],
         engines=None,
@@ -654,7 +693,7 @@ def test_bucketed_corpus_on_uri_path(spark, tmp_path):
     assert corpus_bucket_count(corpus) == 16
     assert "_doonop_buckets.json" not in " ".join(corpus.inputFiles())
 
-    io = FetchPlans()
+    io = PlanLog("wave_fetched")
     seeds = ["http://h0000.example/p0", "http://h0001.example/p0"]
     job = CrawlJob(seeds=seeds, engines=8, corpus_cache_max_bytes=0)
     res = run_crawl(spark, job, corpus, io=io)

@@ -7,6 +7,7 @@ import math
 
 from hypothesis import example, given, settings
 from hypothesis import strategies as st
+from pyspark.sql import functions as F
 
 from doonop_spark.operators.robots import (
     DEFAULT_ROBOT,
@@ -209,7 +210,8 @@ def test_jvm_gate_matches_python_verifier(spark, cases):
     """Host i carries robots_txt ``cases[i][0]`` (None: a NULL robots_txt)
     and paths ``cases[i][1]``; one more host has no robots row, and
     hostless URLs ride along. The JVM gate must admit exactly the rows
-    is_allowed admits, and the budgets must follow crawl_delay_of."""
+    is_allowed admits, each admitted row must carry its host's
+    crawl_delay_of as ``delay``, and the budgets must follow it."""
     robots = spark.createDataFrame(
         [(f"h{i}.example", txt) for i, (txt, _) in enumerate(cases)],
         "host string, robots_txt string",
@@ -226,10 +228,21 @@ def test_jvm_gate_matches_python_verifier(spark, cases):
         wave.append((len(wave), url, None))
     frame = spark.createDataFrame(wave, "rid int, url string, host string")
     compiled = compile_robots(robots).localCheckpoint(eager=True)
-    got = {r.rid for r in robots_gate(frame, compiled).collect()}
+    admitted = robots_gate(frame, compiled).collect()
+    got = {r.rid for r in admitted}
     assert got == want, [wave[i] for i in got ^ want]
+    # a NaN Crawl-delay compiles to null, like a missing one
+    want_delay = {
+        f"h{i}.example": None if d is None or math.isnan(d) else d
+        for i, d in enumerate(crawl_delay_of(txt) for txt, _ in cases)
+    }
+    assert [(r.host, r.delay) for r in admitted if r.delay != want_delay.get(r.host)] == []
 
-    budgets = {r.host: r.budget for r in politeness_budget(compiled, 30.0).collect()}
+    budget = politeness_budget(F.col("delay"), 30.0).alias("budget")
+    budgets = {
+        r.host: r.budget
+        for r in compiled.select("host", budget).filter("budget IS NOT NULL").collect()
+    }
     want_budgets = {}
     for i, (txt, _) in enumerate(cases):
         d = crawl_delay_of(txt)

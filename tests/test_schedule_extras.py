@@ -65,6 +65,20 @@ def test_seed_frontier_has_no_python_rdd(spark):
         assert [r.seq for r in df.orderBy("seq").collect()] == [0, 1]
 
 
+def test_seed_frontier_distributed_keys_before_checkpoint(spark):
+    """The surt key of distributed seeds is computed before the seed set is
+    checkpointed: the seed frame is read twice (the gated frontier commit
+    and the seen append), and neither read runs a Python UDF."""
+    extra = spark.createDataFrame([("http://b.example/x",)], "url string")
+    seeds = seed_frontier_distributed(spark, ["http://a.example/"], extra, "surt")
+    plan = seeds._jdf.queryExecution().executedPlan().toString()
+    assert "EvalPython" not in plan, plan
+    assert [r.ukey for r in seeds.orderBy("seq").collect()] == [
+        "example,a)/",
+        "example,b)/x",
+    ]
+
+
 def test_seed_frontier_distributed_matches_driver_clean(spark, monkeypatch):
     """The DataFrame seed path must reproduce seed_frontier(clean_seeds(...))
     exactly — same urls, same sorted-rank seq — at any input partitioning,
@@ -143,58 +157,58 @@ def _hosts_seqs(df):
 
 
 def test_default_budget_zero_binds_in_every_impl(spark):
-    """default_budget=0 is a budget, not "unbounded": hosts without a
-    budget row dispatch nothing, hostless rows always dispatch, and
+    """default_budget=0 is a budget, not "unbounded": rows without a
+    Crawl-delay dispatch nothing, hostless rows always dispatch, and
     select_wave picks the same wave as the scale loop's
     budget_keep_flags."""
+    # h0's Crawl-delay of 15 s gives it 2 slots of a 30 s wave
     rows = [
-        (f"http://h{h}.example/p{i}", 0, 10 * h + i, False, 0, 0.0, f"h{h}.example")
+        (f"http://h{h}.example/p{i}", 0, 10 * h + i, False, 0, 0.0, f"h{h}.example",
+         15.0 if h == 0 else None)
         for h in range(3)
         for i in range(4)
-    ] + [("mailto:x@y", 0, 99, False, 0, 0.0, None)]
+    ] + [("mailto:x@y", 0, 99, False, 0, 0.0, None, None)]
     frontier = spark.createDataFrame(
         rows,
         "url string, depth int, seq long, is_retry boolean,"
-        " retry_count int, retry_at double, host string",
+        " retry_count int, retry_at double, host string, delay double",
     ).withColumn("ukey", F.col("url")).withColumn("url_hash", F.xxhash64("ukey"))
-    budgets = spark.createDataFrame([("h0.example", 2)], "host string, budget int")
     kw = dict(
         policy=RetryPolicy.FIRST, wave_size=None, now=0.0, fresh_empty=False,
-        per_host_budget=budgets, default_budget=0,
+        wave_seconds=30.0, default_budget=0,
     )
     want = sorted([("h0.example", 2), ("h0.example", 3), (None, 99)], key=str)
     assert _hosts_seqs(select_wave(frontier, **kw)) == want
     flagged = budget_keep_flags(
-        frontier, policy_order(RetryPolicy.FIRST), budgets, 0,
+        frontier, policy_order(RetryPolicy.FIRST), 30.0, 0,
         default_can_bind=True,
     )
     assert _hosts_seqs(flagged.filter("__keep")) == want
 
 
-def test_politeness_pandas_matches_window(spark):
-    """Per-host budget rows (2, 4) and a default budget (3) bound each
-    host's wave to its LIFO-latest rows; select_wave and the scale loop's
-    budget_keep_flags pick the same rows."""
+def test_crawl_delay_budget_select_wave_matches_keep_flags(spark):
+    """Per-row Crawl-delay budgets (2, 4) and a default budget (3) bound
+    each host's wave to its LIFO-latest rows; select_wave and the scale
+    loop's budget_keep_flags pick the same rows."""
+    # a 30 s wave: delay 15 s ⇒ 2 slots, 7.5 s ⇒ 4, none ⇒ the default
+    delays = {0: 15.0, 1: 7.5, 2: None}
     rows = [
         (f"http://h{h}.example/p{i}", f"http://h{h}.example/p{i}", 0, 10 * h + i,
-         False, 0, 0.0, f"h{h}.example")
+         False, 0, 0.0, f"h{h}.example", delays[h])
         for h in range(3)
         for i in range(6)
     ]
     frontier = spark.createDataFrame(
         rows,
         "url string, ukey string, depth int, seq long, is_retry boolean,"
-        " retry_count int, retry_at double, host string",
+        " retry_count int, retry_at double, host string, delay double",
     ).withColumn("url_hash", F.xxhash64("ukey"))
-    budgets = spark.createDataFrame(
-        [("h0.example", 2), ("h1.example", 4)], "host string, budget int"
-    )
     kw = dict(
         policy=RetryPolicy.FIRST,
         wave_size=None,
         now=0.0,
         fresh_empty=False,
-        per_host_budget=budgets,
+        wave_seconds=30.0,
         default_budget=3,
     )
     ws = _hosts_seqs(select_wave(frontier, **kw))
@@ -205,7 +219,7 @@ def test_politeness_pandas_matches_window(spark):
     # budget takes the LIFO-latest per host
     assert ("h0.example", 5) in ws and ("h0.example", 0) not in ws
     flagged = budget_keep_flags(
-        frontier, policy_order(RetryPolicy.FIRST), budgets, 3,
+        frontier, policy_order(RetryPolicy.FIRST), 30.0, 3,
         default_can_bind=True,
     )
     assert _hosts_seqs(flagged.filter("__keep")) == ws
